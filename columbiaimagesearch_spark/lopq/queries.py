@@ -14,6 +14,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..registry import register
 from ..sources import load_table
 from . import twin
@@ -29,43 +30,22 @@ QUOTA = twin.QUOTA
 TOP_K = twin.TOP_K
 RERANK_NB = twin.RERANK_NB
 
-# Every per-fixture cache below keys on session.fixture_cache_key — sf_dir
-# plus the embeddings parquet's (mtime_ns, size) — so a regenerated fixture
-# dir can never be served a stale model/relation, and eviction releases the
-# old entry's persisted blocks (VERDICT r14 #5 / ADVICE r14).
-_MODEL_CACHE: dict[tuple, LOPQModel] = {}
-
-
-_QUERIES_CACHE: dict[tuple, list] = {}
-
-
-def _fixture_key(cache: dict, sf_dir: str) -> tuple:
-    """The stamped cache key for sf_dir, with stale same-dir entries of
-    ``cache`` evicted (and their persisted blocks released) on the way."""
-    from ..session import evict_stale_fixture_entries, fixture_cache_key
-
-    key = fixture_cache_key(sf_dir)
-    evict_stale_fixture_entries(cache, key)
-    return key
-
-
 def fixture_queries(spark: SparkSession, sf_dir: str) -> list[tuple[int, "np.ndarray"]]:
     """The fixture query set — vec_id < N_QUERIES, memoized per sf_dir
     like fixture_model (review r13: four builders repeated the same
     two-line collect verbatim, each re-running the job per registered
     query and each a drift point for the selection rule)."""
-    key = _fixture_key(_QUERIES_CACHE, sf_dir)
-    if key not in _QUERIES_CACHE:
+
+    def build() -> list[tuple[int, "np.ndarray"]]:
         q_rows = (
             load_table(spark, sf_dir, "embeddings")
             .where(F.col("vec_id") < N_QUERIES)
             .select("vec_id", "embedding")
             .collect()
         )
-        _QUERIES_CACHE[key] = [
-            (int(r["vec_id"]), np.array(r["embedding"])) for r in q_rows
-        ]
-    return _QUERIES_CACHE[key]
+        return [(int(r["vec_id"]), np.array(r["embedding"])) for r in q_rows]
+
+    return cache.memo("fixture_queries", None, twin.fixture_paths(sf_dir), build)
 
 
 def fixture_model(spark: SparkSession, sf_dir: str) -> LOPQModel:
@@ -74,8 +54,8 @@ def fixture_model(spark: SparkSession, sf_dir: str) -> LOPQModel:
     reference's own architecture (nb_train subsample, conf
     conf_search_sbpycaffe_release.json:9-16) — while encode/search run
     distributed."""
-    key = _fixture_key(_MODEL_CACHE, sf_dir)
-    if key not in _MODEL_CACHE:
+
+    def build() -> LOPQModel:
         rows = (
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding")
@@ -84,32 +64,23 @@ def fixture_model(spark: SparkSession, sf_dir: str) -> LOPQModel:
             .collect()
         )
         X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-        _MODEL_CACHE[key] = LOPQModel.fit(X, **FIXTURE_PARAMS)
-    return _MODEL_CACHE[key]
+        return LOPQModel.fit(X, **FIXTURE_PARAMS)
 
-
-_CODES_CACHE: dict[tuple, DataFrame] = {}
+    return cache.memo("fixture_model", None, twin.fixture_paths(sf_dir), build)
 
 
 def codes_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fixture codes relation, built ONCE per sf_dir and persisted.
-
-    Rebuilding per call would broadcast the model and register a fresh
-    cache entry every time (each call's closure is a distinct plan):
-    across a long session those dead broadcasts/cache entries pile up in
-    the block manager until a driver GC lets the ContextCleaner reclaim
-    them — measured as multi-second stalls landing on whichever query runs
-    during cleanup. One shared relation is also the production shape: the
-    codes table is materialized once, probed many times."""
-    from ..session import cached_relation
-
-    return cached_relation(
-        _CODES_CACHE,
-        spark,
-        _fixture_key(_CODES_CACHE, sf_dir),
+    """The fixture codes relation, built once per fixture stamp and
+    persisted: one shared relation, materialized once and probed many
+    times (the broadcast-hygiene reason is in :mod:`..cache`)."""
+    return cache.memo(
+        "codes",
+        None,
+        twin.fixture_paths(sf_dir),
         lambda: encode_dataframe(
             spark, load_table(spark, sf_dir, "embeddings"), fixture_model(spark, sf_dir)
         ).persist(),
+        spark,
     )
 
 
@@ -317,10 +288,6 @@ def lopq_train_distributed_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NN_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-_EVAL_PASS_CACHE: dict[tuple, tuple] = {}
-
-
 @register(
     "lopq_eval_diagnostics",
     survey_ops=("A5", "V11", "V8"),
@@ -346,38 +313,35 @@ def lopq_eval_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its distortion means are partition-order float sums the twin oracle
     # pins at 4dp.
     #
-    # Both expensive inputs are pinned per sf_dir (r14, VERDICT r13 #4):
-    # the NN-pair relation and the model-pass scalars are pure functions
-    # of the fixture corpus + model, but rebuilding them per call shipped
-    # a fresh model closure and re-ran a corpus-sized job each time —
-    # repeat bench samples paid re-materialization plus the ContextCleaner
-    # stalls the codes_df docstring describes (the [1.64, 3.07] s sample
-    # spread). The codes_df idiom applies: compute once, probe per call
-    # (the per-call work left is the same-cell join/agg over the two
-    # cached relations). Both caches key on the fixture stamp (r15,
-    # VERDICT r14 #5): a rewritten fixture dir changes the key, so stale
-    # diagnostics can't be served and the evicted NN relation unpersists.
-    from ..session import cached_relation
-
-    nns = cached_relation(
-        _NN_PAIRS_CACHE,
-        spark,
-        _fixture_key(_NN_PAIRS_CACHE, sf_dir),
+    # Both expensive inputs are pinned per fixture stamp (r14, VERDICT r13
+    # #4): the NN-pair relation and the model-pass scalars are pure
+    # functions of the fixture corpus + model, but rebuilding them per call
+    # shipped a fresh model closure and re-ran a corpus-sized job each time
+    # (the [1.64, 3.07] s sample spread). The per-call work left is the
+    # same-cell join/agg over the two cached relations.
+    paths = twin.fixture_paths(sf_dir)
+    nns = cache.memo(
+        "nn_pairs",
+        None,
+        paths,
         lambda: lopq_eval.exact_nn_pairs(
             load_table(spark, sf_dir, "embeddings", spread=True)
         ).persist(),
+        spark,
     )
     n_pairs, n_same = lopq_eval.same_cell_neighbor_stats(
         codes_df(spark, sf_dir), nns
     )
     # stability + distortion from ONE corpus pass (model_pass_stats):
     # both are per-vector functions of the broadcast model
-    pass_key = _fixture_key(_EVAL_PASS_CACHE, sf_dir)
-    if pass_key not in _EVAL_PASS_CACHE:
-        _EVAL_PASS_CACHE[pass_key] = lopq_eval.model_pass_stats(
+    n_rec, n_stable, dist_rows = cache.memo(
+        "eval_pass",
+        None,
+        paths,
+        lambda: lopq_eval.model_pass_stats(
             load_table(spark, sf_dir, "embeddings"), model
-        )
-    n_rec, n_stable, dist_rows = _EVAL_PASS_CACHE[pass_key]
+        ),
+    )
     rows: list[tuple] = [
         # integer numerator/denominator + raw IEEE division: exact under
         # the driver hash (same discipline as a5_recall_stats)
@@ -395,17 +359,14 @@ def lopq_eval_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PCA_MODEL_CACHE: dict[tuple, "object"] = {}
-
-
 def pca_fixture_model(spark: SparkSession, sf_dir: str):
     """Train (once per sf_dir) the PCA-composed fixture: driver-side numpy
     PCA + LOPQ over the projected space, via the shared pure function
     twin.fit_pca_lopq on the same ordered rows the twin reads — so builder
     and oracle hold bitwise-identical models and the driver row verifies
     the distributed projection/encode/search plumbing."""
-    key = _fixture_key(_PCA_MODEL_CACHE, sf_dir)
-    if key not in _PCA_MODEL_CACHE:
+
+    def build():
         rows = (
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding")
@@ -414,18 +375,14 @@ def pca_fixture_model(spark: SparkSession, sf_dir: str):
             .collect()
         )
         X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-        _PCA_MODEL_CACHE[key] = twin.fit_pca_lopq(X)
-    return _PCA_MODEL_CACHE[key]
+        return twin.fit_pca_lopq(X)
 
-
-_PCA_CODES_CACHE: dict[tuple, DataFrame] = {}
+    return cache.memo("pca_model", None, twin.fixture_paths(sf_dir), build)
 
 
 def pca_codes_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA-projected codes relation, built once per sf_dir and persisted
     (same broadcast-hygiene rationale as :func:`codes_df`)."""
-    from ..session import cached_relation
-
     def build() -> DataFrame:
         from .train_spark import pca_project
 
@@ -438,9 +395,7 @@ def pca_codes_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, projected, pm.lopq, id_col="id", vec_col="v"
         ).persist()
 
-    return cached_relation(
-        _PCA_CODES_CACHE, spark, _fixture_key(_PCA_CODES_CACHE, sf_dir), build
-    )
+    return cache.memo("pca_codes", None, twin.fixture_paths(sf_dir), build, spark)
 
 
 @register(

@@ -34,6 +34,7 @@ from typing import Any
 import numpy as np
 import pyarrow.parquet as pq
 
+from .. import cache
 from .model import LOPQModel, LOPQModelPCA, apply_pca, pca_axes
 from .search import adc_batch_dists, multisequence_cells
 
@@ -65,13 +66,18 @@ PCA_DIM = 16
 PCA_LOPQ_PARAMS = {"V": 4, "M": 4, "K": 8, "seed": 11, "n_iter": 8}
 PCA_QUOTA = 120
 
-_STATE: dict[str, dict[str, Any]] = {}
+
+def fixture_paths(sf_dir: str) -> list[str]:
+    """The files every fixture-derived value (model, codes, IVF index,
+    this twin's state) is a function of: the memo stamp for ``cache.memo``."""
+    return [os.path.join(sf_dir, "embeddings.parquet")]
 
 
 def _state(sf_dir: str) -> dict[str, Any]:
-    """Per-sf-dir cache: corpus, fixture model, codes, IVF centroids."""
-    if sf_dir not in _STATE:
-        t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    """Per-fixture state: corpus, fixture model, codes, IVF centroids."""
+
+    def build() -> dict[str, Any]:
+        t = pq.read_table(fixture_paths(sf_dir)[0])
         ids = np.asarray(t.column("vec_id").to_pylist(), dtype=np.int64)
         X = np.asarray(t.column("embedding").to_pylist(), dtype=np.float64)
         order = np.argsort(ids, kind="stable")
@@ -80,7 +86,7 @@ def _state(sf_dir: str) -> dict[str, Any]:
         model = LOPQModel.fit(X[:SAMPLE_LIMIT], **FIXTURE_PARAMS)
         coarse, fine = model.encode(X)
         cells = model.cell_id(coarse)
-        _STATE[sf_dir] = {
+        return {
             "ids": ids,
             "X": X,
             "model": model,
@@ -88,7 +94,8 @@ def _state(sf_dir: str) -> dict[str, Any]:
             "fine": fine,
             "cells": cells,
         }
-    return _STATE[sf_dir]
+
+    return cache.memo("twin", None, fixture_paths(sf_dir), build)
 
 
 def _values_sql(rows: list[tuple], cols: list[tuple[str, str]]) -> str:

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..lopq import twin
 from ..lopq.model import kmeans
 from ..registry import register
@@ -36,9 +37,6 @@ N_PROBE = twin.IVF_PROBE  # probes 6/16 cells; recall@10 ~0.74 on the weakly-clu
 TOP_K = twin.TOP_K
 N_QUERIES = twin.N_QUERIES
 
-_CENTROID_CACHE: dict[tuple, np.ndarray] = {}
-
-
 def train_centroids(
     spark: SparkSession,
     sf_dir: str,
@@ -49,15 +47,8 @@ def train_centroids(
     sample_limit: int = twin.SAMPLE_LIMIT,
 ) -> np.ndarray:
     # sample_limit is part of the key (review r13): it changes the trained
-    # centroids, so omitting it served stale centroids to a caller varying
-    # it. The fixture stamp prefixes the key (r15, VERDICT r14 #5): a
-    # regenerated fixture dir must retrain, not serve stale centroids.
-    from ..session import evict_stale_fixture_entries, fixture_cache_key
-
-    stamp = fixture_cache_key(sf_dir)
-    evict_stale_fixture_entries(_CENTROID_CACHE, stamp)
-    key = (*stamp, k, sample_limit)
-    if key not in _CENTROID_CACHE:
+    # centroids, so omitting it served stale centroids to a caller varying it
+    def build() -> np.ndarray:
         rows = (
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding")
@@ -66,8 +57,11 @@ def train_centroids(
             .collect()
         )
         X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-        _CENTROID_CACHE[key], _ = kmeans(X, k, seed=42)
-    return _CENTROID_CACHE[key]
+        return kmeans(X, k, seed=42)[0]
+
+    return cache.memo(
+        "centroids", (k, sample_limit), twin.fixture_paths(sf_dir), build
+    )
 
 
 def build_index(
@@ -147,29 +141,16 @@ def ivf_search(
     )
 
 
-_INDEX_CACHE: dict[tuple, DataFrame] = {}
-
-
 def cached_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The inverted file, built ONCE per sf_dir and persisted — the
+    """The inverted file, built once per fixture stamp and persisted — the
     production shape (the index is materialized once, probed many times),
-    and it avoids re-broadcasting the centroids per query call (dead
-    broadcasts accumulate until a driver GC; see lopq.queries.codes_df).
-    Keyed on the fixture stamp (r15): a regenerated fixture dir rebuilds
-    and the stale index unpersists."""
-    from ..session import (
-        cached_relation,
-        evict_stale_fixture_entries,
-        fixture_cache_key,
-    )
-
-    stamp = fixture_cache_key(sf_dir)
-    evict_stale_fixture_entries(_INDEX_CACHE, stamp)
-    return cached_relation(
-        _INDEX_CACHE,
-        spark,
-        stamp,
+    and it avoids re-broadcasting the centroids per query call."""
+    return cache.memo(
+        "ivf_index",
+        None,
+        twin.fixture_paths(sf_dir),
         lambda: build_index(spark, sf_dir, train_centroids(spark, sf_dir)).persist(),
+        spark,
     )
 
 

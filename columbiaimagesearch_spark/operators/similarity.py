@@ -906,8 +906,23 @@ def emb_lsh_pairs_from(
             if not m_all:
                 continue
             col = batch.column(1)  # v list<double>
+            # one NULL or short vector would shift every later row of the
+            # reshape onto the wrong vec_id: refuse instead
+            if col.null_count:
+                raise ValueError(
+                    f"emb_lsh_pairs_from: {col.null_count} NULL vector(s) in v"
+                )
+            lens = np.diff(np.asarray(col.offsets))
+            d = int(lens[0])
+            if (lens != d).any():
+                raise ValueError(
+                    "emb_lsh_pairs_from: ragged vectors in v (lengths "
+                    f"{int(lens.min())}..{int(lens.max())}); every vector "
+                    "must have the same width"
+                )
+            if d == 0:
+                raise ValueError("emb_lsh_pairs_from: zero-width vectors in v")
             flat = np.asarray(col.flatten(), dtype=np.float64)
-            d = flat.size // m_all
             V_all = flat.reshape(m_all, d)
             ids_all = np.asarray(batch.column(0), dtype=np.int64)
             row_b = d * 8

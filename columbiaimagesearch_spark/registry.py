@@ -19,11 +19,14 @@ Parity rules (Spark vs DuckDB) baked into every spec:
 
 from __future__ import annotations
 
+import glob
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from . import cache
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -65,82 +68,22 @@ class QuerySpec:
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
-# Memoized builder plans (r16, guide §1/§7.3 — driver-side latency):
-# repeated invocations of the same declared query rebuild a bit-identical
-# logical plan through hundreds of py4j round-trips — measured 40-455 ms of
-# pure driver time per build at sf0.1 BEFORE any task runs
-# (scripts/profile_queries.py: llm_fuzzy_decontaminate 455 ms build vs
-# 498 ms exec). The memo holds the LAZY DataFrame only — a prepared plan,
-# never rows: every action on it re-executes the full plan from the parquet
-# inputs, exactly like a SQL engine's prepared-statement cache. Keyed on:
-#  - the (mtime_ns, size) stamp of every *.parquet directly under sf_dir,
-#    so an in-place fixture rewrite misses instead of serving a stale
-#    FileIndex (same stamp idiom as sources.tables._SCAN_CACHE);
-#  - the live ``parallelize_scan`` seam object, so the spread-invariance
-#    suite's monkeypatch of that seam still reaches repeat builds;
-#  - the session (liveness re-checked on hit, entries of dead sessions
-#    evicted on insert).
-# A stat failure (fixture mid-rewrite) disables memoization for that call
-# rather than caching under a degraded key.
-_BUILDER_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _sf_dir_stamp(sf_dir: str) -> tuple | None:
-    try:
-        out = []
-        for f in sorted(os.listdir(sf_dir)):
-            if f.endswith(".parquet"):
-                st = os.stat(os.path.join(sf_dir, f))
-                out.append((f, st.st_mtime_ns, st.st_size))
-        return tuple(out)
-    except OSError:
-        return None
-
-
-def clear_builder_memo() -> None:
-    _BUILDER_MEMO.clear()
-
-
 def _memoized(name: str, fn: Builder) -> Builder:
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .sources import tables as tables_mod
 
-        stamp = _sf_dir_stamp(sf_dir)
-        if stamp is None:
-            return fn(spark, sf_dir)
-        # The seam is keyed by the OBJECT, not id(): the key tuple holds a
-        # strong reference, so a monkeypatched-then-collected seam function
-        # can never alias a later function that reused its id (ADVICE r16).
-        key = (name, os.path.realpath(sf_dir), stamp,
-               tables_mod.parallelize_scan)
-        df = _BUILDER_MEMO.get(key)
-        if (
-            df is not None
-            and df.sparkSession is spark
-            and not spark.sparkContext._jsc.sc().isStopped()
-        ):
-            return df
-        df = fn(spark, sf_dir)
-        # Evict only what can no longer hit: same (name, sf_dir) under a
-        # different stamp/seam (the fixture was rewritten or the seam
-        # swapped), plus entries of dead sessions. Entries for OTHER
-        # sf_dirs of the same query survive, so alternating sf_dirs in one
-        # session (oracle parity at sf0.01 interleaved with bench at
-        # sf0.1) hit instead of thrashing (ADVICE r16).
-        def _dead(v: DataFrame) -> bool:
-            try:
-                return v.sparkSession.sparkContext._jsc.sc().isStopped()
-            except Exception:  # noqa: BLE001 — session unreachable = dead
-                return True
-
-        for k in [
-            k
-            for k, v in list(_BUILDER_MEMO.items())
-            if (k[0] == name and k[1] == key[1] and k != key) or _dead(v)
-        ]:
-            _BUILDER_MEMO.pop(k, None)
-        _BUILDER_MEMO[key] = df
-        return df
+        # The seam is keyed by the OBJECT, not id(), so the spread-invariance
+        # suite's monkeypatch of it reaches repeat builds, and a collected
+        # stub can never alias a later function that reused its id. sf_dir
+        # is in the key too, so two dirs holding no parquet files (the same
+        # empty path list) never share an entry.
+        return cache.memo(
+            "builder",
+            (name, os.path.realpath(sf_dir), tables_mod.parallelize_scan),
+            sorted(glob.glob(os.path.join(glob.escape(sf_dir), "*.parquet"))),
+            lambda: fn(spark, sf_dir),
+            spark,
+        )
 
     build.__name__ = fn.__name__
     build.__doc__ = fn.__doc__

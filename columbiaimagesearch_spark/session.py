@@ -25,91 +25,6 @@ from pyspark.sql import SparkSession
 _SHIPPED: set[int] = set()
 
 
-def cached_relation(cache: dict, spark: SparkSession, key, build):
-    """Fetch-or-build a session-bound DataFrame from a module-level cache.
-
-    A cache keyed by ``key`` alone holds DataFrames bound to a specific
-    SparkSession: after a session stop/restart in the same process the
-    lookup would hand back a handle on the DEAD session and fail opaquely
-    on first use. A hit therefore also requires the cached DataFrame to
-    belong to the CURRENT, unstopped session; otherwise it is rebuilt (the
-    stale entry's persisted blocks died with its session — nothing to
-    unpersist)."""
-    df = cache.get(key)
-    if (
-        df is not None
-        and df.sparkSession is spark
-        and not spark.sparkContext._jsc.sc().isStopped()
-    ):
-        return df
-    df = build()
-    cache[key] = df
-    return df
-
-
-def fixture_cache_key(sf_dir: str, table: str = "embeddings") -> tuple:
-    """Cache key for a per-fixture-dir memo: the dir plus the source
-    parquet's (mtime_ns, size) stamp.
-
-    The sf_dir-keyed module caches (fixture models, codes relations, eval
-    stats) assumed fixture dirs are immutable — true for the driver/bench
-    lifecycle, but a session that regenerates a fixture dir in-process
-    would be served stale results with nothing in the record to show it
-    (VERDICT r14 #5 / ADVICE r14). A rewrite changes the stamp, so the
-    stale entry simply stops matching; pass the key to
-    ``evict_stale_fixture_entries`` to also release what it pinned."""
-    import os as _os
-
-    try:
-        st = _os.stat(_os.path.join(sf_dir, f"{table}.parquet"))
-        return (sf_dir, st.st_mtime_ns, st.st_size)
-    except OSError:
-        # Transient stat failure (fixture parquet mid-rewrite, listing
-        # race). A SHARED degraded key here was the ADVICE r15 bug: every
-        # valid same-dir entry got evicted immediately, and two different
-        # fixture generations would then alias under the degraded stamp.
-        # Instead return a NEVER-MATCHING key (unique per call): callers
-        # build fresh without ever getting a cache hit, healthy-stamped
-        # entries survive untouched, and the next healthy stamp evicts any
-        # degraded leftovers.
-        global _UNSTAMPED_SEQ
-        _UNSTAMPED_SEQ += 1
-        return (sf_dir, _UNSTAMPED, _UNSTAMPED_SEQ)
-
-
-_UNSTAMPED = "__unstamped__"  # sentinel stamp component, see above
-_UNSTAMPED_SEQ = 0
-
-
-def evict_stale_fixture_entries(cache: dict, stamp: tuple) -> None:
-    """Drop cache entries for ``stamp``'s sf_dir carrying any OTHER stamp,
-    unpersisting evicted DataFrames — without this, every fixture rewrite
-    leaks the old entry's pinned blocks for the life of the driver
-    (ADVICE r14 on _NN_PAIRS_CACHE). Keys may extend the stamp with extra
-    dimensions (e.g. centroid caches append (k, sample_limit)): an entry
-    survives iff its first ``len(stamp)`` elements equal the stamp.
-
-    A degraded (unstamped) ``stamp`` evicts ONLY other degraded entries of
-    the dir (they can never be hit again), never healthy-stamped ones —
-    a stat hiccup must not flush a valid cache (ADVICE r15)."""
-    from pyspark.sql import DataFrame as _DF
-
-    degraded = len(stamp) > 1 and stamp[1] == _UNSTAMPED
-    for k in [
-        k
-        for k in list(cache)
-        if k[0] == stamp[0]
-        and k[: len(stamp)] != stamp
-        and (not degraded or (len(k) > 1 and k[1] == _UNSTAMPED))
-    ]:
-        old = cache.pop(k)
-        if isinstance(old, _DF):
-            try:
-                old.unpersist()
-            except Exception:  # noqa: BLE001 — session already gone
-                pass
-
-
 def ensure_shipped(spark: SparkSession) -> None:
     """Ship this package to the Python workers of ``spark``.
 

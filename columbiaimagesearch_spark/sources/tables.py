@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import cache
+
 TABLES = (
     "region",
     "nation",
@@ -29,42 +31,6 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# Memoized scan relations (r16, guide §1/§7.3 — driver-side cost):
-# ``spark.read.parquet`` builds a fresh FileIndex + reads the footer schema
-# on EVERY call, measured ~110 ms of pure driver time per table load at
-# sf0.1; builders that load 2-3 tables paid ~0.3-0.5 s per bench sample
-# before any task ran. The cache holds the LAZY scan DataFrame only — a
-# query plan, never rows: every action still scans the parquet files in
-# full, exactly like a catalog table handle (``spark.table``) that keeps
-# its resolved relation between queries. Keyed on the file's
-# (mtime_ns, size) stamp so an in-place fixture rewrite misses instead of
-# serving a stale FileIndex, and on the session (a handle from a stopped
-# session is useless — see cached_relation).
-_SCAN_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _path_stamp(path: str) -> tuple | None:
-    """Invalidation stamp for a parquet path: (mtime_ns, size) of the file,
-    or — when the path is a Spark-written parquet DIRECTORY — the sorted
-    (name, mtime_ns, size) of its entries. A part file rewritten in place
-    does not bump the directory's own mtime/size, so a dir-level stat would
-    serve a stale FileIndex (ADVICE r16); stamping the entries catches it.
-    None on stat failure (non-local path / mid-rewrite): callers skip the
-    memo for that call rather than caching under a degraded key."""
-    try:
-        st = os.stat(path)
-        if not os.path.isdir(path):
-            return (st.st_mtime_ns, st.st_size)
-        entries = []
-        with os.scandir(path) as it:
-            for e in sorted(it, key=lambda e: e.name):
-                est = e.stat()
-                entries.append((e.name, est.st_mtime_ns, est.st_size))
-        return (st.st_mtime_ns, tuple(entries))
-    except OSError:
-        return None
-
-
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
@@ -78,31 +44,13 @@ def load_table(
     ensure_shipped(spark)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    stamp = _path_stamp(path)  # None on stat failure: no memo for this call
     # Only the BASE scan is memoized; the spread repartition is applied per
     # call so the parallelize_scan seam (and the spread-invariance suite's
     # monkeypatch of it) still sees every spread request. The repartition
-    # itself is one shallow transformation over the cached scan (~10 ms);
-    # the expensive probe behind it is memoized separately (_SPREAD_CACHE).
-    key = (path, stamp)
-    df = _SCAN_CACHE.get(key) if stamp is not None else None
-    if (
-        df is None
-        or df.sparkSession is not spark
-        or spark.sparkContext._jsc.sc().isStopped()
-    ):
-        df = _build_table(spark, path, name)
-        if stamp is not None:
-            # drop other stamps of this path (rewritten fixture) and entries
-            # of dead sessions — the cache stays O(#tables)
-            for k in [
-                k
-                for k, v in list(_SCAN_CACHE.items())
-                if (k[0] == path and k[1] != stamp)
-                or v.sparkSession is not spark
-            ]:
-                _SCAN_CACHE.pop(k, None)
-            _SCAN_CACHE[key] = df
+    # itself is one shallow transformation over the cached scan (~10 ms).
+    df = cache.memo(
+        "scan", None, [path], lambda: _build_table(spark, path, name), spark
+    )
     # spread=True: give CPU-heavy per-row consumers full parallelism even
     # on a single-split source (see parallelize_scan; memoized per path).
     # Applied AFTER the events normalization so every table honors it.
@@ -137,25 +85,6 @@ def _build_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     return df
 
 
-# Memoized spread decisions: the probe (`df.rdd.getNumPartitions()`)
-# forces a full analyze+plan pass that measured ~90 ms per call — more
-# than the shuffle it gates for sub-second queries. Split counts are a
-# pure function of (file layout, maxPartitionBytes, parallelism); the key
-# carries all three — file layout as (mtime, size) of the path so an
-# in-place rewrite (e.g. regenerated fixtures growing extra row groups)
-# invalidates the entry instead of serving a stale decision.
-_SPREAD_CACHE: dict[tuple, bool] = {}
-
-
-def _spread_cache_key(df: DataFrame, cache_key: str, target: int) -> tuple:
-    # same dir-aware stamp as the scan memo; None = non-local path, no stat
-    layout = _path_stamp(cache_key)
-    max_bytes = df.sparkSession.conf.get(
-        "spark.sql.files.maxPartitionBytes", "134217728"
-    )
-    return (cache_key, layout, max_bytes, target)
-
-
 def parallelize_scan(df: DataFrame, cache_key: str | None = None) -> DataFrame:
     """Spread a SMALL scan across the session's cores — a no-op at scale.
 
@@ -181,11 +110,17 @@ def parallelize_scan(df: DataFrame, cache_key: str | None = None) -> DataFrame:
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if cache_key is not None:
-        key = _spread_cache_key(df, cache_key, target)
-        need = _SPREAD_CACHE.get(key)
-        if need is None:
-            need = df.rdd.getNumPartitions() < target
-            _SPREAD_CACHE[key] = need
+        # split counts are a pure function of (file layout,
+        # maxPartitionBytes, parallelism): the stamp covers the layout
+        max_bytes = df.sparkSession.conf.get(
+            "spark.sql.files.maxPartitionBytes", "134217728"
+        )
+        need = cache.memo(
+            "spread",
+            (max_bytes, target),
+            [cache_key],
+            lambda: df.rdd.getNumPartitions() < target,
+        )
     else:
         need = df.rdd.getNumPartitions() < target
     return df.repartition(target) if need else df

@@ -1,0 +1,100 @@
+"""Every file-derived memo in the package goes through ``cache.memo``.
+
+Before ``cache.py`` the engine kept thirteen module-level caches with three
+stamp functions, each with its own invalidation gap. This guard fails when a
+module other than ``cache.py`` grows a module-level cache dict again, or
+stats files itself to invalidate one."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+PKG = Path(__file__).resolve().parent.parent / "columbiaimagesearch_spark"
+# not file-derived caches: an executor-side per-worker model singleton and
+# the query-spec registry
+ALLOWED = {"_MODEL_SINGLETONS", "_REGISTRY"}
+STAT_CALLS = {"stat", "lstat", "scandir"}
+
+
+def _module_dicts(tree: ast.Module):
+    for node in tree.body:
+        if isinstance(node, ast.Assign):
+            targets, value = node.targets, node.value
+        elif isinstance(node, ast.AnnAssign) and node.value is not None:
+            targets, value = [node.target], node.value
+        else:
+            continue
+        # an EMPTY dict at module level is a store filled at run time;
+        # constant tables (knob presets, lookup maps) are not caches
+        is_dict = (isinstance(value, ast.Dict) and not value.keys) or (
+            isinstance(value, ast.Call)
+            and isinstance(value.func, ast.Name)
+            and value.func.id == "dict"
+            and not value.args
+            and not value.keywords
+        )
+        for t in targets:
+            if isinstance(t, ast.Name) and (
+                is_dict or t.id.endswith(("_CACHE", "_MEMO"))
+            ):
+                yield node.lineno, t.id
+
+
+def _os_aliases(tree: ast.Module) -> set[str]:
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names |= {a.asname or a.name for a in node.names if a.name == "os"}
+    return names
+
+
+def _stat_calls(tree: ast.Module):
+    aliases = _os_aliases(tree)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "os":
+            for a in node.names:
+                if a.name in STAT_CALLS:
+                    yield node.lineno, f"from os import {a.name}"
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in STAT_CALLS
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id in aliases
+        ):
+            yield node.lineno, f"{node.func.value.id}.{node.func.attr}()"
+
+
+def test_no_module_caches_outside_cache_py():
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path.name == "cache.py" and path.parent == PKG:
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        rel = path.relative_to(PKG.parent)
+        offenders += [
+            f"{rel}:{line}: module-level dict {name}"
+            for line, name in _module_dicts(tree)
+            if name not in ALLOWED
+        ]
+        offenders += [
+            f"{rel}:{line}: {call}" for line, call in _stat_calls(tree)
+        ]
+    assert not offenders, (
+        "file-derived memos go through columbiaimagesearch_spark.cache.memo:\n"
+        + "\n".join(offenders)
+    )
+
+
+def test_guard_catches_a_planted_cache():
+    planted = ast.parse(
+        "import os as _os\n"
+        "_X_CACHE: dict = {}\n"
+        "_Y = dict()\n"
+        "_PARAMS = {'k': 1}\n"
+        "def f(p):\n"
+        "    return _os.stat(p)\n"
+    )
+    assert [n for _, n in _module_dicts(planted)] == ["_X_CACHE", "_Y"]
+    assert [c for _, c in _stat_calls(planted)] == ["_os.stat()"]

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from columbiaimagesearch_spark import registry
+from columbiaimagesearch_spark import cache, registry
 from columbiaimagesearch_spark.plans import explain
 from columbiaimagesearch_spark.sources import load_table
 
@@ -25,8 +25,10 @@ def _fresh_plans():
     any earlier test has executed it, explain() shows the final AQE plan
     (materialized query stages, AQEShuffleRead) whose node inventory
     differs from the initial one. Clearing the memo per test pins the
-    plan a fresh build produces — what every first execution runs."""
-    registry.clear_builder_memo()
+    plan a fresh build produces — what every first execution runs. Only
+    the builder memo: clearing the persisted codes and index relations
+    too would change the plans that read them."""
+    cache.clear("builder")
     yield
 
 
@@ -393,15 +395,14 @@ def test_parallelize_scan_spreads_single_split_only(spark):
     # load_table(spread=True) memoizes the split-count probe per path —
     # the probe itself costs a full analyze+plan pass (~90 ms), more than
     # the shuffle it gates for sub-second queries
-    from columbiaimagesearch_spark.sources import tables as tables_mod
+    import os
 
     spread2 = load_table(spark, SF_SMOKE, "documents", spread=True)
     assert spread2.rdd.getNumPartitions() == target
-    path = f"{SF_SMOKE}/documents.parquet"
-    hits = [
-        k for k in tables_mod._SPREAD_CACHE if k[0] == path and k[-1] == target
-    ]
-    assert hits and tables_mod._SPREAD_CACHE[hits[0]] is True
+    roots = (os.path.realpath(f"{SF_SMOKE}/documents.parquet"),)
+    memo = cache.entries("spread")
+    hits = [k for k in memo if k[0] == roots and k[1][-1] == target]
+    assert hits and memo[hits[0]] is True
 
     # events' ts-normalization branch must honor spread too (it returned
     # early before the spread handling once)

@@ -192,3 +192,27 @@ def test_derive_lsh_knobs_rejects_recall_one(spark):
         derive_lsh_knobs(10_000, recall=0.0)
     bands, bits = derive_lsh_knobs(10_000, recall=0.9)  # valid still works
     assert bands > 0 and bits > 0
+
+
+@pytest.mark.parametrize(
+    "vectors, message",
+    [
+        # one NULL vector would shift every later row onto the wrong vec_id
+        ([[1.0, 0.0], None, [0.0, 1.0]], "NULL vector"),
+        # lengths 2+1+3 = 3 rows x 2: a flat-size check alone would pass
+        ([[1.0, 0.0], [0.5], [0.0, 1.0, 0.0]], "ragged vectors"),
+        ([[], [], []], "zero-width vectors"),
+    ],
+    ids=["null", "ragged", "zero_width"],
+)
+def test_emb_lsh_refuses_malformed_vectors(spark, vectors, message):
+    """The Arrow banding pass reshapes each batch's flattened vectors into
+    an (n, d) matrix: malformed input must raise a descriptive error, not
+    yield plausible but wrong pairs (or a ZeroDivisionError at d == 0)."""
+    from columbiaimagesearch_spark.operators.similarity import emb_lsh_pairs_from
+
+    vec_df = spark.createDataFrame(
+        list(enumerate(vectors)), "vec_id bigint, v array<double>"
+    ).coalesce(1)  # one Arrow batch: raggedness is visible within it
+    with pytest.raises(Exception, match=message):
+        emb_lsh_pairs_from(vec_df, bands=2, bits=3, max_bucket=None).collect()
