@@ -585,6 +585,31 @@ def _lsh_band_keys(V: np.ndarray, bands: int = LSH_BANDS, bits: int = LSH_BITS,
     return keys
 
 
+def arrow_vectors(batch, caller: str) -> tuple[np.ndarray, np.ndarray]:
+    """``(ids, V)`` of a non-empty Arrow batch whose column 0 is the int64
+    id and column 1 the ``list<double>`` vector: the list column flattens
+    zero-copy to the (n, d) float64 matrix, so every value keeps its bits.
+
+    One NULL or short vector would shift every later row of the reshape
+    onto the wrong id, and d == 0 would key every vector alike: refuse all
+    three with a descriptive ``ValueError`` naming ``caller``."""
+    col = batch.column(1)
+    if col.null_count:
+        raise ValueError(f"{caller}: {col.null_count} NULL vector(s) in v")
+    lens = np.diff(np.asarray(col.offsets))
+    d = int(lens[0])
+    if (lens != d).any():
+        raise ValueError(
+            f"{caller}: ragged vectors in v (lengths "
+            f"{int(lens.min())}..{int(lens.max())}); every vector "
+            "must have the same width"
+        )
+    if d == 0:
+        raise ValueError(f"{caller}: zero-width vectors in v")
+    V = np.asarray(col.flatten(), dtype=np.float64).reshape(batch.num_rows, d)
+    return np.asarray(batch.column(0), dtype=np.int64), V
+
+
 def _matmul_candidate_indices(
     Vn: np.ndarray, threshold: float
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -905,27 +930,8 @@ def emb_lsh_pairs_from(
             m_all = batch.num_rows
             if not m_all:
                 continue
-            col = batch.column(1)  # v list<double>
-            # one NULL or short vector would shift every later row of the
-            # reshape onto the wrong vec_id: refuse instead
-            if col.null_count:
-                raise ValueError(
-                    f"emb_lsh_pairs_from: {col.null_count} NULL vector(s) in v"
-                )
-            lens = np.diff(np.asarray(col.offsets))
-            d = int(lens[0])
-            if (lens != d).any():
-                raise ValueError(
-                    "emb_lsh_pairs_from: ragged vectors in v (lengths "
-                    f"{int(lens.min())}..{int(lens.max())}); every vector "
-                    "must have the same width"
-                )
-            if d == 0:
-                raise ValueError("emb_lsh_pairs_from: zero-width vectors in v")
-            flat = np.asarray(col.flatten(), dtype=np.float64)
-            V_all = flat.reshape(m_all, d)
-            ids_all = np.asarray(batch.column(0), dtype=np.int64)
-            row_b = d * 8
+            ids_all, V_all = arrow_vectors(batch, "emb_lsh_pairs_from")
+            row_b = V_all.shape[1] * 8
             # pa.binary() offsets are int32: cap each OUTPUT batch so the
             # replicated payload (rows*bands*d*8 bytes) stays under 2^31
             # — wide vectors (d=4096 at a 10k-row Arrow batch) would

@@ -69,7 +69,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import hygiene
-from . import dedup_stream
+from . import dedup_stream, state
 
 CURATE_DOC_SCHEMA = "doc_id long, text string, lang string, source string"
 # fuzzy_contaminated appended r9: state written by earlier rounds lacks the
@@ -80,18 +80,6 @@ _VERDICT_SCHEMA = (
     "repetitive boolean, fuzzy_contaminated boolean"
 )
 _BENCH_SCHEMA = "doc_id long, text string"
-
-
-def _path(state_dir: str, name: str) -> str:
-    return os.path.join(state_dir, name)
-
-
-def _read_state(spark: SparkSession, state_dir: str, name: str, schema: str) -> DataFrame:
-    path = _path(state_dir, name)
-    if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
-        spark.catalog.refreshByPath(path)
-        return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
 
 
 def register_benchmark(spark: SparkSession, bench_docs: DataFrame, state_dir: str) -> None:
@@ -109,12 +97,12 @@ def register_benchmark(spark: SparkSession, bench_docs: DataFrame, state_dir: st
     suites must rotate under a live stream, port the versioned-dir +
     meta-rename idiom from emb_decon_stream."""
     bench_docs.select("doc_id", "text").write.mode("overwrite").parquet(
-        _path(state_dir, "bench")
+        os.path.join(state_dir, "bench")
     )
 
 
 def read_verdicts(spark: SparkSession, state_dir: str) -> DataFrame:
-    return _read_state(spark, state_dir, "verdicts", _VERDICT_SCHEMA)
+    return state.read(spark, os.path.join(state_dir, "verdicts"), _VERDICT_SCHEMA)
 
 
 def curate_batch_step(
@@ -174,7 +162,7 @@ def curate_batch_step(
         if n_fresh == 0:
             return 0
 
-        bench = _read_state(spark, state_dir, "bench", _BENCH_SCHEMA)
+        bench = state.read(spark, os.path.join(state_dir, "bench"), _BENCH_SCHEMA)
         dec = hygiene.decontaminate_from(fresh, bench).select(
             "doc_id", "contaminated"
         )
@@ -221,7 +209,7 @@ def curate_batch_step(
             spark, fresh.select("doc_id", "text"), state_dir, hashed=h_t
         )
         # verdicts (this step's claim table) land LAST — see module docstring
-        verdicts.write.mode("append").parquet(_path(state_dir, "verdicts"))
+        verdicts.write.mode("append").parquet(os.path.join(state_dir, "verdicts"))
         return n_fresh
     finally:
         if h_t is not None:
@@ -262,27 +250,17 @@ def run_incremental_curation(
     quality_filter: bool = False,
     fuzzy_decontaminate: bool = False,
 ) -> None:
-    """Drain ``src_dir`` (JSONL doc drops, availableNow) through the
-    incremental curation. Source offsets checkpoint with the query (ST3);
-    the claim anti-join makes redelivered batches no-ops (ST2)."""
-    stream = (
-        spark.readStream.schema(CURATE_DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(src_dir)
+    """Drain ``src_dir`` (JSONL doc drops) through the incremental
+    curation (see :func:`state.run_incremental`)."""
+    state.run_incremental(
+        spark, src_dir, CURATE_DOC_SCHEMA, checkpoint_dir,
+        lambda batch_df: curate_batch_step(
+            spark,
+            batch_df,
+            state_dir,
+            scrub_pii=scrub_pii,
+            quality_filter=quality_filter,
+            fuzzy_decontaminate=fuzzy_decontaminate,
+        ),
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch_df, _bid: curate_batch_step(
-                spark,
-                batch_df,
-                state_dir,
-                scrub_pii=scrub_pii,
-                quality_filter=quality_filter,
-                fuzzy_decontaminate=fuzzy_decontaminate,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

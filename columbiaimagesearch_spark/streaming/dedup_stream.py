@@ -37,27 +37,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup
+from . import state
 
 DOC_SCHEMA = "doc_id long, text string"
 _HASHES_SCHEMA = "doc_id long, hs array<bigint>"
 _BANDS_SCHEMA = "doc_id long, band_key string"
 _PAIRS_SCHEMA = "doc_a long, doc_b long, jaccard double"
-
-
-def _state_path(state_dir: str, name: str) -> str:
-    return os.path.join(state_dir, name)
-
-
-def _read_state(spark: SparkSession, state_dir: str, name: str, schema: str) -> DataFrame:
-    path = _state_path(state_dir, name)
-    if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
-        # Spark caches file-status listings per path across queries
-        # (metadataCacheTTLSeconds = -1 by default), so a state path first
-        # listed in batch N would silently hide files batch N appends from
-        # batch N+1 — refresh makes every step see the current snapshot.
-        spark.catalog.refreshByPath(path)
-        return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
 
 
 def read_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -67,13 +52,13 @@ def read_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
     duplicate EDGES are the documented crash-replay residue (survivor sets
     are unaffected either way; min-label propagation is idempotent over
     repeated edges). Deduping here keeps every consumer's view exact."""
-    return _read_state(spark, state_dir, "pairs", _PAIRS_SCHEMA).dropDuplicates(
-        ["doc_a", "doc_b"]
-    )
+    return state.read(
+        spark, os.path.join(state_dir, "pairs"), _PAIRS_SCHEMA
+    ).dropDuplicates(["doc_a", "doc_b"])
 
 
 def read_hashes(spark: SparkSession, state_dir: str) -> DataFrame:
-    return _read_state(spark, state_dir, "hashes", _HASHES_SCHEMA)
+    return state.read(spark, os.path.join(state_dir, "hashes"), _HASHES_SCHEMA)
 
 
 def dedup_batch_step(
@@ -105,63 +90,38 @@ def dedup_batch_step(
     # Materialized (persist + count) BEFORE any append below so no plan
     # reads a state path while new files land in it.
     fresh = hashed_new.join(state_hashes, "doc_id", "left_anti").persist()
-    n_fresh = fresh.count()
-    if n_fresh == 0:
-        fresh.unpersist()
-        return 0
+    # try/finally: a refusal or a failed append must not strand the
+    # batch-sized caches on every foreachBatch retry
+    bands_fresh = None
+    try:
+        n_fresh = fresh.count()
+        if n_fresh == 0:
+            return 0
 
-    bands_fresh = dedup.bands_from(fresh).persist()
-    bands_fresh.count()
-    state_bands = _read_state(spark, state_dir, "bands", _BANDS_SCHEMA)
-
-    new_new = (
-        bands_fresh.alias("a")
-        .join(bands_fresh.alias("b"), ["band_key"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    )
-    # new-old: canonical (min, max) ordering keeps pair identity stable no
-    # matter which side arrived first
-    new_old = (
-        bands_fresh.alias("n")
-        .join(state_bands.alias("o"), ["band_key"])
-        # crash-replay guard (mirror of emb_dedup_stream): a crash between
-        # the bands and hashes appends leaves this batch's band rows in
-        # state but the batch unclaimed — the replay meets its OWN bands
-        # here, and without this filter emits doc_a == doc_b self-pairs
-        # (jaccard 1.0) that pass verify and poison the pairs state.
-        .where(F.col("n.doc_id") != F.col("o.doc_id"))
-        .select(
-            F.least(F.col("n.doc_id"), F.col("o.doc_id")).alias("doc_a"),
-            F.greatest(F.col("n.doc_id"), F.col("o.doc_id")).alias("doc_b"),
+        bands_fresh = dedup.bands_from(fresh).persist()
+        bands_fresh.count()
+        state_bands = state.read(spark, os.path.join(state_dir, "bands"), _BANDS_SCHEMA)
+        cands, bands_to_append = state.banded_candidates(
+            bands_fresh, state_bands, "doc_id", ["band_key"], ("doc_a", "doc_b")
         )
-    )
-    cands = new_new.unionByName(new_old).distinct()
-    all_hashed = fresh.unionByName(state_hashes)
-    pairs = dedup.verified_jaccard_pairs(cands, all_hashed)
+        all_hashed = fresh.unionByName(state_hashes)
+        pairs = dedup.verified_jaccard_pairs(cands, all_hashed)
 
-    # Append ORDER is load-bearing: writing to a path makes Spark re-cache
-    # every cached plan that scans that path (CacheManager.recacheByPath),
-    # so appending `fresh` to the hashes path first would recompute
-    # `bands_fresh` (whose lineage anti-joins against that very path) as
-    # EMPTY before its own write. Hashes — the claim table — must therefore
-    # land last, after every plan derived from the pre-append snapshot has
-    # been written out.
-    pairs.write.mode("append").parquet(_state_path(state_dir, "pairs"))
-    # second half of the crash-replay guard (mirror of emb_dedup_stream): a
-    # replayed batch whose bands already landed must not append them again —
-    # duplicate band rows would accumulate in state on every replay. One
-    # extra column-pruned scan of state_bands' doc_id column per batch; the
-    # candidates join above already scans state each batch, so the per-batch
-    # cost stays O(batch x bands + state + collisions).
-    bands_to_append = bands_fresh.join(
-        state_bands.select("doc_id").distinct(), "doc_id", "left_anti"
-    )
-    bands_to_append.write.mode("append").parquet(_state_path(state_dir, "bands"))
-    fresh.write.mode("append").parquet(_state_path(state_dir, "hashes"))
-    bands_fresh.unpersist()
-    fresh.unpersist()
-    return n_fresh
+        # Append ORDER is load-bearing: writing to a path makes Spark re-cache
+        # every cached plan that scans that path (CacheManager.recacheByPath),
+        # so appending `fresh` to the hashes path first would recompute
+        # `bands_fresh` (whose lineage anti-joins against that very path) as
+        # EMPTY before its own write. Hashes — the claim table — must therefore
+        # land last, after every plan derived from the pre-append snapshot has
+        # been written out.
+        pairs.write.mode("append").parquet(os.path.join(state_dir, "pairs"))
+        bands_to_append.write.mode("append").parquet(os.path.join(state_dir, "bands"))
+        fresh.write.mode("append").parquet(os.path.join(state_dir, "hashes"))
+        return n_fresh
+    finally:
+        if bands_fresh is not None:
+            bands_fresh.unpersist()
+        fresh.unpersist()
 
 
 def run_incremental_dedup(
@@ -171,21 +131,10 @@ def run_incremental_dedup(
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
 ) -> None:
-    """Drain ``src_dir`` (JSONL doc drops, availableNow) through the
-    incremental dedup. Source offsets checkpoint with the query (ST3); the
-    claim anti-join inside the step makes redelivered batches no-ops, so
-    transport is at-least-once but state is exactly-once."""
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(src_dir)
+    """Drain ``src_dir`` (JSONL doc drops) through the incremental dedup
+    (see :func:`state.run_incremental`)."""
+    state.run_incremental(
+        spark, src_dir, DOC_SCHEMA, checkpoint_dir,
+        lambda batch_df: dedup_batch_step(spark, batch_df, state_dir),
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch_df, _bid: dedup_batch_step(spark, batch_df, state_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -47,6 +47,7 @@ from ..operators.hygiene import (
     embedding_decontaminate_from,
 )
 from ..operators.similarity import LSH_SEED, derive_lsh_knobs
+from . import state
 
 VEC_SCHEMA = "vec_id long, v array<double>"
 _VERDICT_SCHEMA = (
@@ -54,39 +55,8 @@ _VERDICT_SCHEMA = (
 )
 
 
-def _path(state_dir: str, name: str) -> str:
-    return os.path.join(state_dir, name)
-
-
-def _read_state(
-    spark: SparkSession, state_dir: str, name: str, schema: str,
-    strict: bool = False,
-) -> DataFrame:
-    """``strict=False`` (the verdicts table): a missing dir IS a state —
-    no verdicts yet — and reads as an empty relation. ``strict=True``
-    (the suite dir a step's meta names): missing/empty means a concurrent
-    re-registration garbage-collected it, and silently reading an empty
-    suite would verdict the batch clean FOREVER (review r12) — raise."""
-    path = _path(state_dir, name)
-    try:
-        has = os.path.isdir(path) and any(
-            f.endswith(".parquet") for f in os.listdir(path)
-        )
-    except FileNotFoundError:  # dir deleted between isdir and listdir
-        has = False
-    if has:
-        spark.catalog.refreshByPath(path)  # see dedup_stream._read_state
-        return spark.read.schema(schema).parquet(path)
-    if strict:
-        raise RuntimeError(
-            f"state relation {name!r} under {state_dir!r} is missing or "
-            "empty"
-        )
-    return spark.createDataFrame([], schema)
-
-
 def _meta_path(state_dir: str) -> str:
-    return _path(state_dir, "meta.json")
+    return os.path.join(state_dir, "meta.json")
 
 
 def register_benchmark(
@@ -112,11 +82,11 @@ def register_benchmark(
     Crash safety (ADVICE r11): the suite parquet lands in a FRESH
     versioned dir (``bench_vN``) that nothing references yet, then
     meta.json — which names that dir alongside the knobs — is written to
-    a temp file, fsynced, and os.rename'd into place. The rename is the
-    single atomic commit point for (suite, knobs) AS A UNIT: a crash
-    anywhere before it leaves the OLD meta referencing the OLD, untouched
-    suite dir with the OLD knobs — never a new suite under old knobs and
-    never a truncated meta.json. Superseded suite dirs are
+    a temp file, fsynced, and renamed into place (``state.write_json``).
+    The rename is the single atomic commit point for (suite, knobs) AS A
+    UNIT: a crash anywhere before it leaves the OLD meta referencing the
+    OLD, untouched suite dir with the OLD knobs — never a new suite under
+    old knobs and never a truncated meta.json. Superseded suite dirs are
     garbage-collected after the commit (best-effort; a crash there
     strands an unreferenced dir, never an inconsistent pair)."""
     import re
@@ -140,33 +110,27 @@ def register_benchmark(
         default=-1,
     )
     bench_dir = f"bench_v{version}"
-    bench.write.mode("overwrite").parquet(_path(state_dir, bench_dir))
+    bench.write.mode("overwrite").parquet(os.path.join(state_dir, bench_dir))
     bench.unpersist()
-    meta_path = _meta_path(state_dir)
-    tmp_path = meta_path + ".tmp"
-    with open(tmp_path, "w") as fh:
-        json.dump(
-            {
-                "threshold": threshold,
-                "bands": int(bands),
-                "bits": int(bits),
-                "seed": int(seed),
-                "exact": bool(exact),
-                "n_bench": int(n),
-                "bench_dir": bench_dir,
-                "suite_version": version,
-            },
-            fh,
-        )
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.rename(tmp_path, meta_path)
+    state.write_json(
+        _meta_path(state_dir),
+        {
+            "threshold": threshold,
+            "bands": int(bands),
+            "bits": int(bits),
+            "seed": int(seed),
+            "exact": bool(exact),
+            "n_bench": int(n),
+            "bench_dir": bench_dir,
+            "suite_version": version,
+        },
+    )
     for d in stale:  # superseded suites (and any legacy "bench" dir)
-        shutil.rmtree(_path(state_dir, d), ignore_errors=True)
+        shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
 
 
 def read_verdicts(spark: SparkSession, state_dir: str) -> DataFrame:
-    return _read_state(spark, state_dir, "verdicts", _VERDICT_SCHEMA)
+    return state.read(spark, os.path.join(state_dir, "verdicts"), _VERDICT_SCHEMA)
 
 
 def emb_decon_batch_step(
@@ -200,7 +164,7 @@ def emb_decon_batch_step(
         if n_fresh == 0:
             return 0
         # The live suite is the dir meta names ("bench" = pre-r12 state
-        # dirs) — read it STRICTLY (review r12): _read_state's
+        # dirs) — read it STRICTLY (review r12): state.read's
         # empty-DataFrame fallback is right for the verdicts table (no
         # verdicts yet is a state), but wrong here — a step that read
         # meta just before a concurrent register_benchmark committed a
@@ -216,8 +180,8 @@ def emb_decon_batch_step(
             # step (loudly, since dirs are versioned, but a validated
             # snapshot removes the window entirely). The suite is
             # bench-sized; the pin is reclaimed by the ContextCleaner.
-            bench = _read_state(
-                spark, state_dir, bench_dir, VEC_SCHEMA, strict=True
+            bench = state.read(
+                spark, os.path.join(state_dir, bench_dir), VEC_SCHEMA, strict=True
             ).localCheckpoint(eager=True)
         except RuntimeError as e:
             raise RuntimeError(
@@ -262,7 +226,7 @@ def emb_decon_batch_step(
             max_bench_bytes=max_bench_bytes,
             exact=meta.get("exact", False),
         )
-        verdicts.write.mode("append").parquet(_path(state_dir, "verdicts"))
+        verdicts.write.mode("append").parquet(os.path.join(state_dir, "verdicts"))
         return n_fresh
     finally:
         fresh.unpersist()
@@ -275,23 +239,11 @@ def run_incremental_emb_decon(
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
 ) -> None:
-    """Drain ``src_dir`` (JSONL vector drops, availableNow) through the
-    incremental decontamination; offsets checkpoint with the query, the
-    verdict claim anti-join makes redeliveries no-ops. Register the suite
+    """Drain ``src_dir`` (JSONL vector drops) through the incremental
+    decontamination (see :func:`state.run_incremental`). Register the suite
     BEFORE starting (the step raises otherwise)."""
-    stream = (
-        spark.readStream.schema(VEC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(src_dir)
+    state.run_incremental(
+        spark, src_dir, VEC_SCHEMA, checkpoint_dir,
+        lambda batch_df: emb_decon_batch_step(spark, batch_df, state_dir),
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch_df, _bid: emb_decon_batch_step(
-                spark, batch_df, state_dir
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -39,65 +39,48 @@ from ..operators.similarity import (
     LSH_SEED,
     NEAR_DUP_COS,
     _lsh_band_keys,
+    arrow_vectors,
 )
+from . import state
 
 VEC_SCHEMA = "vec_id long, v array<double>"
 _BANDS_SCHEMA = "vec_id long, band int, key long"
 _PAIRS_SCHEMA = "vec_a long, vec_b long, cos_sim double"
 
-# r17 (VERDICT r16 #7): size the state-side candidate join like the batch
-# operator sizes its banded exchange (similarity.LSH_BANDED_ROWS_PER_TASK).
-# The rows here are (vec_id, band, key) INTS — ~30 B serialized, never
-# vectors (the stream design's whole point) — so the same ~45 MB/task
-# target admits ~1.5M rows per reduce task. At the session default of 32
-# partitions the join is fine through ~48M state band rows (~2.5M vectors
-# at 19 bands); past that the state side repartitions BOTH join inputs to
-# the computed width on the join key, which the equi-join reuses (same
-# exchange count, wider tasks-free-of-spill — the r16 1M batch lesson).
-STATE_BANDS_ROWS_PER_TASK = 1_500_000
-STATE_BANDS_MAX_PARTITIONS = 65536
-
-
-def _state_path(state_dir: str, name: str) -> str:
-    return os.path.join(state_dir, name)
-
-
-def _read_state(
-    spark: SparkSession, state_dir: str, name: str, schema: str
-) -> DataFrame:
-    path = _state_path(state_dir, name)
-    if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
-        spark.catalog.refreshByPath(path)  # see dedup_stream._read_state
-        return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
-
 
 def read_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
     """Accumulated verified pairs; deduped on read (crash-replay residue is
     duplicate EDGES, same contract as dedup_stream.read_pairs)."""
-    return _read_state(spark, state_dir, "pairs", _PAIRS_SCHEMA).dropDuplicates(
-        ["vec_a", "vec_b"]
-    )
+    return state.read(
+        spark, os.path.join(state_dir, "pairs"), _PAIRS_SCHEMA
+    ).dropDuplicates(["vec_a", "vec_b"])
 
 
 def read_vectors(spark: SparkSession, state_dir: str) -> DataFrame:
-    return _read_state(spark, state_dir, "vectors", VEC_SCHEMA)
+    return state.read(spark, os.path.join(state_dir, "vectors"), VEC_SCHEMA)
 
 
 def _band_rows_fn(bands: int, bits: int, seed: int):
-    def _band_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
+    """mapInArrow body over (vec_id, v): one (vec_id, band, key) int row per
+    vector and band. Vectors cross the batch operator's boundary
+    (``arrow_vectors``), so NULL, ragged and zero-width vectors raise and
+    the keys are bitwise equal to the batch operator's."""
+
+    def _band_rows(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            V = np.array(list(pdf["v"]), dtype=np.float64)
+            ids, V = arrow_vectors(batch, "emb_dedup_batch_step")
             keys = _lsh_band_keys(V, bands, bits, seed)
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.tile(pdf["vec_id"].to_numpy(), bands),
-                    "band": np.repeat(np.arange(bands), n),
-                    "key": keys.T.ravel(),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.tile(ids, bands)),
+                    pa.array(np.repeat(np.arange(bands, dtype=np.int32), len(ids))),
+                    pa.array(keys.T.ravel()),
+                ],
+                names=["vec_id", "band", "key"],
             )
 
     return _band_rows
@@ -165,10 +148,7 @@ def _resolve_knobs(
     except FileNotFoundError:
         pass
     if pinned is None and (bands is None or bits is None):
-        bands_path = _state_path(state_dir, "bands")
-        if os.path.isdir(bands_path) and any(
-            f.endswith(".parquet") for f in os.listdir(bands_path)
-        ):
+        if state.has_rows(os.path.join(state_dir, "bands")):
             # a state dir with resident band rows but no knobs file
             # predates knob pinning — silently pinning TODAY's defaults
             # would compare keys from a different hash family than the
@@ -200,17 +180,11 @@ def _resolve_knobs(
         bands = d_bands if bands is None else bands
         bits = d_bits if bits is None else bits
     os.makedirs(state_dir, exist_ok=True)
-    # tmp + rename: a crash mid-dump must leave NO knobs file (retryable),
-    # never a truncated one that wedges every later step on JSONDecodeError
-    final = _knobs_path(state_dir)
-    tmp = final + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"bands": int(bands), "bits": int(bits), "seed": int(seed),
-             "threshold": float(threshold)},
-            fh,
-        )
-    os.replace(tmp, final)
+    state.write_json(
+        _knobs_path(state_dir),
+        {"bands": int(bands), "bits": int(bits), "seed": int(seed),
+         "threshold": float(threshold)},
+    )
     return int(bands), int(bits)
 
 
@@ -241,86 +215,45 @@ def emb_dedup_batch_step(
     vecs = vecs.where(F.col("vec_id").isNotNull()).dropDuplicates(["vec_id"])
     state_vecs = read_vectors(spark, state_dir)
     fresh = vecs.join(state_vecs, "vec_id", "left_anti").persist()
-    n_fresh = fresh.count()
-    if n_fresh == 0:
+    bands_fresh = None
+    try:  # releases the batch caches on a refusal too (see dedup_stream)
+        n_fresh = fresh.count()
+        if n_fresh == 0:
+            return 0
+
+        bands_fresh = (
+            fresh.select("vec_id", "v")
+            .mapInArrow(_band_rows_fn(bands, bits, seed), _BANDS_SCHEMA)
+            .persist()
+        )
+        bands_fresh.count()
+        state_bands = state.read(spark, os.path.join(state_dir, "bands"), _BANDS_SCHEMA)
+        cands, bands_to_append = state.banded_candidates(
+            bands_fresh, state_bands, "vec_id", ["band", "key"], ("vec_a", "vec_b")
+        )
+        all_vecs = fresh.unionByName(state_vecs)
+        joined = (
+            cands.join(
+                all_vecs.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va")),
+                "vec_a",
+            )
+            .join(
+                all_vecs.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb")),
+                "vec_b",
+            )
+        )
+        pairs = joined.mapInPandas(_verify_pairs_fn(threshold), _PAIRS_SCHEMA)
+
+        # append order is load-bearing (see dedup_stream): the claim table
+        # (vectors) lands LAST so a crash replays the whole batch
+        pairs.write.mode("append").parquet(os.path.join(state_dir, "pairs"))
+        bands_to_append.write.mode("append").parquet(os.path.join(state_dir, "bands"))
+        fresh.write.mode("append").parquet(os.path.join(state_dir, "vectors"))
+        return n_fresh
+    finally:
+        if bands_fresh is not None:
+            bands_fresh.unpersist()
         fresh.unpersist()
-        return 0
-
-    bands_fresh = fresh.mapInPandas(
-        _band_rows_fn(bands, bits, seed), _BANDS_SCHEMA
-    ).persist()
-    bands_fresh.count()
-    state_bands = _read_state(spark, state_dir, "bands", _BANDS_SCHEMA)
-
-    # corpus-sized candidate join (see STATE_BANDS_ROWS_PER_TASK): the
-    # state band table grows with the corpus while the session shuffle
-    # width stays fixed — count it (cheap: int-only parquet scan) and
-    # widen the one keyed exchange pair when the default would spill.
-    # Both sides repartition on the JOIN key at the same width, so the
-    # equi-join reuses the partitioning instead of adding an exchange.
-    new_old_fresh, state_bands_j = bands_fresh, state_bands
-    floor_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    n_state_bands = state_bands.count()
-    want_p = min(
-        -(-n_state_bands // STATE_BANDS_ROWS_PER_TASK),
-        STATE_BANDS_MAX_PARTITIONS,
-    )
-    if want_p > floor_p:
-        state_bands_j = state_bands.repartition(want_p, "band", "key")
-        new_old_fresh = bands_fresh.repartition(want_p, "band", "key")
-
-    new_new = (
-        bands_fresh.alias("a")
-        .join(bands_fresh.alias("b"), ["band", "key"])
-        .where(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-    )
-    new_old = (
-        new_old_fresh.alias("n")
-        .join(state_bands_j.alias("o"), ["band", "key"])
-        # crash-replay guard: if a crash landed this batch's bands but not
-        # its vectors (the claim table), the replayed batch meets its OWN
-        # band rows here — without this filter that produces self-pairs
-        # (vec_a == vec_b, cos = 1.0) that pass verify and poison the
-        # pairs state forever (the batch operator never emits self-pairs).
-        .where(F.col("n.vec_id") != F.col("o.vec_id"))
-        .select(
-            F.least(F.col("n.vec_id"), F.col("o.vec_id")).alias("vec_a"),
-            F.greatest(F.col("n.vec_id"), F.col("o.vec_id")).alias("vec_b"),
-        )
-    )
-    cands = new_new.unionByName(new_old).distinct()
-    all_vecs = fresh.unionByName(state_vecs)
-    joined = (
-        cands.join(
-            all_vecs.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va")),
-            "vec_a",
-        )
-        .join(
-            all_vecs.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb")),
-            "vec_b",
-        )
-    )
-    pairs = joined.mapInPandas(_verify_pairs_fn(threshold), _PAIRS_SCHEMA)
-
-    # append order is load-bearing (see dedup_stream): the claim table
-    # (vectors) lands LAST so a crash replays the whole batch
-    pairs.write.mode("append").parquet(_state_path(state_dir, "pairs"))
-    # second half of the crash-replay guard: a replayed batch whose bands
-    # already landed must not append them again (duplicate band rows would
-    # accumulate in state on every replay). Cost: one extra column-pruned
-    # scan of state_bands' vec_id column per batch — the candidates join
-    # above already scans the full state each batch, so this adds a
-    # fraction, not a new asymptotic term; the per-batch cost stays
-    # O(batch x bands + state + collisions).
-    bands_to_append = bands_fresh.join(
-        state_bands.select("vec_id").distinct(), "vec_id", "left_anti"
-    )
-    bands_to_append.write.mode("append").parquet(_state_path(state_dir, "bands"))
-    fresh.write.mode("append").parquet(_state_path(state_dir, "vectors"))
-    bands_fresh.unpersist()
-    fresh.unpersist()
-    return n_fresh
 
 
 def run_incremental_emb_dedup(
@@ -335,26 +268,16 @@ def run_incremental_emb_dedup(
     seed: int = LSH_SEED,
     expected_corpus: int | None = None,
 ) -> None:
-    """Drain ``src_dir`` (JSONL vector drops, availableNow) through the
-    incremental near-dup; offsets checkpoint with the query, the claim
-    anti-join makes redeliveries no-ops. Banding knobs pin to the state
-    dir on the first batch (derived from ``expected_corpus`` when given)
-    and stay constant for its lifetime — see ``_resolve_knobs``."""
-    stream = (
-        spark.readStream.schema(VEC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(src_dir)
+    """Drain ``src_dir`` (JSONL vector drops) through the incremental
+    near-dup (see :func:`state.run_incremental`). Banding knobs pin to the
+    state dir on the first batch (derived from ``expected_corpus`` when
+    given) and stay constant for its lifetime — see ``_resolve_knobs``."""
+    state.run_incremental(
+        spark, src_dir, VEC_SCHEMA, checkpoint_dir,
+        lambda batch_df: emb_dedup_batch_step(
+            spark, batch_df, state_dir,
+            bands=bands, bits=bits, threshold=threshold, seed=seed,
+            expected_corpus=expected_corpus,
+        ),
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch_df, _bid: emb_dedup_batch_step(
-                spark, batch_df, state_dir,
-                bands=bands, bits=bits, threshold=threshold, seed=seed,
-                expected_corpus=expected_corpus,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -14,18 +14,12 @@ Spark rendering:
 - in-stream dedup ST4: ``dropDuplicates(["sha1"])`` per micro-batch plus
   terminal anti-join against the images table (J3) — duplicate suppression
   across restarts without the reference's marker-column races (ST2);
-- count-or-time batching ST1 — two renderings:
-  * PRIMARY (scale path): ``run_ingest_stateful`` routes the stream through
-    the executor-side ``applyInPandasWithState`` batcher
-    (``streaming/stateful.py``) — pending ids live in state-store
-    partitions keyed by ``extr_type``, checkpointed with the query; the
-    ``foreachBatch`` sink only ever sees *emitted* update batches, so no
-    id list ever accumulates on the driver.
-  * FIXTURE (semantic model): ``run_ingest`` keeps the reference-shaped
-    driver-held carry buffer (``CountOrTimeBatcher`` inside
-    ``foreachBatch``) — useful for unit-level reasoning about cut logic
-    and for the deterministic ``finalize()`` flush in tests; state is
-    bounded by ``batch_size`` but it is NOT the 100 TB path.
+- count-or-time batching ST1: ``run_ingest_stateful`` routes the stream
+  through the executor-side ``applyInPandasWithState`` batcher
+  (``streaming/stateful.py``) — pending ids live in state-store partitions
+  keyed by ``extr_type``, checkpointed with the query; the ``foreachBatch``
+  sink only ever sees *emitted* update batches, so no id list ever
+  accumulates on the driver.
 
 At 100 TB: the same plan with a Kafka source; the anti-join is
 stream-static against a bucketed images table (broadcast of the *batch*
@@ -36,11 +30,13 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import state
+from .stateful import DEFAULT_BATCH_SIZE, DEFAULT_MAX_DELAY_MS, batch_updates_stateful
 
 IMAGE_MSG_SCHEMA = T.StructType(
     [
@@ -60,9 +56,6 @@ IMAGE_MSG_SCHEMA = T.StructType(
         T.StructField("_corrupt_record", T.StringType()),
     ]
 )
-
-DEFAULT_BATCH_SIZE = 1000  # reference: hbase_indexer_minimal.py:36
-DEFAULT_MAX_DELAY_S = 600.0  # reference: extraction_checker.py:24
 
 
 def read_message_stream(spark: SparkSession, src_dir: str) -> DataFrame:
@@ -171,185 +164,12 @@ def normalize_messages(stream: DataFrame, prefer_url: bool = False) -> DataFrame
     return both.dropDuplicates(["sha1"])
 
 
-@dataclass
-class CountOrTimeBatcher:
-    """ST1 state: carry ids until batch_size reached OR max_delay elapsed.
-
-    ``pending`` carries (sha1, s3_url) tuples between micro-batches;
-    ``first_seen`` is the wall-clock arrival of the oldest pending id.
-    Re-derivable from the ledger on restart (exactly-once comes from the
-    checkpoint + idempotent append; no marker-column races, ST2).
-    """
-
-    batch_size: int = DEFAULT_BATCH_SIZE
-    max_delay_s: float = DEFAULT_MAX_DELAY_S
-    clock: object = time.monotonic
-    pending: list[tuple] = field(default_factory=list)
-    first_seen: float | None = None
-    seqs: dict[str, int] = field(default_factory=dict)
-
-    def add(self, rows: list[tuple]) -> list[list[tuple]]:
-        """Feed new rows; return zero or more full update batches to emit."""
-        out: list[list[tuple]] = []
-        if rows and self.first_seen is None:
-            self.first_seen = self.clock()
-        self.pending.extend(rows)
-        while len(self.pending) >= self.batch_size:
-            out.append(self.pending[: self.batch_size])
-            self.pending = self.pending[self.batch_size :]
-            self.first_seen = self.clock() if self.pending else None
-        if (
-            self.pending
-            and self.first_seen is not None
-            and self.clock() - self.first_seen >= self.max_delay_s
-        ):
-            out.append(self.pending)
-            self.pending = []
-            self.first_seen = None
-        return out
-
-    def flush(self) -> list[list[tuple]]:
-        if not self.pending:
-            return []
-        out = [self.pending]
-        self.pending = []
-        self.first_seen = None
-        return out
-
-    def mint(self, extr_type: str, date_str: str) -> str:
-        key = f"{extr_type}_{date_str}"
-        seq = self.seqs.get(key, 0)
-        self.seqs[key] = seq + 1
-        return f"index_update_{extr_type}_{date_str}_{seq:03d}"
-
-
-class IngestLedger:
-    """foreachBatch sink: claim-check anti-join + batch cut + ledger append.
-
-    Writes two parquet tables under ``ledger_dir``:
-    - ``images/``  (sha1, s3_url, update_id)           — claimed rows (J3-deduped)
-    - ``updates/`` (update_id, extr_type, sha1s, created, batch_size)
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        ledger_dir: str,
-        extr_type: str = "toy_feat_full_image",
-        batch_size: int = DEFAULT_BATCH_SIZE,
-        max_delay_s: float = DEFAULT_MAX_DELAY_S,
-        clock=time.monotonic,
-        date_str: str | None = None,
-    ) -> None:
-        self.spark = spark
-        self.ledger_dir = ledger_dir
-        self.extr_type = extr_type
-        self.batcher = CountOrTimeBatcher(
-            batch_size=batch_size, max_delay_s=max_delay_s, clock=clock
-        )
-        self.date_str = date_str or time.strftime("%Y-%m-%d")
-        self.images_dir = os.path.join(ledger_dir, "images")
-        self.updates_dir = os.path.join(ledger_dir, "updates")
-        # Seed the mint counter from the CLAIM table (review r13): a fresh
-        # process previously restarted seqs at 0 and re-minted ids that
-        # already existed in the ledger from an earlier session on the same
-        # (type, date) — duplicate update_ids over different content. The
-        # images table is the commit point, so counting its distinct ids
-        # also makes a crash-window replay re-mint the SAME id (the
-        # kinesis-twin idiom), which the _emit guard below resolves.
-        if os.path.isdir(self.images_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(self.images_dir)
-        ):
-            prefix = f"index_update_{self.extr_type}_{self.date_str}_"
-            n = (
-                self.spark.read.parquet(self.images_dir)
-                .where(F.col("update_id").startswith(prefix))
-                .select("update_id")
-                .distinct()
-                .count()
-            )
-            if n:
-                self.batcher.seqs[f"{self.extr_type}_{self.date_str}"] = n
-
-    # -- claim check (J3 stream-static anti-join) --------------------------
-    def _unclaimed(self, batch_df: DataFrame) -> DataFrame:
-        if os.path.isdir(self.images_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(self.images_dir)
-        ):
-            existing = self.spark.read.parquet(self.images_dir).select("sha1")
-            return batch_df.join(existing, "sha1", "left_anti")
-        return batch_df
-
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        rows = [
-            (r["sha1"], r["s3_url"])
-            for r in self._unclaimed(batch_df)
-            .select("sha1", "s3_url")
-            .orderBy("sha1")
-            .collect()
-        ]
-        self._emit(self.batcher.add(rows))
-
-    def finalize(self) -> None:
-        """Emit the trailing partial batch (max-delay expiry at shutdown)."""
-        self._emit(self.batcher.flush())
-
-    def _existing_update_ids(self) -> set[str]:
-        if os.path.isdir(self.updates_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(self.updates_dir)
-        ):
-            return {
-                r["update_id"]
-                for r in self.spark.read.parquet(self.updates_dir)
-                .select("update_id")
-                .distinct()
-                .collect()
-            }
-        return set()
-
-    def _emit(self, batches: list[list[tuple]]) -> None:
-        # Write order + guard (review r13): the UPDATES row lands first,
-        # skipped if its id already exists (a crash-window replay re-mints
-        # the same id — see the seqs seeding in __init__), and the images
-        # CLAIM lands last as the commit point. The old images-first order
-        # lost the updates row forever on a crash between the writes (the
-        # claim blocked re-emission). Residual caveat, documented: this
-        # driver-buffered sink can lose its pending carry across a crash
-        # (rows from already-committed triggers), so an orphaned update's
-        # membership is authoritative over a differently-cut replay —
-        # run_ingest_stateful (state-store batching) is the crash-safe
-        # primary path.
-        existing = self._existing_update_ids() if batches else set()
-        for batch in batches:
-            if not batch:
-                continue
-            update_id = self.batcher.mint(self.extr_type, self.date_str)
-            if update_id not in existing:
-                self.spark.createDataFrame(
-                    [
-                        (
-                            update_id,
-                            self.extr_type,
-                            [sha1 for sha1, _ in batch],
-                            len(batch),
-                        )
-                    ],
-                    "update_id string, extr_type string, sha1s array<string>, batch_size int",
-                ).withColumn("created", F.current_timestamp()).write.mode(
-                    "append"
-                ).parquet(self.updates_dir)
-            img_rows = [(sha1, url, update_id) for sha1, url in batch]
-            self.spark.createDataFrame(
-                img_rows, "sha1 string, s3_url string, update_id string"
-            ).write.mode("append").parquet(self.images_dir)
-
-
 class StatefulLedgerSink:
     """foreachBatch sink for the executor-side batcher's OUTPUT stream.
 
-    Unlike :class:`IngestLedger` this never buffers ids: its input rows are
-    already-cut update batches ``(extr_type, update_id, sha1s, s3_urls,
-    batch_size, reason)`` — O(updates) rows per trigger, each bounded by
+    It never buffers ids: its input rows are already-cut update batches
+    ``(extr_type, update_id, sha1s, s3_urls, batch_size, reason)`` —
+    O(updates) rows per trigger, each bounded by
     ``batch_size`` — and it just appends them to the two ledger tables
     (``updates/`` verbatim; ``images/`` via an arrays_zip explode). All
     writes are distributed; the driver handles only query lifecycle.
@@ -369,9 +189,7 @@ class StatefulLedgerSink:
         per-table id guards make the appends converge exactly (review r13:
         replays previously duplicated rows in whichever tables the crashed
         attempt had reached)."""
-        if os.path.isdir(table_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(table_dir)
-        ):
+        if state.has_rows(table_dir):
             existing = (
                 self.spark.read.parquet(table_dir).select("update_id").distinct()
             )
@@ -405,7 +223,7 @@ def run_ingest_stateful(
     checkpoint_dir: str,
     extr_type: str = "toy_feat_full_image",
     batch_size: int = DEFAULT_BATCH_SIZE,
-    max_delay_ms: int = int(DEFAULT_MAX_DELAY_S * 1000),
+    max_delay_ms: int = DEFAULT_MAX_DELAY_MS,
     date_str: str | None = None,
 ) -> StatefulLedgerSink:
     """PRIMARY ST1 path: drain ``src_dir`` (availableNow) with the batching
@@ -427,14 +245,10 @@ def run_ingest_stateful(
     terminate; a long-running deployment that wants no-input flushes passes
     ``ProcessingTimeTimeout`` to :func:`batch_updates_stateful` directly.
     """
-    from .stateful import batch_updates_stateful
-
     sink = StatefulLedgerSink(spark, ledger_dir)
     raw = observe_messages(read_message_stream(spark, src_dir))
     stream = normalize_messages(raw)
-    if os.path.isdir(sink.images_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(sink.images_dir)
-    ):
+    if state.has_rows(sink.images_dir):
         claimed = spark.read.parquet(sink.images_dir).select("sha1")
         stream = stream.join(claimed, "sha1", "left_anti")
     typed = stream.select(F.lit(extr_type).alias("extr_type"), "sha1", "s3_url")
@@ -454,25 +268,3 @@ def run_ingest_stateful(
     sink.last_query = q
     return sink
 
-
-def run_ingest(
-    spark: SparkSession,
-    src_dir: str,
-    ledger_dir: str,
-    checkpoint_dir: str,
-    **ledger_kwargs,
-) -> IngestLedger:
-    """Driver-side fixture twin of :func:`run_ingest_stateful` — drain
-    ``src_dir`` (availableNow) with the carry buffer on the driver."""
-    ledger = IngestLedger(spark, ledger_dir, **ledger_kwargs)
-    raw = observe_messages(read_message_stream(spark, src_dir))
-    stream = normalize_messages(raw)
-    q = (
-        stream.writeStream.foreachBatch(ledger.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    ledger.last_query = q  # observed A6 metrics: q.recentProgress[*].observedMetrics
-    return ledger

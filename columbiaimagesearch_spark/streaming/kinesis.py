@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from . import state
 from .ingest import IMAGE_MSG_SCHEMA, normalize_messages
 
 RECORD_SCHEMA = (
@@ -110,10 +111,7 @@ class KinesisStreamEmulator:
         return meta
 
     def _write_meta(self, meta: dict) -> None:
-        tmp = _meta_path(self.stream_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, _meta_path(self.stream_dir))
+        state.write_json(_meta_path(self.stream_dir), meta)
 
     # -- resharding (describe_stream twin) -----------------------------------
     def list_shards(self) -> dict[str, dict]:
@@ -297,10 +295,7 @@ class KinesisConsumerEmulator:
             info = self.shard_infos.setdefault(sh, {"nb_read": 0})
             info["sqn"] = mx
             info["nb_read"] = int(info.get("nb_read", 0)) + 1
-        tmp = self.shard_infos_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.shard_infos, f)
-        os.replace(tmp, self.shard_infos_path)
+        state.write_json(self.shard_infos_path, self.shard_infos)
 
 
 def run_ingest_kinesis(
@@ -354,9 +349,7 @@ def run_ingest_kinesis(
     rows = normalize_messages(msgs, prefer_url=True)
     prefix = f"index_update_{extr_type}_{date_str}_"
     seq0 = 0
-    if os.path.isdir(images_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(images_dir)
-    ):
+    if state.has_rows(images_dir):
         claimed = spark.read.parquet(images_dir)
         # Claim check, scale-shaped (review r13): the naive
         # rows.join(claimed, anti) must BUILD the big claimed side
@@ -424,9 +417,7 @@ def run_ingest_kinesis(
             F.size("items").alias("batch_size"),
             F.current_timestamp().alias("created"),
         )
-        if os.path.isdir(updates_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(updates_dir)
-        ):
+        if state.has_rows(updates_dir):
             # crash-replay reconciliation (see seq0 note above): ids this
             # batching regenerates deterministically are skipped if a
             # crashed attempt already appended them — the ledger converges

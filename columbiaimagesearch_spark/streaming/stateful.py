@@ -1,13 +1,12 @@
 """Distributed count-or-time batching — ST1 as a stateful streaming operator.
 
-``ingest.IngestLedger`` renders the reference's update batching
-(``updater/extraction_checker.py:281-454``: cut a batch at 1000 ids OR 600 s)
-with a driver-held carry buffer inside ``foreachBatch`` — faithful, but the
-buffer lives on the driver. This module is the scale-out form:
-``applyInPandasWithState`` keys the carry state by ``extr_type``, so each
-extraction type's pending ids live in executor state-store partitions,
-checkpointed with the query (ST3) and recovered on restart (ST2). The driver
-never sees ids; state volume per key is bounded by ``batch_size``.
+The reference's update batching (``updater/extraction_checker.py:281-454``:
+cut a batch at 1000 ids OR 600 s) keeps its carry buffer in the checker
+process. Here ``applyInPandasWithState`` keys the carry state by
+``extr_type``, so each extraction type's pending ids live in executor
+state-store partitions, checkpointed with the query (ST3) and recovered on
+restart (ST2). The driver never sees ids; state volume per key is bounded
+by ``batch_size``.
 
 The count cutoff fires inline as rows arrive. The time cutoff is rendered
 two ways, selected by ``timeout_conf``:

@@ -3,7 +3,11 @@
 Before ``cache.py`` the engine kept thirteen module-level caches with three
 stamp functions, each with its own invalidation gap. This guard fails when a
 module other than ``cache.py`` grows a module-level cache dict again, or
-stats files itself to invalidate one."""
+stats files itself to invalidate one.
+
+The streaming twins likewise read their state tables through
+``streaming/state.py`` only: a streaming module that refreshes a path or
+probes a directory for parquet files itself fails the guard."""
 
 from __future__ import annotations
 
@@ -15,6 +19,7 @@ PKG = Path(__file__).resolve().parent.parent / "columbiaimagesearch_spark"
 # the query-spec registry
 ALLOWED = {"_MODEL_SINGLETONS", "_REGISTRY"}
 STAT_CALLS = {"stat", "lstat", "scandir"}
+STREAMING = PKG / "streaming"
 
 
 def _module_dicts(tree: ast.Module):
@@ -66,6 +71,21 @@ def _stat_calls(tree: ast.Module):
             yield node.lineno, f"{node.func.value.id}.{node.func.attr}()"
 
 
+def _state_probes(tree: ast.Module):
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        if node.func.attr == "refreshByPath":
+            yield node.lineno, "refreshByPath()"
+        elif (
+            node.func.attr == "endswith"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == ".parquet"
+        ):
+            yield node.lineno, '.endswith(".parquet")'
+
+
 def test_no_module_caches_outside_cache_py():
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
@@ -87,6 +107,20 @@ def test_no_module_caches_outside_cache_py():
     )
 
 
+def test_streaming_state_reads_go_through_state_py():
+    offenders = []
+    for path in sorted(STREAMING.rglob("*.py")):
+        if path.name == "state.py" and path.parent == STREAMING:
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        rel = path.relative_to(PKG.parent)
+        offenders += [f"{rel}:{line}: {call}" for line, call in _state_probes(tree)]
+    assert not offenders, (
+        "streaming state tables are probed and read through "
+        "columbiaimagesearch_spark.streaming.state:\n" + "\n".join(offenders)
+    )
+
+
 def test_guard_catches_a_planted_cache():
     planted = ast.parse(
         "import os as _os\n"
@@ -95,6 +129,15 @@ def test_guard_catches_a_planted_cache():
         "_PARAMS = {'k': 1}\n"
         "def f(p):\n"
         "    return _os.stat(p)\n"
+        "def g(spark, p):\n"
+        "    spark.catalog.refreshByPath(p)\n"
+        "    return any(f.endswith('.parquet') for f in _os.listdir(p))\n"
+        "def h(name):\n"
+        "    return name.endswith('.json')\n"
     )
     assert [n for _, n in _module_dicts(planted)] == ["_X_CACHE", "_Y"]
     assert [c for _, c in _stat_calls(planted)] == ["_os.stat()"]
+    assert [c for _, c in _state_probes(planted)] == [
+        "refreshByPath()",
+        '.endswith(".parquet")',
+    ]

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from columbiaimagesearch_spark.operators import dedup, hygiene
@@ -96,6 +97,47 @@ def test_replayed_curation_batch_is_noop(spark, tmp_path):
     assert curate_batch_step(spark, some, state) == 0
     after = {int(r["doc_id"]) for r in curated_docs(spark, state).collect()}
     assert before == after
+
+
+@pytest.mark.parametrize("target", ["hashes", "verdicts"])
+def test_crash_mid_step_replays_clean(spark, tmp_path, monkeypatch, target):
+    """Crash inside the dedup step (before its hashes claim) or before the
+    verdicts append, then replay the batch: the curated survivor set must
+    equal an uncrashed run's."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    train, bench = _docs(spark)
+    b1 = train.where(F.col("doc_id") < 100)
+    b2 = train.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 200))
+
+    def survivors(state):
+        return {tuple(r) for r in curated_docs(spark, state).collect()}
+
+    clean = str(tmp_path / "clean")
+    register_benchmark(spark, bench, clean)
+    curate_batch_step(spark, b1, clean)
+    curate_batch_step(spark, b2, clean)
+    want = survivors(clean)
+
+    state = str(tmp_path / "crashed")
+    register_benchmark(spark, bench, state)
+    n_b1 = curate_batch_step(spark, b1, state)
+    real_parquet = DataFrameWriter.parquet
+
+    def crash_on(self, path, *a, **kw):
+        if path.rstrip("/").endswith(target):
+            raise RuntimeError(f"simulated crash before {target} append")
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        curate_batch_step(spark, b2, state)
+    monkeypatch.undo()
+
+    n_b2 = curate_batch_step(spark, b2, state)  # full replay
+    assert n_b1 + n_b2 == b1.count() + b2.count()
+    assert survivors(state) == want
+    assert 0 < len(want) < n_b1 + n_b2  # something was dropped
 
 
 def test_stream_scrub_pii_affects_dedup_hashes(spark, tmp_path):

@@ -10,6 +10,7 @@ band key collides whether the two docs arrived together or apart)."""
 from __future__ import annotations
 
 import json
+import os
 
 from columbiaimagesearch_spark.operators.dedup import dedup_minhash_lsh_pairs
 from columbiaimagesearch_spark.sources import load_table
@@ -69,19 +70,19 @@ def test_replayed_batch_is_noop(spark, tmp_path):
 
 
 def test_crash_between_bands_and_claim_replays_clean(spark, tmp_path, monkeypatch):
-    """Crash AFTER the bands append but BEFORE the hashes (claim) append:
-    the replayed batch meets its own band rows in state. The replay must
-    not emit self-pairs (doc_a == doc_b, jaccard 1.0), must not duplicate
-    band rows, and the final pair set must equal an uncrashed run's
-    (mirror of the emb_dedup_stream crash test; ADVICE r5)."""
+    """Crash at EACH state append of the step — pairs, bands, then the
+    hashes claim — and replay the batch. A crash after the bands append
+    leaves the replayed batch meeting its own band rows in state. For
+    every crash point the replay must not emit self-pairs (doc_a == doc_b,
+    jaccard 1.0), must not duplicate band rows, and the final pair set
+    must equal an uncrashed run's (mirror of the emb_dedup_stream crash
+    test; ADVICE r5)."""
     import pytest
     from pyspark.sql import functions as F
     from pyspark.sql.readwriter import DataFrameWriter
 
-    from columbiaimagesearch_spark.streaming.dedup_stream import (
-        _BANDS_SCHEMA,
-        _read_state,
-    )
+    from columbiaimagesearch_spark.streaming import state as st
+    from columbiaimagesearch_spark.streaming.dedup_stream import _BANDS_SCHEMA
 
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     b1 = docs.where(F.col("doc_id") < 100)
@@ -91,31 +92,34 @@ def test_crash_between_bands_and_claim_replays_clean(spark, tmp_path, monkeypatc
     dedup_batch_step(spark, b1, clean)
     dedup_batch_step(spark, b2, clean)
     want = _pair_set(read_pairs(spark, clean))
-
-    state = str(tmp_path / "crashed")
-    n_b1 = dedup_batch_step(spark, b1, state)
+    assert want  # the fixture plants near-dups in the first 200 docs
     real_parquet = DataFrameWriter.parquet
 
-    def crash_on_claim(self, path, *a, **kw):
-        if path.rstrip("/").endswith("hashes"):
-            raise RuntimeError("simulated crash before claim append")
-        return real_parquet(self, path, *a, **kw)
+    for target in ("pairs", "bands", "hashes"):
+        state = str(tmp_path / f"crashed-{target}")
+        n_b1 = dedup_batch_step(spark, b1, state)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_claim)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        dedup_batch_step(spark, b2, state)
-    monkeypatch.undo()
+        def crash_on(self, path, *a, _target=target, **kw):
+            if path.rstrip("/").endswith(_target):
+                raise RuntimeError(f"simulated crash before {_target} append")
+            return real_parquet(self, path, *a, **kw)
 
-    n_b2 = dedup_batch_step(spark, b2, state)  # full replay
-    assert n_b1 + n_b2 == 200
-    pairs = read_pairs(spark, state)
-    assert pairs.where(F.col("doc_a") == F.col("doc_b")).count() == 0
-    assert _pair_set(pairs) == want
-    # band rows did not duplicate: one row set per admitted doc
-    bands = _read_state(spark, state, "bands", _BANDS_SCHEMA)
-    per_doc = bands.groupBy("doc_id").count().select("count").distinct().collect()
-    assert bands.select("doc_id").distinct().count() == 200
-    assert len(per_doc) == 1  # every doc contributed the same band count
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "parquet", crash_on)
+            with pytest.raises(RuntimeError, match="simulated crash"):
+                dedup_batch_step(spark, b2, state)
+
+        n_b2 = dedup_batch_step(spark, b2, state)  # full replay
+        assert n_b1 + n_b2 == 200, target
+        pairs = read_pairs(spark, state)
+        assert pairs.where(F.col("doc_a") == F.col("doc_b")).count() == 0, target
+        assert _pair_set(pairs) == want, target
+        # band rows did not duplicate: one row set per admitted doc
+        bands = st.read(spark, os.path.join(state, "bands"), _BANDS_SCHEMA)
+        assert bands.count() == bands.distinct().count(), target
+        per_doc = bands.groupBy("doc_id").count().select("count").distinct().collect()
+        assert bands.select("doc_id").distinct().count() == 200, target
+        assert len(per_doc) == 1, target  # every doc: the same band count
 
 
 def test_cross_batch_pairs_found(spark, tmp_path):

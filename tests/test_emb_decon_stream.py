@@ -150,16 +150,16 @@ def test_register_benchmark_updates_meta_atomically(spark, tmp_path, monkeypatch
     with open(edc._meta_path(state)) as fh:
         old = json.load(fh)
     assert (old["bands"], old["bits"]) == (4, 3)
-    old_suite = edc._path(state, old["bench_dir"])
+    old_suite = os.path.join(state, old["bench_dir"])
 
-    real_rename = os.rename
+    real_replace = os.replace
 
-    def crash_rename(src, dst):
+    def crash_replace(src, dst):
         if dst.endswith("meta.json"):
             raise OSError("simulated crash before meta rename")
-        return real_rename(src, dst)
+        return real_replace(src, dst)
 
-    monkeypatch.setattr(os, "rename", crash_rename)
+    monkeypatch.setattr(os, "replace", crash_replace)
     with pytest.raises(OSError, match="simulated crash"):
         # a LARGER suite with different knobs — the dangerous re-pairing
         edc.register_benchmark(spark, bench, state, bands=9, bits=5)
@@ -184,7 +184,7 @@ def test_register_benchmark_updates_meta_atomically(spark, tmp_path, monkeypatch
         fresh = json.load(fh)
     assert (fresh["bands"], fresh["bits"]) == (9, 5)
     assert fresh["bench_dir"] != old["bench_dir"]
-    assert os.path.isdir(edc._path(state, fresh["bench_dir"]))
+    assert os.path.isdir(os.path.join(state, fresh["bench_dir"]))
     assert not os.path.isdir(old_suite)  # superseded suite collected
     assert not os.path.exists(edc._meta_path(state) + ".tmp")
 
@@ -192,9 +192,10 @@ def test_register_benchmark_updates_meta_atomically(spark, tmp_path, monkeypatch
 def test_step_refuses_gc_raced_suite_dir(spark, tmp_path):
     """Review r12: a step whose meta read raced a re-registration (old
     suite dir garbage-collected before this step's suite read) must FAIL
-    LOUDLY and claim nothing — _read_state's empty-DataFrame fallback
+    LOUDLY and claim nothing — state.read's empty-DataFrame fallback
     would otherwise verdict the whole batch against an EMPTY suite, mark
     everything clean, and the claim table would make that permanent."""
+    import os
     import shutil
 
     corpus, bench = _vecs(spark)
@@ -202,7 +203,7 @@ def test_step_refuses_gc_raced_suite_dir(spark, tmp_path):
     edc.register_benchmark(spark, bench, state)
     with open(edc._meta_path(state)) as fh:
         bench_dir = json.load(fh)["bench_dir"]
-    shutil.rmtree(edc._path(state, bench_dir))  # the gc'd-dir race state
+    shutil.rmtree(os.path.join(state, bench_dir))  # the gc'd-dir race state
     with pytest.raises(RuntimeError, match="superseded and garbage-collected"):
         edc.emb_decon_batch_step(spark, corpus, state)
     # nothing was claimed: after re-registration the replay verdicts the
@@ -228,7 +229,7 @@ def test_step_refuses_partially_deleted_suite_dir(spark, tmp_path):
     with open(edc._meta_path(state)) as fh:
         meta = json.load(fh)
     parts = sorted(
-        glob.glob(edc._path(state, meta["bench_dir"]) + "/*.parquet")
+        glob.glob(os.path.join(state, meta["bench_dir"]) + "/*.parquet")
     )
     assert len(parts) >= 2, "need a multi-part suite to simulate the race"
     os.remove(parts[0])  # the mid-rmtree race state

@@ -7,11 +7,14 @@ set of (vec_a, vec_b, cos_sim) tuples — including the rounded score."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from columbiaimagesearch_spark.operators.similarity import emb_lsh_near_dup_pairs
 from columbiaimagesearch_spark.sources import load_table
 from columbiaimagesearch_spark.streaming import emb_dedup_stream as eds
+from columbiaimagesearch_spark.streaming import state as st
 
 from conftest import SF_SMOKE
 
@@ -57,10 +60,10 @@ def test_state_join_sizing_is_result_invariant(spark, tmp_path, monkeypatch):
     vecs = _vec_df(spark)
     n = vecs.count()
     # tiny target: any non-empty state trips the widening on batch 2+
-    monkeypatch.setattr(eds, "STATE_BANDS_ROWS_PER_TASK", 8)
+    monkeypatch.setattr(st, "STATE_BANDS_ROWS_PER_TASK", 8)
     assert (
-        min(-(-10_000 // eds.STATE_BANDS_ROWS_PER_TASK),
-            eds.STATE_BANDS_MAX_PARTITIONS)
+        min(-(-10_000 // st.STATE_BANDS_ROWS_PER_TASK),
+            st.STATE_BANDS_MAX_PARTITIONS)
         == 1250
     )
     chunk = (n + 1) // 2
@@ -93,10 +96,12 @@ def test_replayed_batch_is_noop(spark, tmp_path):
 
 
 def test_crash_between_bands_and_claim_replays_clean(spark, tmp_path, monkeypatch):
-    """Crash AFTER the bands append but BEFORE the vectors (claim) append:
-    the replayed batch meets its own band rows in state. The replay must
-    not emit self-pairs (vec_a == vec_b), must not duplicate band rows,
-    and the final pair set must equal an uncrashed run's."""
+    """Crash at EACH state append of the step — pairs, bands, then the
+    vectors claim — and replay the batch. A crash after the bands append
+    leaves the replayed batch meeting its own band rows in state. For
+    every crash point the replay must not emit self-pairs (vec_a ==
+    vec_b), must not duplicate band rows, and the final pair set must
+    equal an uncrashed run's."""
     import pytest
     from pyspark.sql.readwriter import DataFrameWriter
 
@@ -111,29 +116,34 @@ def test_crash_between_bands_and_claim_replays_clean(spark, tmp_path, monkeypatc
         (r["vec_a"], r["vec_b"], r["cos_sim"])
         for r in eds.read_pairs(spark, clean).collect()
     }
-
-    state = str(tmp_path / "crashed")
-    eds.emb_dedup_batch_step(spark, b1, state)
+    assert want  # the fixture plants near-dups in the first 200 vectors
     real_parquet = DataFrameWriter.parquet
 
-    def crash_on_claim(self, path, *a, **kw):
-        if path.rstrip("/").endswith("vectors"):
-            raise RuntimeError("simulated crash before claim append")
-        return real_parquet(self, path, *a, **kw)
+    for target in ("pairs", "bands", "vectors"):
+        state = str(tmp_path / f"crashed-{target}")
+        eds.emb_dedup_batch_step(spark, b1, state)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_claim)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        eds.emb_dedup_batch_step(spark, b2, state)
-    monkeypatch.undo()
+        def crash_on(self, path, *a, _target=target, **kw):
+            if path.rstrip("/").endswith(_target):
+                raise RuntimeError(f"simulated crash before {_target} append")
+            return real_parquet(self, path, *a, **kw)
 
-    assert eds.emb_dedup_batch_step(spark, b2, state) == 100  # full replay
-    pairs = eds.read_pairs(spark, state)
-    assert pairs.where(F.col("vec_a") == F.col("vec_b")).count() == 0
-    got = {(r["vec_a"], r["vec_b"], r["cos_sim"]) for r in pairs.collect()}
-    assert got == want
-    # band rows did not duplicate: one row per (vector, band)
-    bands_cnt = eds._read_state(spark, state, "bands", eds._BANDS_SCHEMA).count()
-    assert bands_cnt == 200 * eds.LSH_BANDS
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "parquet", crash_on)
+            with pytest.raises(RuntimeError, match="simulated crash"):
+                eds.emb_dedup_batch_step(spark, b2, state)
+
+        # full replay
+        assert eds.emb_dedup_batch_step(spark, b2, state) == 100, target
+        pairs = eds.read_pairs(spark, state)
+        assert pairs.where(F.col("vec_a") == F.col("vec_b")).count() == 0, target
+        got = {(r["vec_a"], r["vec_b"], r["cos_sim"]) for r in pairs.collect()}
+        assert got == want, target
+        # band rows did not duplicate: one row per (vector, band)
+        bands = st.read(spark, os.path.join(state, "bands"), eds._BANDS_SCHEMA)
+        per_vec = bands.groupBy("vec_id").count().select("count").distinct()
+        assert bands.count() == 200 * eds.LSH_BANDS, target
+        assert [r["count"] for r in per_vec.collect()] == [eds.LSH_BANDS], target
 
 
 def test_derived_knobs_scale_with_corpus():

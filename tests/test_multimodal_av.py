@@ -95,7 +95,7 @@ def test_ingest_observed_metrics(spark, tmp_path):
     """A6: per-batch observed counters surface in StreamingQueryProgress."""
     import json
 
-    from columbiaimagesearch_spark.streaming.ingest import run_ingest
+    from columbiaimagesearch_spark.streaming.ingest import run_ingest_stateful
 
     src = tmp_path / "msgs"
     src.mkdir()
@@ -105,17 +105,16 @@ def test_ingest_observed_metrics(spark, tmp_path):
             for i in range(5)
         )
     )
-    ledger = run_ingest(
+    sink = run_ingest_stateful(
         spark,
         str(src),
         str(tmp_path / "ledger"),
         str(tmp_path / "ckpt"),
         batch_size=3,
     )
-    ledger.finalize()
     metrics = [
         p["observedMetrics"]["ingest_metrics"]
-        for p in ledger.last_query.recentProgress
+        for p in sink.last_query.recentProgress
         if "ingest_metrics" in p.get("observedMetrics", {})
     ]
     assert metrics, "no observed metrics in query progress"

@@ -107,7 +107,7 @@ def test_lsh_derived_knobs_engage_and_scale(spark):
     # mean ~ n/2^bits ~ LSH_TARGET_BUCKET. Had the fixture bits=3 leaked
     # through, the mean would be ~n/8 = 62500 — three orders off.
     stats = (
-        big.mapInPandas(
+        big.mapInArrow(
             _band_rows_fn(bands, bits, LSH_SEED),
             "vec_id long, band int, key long",
         )
@@ -191,7 +191,7 @@ def test_lsh_1m_probe(spark):
     assert wall <= 320.0, wall
 
     stats = (
-        xl.mapInPandas(
+        xl.mapInArrow(
             _band_rows_fn(bands, bits, LSH_SEED),
             "vec_id long, band int, key long",
         )

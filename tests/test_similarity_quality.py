@@ -194,25 +194,38 @@ def test_derive_lsh_knobs_rejects_recall_one(spark):
     assert bands > 0 and bits > 0
 
 
+_MALFORMED = [
+    # one NULL vector would shift every later row onto the wrong vec_id
+    ("null", [[1.0, 0.0], None, [0.0, 1.0]], "NULL vector"),
+    # lengths 2+1+3 = 3 rows x 2: a flat-size check alone would pass
+    ("ragged", [[1.0, 0.0], [0.5], [0.0, 1.0, 0.0]], "ragged vectors"),
+    ("zero_width", [[], [], []], "zero-width vectors"),
+]
+
+
 @pytest.mark.parametrize(
-    "vectors, message",
-    [
-        # one NULL vector would shift every later row onto the wrong vec_id
-        ([[1.0, 0.0], None, [0.0, 1.0]], "NULL vector"),
-        # lengths 2+1+3 = 3 rows x 2: a flat-size check alone would pass
-        ([[1.0, 0.0], [0.5], [0.0, 1.0, 0.0]], "ragged vectors"),
-        ([[], [], []], "zero-width vectors"),
-    ],
-    ids=["null", "ragged", "zero_width"],
+    "path, vectors, message",
+    [pytest.param("batch", v, m, id=i) for i, v, m in _MALFORMED]
+    + [pytest.param("stream", v, m, id=f"stream-{i}") for i, v, m in _MALFORMED],
 )
-def test_emb_lsh_refuses_malformed_vectors(spark, vectors, message):
+def test_emb_lsh_refuses_malformed_vectors(spark, tmp_path, path, vectors, message):
     """The Arrow banding pass reshapes each batch's flattened vectors into
     an (n, d) matrix: malformed input must raise a descriptive error, not
-    yield plausible but wrong pairs (or a ZeroDivisionError at d == 0)."""
+    yield plausible but wrong pairs (or a ZeroDivisionError at d == 0).
+    The streaming twin bands through the same boundary; without it, d == 0
+    keys every vector alike and the step claims them all."""
     from columbiaimagesearch_spark.operators.similarity import emb_lsh_pairs_from
+    from columbiaimagesearch_spark.streaming.emb_dedup_stream import (
+        emb_dedup_batch_step,
+    )
 
     vec_df = spark.createDataFrame(
         list(enumerate(vectors)), "vec_id bigint, v array<double>"
     ).coalesce(1)  # one Arrow batch: raggedness is visible within it
     with pytest.raises(Exception, match=message):
-        emb_lsh_pairs_from(vec_df, bands=2, bits=3, max_bucket=None).collect()
+        if path == "batch":
+            emb_lsh_pairs_from(vec_df, bands=2, bits=3, max_bucket=None).collect()
+        else:
+            emb_dedup_batch_step(
+                spark, vec_df, str(tmp_path / "state"), bands=2, bits=3
+            )

@@ -13,11 +13,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from columbiaimagesearch_spark.streaming.ingest import (
-    CountOrTimeBatcher,
-    run_ingest,
-    run_ingest_stateful,
-)
+from columbiaimagesearch_spark.streaming.ingest import run_ingest_stateful
 from columbiaimagesearch_spark.streaming.windows import (
     read_event_stream,
     windowed_event_agg,
@@ -54,94 +50,10 @@ def msg_dir(tmp_path):
     return str(d)
 
 
-def test_count_or_time_batcher_count_cut():
-    b = CountOrTimeBatcher(batch_size=10, max_delay_s=1e9)
-    out = b.add([(f"s{i}", None) for i in range(25)])
-    assert [len(x) for x in out] == [10, 10]
-    assert len(b.pending) == 5
-    out = b.add([(f"t{i}", None) for i in range(5)])
-    assert [len(x) for x in out] == [10]
-    assert b.flush() == []
-
-
-def test_count_or_time_batcher_time_cut():
-    now = [0.0]
-    b = CountOrTimeBatcher(batch_size=1000, max_delay_s=600, clock=lambda: now[0])
-    assert b.add([("a", None)]) == []
-    now[0] = 599.0
-    assert b.add([("b", None)]) == []
-    now[0] = 601.0
-    out = b.add([("c", None)])
-    assert [len(x) for x in out] == [3]  # delay expired -> emit all pending
-    assert b.pending == []
-
-
-def test_batcher_mint_sequences():
-    b = CountOrTimeBatcher()
-    assert b.mint("feat", "2024-01-15") == "index_update_feat_2024-01-15_000"
-    assert b.mint("feat", "2024-01-15") == "index_update_feat_2024-01-15_001"
-    assert b.mint("feat", "2024-01-16") == "index_update_feat_2024-01-16_000"
-
-
-def test_ingest_end_to_end(spark, msg_dir, tmp_path):
-    ledger_dir = str(tmp_path / "ledger")
-    ckpt = str(tmp_path / "ckpt")
-    ledger = run_ingest(
-        spark, msg_dir, ledger_dir, ckpt,
-        batch_size=30, max_delay_s=1e9, date_str="2024-02-01",
-    )
-    ledger.finalize()
-
-    images = spark.read.parquet(ledger.images_dir)
-    updates = spark.read.parquet(ledger.updates_dir)
-
-    # 75 distinct sha1s total (0-74); dupes of 0-4 suppressed; corrupt dropped
-    assert images.count() == 75
-    assert images.select("sha1").distinct().count() == 75
-    # batches of 30 -> 30 + 30 + trailing 15 (order depends on file arrival,
-    # but sizes and grammar are deterministic)
-    sizes = sorted(r["batch_size"] for r in updates.collect())
-    assert sizes == [15, 30, 30]
-    ids = sorted(r["update_id"] for r in updates.collect())
-    assert ids == [
-        "index_update_toy_feat_full_image_2024-02-01_000",
-        "index_update_toy_feat_full_image_2024-02-01_001",
-        "index_update_toy_feat_full_image_2024-02-01_002",
-    ]
-    # every image row is claimed by exactly one update, consistent both ways
-    exploded = updates.select("update_id", F.explode("sha1s").alias("sha1"))
-    joined = images.alias("i").join(
-        exploded.alias("u"),
-        (F.col("i.sha1") == F.col("u.sha1"))
-        & (F.col("i.update_id") == F.col("u.update_id")),
-    )
-    assert joined.count() == 75
-
-
-def test_ingest_is_idempotent_across_restart(spark, msg_dir, tmp_path):
-    """Re-running over the same checkpoint must not duplicate claims (ST2/ST4)."""
-    ledger_dir = str(tmp_path / "ledger")
-    ckpt = str(tmp_path / "ckpt")
-    ledger = run_ingest(
-        spark, msg_dir, ledger_dir, ckpt,
-        batch_size=30, max_delay_s=1e9, date_str="2024-02-01",
-    )
-    ledger.finalize()
-    before = spark.read.parquet(ledger.images_dir).count()
-    # restart: same checkpoint -> no new input -> no new rows
-    ledger2 = run_ingest(
-        spark, msg_dir, ledger_dir, ckpt,
-        batch_size=30, max_delay_s=1e9, date_str="2024-02-01",
-    )
-    ledger2.finalize()
-    assert spark.read.parquet(ledger.images_dir).count() == before
-
-
 def test_ingest_stateful_end_to_end(spark, msg_dir, tmp_path):
-    """PRIMARY ST1 path (VERDICT r1 #10): the same ingest contract as
-    test_ingest_end_to_end but with the carry in the state store — pending
-    ids below batch_size stay checkpointed, never on the driver, and are
-    cut by a later run's count cutoff."""
+    """ST1 end to end (VERDICT r1 #10): with the carry in the state store,
+    pending ids below batch_size stay checkpointed, never on the driver,
+    and are cut by a later run's count cutoff."""
     ledger_dir = str(tmp_path / "ledger")
     ckpt = str(tmp_path / "ckpt")
     sink = run_ingest_stateful(
