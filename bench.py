@@ -409,22 +409,14 @@ def serving_million_bench(
     def max_shard_rows(router, q: np.ndarray) -> int:
         """Worst single-shard scanned-row count for one query — the
         parallel-deployment wall the fat-cell slicing bounds."""
-        import bisect
-
-        qp = model.project_queries(q)[0] if isinstance(model, LOPQModelPCA) else q
-        d1, d2 = lopq.coarse_distances(qp)
-        visited = multisequence_cells(d1, d2, router._global_counts(), 10_000)
-        per = [0] * len(router.shards)
-        lows = [lo for lo, _h, _s in router.shards]
-        for cell in visited:
-            owners = router._splits.get(cell)
-            if owners is not None:
-                for i in set(owners):
-                    per[i] += router.shards[i][2].cell_counts.get(cell, 0)
-            else:
-                i = bisect.bisect_right(lows, cell) - 1
-                per[i] += router.shards[i][2].cell_counts.get(cell, 0)
-        return max(per)
+        _qp, by_shard = router.plan_fanout(q, 10_000)
+        return max(
+            (
+                sum(router.shards[i][2].cell_counts.get(c, 0) for c in cells)
+                for i, cells in by_shard.items()
+            ),
+            default=0,
+        )
 
     mx = [max_shard_rows(skew_router, q) for q in qs_all]
 

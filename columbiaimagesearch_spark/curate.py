@@ -29,7 +29,8 @@ cluster geometry — the property ``tests/test_llm_pipeline.py`` pins.
 
 from __future__ import annotations
 
-from concurrent.futures import Future, ThreadPoolExecutor
+import uuid
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -260,6 +261,11 @@ def curate_docs(
 
     pool: ThreadPoolExecutor | None = None
     verdict_futs: dict[str, Future] = {}
+    # per-call tag on the overlapped verdict pins' jobs: the failure arm
+    # cancels exactly these (a tag, not a job group, so a caller's own job
+    # group still attributes them)
+    sc = docs.sparkSession.sparkContext
+    verdict_tag = f"curate-verdicts-{uuid.uuid4().hex}"
     try:
         res = CurationResult()
         res.stages["input"] = docs
@@ -353,35 +359,39 @@ def curate_docs(
         # cache release.
         docs_pre = docs
 
-        def _pin_drop_ids(df: DataFrame, flag: str) -> DataFrame:
-            return (
-                df.where(F.col(flag))
-                .select("doc_id")
-                .localCheckpoint(eager=True)
-            )
+        def _pin_drop_ids(build, flag: str) -> DataFrame:
+            # runs on a pool thread: job tags are thread-local, so the tag
+            # labels this pin's jobs only, and leaves with it
+            sc.addJobTag(verdict_tag)
+            try:
+                return (
+                    build()
+                    .where(F.col(flag))
+                    .select("doc_id")
+                    .localCheckpoint(eager=True)
+                )
+            finally:
+                sc.removeJobTag(verdict_tag)
 
         pool = ThreadPoolExecutor(max_workers=3)
         if bench_docs is not None:
             verdict_futs["dirty"] = pool.submit(
-                lambda: _pin_drop_ids(
-                    hygiene.decontaminate_from(docs_pre, bench_docs),
-                    "contaminated",
-                )
+                _pin_drop_ids,
+                lambda: hygiene.decontaminate_from(docs_pre, bench_docs),
+                "contaminated",
             )
         if fuzzy_decontaminate:
             verdict_futs["fuzzy"] = pool.submit(
-                lambda: _pin_drop_ids(
-                    hygiene.fuzzy_decontaminate_from(
-                        docs_pre, bench_docs,
-                        hashed_train=hashed, hashed_bench=h_b,
-                    ),
-                    "contaminated",
-                )
+                _pin_drop_ids,
+                lambda: hygiene.fuzzy_decontaminate_from(
+                    docs_pre, bench_docs, hashed_train=hashed, hashed_bench=h_b
+                ),
+                "contaminated",
             )
         verdict_futs["rep"] = pool.submit(
-            lambda: _pin_drop_ids(
-                hygiene.repetition_stats_from(docs_pre), "repetitive"
-            )
+            _pin_drop_ids,
+            lambda: hygiene.repetition_stats_from(docs_pre),
+            "repetitive",
         )
         # max_bucket: an exact-duplicate flood refuses loudly here (naming the
         # linear exact-hash rung) instead of a quadratic self-join. We own the
@@ -640,14 +650,15 @@ def curate_docs(
         res.packed = packing.seq_pack_from(docs, pack_budget, pack_shards)
         return res
     except BaseException:
-        # drain the overlapped verdict pins FIRST: an in-flight pin still
-        # reads the tracked caches, and unpersisting under it would force
-        # its job to recompute the whole lineage mid-failure
-        for f in verdict_futs.values():
-            try:
-                f.result()
-            except Exception:  # noqa: BLE001 — already failing; release anyway
-                pass
+        # cancel, then drain the overlapped verdict pins FIRST: an
+        # in-flight pin still reads the tracked caches, and unpersisting
+        # under it would force its job to recompute the whole lineage
+        # mid-failure. The cancel repeats until every pin has returned, so
+        # a pin that submits its job after one cancel is caught by the next.
+        left = set(verdict_futs.values())
+        while left:
+            sc.cancelJobsWithTag(verdict_tag)
+            _, left = wait(left, timeout=0.25)
         for c in caches:
             try:
                 c.unpersist()

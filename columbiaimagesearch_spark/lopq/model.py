@@ -303,22 +303,28 @@ class LOPQModel:
             out.append(((self.Cs[h] - qh) ** 2).sum(axis=1))
         return out[0], out[1]
 
-    def adc_lut(self, q: np.ndarray, cell: int) -> np.ndarray:
-        """(M, K) LUT of squared distances from the query's projected residual
-        (w.r.t. this cell's rotations) to every subquantizer centroid
-        (reference search.py:137-177 with per-cluster memoization — here the
-        caller memoizes per (query, coarse-half) pair)."""
-        c1, c2 = cell // self.V, cell % self.V
-        coarse = np.array([[c1, c2]])
-        P = self.project_residuals(np.asarray(q, dtype=np.float64)[None, :], coarse)[0]
-        lut = np.empty((self.M, self.K))
-        sd = self.sub_dim
-        for m in range(self.M):
-            h = m // self.subs_per_half
-            s = m % self.subs_per_half
-            pm = P[h * self.half + s * sd : h * self.half + (s + 1) * sd]
-            lut[m] = ((self.subs[m] - pm) ** 2).sum(axis=1)
-        return lut
+    def adc_luts(self, q: np.ndarray, cells) -> np.ndarray:
+        """(n_cells, M, K) ADC tables: squared distances from the query's
+        projected residual (w.r.t. each cell's rotations) to every
+        subquantizer centroid (reference search.py:137-177, memoized per
+        coarse split). Half h's M/2 rows depend only on (q_h, c_h), so each
+        distinct coarse index of each half is projected and tabled ONCE —
+        a query's visited cells share a handful of c1/c2 values — and a
+        cell's table is its two half tables stacked."""
+        cells = np.asarray(cells, dtype=np.int64)
+        q = np.asarray(q, dtype=np.float64)
+        spl, sd = self.subs_per_half, self.sub_dim
+        out = np.empty((len(cells), self.M, self.K))
+        for h, c in enumerate((cells // self.V, cells % self.V)):
+            u, inv = np.unique(c, return_inverse=True)
+            qh = q[h * self.half : (h + 1) * self.half]
+            centered = qh - self.Cs[h][u] - self.mus[h][u]
+            P = np.einsum("nij,nj->ni", self.Rs[h][u], centered)
+            P = P.reshape(len(u), spl, 1, sd)
+            subs_h = self.subs[h * spl : (h + 1) * spl]
+            tables = ((subs_h[None] - P) ** 2).sum(-1)  # (len(u), M/2, K)
+            out[:, h * spl : (h + 1) * spl] = tables[inv]
+        return out
 
     # -- (de)serialization -------------------------------------------------
     def to_arrays(self) -> dict[str, np.ndarray]:

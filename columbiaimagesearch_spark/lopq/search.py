@@ -13,7 +13,8 @@ Spark rendering:
 - the probe is a semi-join of the codes table against the visited-cells
   list (broadcast; prunes partitions when codes are cell-partitioned);
 - ADC distance is one Arrow pandas pass: per (query, cell) LUTs are small
-  (M x K floats), computed driver-side, broadcast, gathered vectorized;
+  (M x K floats), computed driver-side (each coarse half once per query),
+  broadcast, gathered vectorized;
 - top-k is a per-query window; exact rerank joins back to the vector table
   for only ``rerank_nb`` rows per query (vectors never shuffle in bulk).
 """
@@ -185,8 +186,9 @@ def _plan_probe(
     quota: int,
 ) -> tuple[list[tuple[int, int]], dict, dict]:
     """Driver-side probe planning: per query, multisequence-traverse the
-    cell grid to quota and build the (query, cell) ADC LUTs. Pure math over
-    the tiny cell histogram — no cluster work."""
+    cell grid to quota and build the (query, cell) ADC LUTs — one
+    ``adc_luts`` call per query over its occupied visited cells. Pure math
+    over the tiny cell histogram — no cluster work."""
     probe_rows: list[tuple[int, int]] = []  # (qid, cell)
     luts: dict[tuple[int, int], np.ndarray] = {}
     qvecs: dict[int, np.ndarray] = {}
@@ -194,10 +196,14 @@ def _plan_probe(
         q = np.asarray(q, dtype=np.float64)
         qvecs[qid] = q
         d1, d2 = model.coarse_distances(q)
-        for cell in multisequence_cells(d1, d2, counts, quota):
-            if counts.get(cell, 0):
-                probe_rows.append((qid, cell))
-                luts[(qid, cell)] = model.adc_lut(q, cell)
+        cells = [
+            c
+            for c in multisequence_cells(d1, d2, counts, quota)
+            if counts.get(c, 0)
+        ]
+        for cell, lut in zip(cells, model.adc_luts(q, cells)):
+            probe_rows.append((qid, cell))
+            luts[(qid, cell)] = lut
     return probe_rows, luts, qvecs
 
 

@@ -17,6 +17,8 @@ vectors x M=8 ≈ 1.6 GB — the reference's LMDB sizing envelope)."""
 
 from __future__ import annotations
 
+import bisect
+
 import numpy as np
 from pyspark.sql import DataFrame
 
@@ -52,6 +54,38 @@ def _topk_idx(dists: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
     th = dists[part].max()
     cand = np.flatnonzero(dists <= th)
     return cand[np.lexsort((ids[cand], dists[cand]))[:k]]
+
+
+def _merge_topk(
+    q: np.ndarray, parts, k: int, rerank_nb: int, fetch_vectors
+) -> list[tuple]:
+    """Global top-k over per-shard ``(ids, adc_dists)`` parts — the one
+    merge tail of the replica, the router and the forked pool, so their
+    answers cannot drift apart. Without rerank: ``[(id, adc_dist)]`` in
+    engine order (dist asc, id asc). With ``rerank_nb`` > 0 the top
+    ``rerank_nb`` ADC candidates are fetched through ``fetch_vectors(ids)
+    -> (n, D)`` and re-ranked by exact squared L2 (reference rerank
+    semantics, searcher_lopqhbase.py:862-912): ``[(id, adc_dist,
+    exact_dist)]``."""
+    parts = [(ids, dists) for ids, dists in parts if len(ids)]
+    if not parts:
+        return []
+    ids = np.concatenate([ids for ids, _ in parts])
+    dists = np.concatenate([dists for _, dists in parts])
+    if rerank_nb:
+        if fetch_vectors is None:
+            raise ValueError("rerank_nb > 0 needs fetch_vectors(ids)")
+        keep = _topk_idx(dists, ids, int(rerank_nb))
+        short_ids, short_adc = ids[keep], dists[keep]
+        X = np.asarray(fetch_vectors(short_ids), dtype=np.float64)
+        exact = ((X - q) ** 2).sum(axis=1)
+        top = np.lexsort((short_ids, exact))[:k]
+        return [
+            (int(short_ids[i]), float(short_adc[i]), float(exact[i]))
+            for i in top
+        ]
+    order = _topk_idx(dists, ids, k)
+    return [(int(ids[i]), float(dists[i])) for i in order]
 
 
 # A cell bigger than per_shard/CELL_SLICE_FACTOR splits into id-mod slices
@@ -287,33 +321,25 @@ class ServingSearcher:
             }
         return self._counts_cache
 
-    def score_cells(
-        self, q: np.ndarray, cells, luts: dict | None = None
-    ) -> tuple[np.ndarray, np.ndarray]:
+    def score_cells(self, q: np.ndarray, cells) -> tuple[np.ndarray, np.ndarray]:
         """ADC-score every resident item of ``cells`` for PROJECTED query
         ``q`` (no top-k cut) — the per-shard unit of work in the sharded
         router, and the inner loop of :meth:`search`. Cells this replica
         does not hold are skipped (the router sends each shard the global
-        traversal; ownership filtering happens here). ``luts`` optionally
-        supplies precomputed per-cell ADC LUTs — the router passes one for
-        each SLICED cell so the m shards holding slices don't each rebuild
-        the identical (M, K) table per query."""
+        traversal; ownership filtering happens here). One ``adc_luts`` call
+        tables every resident visited cell, each coarse half once."""
         model = self.model.lopq if isinstance(self.model, LOPQModelPCA) else self.model
-        all_ids: list[np.ndarray] = []
-        all_dists: list[np.ndarray] = []
-        for cell in cells:
-            entry = self._cells.get(cell)
-            if entry is None:
-                continue
-            ids, fines = entry
-            lut = luts.get(cell) if luts is not None else None
-            if lut is None:
-                lut = model.adc_lut(q, cell)
-            all_ids.append(ids)
-            all_dists.append(adc_batch_dists(lut, fines))
-        if not all_ids:
+        resident = [c for c in cells if c in self._cells]
+        if not resident:
             return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-        return np.concatenate(all_ids), np.concatenate(all_dists)
+        luts = model.adc_luts(q, resident)
+        entries = [self._cells[c] for c in resident]
+        return (
+            np.concatenate([ids for ids, _ in entries]),
+            np.concatenate(
+                [adc_batch_dists(lut, fines) for lut, (_, fines) in zip(luts, entries)]
+            ),
+        )
 
     # -- rerank feature store ------------------------------------------------
     def load_vectors(self, vec_df: DataFrame, id_col: str = "vec_id",
@@ -347,7 +373,9 @@ class ServingSearcher:
         sharded router."""
         vecs = getattr(self, "_vectors", None)
         if vecs is None:
-            raise ValueError("no resident vectors: call load_vectors() first")
+            raise ValueError(
+                "no resident vectors: pass fetch_vectors or load_vectors() first"
+            )
         return np.stack([vecs[int(i)] for i in ids])
 
     # -- query --------------------------------------------------------------
@@ -376,33 +404,13 @@ class ServingSearcher:
         if isinstance(model, LOPQModelPCA):
             q = model.project_queries(q)[0]
             model = model.lopq
-        counts = self.cell_counts
         d1, d2 = model.coarse_distances(q)
-        ids, dists = self.score_cells(
-            q, multisequence_cells(d1, d2, counts, quota)
+        part = self.score_cells(
+            q, multisequence_cells(d1, d2, self.cell_counts, quota)
         )
-        if not len(ids):
-            return []
-        if rerank_nb:
-            keep = _topk_idx(dists, ids, int(rerank_nb))
-            short_ids, short_adc = ids[keep], dists[keep]
-            if fetch_vectors is not None:
-                X = np.asarray(fetch_vectors(short_ids), dtype=np.float64)
-            else:
-                vecs = getattr(self, "_vectors", None)
-                if vecs is None:
-                    raise ValueError(
-                        "rerank_nb > 0 needs fetch_vectors or load_vectors()"
-                    )
-                X = np.stack([vecs[int(i)] for i in short_ids])
-            exact = ((X - q) ** 2).sum(axis=1)
-            top = np.lexsort((short_ids, exact))[:k]
-            return [
-                (int(short_ids[i]), float(short_adc[i]), float(exact[i]))
-                for i in top
-            ]
-        order = _topk_idx(dists, ids, k)
-        return [(int(ids[i]), float(dists[i])) for i in order]
+        if rerank_nb and fetch_vectors is None:
+            fetch_vectors = self.resident_vectors
+        return _merge_topk(q, [part], k, rerank_nb, fetch_vectors)
 
 
 class ShardedServingRouter:
@@ -708,6 +716,34 @@ class ShardedServingRouter:
             self._global_counts_cache = merged
         return self._global_counts_cache
 
+    def plan_fanout(
+        self, q: np.ndarray, quota: int
+    ) -> tuple[np.ndarray, dict[int, list[int]]]:
+        """The fan-out plan shared by :meth:`search` and
+        :class:`ForkedRouterPool`: project ``q`` (PCA models), traverse the
+        multisequence grid ONCE against the global histogram, and group the
+        visited cells by owning shard — split cells go to EVERY owning
+        shard, the rest bisect over the sorted range starts (O(visited log
+        shards)). Returns the projected query and ``{shard: cells}``."""
+        q = np.asarray(q, dtype=np.float64)
+        model = self.model
+        if isinstance(model, LOPQModelPCA):
+            q = model.project_queries(q)[0]
+            model = model.lopq
+        d1, d2 = model.coarse_distances(q)
+        lows = [lo for lo, _hi, _s in self.shards]
+        by_shard: dict[int, list[int]] = {}
+        for cell in multisequence_cells(d1, d2, self._global_counts(), quota):
+            owners = self._splits.get(cell)
+            if owners is not None:
+                for i in set(owners):
+                    by_shard.setdefault(i, []).append(cell)
+                continue
+            i = bisect.bisect_right(lows, cell) - 1
+            if i >= 0 and cell <= self.shards[i][1]:
+                by_shard.setdefault(i, []).append(cell)
+        return q, by_shard
+
     def search(
         self,
         q: np.ndarray,
@@ -718,70 +754,20 @@ class ShardedServingRouter:
     ) -> list[tuple]:
         """Same contract (and answers) as ``ServingSearcher.search`` over
         the union of all shards."""
-        q = np.asarray(q, dtype=np.float64)
-        model = self.model
-        if isinstance(model, LOPQModelPCA):
-            q = model.project_queries(q)[0]
-            model = model.lopq
-        d1, d2 = model.coarse_distances(q)
-        visited = list(
-            multisequence_cells(d1, d2, self._global_counts(), quota)
-        )
-        # fan out: each shard scores only the visited (cell-)slices it owns
-        # (split cells go to EVERY owning shard; the rest bisect over the
-        # sorted range starts — O(visited log shards))
-        import bisect
-
-        lows = [lo for lo, _hi, _s in self.shards]
-        by_shard: dict[int, list[int]] = {}
-        for cell in visited:
-            owners = self._splits.get(cell)
-            if owners is not None:
-                for i in set(owners):
-                    by_shard.setdefault(i, []).append(cell)
-                continue
-            i = bisect.bisect_right(lows, cell) - 1
-            if i >= 0 and cell <= self.shards[i][1]:
-                by_shard.setdefault(i, []).append(cell)
-        # LUTs for sliced cells are built ONCE here and shared: m shards
-        # hold slices of the same cell and would otherwise each rebuild the
-        # identical (M, K) table per query. The fan-out itself is
-        # SEQUENTIAL in-process — threading it was measured 1.6-10x SLOWER
-        # at a 1M-row index (GIL contention between the many small numpy
-        # ops dominates; the kernels are too fine to overlap), so one
-        # process's wall equals TOTAL work. A real deployment's shards are
-        # separate processes/machines and fan out in parallel for free;
-        # what the split buys is the bound on MAX PER-SHARD work — the
-        # quantity that parallel wall clock is made of.
-        luts = {
-            cell: model.adc_lut(q, cell)
-            for cell in visited
-            if cell in self._splits
-        } or None
-        all_ids, all_dists = [], []
-        for i, cells in by_shard.items():
-            ids, dists = self.shards[i][2].score_cells(q, cells, luts=luts)
-            if len(ids):
-                all_ids.append(ids)
-                all_dists.append(dists)
-        if not all_ids:
-            return []
-        ids = np.concatenate(all_ids)
-        dists = np.concatenate(all_dists)
-        if rerank_nb:
-            keep = _topk_idx(dists, ids, int(rerank_nb))
-            short_ids, short_adc = ids[keep], dists[keep]
-            if fetch_vectors is None:
-                raise ValueError("router rerank needs fetch_vectors(ids)")
-            X = np.asarray(fetch_vectors(short_ids), dtype=np.float64)
-            exact = ((X - q) ** 2).sum(axis=1)
-            top = np.lexsort((short_ids, exact))[:k]
-            return [
-                (int(short_ids[i]), float(short_adc[i]), float(exact[i]))
-                for i in top
-            ]
-        order = _topk_idx(dists, ids, k)
-        return [(int(ids[i]), float(dists[i])) for i in order]
+        q, by_shard = self.plan_fanout(q, quota)
+        # each shard scores only the visited (cell-)slices it owns. The
+        # fan-out is SEQUENTIAL in-process — threading it was measured
+        # 1.6-10x SLOWER at a 1M-row index (GIL contention between the many
+        # small numpy ops dominates; the kernels are too fine to overlap),
+        # so one process's wall equals TOTAL work. A real deployment's
+        # shards are separate processes/machines and fan out in parallel
+        # for free; what the split buys is the bound on MAX PER-SHARD work
+        # — the quantity that parallel wall clock is made of.
+        parts = [
+            self.shards[i][2].score_cells(q, cells)
+            for i, cells in by_shard.items()
+        ]
+        return _merge_topk(q, parts, k, rerank_nb, fetch_vectors)
 
 
 def _forked_shard_loop(conn, router: "ShardedServingRouter", shard_idx: int):
@@ -857,9 +843,8 @@ class ForkedRouterPool:
     asc) is a subset of the union of per-shard top-k's (each globally-kept
     pair is by definition within its own shard's top-k), so the merge is
     exact and answers are IDENTICAL to ``router.search`` (pinned by
-    tests). Split-cell LUTs are computed per owning worker (m duplicate
-    (M, K) builds — in parallel, so they cost no wall; the sequential
-    router shares one build instead, see ``router.search``).
+    tests). Each worker tables its own resident cells (one ``adc_luts``
+    call per request, each coarse half once).
 
     Concurrency: queries are MULTIPLEXED, not serialized. Each query gets
     a request id; the parent sends tagged requests down the involved
@@ -1049,31 +1034,12 @@ class ForkedRouterPool:
         instead of queueing on a pool-wide lock. Raises
         :class:`PoolBrokenError` if the pool broke (worker death) before
         or during the query."""
-        import bisect
-
         r = self.router
         if self._broken or self._closing:
             raise PoolBrokenError(
                 "pool is broken or closed; fork a fresh ForkedRouterPool"
             )
-        q = np.asarray(q, dtype=np.float64)
-        model = r.model
-        if isinstance(model, LOPQModelPCA):
-            q = model.project_queries(q)[0]
-            model = model.lopq
-        d1, d2 = model.coarse_distances(q)
-        visited = list(multisequence_cells(d1, d2, r._global_counts(), quota))
-        lows = [lo for lo, _hi, _s in r.shards]
-        by_shard: dict[int, list[int]] = {}
-        for cell in visited:
-            owners = r._splits.get(cell)
-            if owners is not None:
-                for i in set(owners):
-                    by_shard.setdefault(i, []).append(cell)
-                continue
-            i = bisect.bisect_right(lows, cell) - 1
-            if i >= 0 and cell <= r.shards[i][1]:
-                by_shard.setdefault(i, []).append(cell)
+        q, by_shard = r.plan_fanout(q, quota)
         nb = max(int(k), int(rerank_nb)) if rerank_nb else int(k)
         req_id = next(self._req_counter)
         pending = _PendingQuery(set(by_shard))
@@ -1156,27 +1122,10 @@ class ForkedRouterPool:
         finally:
             with self._pending_lock:
                 self._pending.pop(req_id, None)
-        all_ids, all_dists = [], []
-        for i in sorted(pending.parts):
-            ids, dists = pending.parts[i]
-            if len(ids):
-                all_ids.append(ids)
-                all_dists.append(dists)
-        if not all_ids:
-            return []
-        ids = np.concatenate(all_ids)
-        dists = np.concatenate(all_dists)
-        if rerank_nb:
-            keep = _topk_idx(dists, ids, int(rerank_nb))
-            short_ids, short_adc = ids[keep], dists[keep]
-            if fetch_vectors is None:
-                raise ValueError("pool rerank needs fetch_vectors(ids)")
-            X = np.asarray(fetch_vectors(short_ids), dtype=np.float64)
-            exact = ((X - q) ** 2).sum(axis=1)
-            top = np.lexsort((short_ids, exact))[:k]
-            return [
-                (int(short_ids[i]), float(short_adc[i]), float(exact[i]))
-                for i in top
-            ]
-        order = _topk_idx(dists, ids, k)
-        return [(int(ids[i]), float(dists[i])) for i in order]
+        return _merge_topk(
+            q,
+            [pending.parts[i] for i in sorted(pending.parts)],
+            k,
+            rerank_nb,
+            fetch_vectors,
+        )

@@ -149,11 +149,13 @@ def _search_rows(
         d1, d2 = model.coarse_distances(q)
         c_ids: list[np.ndarray] = []
         c_dists: list[np.ndarray] = []
-        for cell in multisequence_cells(d1, d2, counts, QUOTA):
-            if not counts.get(cell, 0):
-                continue
+        visited = [
+            c
+            for c in multisequence_cells(d1, d2, counts, QUOTA)
+            if counts.get(c, 0)
+        ]
+        for cell, lut in zip(visited, model.adc_luts(q, visited)):
             mask = cells == cell
-            lut = model.adc_lut(q, cell)
             c_ids.append(ids[mask])
             c_dists.append(adc_batch_dists(lut, fine[mask]))
         cand_ids = np.concatenate(c_ids)
@@ -381,11 +383,13 @@ def lopq_pca_search_topk_sql(sf_dir: str) -> str:
         d1, d2 = lopq.coarse_distances(qp)
         c_ids: list[np.ndarray] = []
         c_dists: list[np.ndarray] = []
-        for cell in multisequence_cells(d1, d2, counts, PCA_QUOTA):
-            if not counts.get(cell, 0):
-                continue
+        visited = [
+            c
+            for c in multisequence_cells(d1, d2, counts, PCA_QUOTA)
+            if counts.get(c, 0)
+        ]
+        for cell, lut in zip(visited, lopq.adc_luts(qp, visited)):
             mask = cells == cell
-            lut = lopq.adc_lut(qp, cell)
             c_ids.append(ids[mask])
             c_dists.append(adc_batch_dists(lut, fine[mask]))
         cand_ids = np.concatenate(c_ids)

@@ -7,7 +7,11 @@ stats files itself to invalidate one.
 
 The streaming twins likewise read their state tables through
 ``streaming/state.py`` only: a streaming module that refreshes a path or
-probes a directory for parquet files itself fails the guard."""
+probes a directory for parquet files itself fails the guard.
+
+ADC tables are built per query by ``LOPQModel.adc_luts`` over all the
+cells a caller scores, each coarse half once; a per-cell ``adc_lut``
+(definition or call) anywhere in the package fails the guard."""
 
 from __future__ import annotations
 
@@ -86,6 +90,17 @@ def _state_probes(tree: ast.Module):
             yield node.lineno, '.endswith(".parquet")'
 
 
+def _per_cell_luts(tree: ast.Module):
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef) and node.name == "adc_lut":
+            yield node.lineno, "def adc_lut"
+        elif isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name == "adc_lut":
+                yield node.lineno, "adc_lut()"
+
+
 def test_no_module_caches_outside_cache_py():
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
@@ -121,6 +136,18 @@ def test_streaming_state_reads_go_through_state_py():
     )
 
 
+def test_adc_tables_are_built_per_query_not_per_cell():
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        rel = path.relative_to(PKG.parent)
+        offenders += [f"{rel}:{line}: {call}" for line, call in _per_cell_luts(tree)]
+    assert not offenders, (
+        "build ADC tables with LOPQModel.adc_luts(q, cells), one call over "
+        "all the cells being scored:\n" + "\n".join(offenders)
+    )
+
+
 def test_guard_catches_a_planted_cache():
     planted = ast.parse(
         "import os as _os\n"
@@ -134,10 +161,20 @@ def test_guard_catches_a_planted_cache():
         "    return any(f.endswith('.parquet') for f in _os.listdir(p))\n"
         "def h(name):\n"
         "    return name.endswith('.json')\n"
+        "def adc_lut(q, cell):\n"
+        "    pass\n"
+        "def score(model, q, cells):\n"
+        "    model.adc_luts(q, cells)\n"
+        "    return [model.adc_lut(q, c) for c in cells] + [adc_lut(q, 0)]\n"
     )
     assert [n for _, n in _module_dicts(planted)] == ["_X_CACHE", "_Y"]
     assert [c for _, c in _stat_calls(planted)] == ["_os.stat()"]
     assert [c for _, c in _state_probes(planted)] == [
         "refreshByPath()",
         '.endswith(".parquet")',
+    ]
+    assert [c for _, c in _per_cell_luts(planted)] == [
+        "def adc_lut",
+        "adc_lut()",
+        "adc_lut()",
     ]

@@ -245,6 +245,75 @@ def test_minhash_refuses_exact_duplicate_flood(spark):
     assert pairs >= 50 * 49 // 2
 
 
+def test_curation_failure_cancels_overlapped_verdict_pins(spark, monkeypatch):
+    """A stage that fails while an overlapped verdict pin is still running
+    cancels the pin's tagged job instead of waiting for it to finish: the
+    repetition pin here sleeps two minutes per row, stage 1 raises once
+    that job runs, and the call must re-raise within seconds with the
+    tagged job ended."""
+    import time
+
+    import pytest
+    from pyspark import SparkContext
+    from pyspark.sql import Row
+    from pyspark.sql.types import BooleanType
+
+    from columbiaimagesearch_spark.operators import dedup
+
+    sc = spark.sparkContext
+    jvm_tracker = sc._jsc.sc().statusTracker()
+    tags: list[str] = []
+    real_add = SparkContext.addJobTag
+
+    def add_tag(self, tag):
+        tags.append(tag)
+        real_add(self, tag)
+
+    @F.udf(BooleanType())
+    def sleepy(doc_id):
+        time.sleep(120)
+        return False
+
+    def tagged_jobs():
+        return [int(j) for t in set(tags) for j in jvm_tracker.getJobIdsForTag(t)]
+
+    raised_at = []
+
+    def failing_pairs(*args, **kwargs):
+        deadline = time.monotonic() + 60
+        while not any(
+            sc.statusTracker().getJobInfo(j).status == "RUNNING"
+            for j in tagged_jobs()
+        ):
+            assert time.monotonic() < deadline, "verdict pin never started"
+            time.sleep(0.05)
+        raised_at.append(time.monotonic())
+        raise RuntimeError("stage 1 failed")
+
+    monkeypatch.setattr(SparkContext, "addJobTag", add_tag)
+    monkeypatch.setattr(
+        hygiene,
+        "repetition_stats_from",
+        lambda d: d.select("doc_id", sleepy("doc_id").alias("repetitive")),
+    )
+    monkeypatch.setattr(dedup, "near_dup_pairs_from", failing_pairs)
+    docs = spark.createDataFrame(
+        [Row(doc_id=i, text=f"document {i} body", lang="en", source="web")
+         for i in range(4)]
+    )
+    with pytest.raises(RuntimeError, match="stage 1 failed"):
+        curate.curate_docs(docs, None, train_split_only=False)
+    assert time.monotonic() - raised_at[0] < 10
+    jobs = tagged_jobs()
+    assert jobs and len(set(tags)) == 1
+    deadline = time.monotonic() + 10
+    while any(sc.statusTracker().getJobInfo(j).status == "RUNNING" for j in jobs):
+        assert time.monotonic() < deadline, "tagged verdict job still running"
+        time.sleep(0.05)
+    assert {sc.statusTracker().getJobInfo(j).status for j in jobs} == {"FAILED"}
+    assert not sc.getJobTags()
+
+
 def test_curation_with_fuzzy_decontam_drops_paraphrase(spark):
     """fuzzy_decontaminate=True adds the near-duplicate decontamination
     rung (reusing stage 1's shingle-hash cache): a train doc that edits

@@ -113,6 +113,134 @@ def test_adc_batch_dists_batch_shape_independent():
         assert np.array_equal(adc_batch_dists(lut, fine[sl]), full[sl]), sl
 
 
+def _random_lopq(D: int, M: int, V: int, K: int, seed: int) -> LOPQModel:
+    """Untrained LOPQ parameters of the right shapes (orthonormal local
+    rotations) — the table formula does not care how they were fit."""
+    rng = np.random.RandomState(seed)
+    half = D // 2
+    Rs = np.stack([
+        np.stack([np.linalg.qr(rng.randn(half, half))[0] for _ in range(V)])
+        for _ in range(2)
+    ])
+    return LOPQModel(
+        V=V, M=M, K=K, D=D, Cs=rng.randn(2, V, half), Rs=Rs,
+        mus=0.1 * rng.randn(2, V, half), subs=rng.randn(M, K, D // M),
+    )
+
+
+def _textbook_lut(model: LOPQModel, q: np.ndarray, cell: int) -> np.ndarray:
+    """The per-cell ADC table written out: project the query's residual
+    w.r.t. this one cell, then one subquantizer row at a time."""
+    coarse = np.array([[cell // model.V, cell % model.V]])
+    P = model.project_residuals(q[None, :], coarse)[0]
+    lut = np.empty((model.M, model.K))
+    sd = model.sub_dim
+    for m in range(model.M):
+        h, s = divmod(m, model.subs_per_half)
+        pm = P[h * model.half + s * sd : h * model.half + (s + 1) * sd]
+        lut[m] = ((model.subs[m] - pm) ** 2).sum(1)
+    return lut
+
+
+@pytest.mark.parametrize(
+    "D,M,V,K",
+    [
+        (16, 16, 4, 8),  # sub_dim 1
+        (32, 16, 8, 32),  # sub_dim 2 (the serving benchmark's shape)
+        (24, 8, 5, 16),  # sub_dim 3
+        (128, 8, 8, 16),  # sub_dim 16
+        (512, 8, 16, 256),  # sub_dim 64, K = 256
+        (128, 16, 8, 256),  # K = 256
+    ],
+)
+def test_adc_luts_bitwise_equals_per_cell_formula(D, M, V, K):
+    """``adc_luts`` builds each coarse half once and stacks two half tables
+    per cell; every cell's table must equal the per-cell formula BITWISE
+    (serving, batch search and the twin oracle all score from it) —
+    for unsorted and repeated cells, and for an empty cell list."""
+    model = _random_lopq(D, M, V, K, seed=D + M + V + K)
+    rng = np.random.RandomState(7)
+    for _ in range(5):
+        q = rng.randn(D)
+        cells = rng.randint(0, V * V, size=25)  # unsorted, with repeats
+        cells = np.concatenate([cells, cells[:3]])
+        got = model.adc_luts(q, cells)
+        assert got.shape == (len(cells), M, K)
+        for i, cell in enumerate(cells):
+            assert np.array_equal(got[i], _textbook_lut(model, q, int(cell))), cell
+    assert model.adc_luts(rng.randn(D), []).shape == (0, M, K)
+
+
+def test_adc_luts_pca_inner_model_bitwise():
+    from columbiaimagesearch_spark.lopq.model import LOPQModelPCA
+
+    rng = np.random.RandomState(11)
+    inner = _random_lopq(32, 8, 6, 16, seed=5)
+    pm = LOPQModelPCA(
+        lopq=inner, P=np.linalg.qr(rng.randn(48, 48))[0][:, :32], mu=rng.randn(48)
+    )
+    qp = pm.project_queries(rng.randn(48))[0]
+    cells = [35, 0, 7, 35, 14, 20, 7]
+    got = pm.lopq.adc_luts(qp, cells)
+    for i, cell in enumerate(cells):
+        assert np.array_equal(got[i], _textbook_lut(inner, qp, cell))
+
+
+def test_adc_luts_called_once_per_shard_visit_and_per_query(monkeypatch):
+    """One table build per ``score_cells`` that holds a visited cell (the
+    forked shard workers' unit of work) and one per query in
+    ``_plan_probe``, never one per cell."""
+    import pandas as pd
+
+    from columbiaimagesearch_spark.lopq import search as lsearch
+    from columbiaimagesearch_spark.lopq.serving import (
+        ServingSearcher,
+        ShardedServingRouter,
+    )
+
+    model = _random_lopq(32, 16, 8, 32, seed=1)
+    rng = np.random.RandomState(2)
+    X = rng.randn(600, 32)
+    cells = rng.randint(0, 64, size=600)
+    fine = rng.randint(0, 32, size=(600, 16))
+    replica = ServingSearcher(model)
+    replica._cells = ServingSearcher._group_codes_pdf(
+        pd.DataFrame({"cell": cells, "id": np.arange(600), "fine": list(fine)}), 16
+    )
+    router = ShardedServingRouter.from_replica(replica, 3)
+
+    calls = {"luts": 0, "score": 0}  # score: visits holding a visited cell
+    real_luts = LOPQModel.adc_luts
+    real_score = ServingSearcher.score_cells
+
+    def counting_luts(self, q, cells):
+        calls["luts"] += 1
+        return real_luts(self, q, cells)
+
+    def counting_score(self, q, cells):
+        calls["score"] += any(c in self._cells for c in cells)
+        return real_score(self, q, cells)
+
+    monkeypatch.setattr(LOPQModel, "adc_luts", counting_luts)
+    monkeypatch.setattr(ServingSearcher, "score_cells", counting_score)
+    for q in X[:10]:
+        calls.update(luts=0, score=0)
+        want = replica.search(q, quota=200, k=10)
+        assert calls == {"luts": 1, "score": 1}
+        calls.update(luts=0, score=0)
+        assert router.search(q, quota=200, k=10) == want
+        assert calls["score"] >= 1 and calls["luts"] == calls["score"]
+
+    counts = replica.cell_counts
+    queries = [(i, X[i]) for i in range(7)]
+    calls.update(luts=0, score=0)
+    probe_rows, luts, _ = lsearch._plan_probe(model, queries, counts, 200)
+    assert calls["luts"] == len(queries)
+    assert len(probe_rows) > len(queries)
+    for qid, cell in probe_rows:
+        assert np.array_equal(luts[(qid, cell)], _textbook_lut(model, X[qid], cell))
+
+
 def test_multisequence_visits_in_distance_order(model, emb_np):
     _, X = emb_np
     d1, d2 = model.coarse_distances(X[0])
