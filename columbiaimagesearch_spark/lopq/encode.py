@@ -2,7 +2,7 @@
 
 Replaces the reference's multiprocessing encode drivers
 (``lopq/lopq/utils.py:134-218 compute_codes_parallel`` and the RDD
-text-file round trip ``search.py:227-273``) with a single ``mapInPandas``
+text-file round trip ``search.py:227-273``) with a single ``mapInArrow``
 stage: the model rides a broadcast variable, each Arrow batch is encoded
 with vectorized numpy, and the output is a columnar codes table
 
@@ -17,12 +17,11 @@ groups (SURVEY §4 "cell pruning" as a physical layout decision).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions import arrow_vec
 from .model import LOPQModel
 
 CODES_SCHEMA = "id bigint, c1 int, c2 int, cell int, fine array<int>"
@@ -35,24 +34,24 @@ def encode_dataframe(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Encode every row of ``df`` to LOPQ codes (one mapInPandas pass)."""
+    """Encode every row of ``df`` to LOPQ codes (one mapInArrow pass)."""
     b_model = spark.sparkContext.broadcast(model.to_arrays())
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode_batches(batches):
         model = LOPQModel.from_arrays(b_model.value)
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            X = np.array(list(pdf[vec_col]), dtype=np.float64)
+            X = arrow_vec.vectors(batch, vec_col, "encode_dataframe")
             coarse, fine = model.encode(X)
-            yield pd.DataFrame(
+            yield pa.record_batch(
                 {
-                    "id": pdf[id_col].to_numpy(),
+                    "id": batch.column(id_col).cast(pa.int64()),
                     "c1": coarse[:, 0].astype(np.int32),
                     "c2": coarse[:, 1].astype(np.int32),
                     "cell": model.cell_id(coarse).astype(np.int32),
-                    "fine": list(fine.astype(np.int32)),
+                    "fine": arrow_vec.column(fine.astype(np.int32)),
                 }
             )
 
-    return df.select(id_col, vec_col).mapInPandas(encode_batches, CODES_SCHEMA)
+    return df.select(id_col, vec_col).mapInArrow(encode_batches, CODES_SCHEMA)

@@ -19,20 +19,19 @@ diagnostics as one-pass Spark computations:
   that eigenvalue allocation is supposed to balance.
 
 Scale shape: the joins carry (id, cell) ints only; the two model-dependent
-metrics are single ``mapInPandas`` passes with the broadcast model emitting
+metrics come from one ``mapInArrow`` pass with the broadcast model emitting
 O(batches × M) partial rows — nothing vector-sized shuffles, the aggregates
 are partial+final sums.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import arrow_vec
 from .model import LOPQModel
 
 
@@ -132,24 +131,24 @@ def exact_nn_pairs(
     all-pairs semantics); past broadcast size the blocked block-join of
     ``operators/similarity.emb_near_dup_pairs`` is the scale path."""
     spark = vec_df.sparkSession
-    rows = vec_df.select(id_col, vec_col).collect()
-    ids_all = np.array([r[id_col] for r in rows], dtype=np.int64)
-    X_all = np.array([r[vec_col] for r in rows], dtype=np.float64)
+    corpus = vec_df.select(id_col, vec_col).toArrow()
+    ids_all = np.asarray(corpus.column(id_col), dtype=np.int64)
+    X_all = arrow_vec.vectors(corpus, vec_col, "exact_nn_pairs")
     order = np.argsort(ids_all, kind="stable")
     b_all = spark.sparkContext.broadcast((ids_all[order], X_all[order]))
 
-    def nn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def nn(batches):
         a_ids, a_X = b_all.value
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            blk_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            blk_X = np.array(list(pdf[vec_col]), dtype=np.float64)
-            yield pd.DataFrame(
+            blk_ids = np.asarray(batch.column(id_col), dtype=np.int64)
+            blk_X = arrow_vec.vectors(batch, vec_col, "exact_nn_pairs")
+            yield pa.record_batch(
                 {"id": blk_ids, "nn_id": exact_nn_block(a_ids, a_X, blk_ids, blk_X)}
             )
 
-    return vec_df.select(id_col, vec_col).mapInPandas(nn, "id long, nn_id long")
+    return vec_df.select(id_col, vec_col).mapInArrow(nn, "id long, nn_id long")
 
 
 def reconstruction_code_stability(
@@ -173,31 +172,10 @@ def reconstruction_code_stability_stats(
 ) -> tuple[int, int]:
     """(n, n_stable) integer form of :func:`reconstruction_code_stability`
     — exact counts the driver hash can compare without float tolerance."""
-    spark = vec_df.sparkSession
-    b_model = spark.sparkContext.broadcast(model.to_arrays())
-
-    def stability(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m = LOPQModel.from_arrays(b_model.value)
-        n = same = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c1, f1 = m.encode(X)
-            R = m.reconstruct(c1, f1)
-            c2, f2 = m.encode(R)
-            ok = (c1 == c2).all(axis=1) & (f1 == f2).all(axis=1)
-            n += len(pdf)
-            same += int(ok.sum())
-        yield pd.DataFrame({"n": [n], "same": [same]})
-
-    row = (
-        vec_df.select(id_col, vec_col)
-        .mapInPandas(stability, "n long, same long")
-        .agg(F.sum("n").alias("n"), F.sum("same").alias("same"))
-        .collect()[0]
+    n, same, _ = _model_pass(
+        vec_df, model, id_col, vec_col, "reconstruction_code_stability_stats"
     )
-    return int(row["n"] or 0), int(row["same"] or 0)
+    return n, same
 
 
 def subquantizer_distortion(
@@ -211,41 +189,10 @@ def subquantizer_distortion(
     subquantizer centroid, and average over the corpus (reference
     ``eval.py:145-161`` — there via a full residual recompute per split;
     here one Arrow pass emitting M partial sums per partition)."""
-    spark = vec_df.sparkSession
-    b_model = spark.sparkContext.broadcast(model.to_arrays())
-
-    def distortion(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m = LOPQModel.from_arrays(b_model.value)
-        sd = m.sub_dim
-        sums = np.zeros(m.M)
-        n = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(list(pdf[vec_col]), dtype=np.float64)
-            P = m.project_residuals(X, m.coarse_assign(X))
-            for sub in range(m.M):
-                h = sub // m.subs_per_half
-                s = sub % m.subs_per_half
-                Pm = P[:, h * m.half + s * sd : h * m.half + (s + 1) * sd]
-                S = m.subs[sub]
-                d = (Pm**2).sum(1)[:, None] - 2 * Pm @ S.T + (S**2).sum(1)[None, :]
-                sums[sub] += d.min(axis=1).sum()
-            n += len(pdf)
-        yield pd.DataFrame(
-            {"m": np.arange(m.M, dtype=np.int64), "n": n, "s": sums}
-        )
-
-    rows = (
-        vec_df.select(id_col, vec_col)
-        .mapInPandas(distortion, "m long, n long, s double")
-        .groupBy("m")
-        .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
-        .collect()
-    )
+    n, _, sums = _model_pass(vec_df, model, id_col, vec_col, "subquantizer_distortion")
     out = np.zeros(model.M)
-    for r in rows:
-        out[int(r["m"])] = float(r["s"]) / float(r["n"]) if r["n"] else 0.0
+    for m, s in sums.items():
+        out[m] = s / float(n) if n else 0.0
     return out
 
 
@@ -259,56 +206,61 @@ def model_pass_stats(
     stability counts AND the per-subquantizer distortion from ONE corpus
     pass (both are per-vector functions of the broadcast model, so
     splitting them into separate jobs pays the scan twice plus a count
-    job; at 100 TB that is three reads for one).  Math identical to
-    :func:`reconstruction_code_stability_stats` /
-    :func:`subquantizer_distortion` — same kernels, same rounding."""
+    job; at 100 TB that is three reads for one). Distortions are rounded
+    to 4dp."""
+    n, same, sums = _model_pass(vec_df, model, id_col, vec_col, "model_pass_stats")
+    dist_rows = [
+        (m, n, round(sums[m] / n, 4) if n else 0.0)
+        for m in range(model.M)
+        if m in sums
+    ]
+    return n, same, dist_rows
+
+
+def _model_pass(
+    vec_df: DataFrame, model: LOPQModel, id_col: str, vec_col: str, caller: str
+) -> tuple[int, int, dict[int, float]]:
+    """(n, n_stable, {m: Σ squared distance of subvector m to its nearest
+    subquantizer centroid}) over the corpus, in one Arrow pass with the
+    broadcast model: per partition, encode → reconstruct → re-encode counts
+    the vectors whose codes survive the round trip, and the projected
+    residual splits sum their distortion. Partials are summed per ``m``
+    (row ``m = -1`` carries the stable count)."""
     spark = vec_df.sparkSession
     b_model = spark.sparkContext.broadcast(model.to_arrays())
 
-    def both(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partials(batches):
         m = LOPQModel.from_arrays(b_model.value)
-        sd = m.sub_dim
         n = same = 0
         sums = np.zeros(m.M)
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            X = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c1, f1 = m.encode(X)
-            R = m.reconstruct(c1, f1)
-            c2, f2 = m.encode(R)
+            X = arrow_vec.vectors(batch, vec_col, caller)
+            # encode's own steps, so the split distances also give distortion
+            c1 = m.coarse_assign(X)
+            dists = list(m.sub_distances(m.project_residuals(X, c1)))
+            f1 = np.stack([d.argmin(axis=1) for d in dists], axis=1)
+            c2, f2 = m.encode(m.reconstruct(c1, f1))
             ok = (c1 == c2).all(axis=1) & (f1 == f2).all(axis=1)
-            n += len(pdf)
+            n += len(X)
             same += int(ok.sum())
-            P = m.project_residuals(X, m.coarse_assign(X))
-            for sub in range(m.M):
-                h = sub // m.subs_per_half
-                s = sub % m.subs_per_half
-                Pm = P[:, h * m.half + s * sd : h * m.half + (s + 1) * sd]
-                S = m.subs[sub]
-                d = (Pm**2).sum(1)[:, None] - 2 * Pm @ S.T + (S**2).sum(1)[None, :]
-                sums[sub] += d.min(axis=1).sum()
-        out = pd.DataFrame(
+            sums += [d.min(axis=1).sum() for d in dists]
+        yield pa.record_batch(
             {
-                "m": np.concatenate([[-1], np.arange(m.M)]).astype(np.int64),
-                "n": np.int64(n),
+                "m": np.arange(-1, m.M, dtype=np.int64),
+                "n": np.full(m.M + 1, n, dtype=np.int64),
                 "s": np.concatenate([[float(same)], sums]),
             }
         )
-        yield out
 
     rows = (
         vec_df.select(id_col, vec_col)
-        .mapInPandas(both, "m long, n long, s double")
+        .mapInArrow(partials, "m long, n long, s double")
         .groupBy("m")
         .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
         .collect()
     )
     by_m = {int(r["m"]): (int(r["n"] or 0), float(r["s"] or 0.0)) for r in rows}
-    n, same = by_m.get(-1, (0, 0.0))
-    dist_rows = [
-        (m, n, round(by_m[m][1] / n, 4) if n else 0.0)
-        for m in range(model.M)
-        if m in by_m
-    ]
-    return n, int(same), dist_rows
+    n, same = by_m.pop(-1, (0, 0.0))
+    return n, int(same), {m: s for m, (_, s) in by_m.items()}

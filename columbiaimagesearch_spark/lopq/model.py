@@ -254,19 +254,19 @@ class LOPQModel:
             )
         return P
 
-    def encode_fine(self, P: np.ndarray) -> np.ndarray:
-        """(n, M) fine codes over projected residual splits."""
-        n = P.shape[0]
-        out = np.empty((n, self.M), dtype=np.int64)
+    def sub_distances(self, P: np.ndarray):
+        """Per subquantizer m, in order: the (n, K) squared L2 distances of
+        projected residual split m to subquantizer m's centroids."""
         sd = self.sub_dim
         for m in range(self.M):
-            h = m // self.subs_per_half
-            s = m % self.subs_per_half
+            h, s = divmod(m, self.subs_per_half)
             Pm = P[:, h * self.half + s * sd : h * self.half + (s + 1) * sd]
             S = self.subs[m]
-            d = (Pm**2).sum(1)[:, None] - 2 * Pm @ S.T + (S**2).sum(1)[None, :]
-            out[:, m] = d.argmin(axis=1)
-        return out
+            yield (Pm**2).sum(1)[:, None] - 2 * Pm @ S.T + (S**2).sum(1)[None, :]
+
+    def encode_fine(self, P: np.ndarray) -> np.ndarray:
+        """(n, M) fine codes over projected residual splits."""
+        return np.stack([d.argmin(axis=1) for d in self.sub_distances(P)], axis=1)
 
     def encode(self, X: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         coarse = self.coarse_assign(X)

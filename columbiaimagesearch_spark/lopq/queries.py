@@ -11,10 +11,12 @@ vs brute force, and exact top-k parity at quota=ALL with full rerank
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache
+from ..functions import arrow_vec
 from ..registry import register
 from ..sources import load_table
 from . import twin
@@ -91,7 +93,7 @@ def codes_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tag now that the dedicated c7_cell_id_roundtrip rendering is folded.
     survey_ops=("V4", "V8", "V9", "C7"),
     doc="LOPQ encode: embeddings -> (id, c1, c2, cell, fine) codes table via "
-    "one mapInPandas pass with broadcast model (replaces the reference's "
+    "one mapInArrow pass with broadcast model (replaces the reference's "
     "compute_codes_parallel process pool, utils.py:134-218). Oracle: "
     "single-node NumPy twin (lopq/twin.py) as a VALUES literal; numeric "
     "parity also in tests/test_lopq.py.",
@@ -121,7 +123,7 @@ def lopq_cell_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ops=("T2", "T3", "J6", "V10", "T1"),
     doc=f"LOPQ ANN search: multisequence cell traversal to quota={QUOTA}, "
     "broadcast semi-join probe of the codes table, ADC LUT distances "
-    f"(vectorized gather pandas pass), top-{TOP_K} per query. Oracle: "
+    f"(vectorized gather Arrow pass), top-{TOP_K} per query. Oracle: "
     "NumPy twin (lopq/twin.py) — bitwise-identical adc_dist via the shared "
     "adc_batch_dists kernel; recall floor vs brute force in tests/test_lopq.py.",
     oracle=twin.lopq_search_topk_sql,
@@ -150,7 +152,6 @@ def lopq_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=twin.a5_recall_stats_sql,
 )
 def a5_recall_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
     from pyspark.sql import Window
 
     model = fixture_model(spark, sf_dir)
@@ -168,21 +169,21 @@ def a5_recall_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def score(batches):
         bq_ids, bq = b_q.value
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            X = np.array(list(pdf["embedding"]), dtype=np.float64)
+            X = arrow_vec.vectors(batch, "embedding", "a5_recall_stats")
             d = ((X[None, :, :] - bq[:, None, :]) ** 2).sum(axis=2)
             n_q, n_c = d.shape
-            yield pd.DataFrame(
+            yield pa.record_batch(
                 {
                     "qid": np.repeat(bq_ids, n_c),
-                    "id": np.tile(pdf["vec_id"].to_numpy(), n_q),
+                    "id": batch.column("vec_id").take(np.tile(np.arange(n_c), n_q)),
                     "dist": d.ravel(),
                 }
             )
 
-    scored = emb.select("vec_id", "embedding").mapInPandas(
+    scored = emb.select("vec_id", "embedding").mapInArrow(
         score, "qid bigint, id bigint, dist double"
     )
     w = Window.partitionBy("qid").orderBy(F.col("dist"), F.col("id"))
@@ -403,7 +404,7 @@ def pca_codes_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ops=("V7", "A4", "V8", "V10"),
     doc="PCA-composed LOPQ search (reference LOPQModelPCA; "
     f"model.py:878-978 apply_PCA+renorm): corpus PCA-projected to "
-    f"{twin.PCA_DIM} dims distributed (train_spark.pca_project mapInPandas), "
+    f"{twin.PCA_DIM} dims distributed (train_spark.pca_project mapInArrow), "
     "encoded, then searched with ORIGINAL-space queries projected inside "
     "search() (reference search.py:198-200). Output floats are LUT-gather "
     "sums over integer codes, so batch-shape matmul wobble cannot reach "

@@ -12,7 +12,7 @@ Spark rendering:
   (V^2) cell-count histogram (V <= 4096 => trivial);
 - the probe is a semi-join of the codes table against the visited-cells
   list (broadcast; prunes partitions when codes are cell-partitioned);
-- ADC distance is one Arrow pandas pass: per (query, cell) LUTs are small
+- ADC distance is one ``mapInArrow`` pass: per (query, cell) LUTs are small
   (M x K floats), computed driver-side (each coarse half once per query),
   broadcast, gathered vectorized;
 - top-k is a per-query window; exact rerank joins back to the vector table
@@ -22,13 +22,13 @@ Spark rendering:
 from __future__ import annotations
 
 import heapq
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import arrow_vec
 from .model import LOPQModel, LOPQModelPCA
 
 
@@ -240,26 +240,33 @@ def _execute_probe(
     # cell-partitioned codes table this is partition pruning, not a scan.
     cand = codes.join(F.broadcast(probe), "cell")
 
-    def adc_score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def adc_score(batches):
         lut_map = b_luts.value
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            fine = np.array(list(pdf["fine"]), dtype=np.int64)  # (n, M)
-            dists = np.empty(len(pdf))
+            fine = arrow_vec.vectors(batch, "fine", "search", dtype=np.int64)  # (n, M)
+            qid = np.asarray(batch.column("qid"), dtype=np.int64)
+            cell = np.asarray(batch.column("cell"), dtype=np.int64)
+            dists = np.empty(len(fine))
             # one vectorized LUT gather per (query, cell) group — there are
             # O(queries x probed cells) groups per batch, each scoring its
             # whole code block at once (VERDICT r1 fix #2: no per-row
             # Python loop; matches reference search.py:137-177 semantics)
-            groups = pdf.groupby(["qid", "cell"], sort=False).indices
-            for (qid, cell), idx in groups.items():
-                lut = lut_map[(int(qid), int(cell))]
+            order = np.lexsort((cell, qid))
+            cuts = np.flatnonzero(np.diff(qid[order]) | np.diff(cell[order])) + 1
+            for idx in np.split(order, cuts):
+                lut = lut_map[(int(qid[idx[0]]), int(cell[idx[0]]))]
                 dists[idx] = adc_batch_dists(lut, fine[idx])
-            yield pd.DataFrame(
-                {"qid": pdf["qid"], "id": pdf["id"], "adc_dist": dists}
+            yield pa.record_batch(
+                {
+                    "qid": batch.column("qid"),
+                    "id": batch.column("id"),
+                    "adc_dist": dists,
+                }
             )
 
-    scored = cand.mapInPandas(adc_score, "qid bigint, id bigint, adc_dist double")
+    scored = cand.mapInArrow(adc_score, "qid bigint, id bigint, adc_dist double")
 
     w = Window.partitionBy("qid").orderBy(F.col("adc_dist"), F.col("id"))
     top = scored.withColumn("rank", F.row_number().over(w))
@@ -274,24 +281,24 @@ def _execute_probe(
             "id",
         )
 
-        def exact_dist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def exact_dist(batches):
             qmap = b_q.value
-            for pdf in batches:
-                if not len(pdf):
+            for batch in batches:
+                if not batch.num_rows:
                     continue
-                X = np.array(list(pdf["_vec"]), dtype=np.float64)
-                Q = np.array([qmap[int(q)] for q in pdf["qid"]], dtype=np.float64)
-                d = ((X - Q) ** 2).sum(axis=1)
-                yield pd.DataFrame(
+                X = arrow_vec.vectors(batch, "_vec", "search")
+                qids = batch.column("qid")
+                Q = np.array([qmap[q] for q in qids.to_pylist()], dtype=np.float64)
+                yield pa.record_batch(
                     {
-                        "qid": pdf["qid"],
-                        "id": pdf["id"],
-                        "adc_dist": pdf["adc_dist"],
-                        "exact_dist": d,
+                        "qid": qids,
+                        "id": batch.column("id"),
+                        "adc_dist": batch.column("adc_dist"),
+                        "exact_dist": ((X - Q) ** 2).sum(axis=1),
                     }
                 )
 
-        rer = joined.mapInPandas(
+        rer = joined.mapInArrow(
             exact_dist, "qid bigint, id bigint, adc_dist double, exact_dist double"
         )
         w2 = Window.partitionBy("qid").orderBy(F.col("exact_dist"), F.col("id"))

@@ -22,6 +22,7 @@ import bisect
 import numpy as np
 from pyspark.sql import DataFrame
 
+from ..functions import arrow_vec
 from .model import LOPQModel, LOPQModelPCA
 from .search import adc_batch_dists, multisequence_cells
 
@@ -218,19 +219,20 @@ class ServingSearcher:
 
     # -- index build/refresh ------------------------------------------------
     @staticmethod
-    def _group_codes_pdf(pdf, M: int) -> dict[int, tuple[np.ndarray, np.ndarray]]:
-        """(cell, id, fine) pandas frame -> per-cell (ids, fines) arrays.
+    def _group_codes(
+        tbl, M: int, caller: str
+    ) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+        """(cell, id, fine) Arrow table -> per-cell (ids, fines) arrays.
         Vectorized: one stable argsort by cell + boundary slicing — the
         row-at-a-time dict loop cost ~100 s at a 1M-row snapshot; this is
         seconds. Stable sort preserves row order within each cell (the
         dedup/first-occurrence semantics add_codes relies on)."""
-        cells = pdf["cell"].to_numpy(dtype=np.int64)
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        if len(pdf) == 0:
+        if tbl.num_rows == 0:
             return {}
-        fines = np.array(pdf["fine"].to_list(), dtype=np.int64).reshape(
-            len(pdf), M
-        )
+        cells = np.asarray(tbl.column("cell"), dtype=np.int64)
+        ids = np.asarray(tbl.column("id"), dtype=np.int64)
+        fines = arrow_vec.vectors(tbl, "fine", caller, dtype=np.int64)
+        fines = fines.reshape(len(ids), M)
         order = np.argsort(cells, kind="stable")
         cells, ids, fines = cells[order], ids[order], fines[order]
         bounds = np.flatnonzero(np.diff(cells)) + 1
@@ -253,9 +255,12 @@ class ServingSearcher:
         failure mode; VERDICT r1 "wrong" #3) — the count() is a cheap
         metadata/agg job against the codes table."""
         self._check_budget(codes.count())
-        pdf = codes.select("cell", "id", "fine").toPandas()
         M = self.model.lopq.M if isinstance(self.model, LOPQModelPCA) else self.model.M
-        self._cells = self._group_codes_pdf(pdf, M)
+        self._cells = self._group_codes(
+            codes.select("cell", "id", "fine").toArrow(),
+            M,
+            "ServingSearcher.load_codes",
+        )
         self._counts_cache = None
         return self
 
@@ -281,8 +286,10 @@ class ServingSearcher:
             codes.count() if n_rows is None else n_rows, self.n_items
         )
         M = self.model.lopq.M if isinstance(self.model, LOPQModelPCA) else self.model.M
-        grouped = self._group_codes_pdf(
-            codes.select("cell", "id", "fine").toPandas(), M
+        grouped = self._group_codes(
+            codes.select("cell", "id", "fine").toArrow(),
+            M,
+            "ServingSearcher.add_codes",
         )
         for c, (new_ids, new_fines) in grouped.items():
             # first occurrence wins within the batch
@@ -353,10 +360,10 @@ class ServingSearcher:
         vectors must be in the PROJECTED space (same contract as the
         distributed ``search.search``)."""
         self._check_budget(vec_df.count(), self.n_items)
-        self._vectors = {
-            int(r[id_col]): np.asarray(r[vec_col], dtype=np.float64)
-            for r in vec_df.select(id_col, vec_col).collect()
-        }
+        tbl = vec_df.select(id_col, vec_col).toArrow()
+        ids = np.asarray(tbl.column(id_col), dtype=np.int64).tolist()
+        V = arrow_vec.vectors(tbl, vec_col, "ServingSearcher.load_vectors")
+        self._vectors = dict(zip(ids, V))
         return self
 
     def put_vector(self, vid: int, v, cell: int | None = None) -> None:

@@ -8,7 +8,7 @@ per-cluster residual moment accumulators that feed local rotations
 (A4 / model.py:242-287), and subquantizer k-means over projected residuals
 (V5) — runs as Spark aggregations over Arrow batches:
 
-  mapInPandas          per-partition partial moments (sl, cluster, n, Σv, Σvvᵀ)
+  mapInArrow           per-partition partial moments (sl, cluster, n, Σv, Σvvᵀ)
   groupBy+applyInPandas merge partials per (slice, cluster)
   driver               only V rows of (D/2)² floats: eigh + allocation (V2/V3)
 
@@ -30,13 +30,13 @@ equality), so the whole encode/search stack is interchangeable between them.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
+import pyarrow as pa
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import arrow_vec
 from .model import (
     LOPQModel,
     _kmeans_pp_init,
@@ -52,21 +52,21 @@ Slices = dict[int, tuple[int, int, np.ndarray]]
 
 
 def _multi_moment_partials(b_slices, with_outer: bool, subtract_center: bool):
-    """mapInPandas fn: per partition, for EVERY slice in the broadcast dict,
+    """mapInArrow fn: per partition, for EVERY slice in the broadcast dict,
     per nearest-centroid cluster of that slice's [lo:hi) columns, emit
     (sl, cluster, n, Σx, Σxxᵀ·flat). One pass over the vectors serves all
     slices — the row batch is decoded from Arrow once and each slice only
     views its columns. ``subtract_center`` subtracts the cluster centroid
     first (residual moments, A3)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches):
         slices = b_slices.value
         sq = {sl: (C**2).sum(axis=1) for sl, (_, _, C) in slices.items()}
         acc: dict[tuple[int, int], list] = {}
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            Xf = np.array(list(pdf["v"]), dtype=np.float64)
+            Xf = arrow_vec.vectors(batch, "v", "multi_cluster_moments")
             for sl, (lo, hi, C) in slices.items():
                 X = Xf[:, lo:hi]
                 d = (X**2).sum(1)[:, None] - 2 * X @ C.T + sq[sl][None, :]
@@ -80,16 +80,22 @@ def _multi_moment_partials(b_slices, with_outer: bool, subtract_center: bool):
                     a[1] = a[1] + Xc.sum(axis=0)
                     if with_outer:
                         a[2] = a[2] + Xc.T @ Xc
-        rows = {
-            "sl": [sl for sl, _ in acc],
-            "cluster": [c for _, c in acc],
-            "n": [a[0] for a in acc.values()],
-            "s": [a[1].tolist() for a in acc.values()],
-            "op": [
-                (a[2].ravel().tolist() if with_outer else []) for a in acc.values()
-            ],
-        }
-        yield pd.DataFrame(rows)
+        dbl = pa.list_(pa.float64())
+        yield pa.record_batch(
+            {
+                "sl": pa.array([sl for sl, _ in acc], pa.int32()),
+                "cluster": pa.array([c for _, c in acc], pa.int32()),
+                "n": pa.array([a[0] for a in acc.values()], pa.int64()),
+                "s": pa.array([a[1].tolist() for a in acc.values()], dbl),
+                "op": pa.array(
+                    [
+                        (a[2].ravel().tolist() if with_outer else [])
+                        for a in acc.values()
+                    ],
+                    dbl,
+                ),
+            }
+        )
 
     return fn
 
@@ -158,7 +164,7 @@ def multi_cluster_moments(
     iterative callers (the Lloyd loop) probe once and pass it down."""
     spark = vec_df.sparkSession
     b_s = spark.sparkContext.broadcast(slices)
-    partials = vec_df.mapInPandas(
+    partials = vec_df.mapInArrow(
         _multi_moment_partials(b_s, with_outer, subtract_center),
         _STATS_SCHEMA,
     )
@@ -317,19 +323,21 @@ def _farthest_point(
     spark = vec_df.sparkSession
     b_c = spark.sparkContext.broadcast(centers)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def score(batches):
         C = b_c.value
         c_sq = (C**2).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            X = np.array(list(pdf["v"]), dtype=np.float64)[:, lo:hi]
+            X = arrow_vec.vectors(batch, "v", "lloyd_spark_multi")[:, lo:hi]
             d = ((X**2).sum(1)[:, None] - 2 * X @ C.T + c_sq[None, :]).min(axis=1)
             i = int(d.argmax())
-            yield pd.DataFrame({"d": [float(d[i])], "v": [X[i].tolist()]})
+            yield pa.record_batch(
+                {"d": d[i : i + 1], "v": arrow_vec.column(X[i : i + 1])}
+            )
 
     top = (
-        vec_df.mapInPandas(score, "d double, v array<double>")
+        vec_df.mapInArrow(score, "d double, v array<double>")
         .orderBy(F.col("d").desc())
         .limit(1)
         .collect()
@@ -409,16 +417,18 @@ def fit_spark(
     spark = vec_df.sparkSession
     b_head = spark.sparkContext.broadcast(model_head.to_arrays())
 
-    def project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def project(batches):
         m = LOPQModel.from_arrays(b_head.value)
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            X = np.array(list(pdf["v"]), dtype=np.float64)
+            X = arrow_vec.vectors(batch, "v", "fit_spark")
             P = m.project_residuals(X, m.coarse_assign(X))
-            yield pd.DataFrame({"id": pdf["id"], "v": list(P)})
+            yield pa.record_batch(
+                {"id": batch.column("id").cast(pa.int64()), "v": arrow_vec.column(P)}
+            )
 
-    proj_df = vec_df.mapInPandas(project, "id bigint, v array<double>").persist()
+    proj_df = vec_df.mapInArrow(project, "id bigint, v array<double>").persist()
     sub_dim = D // M
     subs = np.empty((M, K, sub_dim))
     # all M subquantizers share one projected-corpus scan per iteration
@@ -475,15 +485,15 @@ def pca_project(vec_df: DataFrame, P: np.ndarray, mu: np.ndarray) -> DataFrame:
         + ["v array<double>"]
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches):
         P_, mu_ = b.value
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            X = np.array(list(pdf["v"]), dtype=np.float64)
-            Y = apply_pca(X, P_, mu_)  # shared kernel — see model.apply_pca
-            out = {c: pdf[c] for c in out_cols}
-            out["v"] = list(Y)
-            yield pd.DataFrame(out)
+            # shared kernel — see model.apply_pca
+            Y = apply_pca(arrow_vec.vectors(batch, "v", "pca_project"), P_, mu_)
+            yield pa.record_batch(
+                {**{c: batch.column(c) for c in out_cols}, "v": arrow_vec.column(Y)}
+            )
 
-    return vec_df.mapInPandas(fn, schema)
+    return vec_df.mapInArrow(fn, schema)

@@ -450,7 +450,6 @@ def lopq_eval_diagnostics_sql(sf_dir: str) -> str:
 
     # per-subquantizer distortion — same math as eval.subquantizer_distortion
     P = model.project_residuals(X, model.coarse_assign(X))
-    sd = model.sub_dim
     rows: list[tuple] = [
         ("same_cell_nn_rate", -1, n_pairs, n_same / n_pairs if n_pairs else 0.0),
         (
@@ -460,12 +459,7 @@ def lopq_eval_diagnostics_sql(sf_dir: str) -> str:
             stable / n_rec if n_rec else 0.0,
         ),
     ]
-    for sub in range(model.M):
-        h = sub // model.subs_per_half
-        s = sub % model.subs_per_half
-        Pm = P[:, h * model.half + s * sd : h * model.half + (s + 1) * sd]
-        S = model.subs[sub]
-        d = (Pm**2).sum(1)[:, None] - 2 * Pm @ S.T + (S**2).sum(1)[None, :]
+    for sub, d in enumerate(model.sub_distances(P)):
         rows.append(
             ("subquantizer_distortion", sub, n_rec, round(float(d.min(axis=1).mean()), 4))
         )

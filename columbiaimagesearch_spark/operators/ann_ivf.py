@@ -9,7 +9,7 @@ IVF here = single coarse k-means codebook; vectors are bucketed by nearest
 centroid into an inverted file (the ``cell`` column); a query probes its
 ``nprobe`` nearest cells and ranks *exactly* within them. This is the
 100 TB sweet spot when vectors still fit the probe budget: the index build
-is one mapInPandas assign pass, the probe is a broadcast semi-join that
+is one mapInArrow assign pass, the probe is a broadcast semi-join that
 prunes to nprobe/k of the data, and ranking shuffles only (qid, id, dist).
 
 Training follows the same bounded-driver-sample architecture as LOPQ
@@ -18,14 +18,13 @@ Training follows the same bounded-driver-sample architecture as LOPQ
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import cache
+from ..functions import arrow_vec
 from ..lopq import twin
 from ..lopq.model import kmeans
 from ..registry import register
@@ -71,26 +70,27 @@ def build_index(
     partitioned by cell, so probes prune partitions."""
     b_c = spark.sparkContext.broadcast(centroids)
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def assign(batches):
         C = b_c.value
         c_sq = (C**2).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            X = np.array(list(pdf["embedding"]), dtype=np.float64)
+            X = arrow_vec.vectors(batch, "embedding", "build_index")
             d = (X**2).sum(1)[:, None] - 2 * X @ C.T + c_sq[None, :]
-            yield pd.DataFrame(
+            # the embedding passes through as the untouched Arrow column
+            yield pa.record_batch(
                 {
-                    "id": pdf["vec_id"].to_numpy(),
+                    "id": batch.column("vec_id"),
                     "cell": d.argmin(axis=1).astype(np.int32),
-                    "embedding": pdf["embedding"],
+                    "embedding": batch.column("embedding"),
                 }
             )
 
     return (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
-        .mapInPandas(assign, "id bigint, cell int, embedding array<float>")
+        .mapInArrow(assign, "id bigint, cell int, embedding array<float>")
     )
 
 
@@ -115,22 +115,23 @@ def ivf_search(
     cand = index.join(F.broadcast(probe), "cell")
     b_q = spark.sparkContext.broadcast(qmap)
 
-    def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def exact(batches):
         qm = b_q.value
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            X = np.array(list(pdf["embedding"]), dtype=np.float64)
-            Q = np.array([qm[int(q)] for q in pdf["qid"]], dtype=np.float64)
-            yield pd.DataFrame(
+            X = arrow_vec.vectors(batch, "embedding", "ivf_search")
+            qids = batch.column("qid")
+            Q = np.array([qm[q] for q in qids.to_pylist()], dtype=np.float64)
+            yield pa.record_batch(
                 {
-                    "qid": pdf["qid"],
-                    "id": pdf["id"],
+                    "qid": qids,
+                    "id": batch.column("id"),
                     "dist": ((X - Q) ** 2).sum(axis=1),
                 }
             )
 
-    scored = cand.mapInPandas(exact, "qid bigint, id bigint, dist double")
+    scored = cand.mapInArrow(exact, "qid bigint, id bigint, dist double")
     w = Window.partitionBy("qid").orderBy(F.col("dist"), F.col("id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -165,7 +166,7 @@ def cached_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # j4_ranked_metadata_join, V12 on ann_cosine_topk.
     driver=False,
     doc=f"IVF ANN: {N_CELLS}-cell inverted file (driver-sample k-means, "
-    f"mapInPandas assign), probe {N_PROBE} nearest cells per query, exact "
+    f"mapInArrow assign), probe {N_PROBE} nearest cells per query, exact "
     "rank within. Oracle: NumPy twin (lopq/twin.py) — elementwise exact "
     "distances hash exactly; recall floor vs brute force in "
     "tests/test_similarity_quality.py.",

@@ -903,11 +903,10 @@ def embedding_decontaminate_from(
     Reference: decontamination has no counterpart in the reference engine;
     the near-dup threshold filter is generic_searcher.py:43-45.
     """
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
+    from ..functions import arrow_vec
     from .similarity import (
         LSH_SEED,
         _lsh_band_keys,
@@ -917,7 +916,7 @@ def embedding_decontaminate_from(
 
     if seed is None:
         seed = LSH_SEED
-    # Budget pre-check BEFORE the collect (review r13): the toPandas
+    # Budget pre-check BEFORE the collect (review r13): the toArrow
     # below is exactly the driver OOM this guard exists to refuse — a
     # post-collect check cannot prevent it (the load_codes idiom,
     # serving.py: count first, collect second). One cheap count + one
@@ -936,9 +935,8 @@ def embedding_decontaminate_from(
                 "corpus, not an eval suite — use the symmetric "
                 "emb_lsh_pairs_from self-join (or raise max_bench_bytes)."
             )
-    bench_pdf = bench_vecs.select("vec_id", "v").toPandas()
-    bench_pdf = bench_pdf.sort_values("vec_id").reset_index(drop=True)
-    B = np.array(list(bench_pdf["v"]), dtype=np.float64)
+    bench = bench_vecs.select("vec_id", "v").toArrow().sort_by("vec_id")
+    B = arrow_vec.vectors(bench, "v", "embedding_decontaminate_from")
     if B.size and B.nbytes > max_bench_bytes:
         raise RuntimeError(
             f"embedding_decontaminate_from: bench side is {B.nbytes >> 20} "
@@ -946,7 +944,7 @@ def embedding_decontaminate_from(
             "this large is a corpus, not an eval suite — use the symmetric "
             "emb_lsh_pairs_from self-join (or raise max_bench_bytes)."
         )
-    bench_ids = bench_pdf["vec_id"].to_numpy(dtype=np.int64)
+    bench_ids = np.asarray(bench.column("vec_id"), dtype=np.int64)
     if bands is None or bits is None:
         d_bands, d_bits = derive_lsh_knobs(len(bench_ids), threshold=threshold)
         bands = d_bands if bands is None else bands
@@ -966,28 +964,27 @@ def embedding_decontaminate_from(
     bc = spark.sparkContext.broadcast((Bn, lookup))
     acc = stats._acc if stats is not None else None
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def probe(batches):
         Bn_w, lookup_w = bc.value
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            V = np.array(list(pdf["v"]), dtype=np.float64)
-            Vn = l2_normalize_rows(V)
+            V = arrow_vec.vectors(batch, "v", "embedding_decontaminate_from")
             keys = (
                 None
                 if lookup_w is None
                 else _lsh_band_keys(V, bands, bits, seed)
             )
             out = _probe_verdict_rows(
-                pdf["vec_id"].to_numpy(), Vn, keys, Bn_w, lookup_w,
-                bands, threshold, acc,
+                np.asarray(batch.column("vec_id")), l2_normalize_rows(V), keys,
+                Bn_w, lookup_w, bands, threshold, acc,
             )
-            yield pd.DataFrame(
-                out,
-                columns=["vec_id", "n_bench_twins", "max_cos", "contaminated"],
+            yield pa.record_batch(
+                list(zip(*out)),
+                names=["vec_id", "n_bench_twins", "max_cos", "contaminated"],
             )
 
-    return corpus_vecs.mapInPandas(
+    return corpus_vecs.mapInArrow(
         probe,
         "vec_id bigint, n_bench_twins bigint, max_cos double, "
         "contaminated boolean",

@@ -4,8 +4,8 @@ This is the Spark rendering of the reference's core query — ANN over
 L2-normalized feature vectors with exact re-ranking
 (``searcher/searcher_lopqhbase.py:783-1067``). Three tiers:
 
-1. ``ann_cosine_topk`` — brute-force cosine top-k via an Arrow-vectorized
-   pandas pass doing a single numpy matmul per batch (the fast exact path;
+1. ``ann_cosine_topk`` — brute-force cosine top-k via a ``mapInArrow``
+   pass doing a single numpy matmul per batch (the fast exact path;
    queries broadcast, candidates never shuffled) — the REGISTERED form
    (= the reference's exact rerank / ``lopq/lopq/eval.py:7-38`` ground
    truth).
@@ -25,10 +25,12 @@ in-bucket exact verification, the 100 TB path when no blocking key exists.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import arrow_vec
 from ..lopq import twin as twin_mod
 from ..registry import register
 from ..sources import load_table
@@ -183,7 +185,7 @@ def ann_cosine_topk_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k via an Arrow-vectorized pass: one numpy matmul per
-    batch against the broadcast query matrix (the predict_batch/mapInPandas
+    batch against the broadcast query matrix (the predict_batch/mapInArrow
     idiom used for all §2.8 numerics)."""
     emb = load_table(spark, sf_dir, "embeddings")
     q_rows = (
@@ -197,23 +199,26 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = spark.sparkContext
     b_q = sc.broadcast((qids, qmat_n))
 
-    def score_batches(it):
+    def score_batches(batches):
         bqids, bq = b_q.value
-        for pdf in it:
-            cmat = np.array(list(pdf["embedding"]), dtype=np.float64)
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            cmat = arrow_vec.vectors(batch, "embedding", "ann_cosine_topk")
             cmat_n = l2_normalize_rows(cmat)
             sims = bq @ cmat_n.T  # (n_q, batch)
             n_q, n_c = sims.shape
-            yield pd.DataFrame(
+            rows = np.tile(np.arange(n_c), n_q)
+            yield pa.record_batch(
                 {
                     "qid": np.repeat(bqids, n_c),
-                    "vec_id": np.tile(pdf["vec_id"].to_numpy(), n_q),
-                    "label": np.tile(pdf["label"].to_numpy(), n_q),
+                    "vec_id": batch.column("vec_id").take(rows),
+                    "label": batch.column("label").take(rows),
                     "cos_sim": sims.ravel(),
                 }
             )
 
-    scored = emb.select("vec_id", "label", "embedding").mapInPandas(
+    scored = emb.select("vec_id", "label", "embedding").mapInArrow(
         score_batches, "qid bigint, vec_id bigint, label int, cos_sim double"
     )
     from pyspark.sql import Window
@@ -251,7 +256,7 @@ WHERE {_COS_SQL.format(a="a.v", b="b.v")} >= {NEAR_DUP_COS}
 """,
 )
 def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # One applyInPandas group per blocking key: each vector is shuffled ONCE
+    # One applyInArrow group per blocking key: each vector is shuffled ONCE
     # (n rows of 64 doubles), and the block's pairwise cosines come from a
     # single normalized matmul — vs the pair-join form, which shuffles both
     # vectors per PAIR (O(n^2/blocks) vector copies) before scoring. Block
@@ -261,25 +266,24 @@ def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
 
-    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        V = np.array(list(pdf["v"]), dtype=np.float64)
-        Vn = l2_normalize_rows(V)
+    def block_pairs(tbl):
+        tbl = tbl.sort_by("vec_id")
+        Vn = l2_normalize_rows(arrow_vec.vectors(tbl, "v", "emb_near_dup_pairs"))
         C = Vn @ Vn.T
-        ia, ib = np.triu_indices(len(pdf), k=1)
+        ia, ib = np.triu_indices(tbl.num_rows, k=1)
         keep = C[ia, ib] >= NEAR_DUP_COS
         ia, ib = ia[keep], ib[keep]
-        ids = pdf["vec_id"].to_numpy()
-        return pd.DataFrame(
+        ids = tbl.column("vec_id")
+        return pa.table(
             {
-                "vec_a": ids[ia],
-                "vec_b": ids[ib],
-                "label": pdf["label"].to_numpy()[ia],
+                "vec_a": ids.take(ia),
+                "vec_b": ids.take(ib),
+                "label": tbl.column("label").take(ia),
                 "cos_sim": np.round(C[ia, ib], 4),
             }
         )
 
-    return emb.groupBy("label").applyInPandas(
+    return emb.groupBy("label").applyInArrow(
         block_pairs, "vec_a bigint, vec_b bigint, label int, cos_sim double"
     )
 
@@ -585,31 +589,6 @@ def _lsh_band_keys(V: np.ndarray, bands: int = LSH_BANDS, bits: int = LSH_BITS,
     return keys
 
 
-def arrow_vectors(batch, caller: str) -> tuple[np.ndarray, np.ndarray]:
-    """``(ids, V)`` of a non-empty Arrow batch whose column 0 is the int64
-    id and column 1 the ``list<double>`` vector: the list column flattens
-    zero-copy to the (n, d) float64 matrix, so every value keeps its bits.
-
-    One NULL or short vector would shift every later row of the reshape
-    onto the wrong id, and d == 0 would key every vector alike: refuse all
-    three with a descriptive ``ValueError`` naming ``caller``."""
-    col = batch.column(1)
-    if col.null_count:
-        raise ValueError(f"{caller}: {col.null_count} NULL vector(s) in v")
-    lens = np.diff(np.asarray(col.offsets))
-    d = int(lens[0])
-    if (lens != d).any():
-        raise ValueError(
-            f"{caller}: ragged vectors in v (lengths "
-            f"{int(lens.min())}..{int(lens.max())}); every vector "
-            "must have the same width"
-        )
-    if d == 0:
-        raise ValueError(f"{caller}: zero-width vectors in v")
-    V = np.asarray(col.flatten(), dtype=np.float64).reshape(batch.num_rows, d)
-    return np.asarray(batch.column(0), dtype=np.int64), V
-
-
 def _matmul_candidate_indices(
     Vn: np.ndarray, threshold: float
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -641,9 +620,7 @@ def _bucket_cos_pairs(
     threshold: float = NEAR_DUP_COS,
     matmul_cutoff: int = LSH_MATMUL_BUCKET,
 ) -> list[tuple]:
-    """Verified near-dup pairs inside one bucket: per-pair ELEMENTWISE
-    cosine (norms and dots are per-row reductions — bitwise identical in
-    the twin and any Arrow batching), threshold, 4dp round.
+    """Verified near-dup pairs inside one bucket (:func:`verified_cos`).
 
     Buckets above ``matmul_cutoff`` rows find their candidates via a tiled
     BLAS matmul first (the r16 hot-bucket fix — the full triu gather was
@@ -654,20 +631,30 @@ def _bucket_cos_pairs(
     """
     order = np.argsort(ids, kind="stable")
     ids, V = ids[order], V[order]
-    Vn = l2_normalize_rows(V)
     n = len(ids)
     if n > matmul_cutoff:
-        ia, ib = _matmul_candidate_indices(Vn, threshold)
+        ia, ib = _matmul_candidate_indices(l2_normalize_rows(V), threshold)
     else:
         ia, ib = np.triu_indices(n, k=1)
-    if not len(ia):
-        return []
+    ia, ib, cos = verified_cos(V, ia, ib, threshold)
+    return [
+        (int(ids[a]), int(ids[b]), float(c)) for a, b, c in zip(ia, ib, cos)
+    ]
+
+
+def verified_cos(
+    V: np.ndarray, ia: np.ndarray, ib: np.ndarray, threshold: float
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(ia, ib, cos)`` of the candidate row pairs of ``V`` whose cosine
+    is >= ``threshold``, cos rounded to 4dp. Rows are L2-normalized one by
+    one and each pair's dot is an elementwise per-row reduction, so the
+    result does not depend on how rows are batched: the batch LSH buckets
+    and the streaming verify both call this, and a pair carries the same
+    cos_sim bits on either path."""
+    Vn = l2_normalize_rows(V)
     cos = np.einsum("ij,ij->i", Vn[ia], Vn[ib])
     keep = cos >= threshold
-    return [
-        (int(ids[a]), int(ids[b]), float(np.round(c, 4)))
-        for a, b, c in zip(ia[keep], ib[keep], cos[keep])
-    ]
+    return ia[keep], ib[keep], np.round(cos[keep], 4)
 
 
 def _split_plane_seed(seed: int, band: int) -> int:
@@ -924,13 +911,12 @@ def emb_lsh_pairs_from(
     # so every downstream cosine is bit-identical to the array<double>
     # form (suite-pinned).
     def band_rows(batches):
-        import pyarrow as pa
-
         for batch in batches:
             m_all = batch.num_rows
             if not m_all:
                 continue
-            ids_all, V_all = arrow_vectors(batch, "emb_lsh_pairs_from")
+            ids_all = np.asarray(batch.column("vec_id"), dtype=np.int64)
+            V_all = arrow_vec.vectors(batch, "v", "emb_lsh_pairs_from")
             row_b = V_all.shape[1] * 8
             # pa.binary() offsets are int32: cap each OUTPUT batch so the
             # replicated payload (rows*bands*d*8 bytes) stays under 2^31

@@ -8,7 +8,7 @@ conf here is chosen to also be the right default on a 1000-executor cluster:
 - ``spark.sql.shuffle.partitions`` sized for the local tier; at 100 TB this
   becomes ~2-4x total cores and AQE coalesces down.
 - Arrow enabled: all Python numerics cross the boundary as Arrow batches
-  (pandas_udf / mapInPandas), never row-at-a-time pickling.
+  (pandas_udf / mapInPandas / mapInArrow), never row-at-a-time pickling.
 - Session timezone pinned to UTC so timestamp arithmetic is deterministic and
   matches the DuckDB oracle.
 """

@@ -14,9 +14,9 @@ twin): the corpus state is the band table, so each arriving batch does
      (band, key) equi-joins only — the state side is never scanned
      pairwise;
   4. exact-cosine verify of the candidate pairs against the union vector
-     table (per-pair elementwise kernel — bitwise equal to the batch
-     operator's in-bucket form, which is what makes streamed ≡ batch an
-     exact set equality, asserted in tests);
+     table (``similarity.verified_cos``, the batch operator's in-bucket
+     verify itself, which is what makes streamed ≡ batch an exact set
+     equality, asserted in tests);
   5. append verified pairs + fresh bands; the vector table (the claim
      side) lands LAST — same append-order rule dedup_stream documents.
 
@@ -26,20 +26,20 @@ Per-batch cost is O(batch × bands + collisions) regardless of corpus size.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import arrow_vec
 from ..operators.similarity import (
     LSH_BANDS,
     LSH_BITS,
     LSH_SEED,
     NEAR_DUP_COS,
     _lsh_band_keys,
-    arrow_vectors,
+    verified_cos,
 )
 from . import state
 
@@ -62,17 +62,16 @@ def read_vectors(spark: SparkSession, state_dir: str) -> DataFrame:
 
 def _band_rows_fn(bands: int, bits: int, seed: int):
     """mapInArrow body over (vec_id, v): one (vec_id, band, key) int row per
-    vector and band. Vectors cross the batch operator's boundary
-    (``arrow_vectors``), so NULL, ragged and zero-width vectors raise and
-    the keys are bitwise equal to the batch operator's."""
+    vector and band. Vectors cross the package's one Arrow boundary
+    (``arrow_vec.vectors``), so malformed vectors raise and the keys are
+    bitwise equal to the batch operator's."""
 
     def _band_rows(batches):
-        import pyarrow as pa
-
         for batch in batches:
             if not batch.num_rows:
                 continue
-            ids, V = arrow_vectors(batch, "emb_dedup_batch_step")
+            ids = np.asarray(batch.column("vec_id"), dtype=np.int64)
+            V = arrow_vec.vectors(batch, "v", "emb_dedup_batch_step")
             keys = _lsh_band_keys(V, bands, bits, seed)
             yield pa.RecordBatch.from_arrays(
                 [
@@ -84,34 +83,6 @@ def _band_rows_fn(bands: int, bits: int, seed: int):
             )
 
     return _band_rows
-
-
-def _verify_pairs_fn(threshold: float):
-    """Per-pair elementwise cosine — the same per-row normalization and
-    einsum dot as the batch operator's in-bucket kernel, so a pair verified
-    here carries the bitwise-identical cos_sim."""
-
-    def _verify_pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..operators.similarity import l2_normalize_rows
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.array(list(pdf["va"]), dtype=np.float64)
-            B = np.array(list(pdf["vb"]), dtype=np.float64)
-            An = l2_normalize_rows(A)
-            Bn = l2_normalize_rows(B)
-            cos = np.einsum("ij,ij->i", An, Bn)
-            keep = cos >= threshold
-            yield pd.DataFrame(
-                {
-                    "vec_a": pdf["vec_a"].to_numpy()[keep],
-                    "vec_b": pdf["vec_b"].to_numpy()[keep],
-                    "cos_sim": np.round(cos[keep], 4),
-                }
-            )
-
-    return _verify_pairs
 
 
 def _knobs_path(state_dir: str) -> str:
@@ -242,7 +213,28 @@ def emb_dedup_batch_step(
                 "vec_b",
             )
         )
-        pairs = joined.mapInPandas(_verify_pairs_fn(threshold), _PAIRS_SCHEMA)
+
+        def verify(batches):
+            for batch in batches:
+                n = batch.num_rows
+                if not n:
+                    continue
+                V = np.concatenate([
+                    arrow_vec.vectors(batch, "va", "emb_dedup_batch_step"),
+                    arrow_vec.vectors(batch, "vb", "emb_dedup_batch_step"),
+                ])
+                ia, _, cos = verified_cos(
+                    V, np.arange(n), np.arange(n, 2 * n), threshold
+                )
+                yield pa.record_batch(
+                    {
+                        "vec_a": batch.column("vec_a").take(ia),
+                        "vec_b": batch.column("vec_b").take(ia),
+                        "cos_sim": cos,
+                    }
+                )
+
+        pairs = joined.mapInArrow(verify, _PAIRS_SCHEMA)
 
         # append order is load-bearing (see dedup_stream): the claim table
         # (vectors) lands LAST so a crash replays the whole batch

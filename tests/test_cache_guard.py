@@ -11,7 +11,12 @@ probes a directory for parquet files itself fails the guard.
 
 ADC tables are built per query by ``LOPQModel.adc_luts`` over all the
 cells a caller scores, each coarse half once; a per-cell ``adc_lut``
-(definition or call) anywhere in the package fails the guard."""
+(definition or call) anywhere in the package fails the guard.
+
+Vector columns cross into NumPy through ``functions/arrow_vec.py`` only: a
+hand-written ``np.array(list(...))`` or ``np.array(....to_list())``
+conversion anywhere in the package, or a list-column ``.flatten()`` in any
+other module, fails the guard (NumPy code flattens with ``.ravel()``)."""
 
 from __future__ import annotations
 
@@ -24,6 +29,7 @@ PKG = Path(__file__).resolve().parent.parent / "columbiaimagesearch_spark"
 ALLOWED = {"_MODEL_SINGLETONS", "_REGISTRY"}
 STAT_CALLS = {"stat", "lstat", "scandir"}
 STREAMING = PKG / "streaming"
+ARROW_VEC = PKG / "functions" / "arrow_vec.py"
 
 
 def _module_dicts(tree: ast.Module):
@@ -101,6 +107,27 @@ def _per_cell_luts(tree: ast.Module):
                 yield node.lineno, "adc_lut()"
 
 
+def _vector_conversions(tree: ast.Module):
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        f = node.func
+        if f.attr in ("flatten", "list_flatten"):
+            yield node.lineno, f".{f.attr}()"
+        elif (
+            f.attr == "array"
+            and isinstance(f.value, ast.Name)
+            and f.value.id in ("np", "numpy")
+            and node.args
+            and isinstance(node.args[0], ast.Call)
+        ):
+            inner = node.args[0].func
+            if isinstance(inner, ast.Name) and inner.id == "list":
+                yield node.lineno, "np.array(list(...))"
+            elif isinstance(inner, ast.Attribute) and inner.attr == "to_list":
+                yield node.lineno, "np.array(....to_list())"
+
+
 def test_no_module_caches_outside_cache_py():
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
@@ -148,6 +175,23 @@ def test_adc_tables_are_built_per_query_not_per_cell():
     )
 
 
+def test_vectors_cross_through_arrow_vec_only():
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == ARROW_VEC:
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        rel = path.relative_to(PKG.parent)
+        offenders += [
+            f"{rel}:{line}: {call}" for line, call in _vector_conversions(tree)
+        ]
+    assert not offenders, (
+        "read vector columns with columbiaimagesearch_spark.functions."
+        "arrow_vec.vectors and build them with arrow_vec.column:\n"
+        + "\n".join(offenders)
+    )
+
+
 def test_guard_catches_a_planted_cache():
     planted = ast.parse(
         "import os as _os\n"
@@ -166,6 +210,11 @@ def test_guard_catches_a_planted_cache():
         "def score(model, q, cells):\n"
         "    model.adc_luts(q, cells)\n"
         "    return [model.adc_lut(q, c) for c in cells] + [adc_lut(q, 0)]\n"
+        "def kernel(pdf, batch, M):\n"
+        "    X = np.array(list(pdf['v']), dtype=np.float64)\n"
+        "    F = np.array(pdf['fine'].to_list(), dtype=np.int64)\n"
+        "    V = np.asarray(batch.column(1).flatten()).reshape(len(X), -1)\n"
+        "    return np.array([X, F]), X.ravel()\n"
     )
     assert [n for _, n in _module_dicts(planted)] == ["_X_CACHE", "_Y"]
     assert [c for _, c in _stat_calls(planted)] == ["_os.stat()"]
@@ -177,4 +226,9 @@ def test_guard_catches_a_planted_cache():
         "def adc_lut",
         "adc_lut()",
         "adc_lut()",
+    ]
+    assert sorted(c for _, c in _vector_conversions(planted)) == [
+        ".flatten()",
+        "np.array(....to_list())",
+        "np.array(list(...))",
     ]

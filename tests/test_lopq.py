@@ -190,8 +190,9 @@ def test_adc_luts_called_once_per_shard_visit_and_per_query(monkeypatch):
     """One table build per ``score_cells`` that holds a visited cell (the
     forked shard workers' unit of work) and one per query in
     ``_plan_probe``, never one per cell."""
-    import pandas as pd
+    import pyarrow as pa
 
+    from columbiaimagesearch_spark.functions.arrow_vec import column
     from columbiaimagesearch_spark.lopq import search as lsearch
     from columbiaimagesearch_spark.lopq.serving import (
         ServingSearcher,
@@ -204,8 +205,10 @@ def test_adc_luts_called_once_per_shard_visit_and_per_query(monkeypatch):
     cells = rng.randint(0, 64, size=600)
     fine = rng.randint(0, 32, size=(600, 16))
     replica = ServingSearcher(model)
-    replica._cells = ServingSearcher._group_codes_pdf(
-        pd.DataFrame({"cell": cells, "id": np.arange(600), "fine": list(fine)}), 16
+    replica._cells = ServingSearcher._group_codes(
+        pa.table({"cell": cells, "id": np.arange(600), "fine": column(fine)}),
+        16,
+        "test",
     )
     router = ShardedServingRouter.from_replica(replica, 3)
 

@@ -251,7 +251,7 @@ def test_embedding_decontaminate_is_map_only(spark):
     # exchange means the probe stopped being map-side.
     assert explain.data_shuffles(plan) == 0, plan
     assert "Join" not in plan, plan
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
 
 
 def test_repetition_stats_is_map_only(spark):

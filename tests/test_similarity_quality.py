@@ -200,20 +200,57 @@ _MALFORMED = [
     # lengths 2+1+3 = 3 rows x 2: a flat-size check alone would pass
     ("ragged", [[1.0, 0.0], [0.5], [0.0, 1.0, 0.0]], "ragged vectors"),
     ("zero_width", [[], [], []], "zero-width vectors"),
+    # a NULL element becomes NaN, which compares False against every
+    # threshold: the vector would read as "no near-dup" or "clean"
+    ("null_element", [[1.0, 0.0], [None, 1.0], [0.0, 1.0]], "NULL element"),
 ]
+
+# one axis per public entry point that reads vectors through the Arrow
+# boundary; "batch" keeps the bare ids it was introduced with
+_ENTRY_POINTS = [
+    "stream", "encode", "ivf", "decon_corpus", "decon_bench", "pca",
+    "exact_nn", "load_codes",
+]
+
+
+def _tiny_lopq():
+    """A D=2, M=2 LOPQ model: enough for the entry points to reach their
+    vector read."""
+    from columbiaimagesearch_spark.lopq.model import LOPQModel
+
+    book = np.array([[[0.0], [1.0]], [[0.0], [1.0]]])
+    return LOPQModel(
+        V=2, M=2, K=2, D=2, Cs=book, Rs=np.ones((2, 2, 1, 1)),
+        mus=np.zeros((2, 2, 1)), subs=book,
+    )
 
 
 @pytest.mark.parametrize(
     "path, vectors, message",
     [pytest.param("batch", v, m, id=i) for i, v, m in _MALFORMED]
-    + [pytest.param("stream", v, m, id=f"stream-{i}") for i, v, m in _MALFORMED],
+    + [
+        pytest.param(p, v, m, id=f"{p}-{i}")
+        for p in _ENTRY_POINTS
+        for i, v, m in _MALFORMED
+    ],
 )
 def test_emb_lsh_refuses_malformed_vectors(spark, tmp_path, path, vectors, message):
-    """The Arrow banding pass reshapes each batch's flattened vectors into
-    an (n, d) matrix: malformed input must raise a descriptive error, not
-    yield plausible but wrong pairs (or a ZeroDivisionError at d == 0).
-    The streaming twin bands through the same boundary; without it, d == 0
-    keys every vector alike and the step claims them all."""
+    """Every vector kernel reshapes each batch's flattened vectors into an
+    (n, d) matrix: malformed input must raise a descriptive error, not
+    yield plausible but wrong answers (or a ZeroDivisionError at d == 0).
+    Every entry point reads through the same boundary; without it, d == 0
+    keys every streamed vector alike and the step claims them all, and a
+    NULL element silently becomes NaN."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from columbiaimagesearch_spark.lopq.encode import encode_dataframe
+    from columbiaimagesearch_spark.lopq.eval import exact_nn_pairs
+    from columbiaimagesearch_spark.lopq.serving import ServingSearcher
+    from columbiaimagesearch_spark.lopq.train_spark import pca_project
+    from columbiaimagesearch_spark.operators.hygiene import (
+        embedding_decontaminate_from,
+    )
     from columbiaimagesearch_spark.operators.similarity import emb_lsh_pairs_from
     from columbiaimagesearch_spark.streaming.emb_dedup_stream import (
         emb_dedup_batch_step,
@@ -222,10 +259,37 @@ def test_emb_lsh_refuses_malformed_vectors(spark, tmp_path, path, vectors, messa
     vec_df = spark.createDataFrame(
         list(enumerate(vectors)), "vec_id bigint, v array<double>"
     ).coalesce(1)  # one Arrow batch: raggedness is visible within it
+    good = spark.createDataFrame([(9, [1.0, 0.0])], "vec_id bigint, v array<double>")
     with pytest.raises(Exception, match=message):
         if path == "batch":
             emb_lsh_pairs_from(vec_df, bands=2, bits=3, max_bucket=None).collect()
-        else:
+        elif path == "stream":
             emb_dedup_batch_step(
                 spark, vec_df, str(tmp_path / "state"), bands=2, bits=3
             )
+        elif path == "encode":
+            encode_dataframe(spark, vec_df, _tiny_lopq(), vec_col="v").collect()
+        elif path == "ivf":
+            pq.write_table(
+                pa.table({
+                    "vec_id": pa.array(range(len(vectors)), pa.int64()),
+                    "embedding": pa.array(vectors, pa.list_(pa.float32())),
+                }),
+                tmp_path / "embeddings.parquet",
+            )
+            ann_ivf.build_index(spark, str(tmp_path), np.eye(2)).collect()
+        elif path == "decon_corpus":
+            embedding_decontaminate_from(vec_df, good, exact=True).collect()
+        elif path == "decon_bench":
+            embedding_decontaminate_from(good, vec_df, exact=True).collect()
+        elif path == "pca":
+            pca_project(vec_df, np.eye(2), np.zeros(2)).collect()
+        elif path == "exact_nn":
+            exact_nn_pairs(vec_df, vec_col="v").collect()
+        else:
+            codes = vec_df.select(
+                F.lit(0).alias("cell"),
+                F.col("vec_id").alias("id"),
+                F.col("v").cast("array<int>").alias("fine"),
+            )
+            ServingSearcher(_tiny_lopq()).load_codes(codes)
