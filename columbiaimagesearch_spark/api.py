@@ -120,6 +120,7 @@ def search_by_image(
     face's results (the reference's per-face QueryFace field); with
     ``detect_only`` (option, api.py:40-41) detection runs but featurize,
     indexing and search are all skipped."""
+    from .functions import arrow_vec
     from .functions.rank import ordered_global_index
     from .lopq.encode import encode_dataframe
     from .lopq.model import LOPQModel
@@ -182,10 +183,7 @@ def search_by_image(
     # actions consume `ided` (train sample, distributed encode, rerank
     # vectors join, metadata join) — pin it once so extraction runs once.
     ided = ided.persist()
-    sample = [
-        np.asarray(r["v"], dtype=np.float64)
-        for r in ided.orderBy("id").limit(20000).collect()
-    ]
+    sample = ided.orderBy("id").limit(20000).select("v").toArrow()
     def _empty_results() -> dict[str, Any]:
         # The zero-result shape must match the normal path's per-mode value
         # type (review r14): full_image callers index result[name]["sha1s"],
@@ -197,14 +195,16 @@ def search_by_image(
             }
         return {name: {} for name, _ in query_images}
 
-    if not sample:
+    if not sample.num_rows:
         # zero successful extractions (face mode can detect no faces on a
         # small corpus; every row may carry the failed marker) — return
         # the empty-result shape instead of crashing LOPQModel.fit on an
         # empty array (review r13), and release the pin
         ided.unpersist()
         return _empty_results()
-    model = LOPQModel.fit(np.array(sample), **params)
+    model = LOPQModel.fit(
+        arrow_vec.vectors(sample, "v", "api.search_by_image"), **params
+    )
     codes = encode_dataframe(spark, ided, model, id_col="id", vec_col="v")
 
     # Query featurization mirrors the index mode (reference face search:

@@ -69,6 +69,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .functions import arrow_vec
+
 DEFAULT_ENDPOINT = "cuimgsearch"  # www/run_search_api.py:40 default
 VALID_OPTIONS = (
     "near_dup", "near_dup_th", "max_returned", "reranking", "rerank_nb",
@@ -219,11 +221,19 @@ class ImageSearchService:
         """``n_shards`` > 1 backs the service with a
         :class:`~.lopq.serving.ShardedServingRouter` instead of one replica —
         the scale-out path past a single replica's snapshot budget. Each
-        shard loads ONLY the codes AND rerank vectors it owns (cell range
+        shard holds ONLY the codes AND rerank vectors it owns (cell range
         plus its slices of split fat cells — the per-replica residency
         envelope stays honest); the id -> sha1 map stays service-resident
         like the reference's per-worker LMDB metadata (at true scale it
         shards alongside the codes — each worker's map covers its range).
+
+        One admission pass, whatever ``n_shards`` is: a count() of the
+        extracted items is checked against ``n_shards`` x
+        ``max_rows_per_shard`` before anything is collected; then one Arrow
+        collect of (id, sha1, item_bbox, v) feeds the training sample (the
+        20,000 lowest ids), the rerank vectors and the metadata, and one
+        Arrow collect of the encoded (id, cell, fine) feeds ``load_codes``;
+        ``from_replica`` splits that replica into shards in memory.
 
         ``parallel=True`` (needs ``n_shards`` > 1) additionally forks one
         worker process per shard (:class:`~.lopq.serving.ForkedRouterPool`)
@@ -243,6 +253,7 @@ class ImageSearchService:
         factory = model_factory or ToyExtractionModel
         params = train_params or {"V": 4, "M": 4, "K": 8, "seed": 5, "n_iter": 8}
         per_shard_cap = max_rows_per_shard or MAX_SNAPSHOT_ROWS
+        n_shards = max(1, n_shards)
         if mode == "face":
             # pin the V15 determinism contract BEFORE indexing (VERDICT
             # r15 #4): bySHA1 answers attribute results to index-time
@@ -260,65 +271,45 @@ class ImageSearchService:
             check_detector_determinism(factory(), sample)
         ided = cls._extract_ided(images, mode, factory).persist()
         try:
+            n = ided.count()
+            if n > n_shards * per_shard_cap:
+                raise ValueError(
+                    f"index of {n} items exceeds the serving replica budget "
+                    f"of {n_shards} shard(s) x {per_shard_cap} rows; raise "
+                    f"n_shards or max_rows_per_shard"
+                )
+            rows = ided.select("id", "sha1", "item_bbox", "v").toArrow()
+            rows = rows.sort_by("id")
             # bounded ordered training subsample (the reference's nb_train)
-            sample = np.array(
-                [r["v"] for r in ided.orderBy("id").limit(20000).collect()],
-                dtype=np.float64,
+            model = LOPQModel.fit(
+                arrow_vec.vectors(
+                    rows.slice(0, 20000), "v", "ImageSearchService.build"
+                ),
+                **params,
             )
-            model = LOPQModel.fit(sample, **params)
-            codes = encode_dataframe(
-                spark, ided, model, id_col="id", vec_col="v"
-            ).persist()
-            try:
-                if n_shards <= 1:
-                    searcher = ServingSearcher(
-                        model, max_rows=per_shard_cap
-                    ).load_codes(codes)
-                    searcher.load_vectors(ided, id_col="id", vec_col="v")
-                else:
-                    searcher = ShardedServingRouter.build(
-                        model, codes, n_shards,
-                        max_rows_per_shard=per_shard_cap,
-                    )
-                    for i, (lo, hi, replica) in enumerate(searcher.shards):
-                        # ownership = cell range + this shard's slices of
-                        # split fat cells (the same predicates build used
-                        # for the codes), so rerank vectors shard exactly
-                        # like the codes they rerank
-                        pred = searcher._range_pred(lo, hi)
-                        slice_pred = searcher._slice_pred(i)
-                        if slice_pred is not None:
-                            pred = pred | slice_pred
-                        shard_ids = codes.where(pred).select("id")
-                        replica.load_vectors(
-                            ided.join(shard_ids, "id"),
-                            id_col="id", vec_col="v",
-                        )
-                # Serving metadata (id -> sha1) is resident BY DESIGN here —
-                # this is the per-replica dict the reference keeps in LMDB,
-                # not the batch facade's query path (api.py resolves metadata
-                # with a distributed join). Its cardinality equals the codes
-                # snapshot, so the load_codes budget guard above has already
-                # raised before this collect can exceed the replica envelope.
-                meta = ided.select("id", "sha1", "item_bbox").collect()
-            finally:
-                codes.unpersist()
+            codes = (
+                encode_dataframe(spark, ided, model, id_col="id", vec_col="v")
+                .select("id", "cell", "fine")
+                .toArrow()
+            )
         finally:
             ided.unpersist()
-        id_to_sha1 = {int(r["id"]): r["sha1"] for r in meta}
-        id_to_bbox = {
-            int(r["id"]): [int(c) for c in r["item_bbox"]]
-            for r in meta if r["item_bbox"] is not None
-        }
-        sha1_to_ids: dict[str, list[int]] = {}
-        for r in meta:
-            sha1_to_ids.setdefault(r["sha1"], []).append(int(r["id"]))
-        # id order, not collect order (ADVICE r15): the distributed collect
-        # returns partitions in nondeterministic order, so byB64 and bySHA1
-        # could list one image's faces differently; ids are assigned in
-        # deterministic (sha1, bbox) order, so sorting restores it
-        for ids in sha1_to_ids.values():
-            ids.sort()
+        searcher = ServingSearcher(
+            model, max_rows=n_shards * per_shard_cap
+        ).load_codes(codes)
+        searcher.load_vectors(rows, id_col="id", vec_col="v")
+        if n_shards > 1:
+            searcher = ShardedServingRouter.from_replica(
+                searcher, n_shards, max_rows_per_shard=per_shard_cap
+            )
+        # Serving metadata (id -> sha1) is resident BY DESIGN here — this
+        # is the per-replica dict the reference keeps in LMDB, not the
+        # batch facade's query path (api.py resolves metadata with a
+        # distributed join); the count guard above bounds it. Rows are in
+        # id order, so each sha1's id list is too (ADVICE r15: byB64 and
+        # bySHA1 list one image's faces in the same order).
+        id_to_sha1, sha1_to_ids, id_to_bbox = {}, {}, {}
+        _index_meta(rows, id_to_sha1, sha1_to_ids, id_to_bbox)
         svc = cls(spark, model, searcher, id_to_sha1, sha1_to_ids,
                   factory(), mode, images=images, source_path=source_path,
                   fetcher=make_url_fetcher(path_root) if path_root else None,
@@ -424,58 +415,45 @@ class ImageSearchService:
             (F.col("id") + base).alias("id"), "sha1", "v", "item_bbox"
         ).persist()
         try:
-            codes = encode_dataframe(
-                self.spark, ided, self.model, id_col="id", vec_col="v"
-            )
-            before = self.searcher.n_items
+            self.searcher.check_room(ided.count())
+            rows = ided.select("id", "sha1", "item_bbox", "v").toArrow()
             # refreshed sha1s that are ALREADY indexed dedup away inside
             # add_codes only by (cell, id); dedup by sha1 here (ST4)
-            fresh_meta = [
-                r for r in ided.select("id", "sha1", "item_bbox").collect()
-                if r["sha1"] not in self.sha1_to_ids
-            ]
-            fresh_ids = {int(r["id"]) for r in fresh_meta}
-            if not fresh_ids:
+            fresh = np.array(
+                [s not in self.sha1_to_ids for s in rows.column("sha1").to_pylist()],
+                dtype=bool,
+            )
+            if not fresh.any():
                 # a refresh RAN (the store was checked) — stamp it, or the
                 # check_new_updates throttle would re-scan on every call
                 self.last_refresh = datetime.now()
                 return 0
-            fresh_ids_df = F.broadcast(
-                self.spark.createDataFrame(
-                    [(i,) for i in sorted(fresh_ids)], "id long"
+            rows = rows.filter(fresh).sort_by("id")
+            codes = (
+                encode_dataframe(
+                    self.spark, ided, self.model, id_col="id", vec_col="v"
                 )
+                .select("id", "cell", "fine")
+                .toArrow()
             )
-            fresh_codes = codes.join(fresh_ids_df, "id").persist()
-            try:
-                self.searcher.add_codes(fresh_codes)
-                # rerank vectors route to the owning shard by the item's
-                # cell (single replica ignores the cell)
-                id_cell = {
-                    int(r["id"]): int(r["cell"])
-                    for r in fresh_codes.select("id", "cell").collect()
-                }
-                vec_rows = (
-                    ided.join(fresh_ids_df, "id").select("id", "v").collect()
-                )
-                for r in vec_rows:
-                    self.searcher.put_vector(
-                        int(r["id"]), r["v"], cell=id_cell.get(int(r["id"]))
-                    )
-            finally:
-                fresh_codes.unpersist()
-            for r in fresh_meta:
-                self.id_to_sha1[int(r["id"])] = r["sha1"]
-                self.sha1_to_ids.setdefault(r["sha1"], []).append(int(r["id"]))
-                if r["item_bbox"] is not None:
-                    self.id_to_bbox[int(r["id"])] = [
-                        int(c) for c in r["item_bbox"]
-                    ]
-            # keep per-sha1 id lists in deterministic id order across
-            # refreshes too (same ADVICE r15 ordering contract as build)
-            for r in fresh_meta:
-                self.sha1_to_ids[r["sha1"]].sort()
         finally:
             ided.unpersist()
+        codes = codes.filter(
+            np.isin(np.asarray(codes.column("id")), np.asarray(rows.column("id")))
+        ).sort_by("id")
+        before = self.searcher.n_items
+        self.searcher.add_codes(codes)
+        # one code row per fresh item and both sorted by id, so the codes'
+        # cells line up with the vectors they route (a single replica
+        # ignores the cells)
+        self.searcher.put_vectors(
+            np.asarray(rows.column("id")),
+            arrow_vec.vectors(rows, "v", "ImageSearchService.refresh"),
+            np.asarray(codes.column("cell")),
+        )
+        # new ids exceed every indexed id, so each sha1's id list stays in
+        # id order (same ADVICE r15 ordering contract as build)
+        _index_meta(rows, self.id_to_sha1, self.sha1_to_ids, self.id_to_bbox)
         if self._parallel:
             # forked children hold the PRE-refresh index copy-on-write;
             # re-fork so queries see the admitted rows (refresh is
@@ -728,6 +706,21 @@ class ImageSearchService:
         if self.images is not None:
             self.refresh_from_source()
         return self.status()
+
+
+def _index_meta(rows, id_to_sha1: dict, sha1_to_ids: dict,
+                id_to_bbox: dict) -> None:
+    """Record the (id, sha1, item_bbox) rows of an id-sorted Arrow table in
+    the service's metadata maps."""
+    for i, sha1, bbox in zip(
+        rows.column("id").to_pylist(),
+        rows.column("sha1").to_pylist(),
+        rows.column("item_bbox").to_pylist(),
+    ):
+        id_to_sha1[i] = sha1
+        sha1_to_ids.setdefault(sha1, []).append(i)
+        if bbox is not None:
+            id_to_bbox[i] = [int(c) for c in bbox]
 
 
 def _split_url_list(data: str) -> list[str]:

@@ -20,6 +20,7 @@ from __future__ import annotations
 import bisect
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..functions import arrow_vec
@@ -30,10 +31,10 @@ from .search import adc_batch_dists, multisequence_cells
 # Snapshot row cap: (id + M fine codes) ≈ 30-80 B/row in the dict layout, so
 # 50M rows ≈ a few GB — the reference's LMDB sizing envelope ("millions of
 # images" per serving replica). Beyond it, one replica must NOT hold the
-# whole index: shard by cell range (each replica loads
-# codes.where(cell BETWEEN lo AND hi) under its own cap and a router fans
-# out by the query's probed cells), which is exactly the cell-partitioned
-# layout the batch path already prunes on.
+# whole index: shard it with ShardedServingRouter, which collects the codes
+# once and hands each shard the (cell, id) rows it owns in memory (a
+# cumulative-mass cell range plus its slices of split fat cells), each
+# under its own cap; the router fans a query out by its probed cells.
 MAX_SNAPSHOT_ROWS = 50_000_000
 
 
@@ -116,27 +117,14 @@ CELL_SLICE_FACTOR = 4
 # product via ``(mixed * m) >> 32`` — the low bits of ``id * C mod 2^32``
 # keep the id's own low-bit structure (C is odd, so ≡ identity mod small
 # powers of two), which is precisely the stride pattern we must dissolve.
-# All operands stay < 2^63, so the arithmetic is exact (and identical) in
-# both int64 numpy and Spark BIGINT.
+# All operands stay < 2^63, so the int64 arithmetic is exact.
 _SLICE_MIX = 2654435761
 
 
 def _slice_of_ids(ids: np.ndarray, m: int) -> np.ndarray:
-    """Slice index per id (numpy form; must stay bit-identical to
-    :func:`_slice_col`)."""
+    """Slice index in [0, m) per id."""
     mixed = ((ids % 2**31) * _SLICE_MIX) % 2**32
     return (mixed * m) >> 32
-
-
-def _slice_col(m: int):
-    """Slice index of the ``id`` column (Spark form; must stay
-    bit-identical to :func:`_slice_of_ids`)."""
-    from pyspark.sql import functions as F
-
-    mixed = F.pmod(F.col("id"), F.lit(2**31)) * F.lit(_SLICE_MIX) % F.lit(
-        2**32
-    )
-    return F.shiftright(mixed * F.lit(m), 32)
 
 
 def _plan_shard_claims(
@@ -150,10 +138,8 @@ def _plan_shard_claims(
     distinct and spread over the shard list). Split cells are owned ONLY
     via ``splits`` — range ownership is overridden — and their slice mass
     is pre-charged to the owning shards so the range walk still balances
-    total mass. The one planner shared by ``ShardedServingRouter.build``
-    (histogram from a codes relation) and ``from_replica`` (histogram from
-    resident arrays), so both shardings are identical for the same
-    populations."""
+    total mass. ``_shard_owners`` turns the plan into one owner per
+    (cell, id) row."""
     total = sum(n for _, n in hist)
     per_shard = max(1, -(-total // n_shards))
     split_unit = max(1, -(-per_shard // CELL_SLICE_FACTOR))
@@ -197,6 +183,38 @@ def _plan_shard_claims(
     return ranges, splits
 
 
+def _shard_owners(
+    cells: np.ndarray,
+    ids: np.ndarray,
+    ranges: list[tuple[int, int]],
+    splits: dict[int, list[int]],
+) -> np.ndarray:
+    """Owning shard index per (cell, id) row under a ``_plan_shard_claims``
+    plan: the range holding the cell, or, for a split cell, the owner of
+    the id's slice. The one ownership rule of the sharded index: initial
+    placement (``from_replica``), incremental adds (``add_codes``) and
+    rerank vectors (``put_vectors``) all route through it."""
+    cells = np.asarray(cells, dtype=np.int64)
+    lows = np.asarray([lo for lo, _hi in ranges], dtype=np.int64)
+    his = np.asarray([hi for _lo, hi in ranges], dtype=np.int64)
+    owner = np.searchsorted(lows, cells, side="right") - 1
+    outside = (owner < 0) | (cells > his[np.maximum(owner, 0)])
+    if outside.any():
+        raise ValueError(
+            f"cell {int(cells[outside][0])} outside all shard ranges "
+            f"[{int(lows[0])}, {int(his[-1])}]"
+        )
+    if splits:
+        ids = np.asarray(ids, dtype=np.int64)
+        for cell, owners in splits.items():
+            rows = np.flatnonzero(cells == cell)
+            if len(rows):
+                owner[rows] = np.asarray(owners)[
+                    _slice_of_ids(ids[rows], len(owners))
+                ]
+    return owner
+
+
 class ServingSearcher:
     """In-memory cell-bucketed ANN searcher over a LOPQ codes table."""
 
@@ -208,14 +226,40 @@ class ServingSearcher:
         self._cells: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         self._counts_cache: dict[int, int] | None = None
 
-    def _check_budget(self, incoming: int, existing: int = 0) -> None:
+    def _check_budget(
+        self, incoming: int, existing: int = 0, what: str = "codes snapshot"
+    ) -> None:
         if incoming + existing > self.max_rows:
             raise ValueError(
-                f"codes snapshot of {incoming + existing} rows exceeds the "
+                f"{what} of {incoming + existing} rows exceeds the "
                 f"serving replica budget of {self.max_rows}; shard by cell "
                 f"range with ShardedServingRouter.build(model, codes, "
                 f"n_shards) or raise max_rows explicitly"
             )
+
+    @property
+    def _M(self) -> int:
+        lopq = self.model.lopq if isinstance(self.model, LOPQModelPCA) else self.model
+        return lopq.M
+
+    def check_room(self, incoming: int) -> None:
+        """Raise the budget error unless ``incoming`` more rows fit."""
+        self._check_budget(incoming, self.n_items)
+
+    def _table(
+        self, data, cols: list[str], existing: int = 0,
+        what: str = "codes snapshot",
+    ) -> pa.Table:
+        """Arrow table of ``cols`` under the row budget. A DataFrame is
+        counted first, so the guard raises before any collect (a driver
+        OOM is never the failure mode; VERDICT r1 "wrong" #3), then read
+        with one ``toArrow``; an Arrow table already on the driver is
+        checked by its row count."""
+        if isinstance(data, DataFrame):
+            self._check_budget(data.count(), existing, what)
+            return data.select(*cols).toArrow()
+        self._check_budget(data.num_rows, existing, what)
+        return data.select(cols)
 
     # -- index build/refresh ------------------------------------------------
     @staticmethod
@@ -248,46 +292,33 @@ class ServingSearcher:
             for s, e in zip(starts, ends)
         }
 
-    def load_codes(self, codes: DataFrame) -> "ServingSearcher":
-        """One Arrow collect of (cell, id, fine) — the serving twin of ST6:
-        call again with the refreshed snapshot to pick up new updates. The
-        collect is guarded by ``max_rows`` (a driver OOM is never the
-        failure mode; VERDICT r1 "wrong" #3) — the count() is a cheap
-        metadata/agg job against the codes table."""
-        self._check_budget(codes.count())
-        M = self.model.lopq.M if isinstance(self.model, LOPQModelPCA) else self.model.M
+    def load_codes(self, codes) -> "ServingSearcher":
+        """Load the (cell, id, fine) rows of ``codes`` — a DataFrame (one
+        count() guard, then one Arrow collect) or an Arrow table already on
+        the driver — under ``max_rows``: the serving twin of ST6; call
+        again with the refreshed snapshot to pick up new updates."""
         self._cells = self._group_codes(
-            codes.select("cell", "id", "fine").toArrow(),
-            M,
+            self._table(codes, ["cell", "id", "fine"]),
+            self._M,
             "ServingSearcher.load_codes",
         )
         self._counts_cache = None
         return self
 
-    def add_codes(
-        self, codes: DataFrame, n_rows: int | None = None
-    ) -> "ServingSearcher":
+    def add_codes(self, codes) -> "ServingSearcher":
         """Incremental add with (cell, id) dedup (J7 semantics,
-        search.py:340-364). Shares the snapshot budget with load_codes.
-
-        ``n_rows``: a caller-supplied UPPER BOUND on the incoming row
-        count, skipping this method's own codes.count() job. The sharded
-        router passes its histogram-derived per-shard bound (review r13:
-        its all-or-nothing pre-check already ran one cell-histogram job;
-        re-counting each shard's filtered slice doubled the Spark-job
-        count of every incremental add).
+        search.py:340-364) of a DataFrame or an Arrow table. Shares the
+        snapshot budget with load_codes; the guard counts incoming rows
+        before dedup.
 
         One pass per touched cell: the incoming batch is grouped by cell,
         deduped against the resident ids with ``np.isin`` (and against
         itself — first occurrence wins, matching the row-order semantics of
         the previous per-row path), then appended with a single concat
         (VERDICT r2 "wrong" #2: no per-row np.append/vstack)."""
-        self._check_budget(
-            codes.count() if n_rows is None else n_rows, self.n_items
-        )
-        M = self.model.lopq.M if isinstance(self.model, LOPQModelPCA) else self.model.M
+        M = self._M
         grouped = self._group_codes(
-            codes.select("cell", "id", "fine").toArrow(),
+            self._table(codes, ["cell", "id", "fine"], self.n_items),
             M,
             "ServingSearcher.add_codes",
         )
@@ -349,30 +380,34 @@ class ServingSearcher:
         )
 
     # -- rerank feature store ------------------------------------------------
-    def load_vectors(self, vec_df: DataFrame, id_col: str = "vec_id",
+    def load_vectors(self, vectors, id_col: str = "vec_id",
                      vec_col: str = "embedding") -> "ServingSearcher":
-        """In-memory id -> vector map for the exact-rerank path (shares the
-        row budget). This is the test/small-replica convenience; in
+        """In-memory id -> vector map for the exact-rerank path, from a
+        DataFrame or an Arrow table. One item is its codes plus its vector,
+        so the store is checked against ``max_rows`` on its own. This is
+        the test/small-replica convenience; in
         production the reference fetches ONLY the shortlist's features from
         the feature store per query (searcher_lopqhbase.py:862-886
         get_features_from_sha1s) — pass that fetch as ``fetch_vectors`` to
         :meth:`search` instead of resident vectors. For a LOPQModelPCA the
         vectors must be in the PROJECTED space (same contract as the
         distributed ``search.search``)."""
-        self._check_budget(vec_df.count(), self.n_items)
-        tbl = vec_df.select(id_col, vec_col).toArrow()
+        tbl = self._table(vectors, [id_col, vec_col], what="vector store")
         ids = np.asarray(tbl.column(id_col), dtype=np.int64).tolist()
         V = arrow_vec.vectors(tbl, vec_col, "ServingSearcher.load_vectors")
         self._vectors = dict(zip(ids, V))
         return self
 
-    def put_vector(self, vid: int, v, cell: int | None = None) -> None:
-        """Single-vector upsert into the resident rerank store (the refresh
-        path's unit of work; ``cell`` is accepted for signature parity with
-        the sharded router, which routes on it)."""
-        if not hasattr(self, "_vectors"):
-            self._vectors = {}
-        self._vectors[int(vid)] = np.asarray(v, dtype=np.float64)
+    def put_vectors(self, ids, V, cells=None) -> None:
+        """Upsert rerank vectors into the resident store (the refresh
+        path's unit of work; ``cells`` is accepted for signature parity
+        with the sharded router, which routes on it)."""
+        store = getattr(self, "_vectors", {})
+        ids = np.asarray(ids, dtype=np.int64).tolist()
+        n_new = sum(1 for i in set(ids) if i not in store)
+        self._check_budget(n_new, len(store), what="vector store")
+        store.update(zip(ids, np.asarray(V, dtype=np.float64)))
+        self._vectors = store
 
     def resident_vectors(self, ids) -> np.ndarray:
         """``fetch_vectors``-shaped accessor over the resident store — lets
@@ -426,9 +461,11 @@ class ShardedServingRouter:
 
     The reference's envelope is one LMDB searcher per worker; past
     "millions of images" a single in-memory replica can't hold the index,
-    so shards each load a CONTIGUOUS cell range of the same cell-partitioned
-    codes table (``codes.where(cell BETWEEN lo AND hi)`` — partition-pruned
-    by the layout) and a router answers queries:
+    so each shard holds the (cell, id) rows ``_shard_owners`` gives it — a
+    CONTIGUOUS cell range plus its slices of split fat cells. ``build``
+    collects the codes once and splits them in memory (``from_replica``),
+    so the Spark jobs of a build or an add do not grow with the shard
+    count. A router answers queries:
 
     1. plan the multisequence traversal ONCE against the GLOBAL cell
        histogram (the merge of shard histograms), to the same quota a
@@ -473,63 +510,27 @@ class ShardedServingRouter:
         self._splits = splits or {}
         self._global_counts_cache: dict[int, int] | None = None
 
-    def _slice_pred(self, shard_idx: int):
-        """DataFrame predicate for the id-mod slices shard ``shard_idx``
-        owns (None when it owns none) — shared by build and add_codes."""
-        from pyspark.sql import functions as F
-
-        pred = None
-        for c, owners in self._splits.items():
-            m = len(owners)
-            for j, owner in enumerate(owners):
-                if owner == shard_idx:
-                    p = (F.col("cell") == c) & (_slice_col(m) == j)
-                    pred = p if pred is None else (pred | p)
-        return pred
-
-    def _range_pred(self, rlo: int, rhi: int):
-        """DataFrame predicate for full-range ownership: cells in
-        [rlo, rhi] EXCLUDING split cells (those route via _splits)."""
-        from pyspark.sql import functions as F
-
-        pred = F.col("cell").between(rlo, rhi)
-        if self._splits:
-            pred = pred & ~F.col("cell").isin(
-                [int(c) for c in self._splits]
-            )
-        return pred
+    def _owners(self, cells, ids) -> np.ndarray:
+        return _shard_owners(
+            cells, ids, [(lo, hi) for lo, hi, _s in self.shards], self._splits
+        )
 
     @classmethod
     def build(
         cls,
         model: LOPQModel | LOPQModelPCA,
-        codes: DataFrame,
+        codes,
         n_shards: int,
         max_rows_per_shard: int = MAX_SNAPSHOT_ROWS,
     ) -> "ShardedServingRouter":
-        """Split the cell space into ``n_shards`` contiguous ranges of
-        roughly equal MASS (cumulative per-cell counts, one small agg job),
-        slicing fat cells across shards by id-mod, then bootstrap one
-        budget-guarded replica per range."""
-        from pyspark.sql import functions as F
-
-        hist = sorted(
-            (int(r["cell"]), int(r["n"]))
-            for r in codes.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-        )
-        lopq = model.lopq if isinstance(model, LOPQModelPCA) else model
-        ranges, splits = _plan_shard_claims(hist, n_shards, lopq.V * lopq.V - 1)
-        router = cls(model, [], splits)
-        for i, (rlo, rhi) in enumerate(ranges):
-            pred = router._range_pred(rlo, rhi)
-            slice_pred = router._slice_pred(i)
-            if slice_pred is not None:
-                pred = pred | slice_pred
-            replica = ServingSearcher(model, max_rows=max_rows_per_shard).load_codes(
-                codes.where(pred)
-            )
-            router.shards.append((rlo, rhi, replica))
-        return router
+        """Shard a codes DataFrame or Arrow table: one budget guard over
+        all ``n_shards`` x ``max_rows_per_shard`` rows (a DataFrame's
+        count() runs before its one Arrow collect), then the in-memory
+        :meth:`from_replica` split, which checks each shard's cap."""
+        replica = ServingSearcher(
+            model, max_rows=n_shards * max_rows_per_shard
+        ).load_codes(codes)
+        return cls.from_replica(replica, n_shards, max_rows_per_shard)
 
     @classmethod
     def from_replica(
@@ -538,14 +539,16 @@ class ShardedServingRouter:
     ) -> "ShardedServingRouter":
         """Re-shard a LIVE replica in memory — the scale-out move when a
         growing single replica approaches its snapshot budget (ST6
-        follow-on): split its resident cells into the same cumulative-mass
-        ranges ``build`` would plan, WITHOUT re-reading the codes relation.
-        Zero-copy: cells are atomic units, so each shard's per-cell arrays
-        are the replica's own; resident rerank vectors are routed to the
-        shard owning their cell (one vectorized membership test per shard
-        — never a per-id Python probe over the whole index). Answers are
-        identical to the source replica (the router plans against the
-        merged histogram — pinned by tests).
+        follow-on), and the second half of :meth:`build`: plan the
+        cumulative-mass ranges and fat-cell slices from its resident
+        histogram, then give every resident (cell, id) row to its
+        ``_shard_owners`` shard. A range-owned cell moves whole and
+        zero-copy (the shard keeps the replica's own arrays); split cells
+        are copied slice by slice. Resident rerank vectors go to the shard
+        holding their id (one vectorized membership test per shard — never
+        a per-id Python probe over the whole index). Answers are identical
+        to the source replica (the router plans against the merged
+        histogram — pinned by tests).
 
         ``max_rows_per_shard`` defaults to ``MAX_SNAPSHOT_ROWS`` — the same
         default ``build`` gives its shards (NOT the source replica's cap:
@@ -555,34 +558,32 @@ class ShardedServingRouter:
         lopq = model.lopq if isinstance(model, LOPQModelPCA) else model
         hist = sorted(replica.cell_counts.items())
         ranges, splits = _plan_shard_claims(hist, n_shards, lopq.V * lopq.V - 1)
-        vectors = getattr(replica, "_vectors", None) or {}
-        vec_ids = np.fromiter(vectors.keys(), dtype=np.int64, count=len(vectors))
-        shards = []
-        for i, (rlo, rhi) in enumerate(ranges):
-            s = ServingSearcher(
-                model,
-                max_rows=MAX_SNAPSHOT_ROWS
-                if max_rows_per_shard is None
-                else max_rows_per_shard,
+        cap = MAX_SNAPSHOT_ROWS if max_rows_per_shard is None else max_rows_per_shard
+        shards = [ServingSearcher(model, max_rows=cap) for _ in ranges]
+        entries = list(replica._cells.items())
+        if entries:
+            counts = [len(ids) for _c, (ids, _f) in entries]
+            owner = _shard_owners(
+                np.repeat([c for c, _e in entries], counts),
+                np.concatenate([ids for _c, (ids, _f) in entries]),
+                ranges,
+                splits,
             )
-            s._cells = {
-                c: arrs
-                for c, arrs in replica._cells.items()
-                if rlo <= c <= rhi and c not in splits
-            }
-            for c, owners in splits.items():
-                m = len(owners)
-                entry = replica._cells.get(c)
-                if entry is None:
+            ends = np.cumsum(counts)
+            for (c, (ids, fines)), end, n in zip(entries, ends, counts):
+                own = owner[end - n:end]
+                if c not in splits:
+                    shards[own[0]]._cells[c] = (ids, fines)
                     continue
-                ids, fines = entry
-                for j, owner in enumerate(owners):
-                    if owner == i:
-                        mask = _slice_of_ids(ids, m) == j
-                        if mask.any():
-                            s._cells[c] = (ids[mask].copy(), fines[mask].copy())
+                for i in np.unique(own):
+                    mask = own == i
+                    shards[i]._cells[c] = (ids[mask].copy(), fines[mask].copy())
+        for s in shards:
             s._check_budget(s.n_items)
-            if vectors:
+        vectors = getattr(replica, "_vectors", None) or {}
+        if vectors:
+            vec_ids = np.fromiter(vectors, dtype=np.int64, count=len(vectors))
+            for s in shards:
                 shard_ids = (
                     np.concatenate([ids for ids, _f in s._cells.values()])
                     if s._cells
@@ -590,8 +591,9 @@ class ShardedServingRouter:
                 )
                 owned_ids = vec_ids[np.isin(vec_ids, shard_ids)]
                 s._vectors = {int(i): vectors[int(i)] for i in owned_ids}
-            shards.append((rlo, rhi, s))
-        return cls(model, shards, splits)
+        return cls(
+            model, [(lo, hi, s) for (lo, hi), s in zip(ranges, shards)], splits
+        )
 
     @property
     def n_items(self) -> int:
@@ -623,74 +625,58 @@ class ShardedServingRouter:
             "max_slice_rows": max_slice,
         }
 
-    def add_codes(self, codes: DataFrame) -> "ShardedServingRouter":
-        """Incremental add routed by cell range: each shard admits only the
-        slice of ``codes`` it owns (same (cell, id)-dedup J7 semantics and
-        per-shard budget guard as the single replica). Shard ranges cover
-        the full cell space [0, V*V-1], so every incoming row lands in
-        exactly one shard.
-
-        All-or-nothing: every shard's budget is checked (one cell-histogram
-        job, upper bound before dedup — same conservatism as the single
-        replica's guard) BEFORE any shard admits, so a mid-loop budget
-        error can never leave a partial admit whose ids the caller's
-        metadata doesn't know about."""
-        from pyspark.sql import functions as F
-
-        hist = {
-            int(r["cell"]): int(r["n"])
-            for r in codes.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        incoming_by_shard = []
-        for i, (lo, hi, s) in enumerate(self.shards):
-            incoming = sum(
-                n
-                for c, n in hist.items()
-                if lo <= c <= hi and c not in self._splits
+    def check_room(self, incoming: int) -> None:
+        """Raise the budget error unless ``incoming`` more rows fit in the
+        shards' summed free budget — the bound any routing of them obeys."""
+        free = sum(max(0, s.max_rows - s.n_items) for _lo, _hi, s in self.shards)
+        if incoming > free:
+            raise ValueError(
+                f"codes batch of {incoming} rows exceeds the free serving "
+                f"replica budget of {free} rows over {len(self.shards)} "
+                f"shards; re-shard wider or raise max_rows_per_shard"
             )
-            # a split cell's id-mod distribution isn't in the histogram;
-            # charge each owning shard the FULL cell count (same
-            # upper-bound-before-dedup conservatism as the base guard)
-            incoming += sum(
-                hist.get(c, 0)
-                for c, owners in self._splits.items()
-                if i in owners
-            )
-            s._check_budget(incoming, s.n_items)
-            incoming_by_shard.append(incoming)
-        for i, (lo, hi, s) in enumerate(self.shards):
-            pred = self._range_pred(lo, hi)
-            slice_pred = self._slice_pred(i)
-            if slice_pred is not None:
-                pred = pred | slice_pred
-            # pass the histogram-derived bound: the replica's own count()
-            # per filtered slice is redundant with the pre-check above
-            s.add_codes(codes.where(pred), n_rows=incoming_by_shard[i])
+
+    def add_codes(self, codes) -> "ShardedServingRouter":
+        """Incremental add of a codes DataFrame (one count() guard against
+        :meth:`check_room`, then one Arrow collect) or an Arrow table
+        already on the driver: every row goes to its ``_shard_owners``
+        shard, which admits it with the single replica's (cell, id)-dedup
+        J7 semantics and budget guard.
+
+        All-or-nothing: every shard's exact incoming rows (before dedup —
+        same conservatism as the single replica's guard) are checked
+        BEFORE any shard admits, so a budget error can never leave a
+        partial admit whose ids the caller's metadata doesn't know about."""
+        if isinstance(codes, DataFrame):
+            self.check_room(codes.count())
+            codes = codes.select("cell", "id", "fine").toArrow()
+        owner = self._owners(
+            np.asarray(codes.column("cell")), np.asarray(codes.column("id"))
+        )
+        parts = [
+            codes.take(np.flatnonzero(owner == i))
+            for i in range(len(self.shards))
+        ]
+        for (_lo, _hi, s), part in zip(self.shards, parts):
+            s.check_room(part.num_rows)
+        for (_lo, _hi, s), part in zip(self.shards, parts):
+            if part.num_rows:
+                s.add_codes(part)
         self._global_counts_cache = None
         return self
 
-    def _shard_for_cell(self, cell: int, vid: int | None = None) -> ServingSearcher:
-        owners = self._splits.get(cell)
-        if owners is not None:
-            if vid is None:
-                raise ValueError(
-                    f"cell {cell} is sliced across shards; routing needs the "
-                    "item id"
-                )
-            slice_j = int(_slice_of_ids(np.asarray([int(vid)]), len(owners))[0])
-            return self.shards[owners[slice_j]][2]
-        for lo, hi, s in self.shards:
-            if lo <= cell <= hi:
-                return s
-        raise ValueError(f"cell {cell} outside all shard ranges")
-
-    def put_vector(self, vid: int, v, cell: int | None = None) -> None:
-        """Route a rerank vector to the shard owning the item's (cell, id)
-        slice — each shard holds ONLY its slice's vectors, keeping the
+    def put_vectors(self, ids, V, cells) -> None:
+        """Route rerank vectors to the shards owning their items' (cell, id)
+        rows — each shard holds ONLY its rows' vectors, keeping the
         per-replica residency envelope honest."""
-        if cell is None:
-            raise ValueError("router put_vector needs the item's cell")
-        self._shard_for_cell(int(cell), vid=int(vid)).put_vector(vid, v)
+        if cells is None:
+            raise ValueError("router put_vectors needs the items' cells")
+        ids = np.asarray(ids, dtype=np.int64)
+        V = np.asarray(V, dtype=np.float64)
+        owner = self._owners(cells, ids)
+        for i in np.unique(owner):
+            mask = owner == i
+            self.shards[i][2].put_vectors(ids[mask], V[mask])
 
     def resident_vectors(self, ids) -> np.ndarray:
         """``fetch_vectors``-shaped accessor over the union of per-shard

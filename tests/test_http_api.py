@@ -316,50 +316,126 @@ def test_byb64_data_uri_and_lenient_base64(spark, domain_images, server,
     assert "could not decode" in out["images"][1]["error"]
 
 
+def _resident_ids(svc) -> list[tuple[list[int], list[int]]]:
+    """(code ids, vector ids) per shard, each sorted."""
+    from columbiaimagesearch_spark.lopq.serving import ShardedServingRouter
+
+    replicas = (
+        [s for _lo, _hi, s in svc.searcher.shards]
+        if isinstance(svc.searcher, ShardedServingRouter)
+        else [svc.searcher]
+    )
+    return [
+        (
+            sorted(i for ids, _f in s._cells.values() for i in ids.tolist()),
+            sorted(s._vectors),
+        )
+        for s in replicas
+    ]
+
+
+def _assert_same_answers(a, b, images, sha1s) -> None:
+    """byB64 and bySHA1 answers of two services agree on the rerank path
+    and the ADC path."""
+    for opts in ({}, {"reranking": False}):
+        for row in images:
+            b64 = base64.b64encode(bytes(row["content"])).decode()
+            assert (
+                a.search_b64_list([b64], opts)["images"][0]
+                == b.search_b64_list([b64], opts)["images"][0]
+            ), (row["sha1"], opts)
+        assert (
+            a.search_sha1_list(sha1s, opts)["images"]
+            == b.search_sha1_list(sha1s, opts)["images"]
+        ), opts
+
+
+def _spark_jobs(spark, fn):
+    """(number of Spark jobs ``fn()`` ran, its result), counted by job
+    group through the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
 def test_sharded_service_build_same_answers(spark, domain_images):
-    """build(n_shards=2) routes through ShardedServingRouter with per-shard
-    codes AND rerank vectors — byB64/bySHA1 answers are identical to the
-    single-replica service, and refresh routes new codes/vectors to the
-    owning shards."""
+    """build(n_shards=2|4) routes through ShardedServingRouter with
+    per-shard codes AND rerank vectors — byB64/bySHA1 answers are
+    identical to the single-replica service on the rerank and ADC paths,
+    before and after the same new images are refreshed in, and every shard
+    holds the vectors of exactly the items whose codes it holds. Shards
+    are split in memory, so a build runs the same Spark jobs at 2 and 4
+    shards, and a refresh the same jobs into 2 shards as into 1."""
     from columbiaimagesearch_spark.lopq.serving import ShardedServingRouter
     from columbiaimagesearch_spark.sources import fixtures
 
+    build = http_api.ImageSearchService.build
     # fresh single-replica reference (the module `service` fixture mutates
     # across the refresh test, so don't compare against it)
-    service = http_api.ImageSearchService.build(spark, domain_images)
-    sharded = http_api.ImageSearchService.build(
-        spark, domain_images, n_shards=2
+    service = build(spark, domain_images)
+    jobs_2, sharded = _spark_jobs(
+        spark, lambda: build(spark, domain_images, n_shards=2)
     )
-    assert isinstance(sharded.searcher, ShardedServingRouter)
-    assert len(sharded.searcher.shards) == 2
-    assert sharded.searcher.n_items == service.searcher.n_items
-
+    jobs_4, wide = _spark_jobs(
+        spark, lambda: build(spark, domain_images, n_shards=4)
+    )
+    assert jobs_2 == jobs_4
     rows = domain_images.orderBy("sha1").limit(3).collect()
-    for row in rows:
-        b64 = base64.b64encode(bytes(row["content"])).decode()
-        a = service.search_b64_list([b64], {})["images"][0]
-        b = sharded.search_b64_list([b64], {})["images"][0]
-        assert a == b
-    sha1s = [r["sha1"] for r in rows]
-    assert (
-        service.search_sha1_list(sha1s, {})
-        == sharded.search_sha1_list(sha1s, {})
-    )
+    for svc, n_shards in ((sharded, 2), (wide, 4)):
+        assert isinstance(svc.searcher, ShardedServingRouter)
+        assert len(svc.searcher.shards) == n_shards
+        assert svc.searcher.n_items == service.searcher.n_items
+        for code_ids, vec_ids in _resident_ids(svc):
+            assert code_ids == vec_ids
+        _assert_same_answers(service, svc, rows, [r["sha1"] for r in rows])
 
     new_images = fixtures.generate(n_images=215).to_spark(spark)["images"]
     known_before = set(sharded.sha1_to_ids)
-    admitted = sharded.refresh(new_images)
+    jobs_2r, admitted = _spark_jobs(spark, lambda: sharded.refresh(new_images))
     assert admitted > 0
-    probe = [
+    jobs_1r, admitted_1 = _spark_jobs(spark, lambda: service.refresh(new_images))
+    assert admitted_1 == admitted
+    assert jobs_1r == jobs_2r
+    for code_ids, vec_ids in _resident_ids(sharded):
+        assert code_ids == vec_ids
+    assert sharded.id_to_sha1 == service.id_to_sha1
+    fresh = [
         r for r in new_images.orderBy("sha1").collect()
         if r["sha1"] not in known_before
-    ][0]
+    ]
+    probe = fresh[0]
     out = sharded.search_b64_list(
         [base64.b64encode(bytes(probe["content"])).decode()], {}
     )
     sims = out["images"][0]["SimilarImages"]
     assert sims["ImageSha1s"][0] == probe["sha1"]
     assert sims["Distances"][0] == 0.0
+    _assert_same_answers(
+        service, sharded, rows + fresh[:3],
+        [r["sha1"] for r in rows + fresh[:3]],
+    )
+
+
+def test_build_fits_exact_budget(spark, domain_images):
+    """One item is its codes plus its rerank vector, so a service over n
+    items fits a cap of n rows; n - 1 raises the budget error."""
+    n = domain_images.select("sha1").distinct().count()
+    svc = http_api.ImageSearchService.build(
+        spark, domain_images, n_shards=1, max_rows_per_shard=n
+    )
+    assert svc.searcher.n_items == len(svc.searcher._vectors) == n
+    with pytest.raises(ValueError, match="serving replica budget"):
+        http_api.ImageSearchService.build(
+            spark, domain_images, n_shards=1, max_rows_per_shard=n - 1
+        )
 
 
 def test_refresh_extracts_only_new_images(spark, domain_images):

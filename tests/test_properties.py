@@ -5,6 +5,7 @@ that every distributed pass mirrors."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -228,14 +229,19 @@ def test_union_find_matches_bfs_closure(edges):
 @settings(max_examples=200, deadline=None)
 def test_shard_claim_planner_invariants(hist, n_shards):
     """_plan_shard_claims structural invariants over arbitrary histograms
-    (the r9 owner-rotation change must never break these):
+    (the r9 owner-rotation change must never break these), and the owner
+    rule ``_shard_owners`` built on the plan:
     - exactly n_shards ranges tiling [0, last_cell] in order, no gaps;
     - every histogram cell owned exactly once: by its containing range,
       or (for split cells) by its owner list alone;
     - split owner lists are DISTINCT shards, each in [0, n_shards);
     - two split cells with the same owner-list length never share the
       same first owner unless forced (m == n_shards) — the rotation."""
-    from columbiaimagesearch_spark.lopq.serving import _plan_shard_claims
+    from columbiaimagesearch_spark.lopq.serving import (
+        _plan_shard_claims,
+        _shard_owners,
+        _slice_of_ids,
+    )
 
     hist = sorted(hist)
     last_cell = 255
@@ -274,6 +280,25 @@ def test_shard_claim_planner_invariants(hist, n_shards):
     for i in range(len(firsts) - w + 1):
         window = firsts[i : i + w]
         assert len(set(window)) == w, (firsts, n_shards)
+
+    # _shard_owners (vectorized) == the per-row rule: the range holding
+    # the cell, or the split cell's owner of the id's slice; cells outside
+    # [0, last_cell] raise
+    cells = np.repeat([c for c, _n in hist], 5)
+    ids = np.arange(len(cells), dtype=np.int64) * 7919 + 3
+    got = _shard_owners(cells, ids, ranges, splits)
+    for cell, i, owner in zip(cells.tolist(), ids, got.tolist()):
+        if cell in splits:
+            m = len(splits[cell])
+            want = splits[cell][int(_slice_of_ids(np.array([i]), m)[0])]
+        else:
+            want = next(
+                k for k, (lo, hi) in enumerate(ranges) if lo <= cell <= hi
+            )
+        assert owner == want, (cell, i)
+    for bad in (-1, last_cell + 1):
+        with pytest.raises(ValueError, match="outside all shard ranges"):
+            _shard_owners(np.array([bad]), np.array([0]), ranges, splits)
 
 
 @given(

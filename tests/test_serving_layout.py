@@ -879,13 +879,12 @@ def test_forked_pool_rerank_matches_sequential_router(
         int(r["id"]): int(r["cell"])
         for r in codes.select("id", "cell").collect()
     }
-    for r in emb.collect():
-        vid = int(r["vec_id"])
-        if vid in id_cells:
-            router.put_vector(
-                vid, np.asarray(r["embedding"], dtype=np.float64),
-                cell=id_cells[vid],
-            )
+    rows = [r for r in emb.collect() if int(r["vec_id"]) in id_cells]
+    router.put_vectors(
+        [int(r["vec_id"]) for r in rows],
+        [r["embedding"] for r in rows],
+        [id_cells[int(r["vec_id"])] for r in rows],
+    )
     with ForkedRouterPool(router) as pool:
         for qid, q in queries_np:
             want = router.search(
