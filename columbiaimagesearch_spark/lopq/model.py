@@ -107,7 +107,12 @@ def apply_pca(X: np.ndarray, P: np.ndarray, mu: np.ndarray) -> np.ndarray:
     model.py:878-978): y = (x - mu) @ P, then unit norm (zero-guarded).
     THE single definition of the projection — the distributed
     ``pca_project`` pass, ``LOPQModelPCA.project_queries``, and the twin
-    all call it."""
+    all call it. The result depends only on the values of ``P`` and ``mu``,
+    not on their memory layout, because ``P`` is normalized to C order
+    before the matmul (``eigh`` hands back Fortran-ordered axes, a store
+    reload rebuilds C-ordered rows, and BLAS sums the two layouts in a
+    different order)."""
+    P = np.ascontiguousarray(P, dtype=np.float64)
     Y = (np.atleast_2d(np.asarray(X, dtype=np.float64)) - mu) @ P
     norms = np.linalg.norm(Y, axis=1, keepdims=True)
     norms[norms == 0] = 1.0

@@ -186,6 +186,28 @@ def test_adc_luts_pca_inner_model_bitwise():
         assert np.array_equal(got[i], _textbook_lut(inner, qp, cell))
 
 
+def test_apply_pca_independent_of_axes_layout():
+    """``apply_pca`` is a function of the values of P and mu alone: the
+    Fortran-ordered axes ``pca_axes`` fits, their C-ordered copy (what a
+    store reload rebuilds) and a Fortran copy project bitwise alike. The
+    3- and 50-row batches are ones where BLAS sums the two layouts in a
+    different order, so they differ in the last ulp without normalization."""
+    from columbiaimagesearch_spark.lopq.model import apply_pca, pca_axes
+    from columbiaimagesearch_spark.lopq.twin import PCA_DIM
+
+    rng = np.random.RandomState(6)
+    X = rng.randn(300, 64)
+    X /= np.linalg.norm(X, axis=1, keepdims=True)
+    mu = X.mean(axis=0)
+    Xc = X - mu
+    P = pca_axes(Xc.T @ Xc / (len(X) - 1), PCA_DIM)
+    assert P.flags.f_contiguous and not P.flags.c_contiguous
+    for Q in (X[:3], X[:50]):
+        Y = apply_pca(Q, P, mu)
+        np.testing.assert_array_equal(apply_pca(Q, np.ascontiguousarray(P), mu), Y)
+        np.testing.assert_array_equal(apply_pca(Q, np.asfortranarray(P), mu), Y)
+
+
 def test_adc_luts_called_once_per_shard_visit_and_per_query(monkeypatch):
     """One table build per ``score_cells`` that holds a visited cell (the
     forked shard workers' unit of work) and one per query in
