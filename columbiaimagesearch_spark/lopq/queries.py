@@ -39,15 +39,28 @@ def fixture_queries(spark: SparkSession, sf_dir: str) -> list[tuple[int, "np.nda
     query and each a drift point for the selection rule)."""
 
     def build() -> list[tuple[int, "np.ndarray"]]:
-        q_rows = (
+        q = (
             load_table(spark, sf_dir, "embeddings")
             .where(F.col("vec_id") < N_QUERIES)
             .select("vec_id", "embedding")
-            .collect()
+            .toArrow()
         )
-        return [(int(r["vec_id"]), np.array(r["embedding"])) for r in q_rows]
+        Q = arrow_vec.vectors(q, "embedding", "fixture_queries")
+        return list(zip(q.column("vec_id").to_pylist(), Q))
 
     return cache.memo("fixture_queries", None, twin.fixture_paths(sf_dir), build)
+
+
+def _fixture_sample(spark: SparkSession, sf_dir: str) -> pa.Table:
+    """The first ``twin.SAMPLE_LIMIT`` embeddings by ``vec_id``: the rows
+    the twin trains its models on."""
+    return (
+        load_table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(twin.SAMPLE_LIMIT)
+        .toArrow()
+    )
 
 
 def fixture_model(spark: SparkSession, sf_dir: str) -> LOPQModel:
@@ -58,14 +71,7 @@ def fixture_model(spark: SparkSession, sf_dir: str) -> LOPQModel:
     distributed."""
 
     def build() -> LOPQModel:
-        rows = (
-            load_table(spark, sf_dir, "embeddings")
-            .select("vec_id", "embedding")
-            .orderBy("vec_id")
-            .limit(twin.SAMPLE_LIMIT)
-            .collect()
-        )
-        X = np.array([r["embedding"] for r in rows], dtype=np.float64)
+        X = arrow_vec.vectors(_fixture_sample(spark, sf_dir), "embedding", "fixture_model")
         return LOPQModel.fit(X, **FIXTURE_PARAMS)
 
     return cache.memo("fixture_model", None, twin.fixture_paths(sf_dir), build)
@@ -368,14 +374,7 @@ def pca_fixture_model(spark: SparkSession, sf_dir: str):
     the distributed projection/encode/search plumbing."""
 
     def build():
-        rows = (
-            load_table(spark, sf_dir, "embeddings")
-            .select("vec_id", "embedding")
-            .orderBy("vec_id")
-            .limit(twin.SAMPLE_LIMIT)
-            .collect()
-        )
-        X = np.array([r["embedding"] for r in rows], dtype=np.float64)
+        X = arrow_vec.vectors(_fixture_sample(spark, sf_dir), "embedding", "pca_model")
         return twin.fit_pca_lopq(X)
 
     return cache.memo("pca_model", None, twin.fixture_paths(sf_dir), build)

@@ -12,8 +12,10 @@ Paths may be any Hadoop-compatible filesystem (s3a://, hdfs://, file:///).
 from __future__ import annotations
 
 import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 
+from ..functions import arrow_vec
 from .model import LOPQModel
 
 _SCHEMA = "name string, idx int, shape array<int>, vals array<double>"
@@ -33,20 +35,25 @@ def save_model(spark: SparkSession, model: LOPQModel, path: str) -> None:
     spark.createDataFrame(rows, _SCHEMA).repartition(1).write.mode("overwrite").parquet(path)
 
 
+def _read_arrays(spark: SparkSession, path: str) -> dict[str, np.ndarray]:
+    """name -> its rows' ``vals`` in ``idx`` order, one row per matrix row,
+    reshaped to ``(rows, *shape)``."""
+    tbl = spark.read.parquet(path).toArrow().sort_by("idx")
+    out = {}
+    for name in pc.unique(tbl["name"]).to_pylist():
+        part = tbl.filter(pc.equal(tbl["name"], name))
+        flat = arrow_vec.vectors(part, "vals", f"lopq.store ({name})")
+        out[name] = flat.reshape(len(flat), *part["shape"][0].as_py())
+    return out
+
+
 def load_model(spark: SparkSession, path: str) -> LOPQModel:
-    rows = spark.read.parquet(path).collect()
-    by_name: dict[str, list] = {}
-    for r in rows:
-        by_name.setdefault(r["name"], []).append(r)
-    meta = by_name.pop("meta")[0]["vals"]
-    V, M, K, D = (int(x) for x in meta)
-    half = D // 2
+    arrays = _read_arrays(spark, path)
+    V, M, K, D = (int(x) for x in arrays.pop("meta")[0])
 
     def assemble(name: str, outer_shape: tuple[int, ...]) -> np.ndarray:
-        rs = sorted(by_name[name], key=lambda r: r["idx"])
-        inner = tuple(rs[0]["shape"])
-        flat = np.array([r["vals"] for r in rs], dtype=np.float64)
-        return flat.reshape(*outer_shape, *inner)
+        arr = arrays[name]
+        return arr.reshape(*outer_shape, *arr.shape[1:])
 
     return LOPQModel(
         V=V, M=M, K=K, D=D,
@@ -80,9 +87,5 @@ def load_model_pca(spark: SparkSession, path: str):
     from .model import LOPQModelPCA
 
     lopq = load_model(spark, f"{path}/lopq")
-    rows = spark.read.parquet(f"{path}/pca").collect()
-    mu_rows = [r for r in rows if r["name"] == "mu"]
-    p_rows = sorted((r for r in rows if r["name"] == "P"), key=lambda r: r["idx"])
-    mu = np.array(mu_rows[0]["vals"], dtype=np.float64)
-    P = np.array([r["vals"] for r in p_rows], dtype=np.float64)
-    return LOPQModelPCA(lopq=lopq, P=P, mu=mu)
+    arrays = _read_arrays(spark, f"{path}/pca")
+    return LOPQModelPCA(lopq=lopq, P=arrays["P"], mu=arrays["mu"][0])

@@ -257,10 +257,8 @@ def lloyd_spark_multi(
     later scans — continuing it could not change it. Reaches the same
     fixpoint as the driver ``model.kmeans`` (same init, same update rule,
     same deterministic farthest-point reseed for empty clusters)."""
-    sample_df = vec_df.orderBy("id").limit(init_sample)
-    S_full = np.array(
-        [row["v"] for row in sample_df.collect()], dtype=np.float64
-    )
+    sample = vec_df.orderBy("id").limit(init_sample).select("v").toArrow()
+    S_full = arrow_vec.vectors(sample, "v", "lloyd_spark_multi")
     if S_full.shape[0] < k:
         raise ValueError(f"need at least k={k} points, got {S_full.shape[0]}")
     centers: list[np.ndarray] = []

@@ -48,14 +48,14 @@ def train_centroids(
     # sample_limit is part of the key (review r13): it changes the trained
     # centroids, so omitting it served stale centroids to a caller varying it
     def build() -> np.ndarray:
-        rows = (
+        sample = (
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding")
             .orderBy("vec_id")
             .limit(sample_limit)
-            .collect()
+            .toArrow()
         )
-        X = np.array([r["embedding"] for r in rows], dtype=np.float64)
+        X = arrow_vec.vectors(sample, "embedding", "train_centroids")
         return kmeans(X, k, seed=42)[0]
 
     return cache.memo(
@@ -176,6 +176,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = train_centroids(spark, sf_dir)
     index = cached_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    q_rows = emb.where(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding").collect()
-    queries = [(int(r["vec_id"]), np.array(r["embedding"])) for r in q_rows]
+    q = emb.where(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding").toArrow()
+    Q = arrow_vec.vectors(q, "embedding", "ann_ivf_topk")
+    queries = list(zip(q.column("vec_id").to_pylist(), Q))
     return ivf_search(spark, index, centroids, queries)

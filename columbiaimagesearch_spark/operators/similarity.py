@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -188,14 +187,9 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch against the broadcast query matrix (the predict_batch/mapInArrow
     idiom used for all §2.8 numerics)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q_rows = (
-        emb.where(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    qids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    qmat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    qmat_n = l2_normalize_rows(qmat)
+    q = emb.where(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding").toArrow()
+    qids = q.column("vec_id").to_numpy()
+    qmat_n = l2_normalize_rows(arrow_vec.vectors(q, "embedding", "ann_cosine_topk"))
     sc = spark.sparkContext
     b_q = sc.broadcast((qids, qmat_n))
 
@@ -353,11 +347,11 @@ LSH_RECALL = 0.90  # band-OR recall floor at the near-dup threshold
 # in-bucket work silently becomes the whole job. Loud refusal beats a
 # mystery multi-hour stage at 100 TB.
 LSH_MAX_BUCKET = 64 * LSH_TARGET_BUCKET
-# Real (band, key) buckets verified per applyInPandas group (r14): per-group
+# Real (band, key) buckets verified per applyInArrow group (r14): per-group
 # Python dispatch over ~n*bands/target_bucket groups dominated the 500k
-# validation wall; packing ~64 buckets per group amortizes the Arrow slice,
-# pandas construction, and vector conversion ~64x without touching any
-# per-bucket math. See emb_lsh_pairs_from.
+# validation wall; packing ~64 buckets per group amortizes the Arrow slice
+# and the vector conversion ~64x without touching any per-bucket math. See
+# emb_lsh_pairs_from.
 LSH_GROUP_BUCKETS = 64
 # In-bucket kernel fast path (r16, VERDICT r15 #1): above this row count the
 # candidate scan runs as a tiled BLAS matmul (Vn @ Vn.T tiles) instead of a
@@ -492,7 +486,7 @@ def derive_lsh_knobs(
     In-bucket work per band is O((n / 2^bits)^2), so ``bits`` grows with
     the corpus: bits = ceil(log2(n / target_bucket)) keeps the expected
     bucket near ``target_bucket`` rows (uniform-hash approximation; real
-    buckets skew, but the applyInPandas kernel is per-bucket so one hot
+    buckets skew, but the applyInArrow kernel is per-bucket so one hot
     bucket bounds one task, not the stage). More bits cut per-band recall
     (p_band = p_bit^bits with p_bit = 1 - acos(t)/pi), so ``bands`` is then
     derived to restore the band-OR recall floor:
@@ -766,7 +760,7 @@ SELECT vec_a, vec_b, ROUND(cos, 4) AS cos_sim FROM pairs
     doc="Label-free embedding near-dup via random-hyperplane LSH (Charikar "
     "2002): each vector hashes to LSH_BANDS sign-bit band keys map-side, "
     "candidate pairs form ONLY inside (band, key) buckets "
-    "(applyInPandas: one in-bucket pairwise pass, vectors shuffle once "
+    "(applyInArrow: one in-bucket pairwise pass, vectors shuffle once "
     "per band, never per pair), verified by exact cosine and deduped "
     "across bands. The scale path when no blocking label exists — the "
     "complement of emb_near_dup_pairs' label blocking. Oracle: SQL-only "
@@ -897,19 +891,16 @@ def emb_lsh_pairs_from(
         else keyspace // LSH_GROUP_BUCKETS
     )
 
-    # The banding fan-out runs as mapInArrow with the vector as ONE
-    # contiguous float64 BINARY blob per row (r17, guide §4.2): the
-    # previous mapInPandas shape spent ~92% of the stage's wall in the
-    # Python workers (REST stage metrics at the cold 1M probe: 649 s of
-    # task runTime vs 52 s of JVM CPU) converting 19M list-of-ndarray
-    # pandas cells to Arrow list<double>. Arrow-native construction is
-    # buffer slicing: the input ListArray flattens zero-copy to the
-    # (n, d) matrix, the replicated payload is one `np.tile(...).tobytes()`
-    # memcpy, and the binary column is built from that single buffer plus
-    # a uniform offsets array — no per-element boxing anywhere. The
-    # float64 BITS are preserved exactly (tobytes/frombuffer round-trip),
-    # so every downstream cosine is bit-identical to the array<double>
-    # form (suite-pinned).
+    # The banding fan-out and the bucket verification both run on Arrow
+    # (mapInArrow, then applyInArrow): the mapInPandas shape spent ~92% of
+    # the stage's wall in the Python workers (REST stage metrics at the
+    # cold 1M probe: 649 s of task runTime vs 52 s of JVM CPU) converting
+    # 19M list-of-ndarray pandas cells to Arrow list<double>. Both sides
+    # cross arrow_vec: the input ListArray flattens zero-copy to the
+    # (n, d) matrix, the replicated vectors are one `np.tile` plus uniform
+    # offsets (arrow_vec.column), and the verifier reads its group back
+    # with arrow_vec.vectors — no per-element boxing anywhere, and the
+    # float64 bits reach every cosine unchanged.
     def band_rows(batches):
         for batch in batches:
             m_all = batch.num_rows
@@ -917,39 +908,29 @@ def emb_lsh_pairs_from(
                 continue
             ids_all = np.asarray(batch.column("vec_id"), dtype=np.int64)
             V_all = arrow_vec.vectors(batch, "v", "emb_lsh_pairs_from")
-            row_b = V_all.shape[1] * 8
-            # pa.binary() offsets are int32: cap each OUTPUT batch so the
-            # replicated payload (rows*bands*d*8 bytes) stays under 2^31
-            # — wide vectors (d=4096 at a 10k-row Arrow batch) would
-            # silently wrap np.arange(int32) otherwise
-            step = max(1, (2**31 - 1) // (bands * row_b))
+            # cap each OUTPUT batch at 2 GiB of replicated vectors
+            # (rows*bands*d*8 bytes): the list column's offsets are int32,
+            # and wide vectors (d=4096 at a 10k-row Arrow batch) would
+            # overflow them otherwise
+            step = max(1, (2**31 - 1) // (bands * V_all.shape[1] * 8))
             for lo in range(0, m_all, step):
                 V = V_all[lo : lo + step]
                 m = len(V)
-                keys = _lsh_band_keys(V, bands, bits, seed)
-                flat_keys = keys.T.ravel()
-                payload = np.tile(V, (bands, 1)).tobytes()
-                offsets = np.arange(
-                    0, (m * bands + 1) * row_b, row_b, dtype=np.int32
-                )
-                vbin = pa.Array.from_buffers(
-                    pa.binary(), m * bands,
-                    [None, pa.py_buffer(offsets), pa.py_buffer(payload)],
-                )
+                flat_keys = _lsh_band_keys(V, bands, bits, seed).T.ravel()
                 yield pa.RecordBatch.from_arrays(
                     [
                         pa.array(np.repeat(np.arange(bands, dtype=np.int32), m)),
                         pa.array(flat_keys % shards),
                         pa.array(flat_keys),
                         pa.array(np.tile(ids_all[lo : lo + step], bands)),
-                        vbin,
+                        arrow_vec.column(np.tile(V, (bands, 1))),
                     ],
                     names=["band", "grp", "key", "vec_id", "v"],
                 )
 
     banded = vec_df.select("vec_id", "v").mapInArrow(
         band_rows,
-        "band int, grp bigint, key bigint, vec_id bigint, v binary",
+        "band int, grp bigint, key bigint, vec_id bigint, v array<double>",
     )
     if n_rows is not None:
         # size the ONE keyed exchange to its true (replicated) volume —
@@ -964,27 +945,28 @@ def emb_lsh_pairs_from(
         if want_p > floor_p:
             banded = banded.repartition(want_p, "band", "grp")
 
-    def bucket_group_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        # v is the packed float64 binary blob (see band_rows): one join +
-        # frombuffer reconstructs the (n, d) matrix bit-exactly
-        buf = b"".join(pdf["v"])
-        V = np.frombuffer(buf, dtype=np.float64).reshape(len(pdf), -1)
-        return pd.DataFrame(
-            _bucket_group_rows(
-                int(pdf["band"].iloc[0]),
-                pdf["key"].to_numpy(),
-                pdf["vec_id"].to_numpy(),
-                V,
-                threshold=threshold,
-                max_bucket=max_bucket,
-                acc=acc,
-                oversize=oversize,
-                seed=seed,
-            ),
-            columns=["vec_a", "vec_b", "cos_sim"],
+    def bucket_group_pairs(tbl: pa.Table) -> pa.Table:
+        rows = _bucket_group_rows(
+            tbl.column("band")[0].as_py(),
+            tbl.column("key").to_numpy(),
+            tbl.column("vec_id").to_numpy(),
+            arrow_vec.vectors(tbl, "v", "emb_lsh_pairs_from"),
+            threshold=threshold,
+            max_bucket=max_bucket,
+            acc=acc,
+            oversize=oversize,
+            seed=seed,
+        )
+        vec_a, vec_b, cos_sim = zip(*rows) if rows else ((), (), ())
+        return pa.table(
+            {
+                "vec_a": pa.array(vec_a, pa.int64()),
+                "vec_b": pa.array(vec_b, pa.int64()),
+                "cos_sim": pa.array(cos_sim, pa.float64()),
+            }
         )
 
-    pairs = banded.groupBy("band", "grp").applyInPandas(
+    pairs = banded.groupBy("band", "grp").applyInArrow(
         bucket_group_pairs, "vec_a bigint, vec_b bigint, cos_sim double"
     )
     # cross-band duplicate removal (r17, both modes — see the docstring):
@@ -1009,7 +991,7 @@ def _bucket_group_rows(
     target_bucket: int = LSH_TARGET_BUCKET,
 ) -> list[tuple]:
     """Verified pairs for ONE coarse bucket group of band ``b`` (the kernel
-    behind ``emb_lsh_pairs_from``'s applyInPandas — module-level so the
+    behind ``emb_lsh_pairs_from``'s applyInArrow — module-level so the
     hypothesis suite can fuzz the run-splitting against a per-bucket
     reference). One conversion + one stable sort for the whole group; each
     (band, key) run reproduces the per-bucket grouping exactly (same rows,

@@ -3,7 +3,10 @@
 Before ``cache.py`` the engine kept thirteen module-level caches with three
 stamp functions, each with its own invalidation gap. This guard fails when a
 module other than ``cache.py`` grows a module-level cache dict again, or
-stats files itself to invalidate one.
+stats files itself to invalidate one. The one exemption is the Python
+worker entry ``_worker/pyspark_cis_worker.py``: Spark's worker daemon
+imports it before the package is on the worker's path, and the cache it
+stamps is the interpreter's zipimporter directory, not an engine value.
 
 The streaming twins likewise read their state tables through
 ``streaming/state.py`` only: a streaming module that refreshes a path or
@@ -15,7 +18,9 @@ cells a caller scores, each coarse half once; a per-cell ``adc_lut``
 
 Vector columns cross into NumPy through ``functions/arrow_vec.py`` only: a
 hand-written ``np.array(list(...))`` or ``np.array(....to_list())``
-conversion anywhere in the package, or a list-column ``.flatten()`` in any
+conversion anywhere in the package, a driver-side ``Row``-list conversion
+``np.array([r["v"] for r in rows])`` (``toArrow()`` plus
+``arrow_vec.vectors`` replaces it), or a list-column ``.flatten()`` in any
 other module, fails the guard (NumPy code flattens with ``.ravel()``)."""
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ ALLOWED = {"_MODEL_SINGLETONS", "_REGISTRY"}
 STAT_CALLS = {"stat", "lstat", "scandir"}
 STREAMING = PKG / "streaming"
 ARROW_VEC = PKG / "functions" / "arrow_vec.py"
+WORKER_ENTRY = PKG / "_worker" / "pyspark_cis_worker.py"
 
 
 def _module_dicts(tree: ast.Module):
@@ -107,6 +113,21 @@ def _per_cell_luts(tree: ast.Module):
                 yield node.lineno, "adc_lut()"
 
 
+def _row_field_listcomp(node: ast.AST) -> bool:
+    """``[r["field"] for r in ...]`` or ``[r.field for r in ...]``: a field
+    read off each element of a collected ``Row`` list."""
+    if not (isinstance(node, ast.ListComp) and len(node.generators) == 1):
+        return False
+    target, elt = node.generators[0].target, node.elt
+    if not isinstance(target, ast.Name):
+        return False
+    if isinstance(elt, ast.Subscript):
+        keyed = isinstance(elt.slice, ast.Constant) and isinstance(elt.slice.value, str)
+    else:
+        keyed = isinstance(elt, ast.Attribute)
+    return keyed and isinstance(elt.value, ast.Name) and elt.value.id == target.id
+
+
 def _vector_conversions(tree: ast.Module):
     for node in ast.walk(tree):
         if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
@@ -119,10 +140,12 @@ def _vector_conversions(tree: ast.Module):
             and isinstance(f.value, ast.Name)
             and f.value.id in ("np", "numpy")
             and node.args
-            and isinstance(node.args[0], ast.Call)
         ):
-            inner = node.args[0].func
-            if isinstance(inner, ast.Name) and inner.id == "list":
+            arg = node.args[0]
+            inner = arg.func if isinstance(arg, ast.Call) else None
+            if _row_field_listcomp(arg):
+                yield node.lineno, "np.array([r[...] for r in rows])"
+            elif isinstance(inner, ast.Name) and inner.id == "list":
                 yield node.lineno, "np.array(list(...))"
             elif isinstance(inner, ast.Attribute) and inner.attr == "to_list":
                 yield node.lineno, "np.array(....to_list())"
@@ -131,7 +154,7 @@ def _vector_conversions(tree: ast.Module):
 def test_no_module_caches_outside_cache_py():
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
-        if path.name == "cache.py" and path.parent == PKG:
+        if (path.name == "cache.py" and path.parent == PKG) or path == WORKER_ENTRY:
             continue
         tree = ast.parse(path.read_text(), filename=str(path))
         rel = path.relative_to(PKG.parent)
@@ -215,6 +238,10 @@ def test_guard_catches_a_planted_cache():
         "    F = np.array(pdf['fine'].to_list(), dtype=np.int64)\n"
         "    V = np.asarray(batch.column(1).flatten()).reshape(len(X), -1)\n"
         "    return np.array([X, F]), X.ravel()\n"
+        "def collected(rows, ids, qm):\n"
+        "    E = np.array([r['embedding'] for r in rows], dtype=np.float64)\n"
+        "    L = numpy.array([r.label for r in rows])\n"
+        "    return E, L, np.array([qm[q] for q in ids]), np.array([q[0] for q in ids])\n"
     )
     assert [n for _, n in _module_dicts(planted)] == ["_X_CACHE", "_Y"]
     assert [c for _, c in _stat_calls(planted)] == ["_os.stat()"]
@@ -230,5 +257,7 @@ def test_guard_catches_a_planted_cache():
     assert sorted(c for _, c in _vector_conversions(planted)) == [
         ".flatten()",
         "np.array(....to_list())",
+        "np.array([r[...] for r in rows])",
+        "np.array([r[...] for r in rows])",
         "np.array(list(...))",
     ]

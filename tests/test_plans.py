@@ -441,7 +441,7 @@ def test_emb_lsh_pairs_single_keyed_exchange(spark):
     vec_bearing = [b for b in explain.keyed_exchange_blocks(plan) if "v#" in b]
     assert len(vec_bearing) == 1, plan
     assert "Cartesian" not in plan and "NestedLoop" not in plan, plan
-    assert plan.count("FlatMapGroupsInPandas") >= 1, plan
+    assert plan.count("FlatMapGroupsInArrow") >= 1, plan
 
 
 def test_emb_lsh_banded_exchange_sizing_keeps_one_shuffle(spark, monkeypatch):
