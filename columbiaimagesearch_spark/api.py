@@ -176,13 +176,15 @@ def search_by_image(
         )
     else:
         ok = ok.select(F.col("sha1").alias("item_key"), "sha1", "feature")
+    # Featurization is the expensive stage (V14/V17). The numbering's range
+    # exchange samples its input in a job of its own before the exchange
+    # reads it, and four downstream actions consume `ided` (train sample,
+    # distributed encode, rerank vectors join, metadata join) — pin the
+    # extraction BEFORE it is numbered so it runs once.
+    ok = ok.persist()
     ided = ordered_global_index(ok, "item_key", "id").select(
         "id", "sha1", F.col("feature").cast("array<double>").alias("v")
     )
-    # Featurization is the expensive stage (V14/V17); four downstream
-    # actions consume `ided` (train sample, distributed encode, rerank
-    # vectors join, metadata join) — pin it once so extraction runs once.
-    ided = ided.persist()
     sample = ided.orderBy("id").limit(20000).select("v").toArrow()
     def _empty_results() -> dict[str, Any]:
         # The zero-result shape must match the normal path's per-mode value
@@ -200,7 +202,7 @@ def search_by_image(
         # small corpus; every row may carry the failed marker) — return
         # the empty-result shape instead of crashing LOPQModel.fit on an
         # empty array (review r13), and release the pin
-        ided.unpersist()
+        ok.unpersist()
         return _empty_results()
     model = LOPQModel.fit(
         arrow_vec.vectors(sample, "v", "api.search_by_image"), **params
@@ -231,7 +233,7 @@ def search_by_image(
                 qkeys.append((name, fi))
                 qboxes.append([int(left), int(top), int(right), int(bottom)])
     if not queries:
-        ided.unpersist()
+        ok.unpersist()
         return _empty_results()
     res = lopq_search(
         spark, codes, model, queries,
@@ -247,7 +249,7 @@ def search_by_image(
         .orderBy("qid", "rank")
         .collect()
     )
-    ided.unpersist()
+    ok.unpersist()
     # lopq_search persisted `codes` (it had no cache of its own); the
     # collect above consumed the result, so release the entry here — a
     # service calling search_by_image repeatedly otherwise accumulates one

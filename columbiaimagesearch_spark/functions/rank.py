@@ -34,12 +34,14 @@ from pyspark.sql import functions as F
 
 
 def ordered_global_index(
-    df: DataFrame, key_col: str, out_col: str = "gidx", num_partitions: int | None = None
+    df: DataFrame, key_col: str, out_col: str = "gidx"
 ) -> DataFrame:
     """Add ``out_col`` = 0-based dense global index of rows ordered by
     ``key_col`` (which must be unique — ties would make the order, and
-    therefore the numbering, undefined)."""
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    therefore the numbering, undefined). The range exchange samples its
+    input for bounds in a job of its own, so an uncached ``df`` runs its
+    lineage twice: callers must pin an expensive input (persist it) first."""
+    n = df.sparkSession.sparkContext.defaultParallelism
     # eager checkpoint pins BOTH the partitioning and the pid assignment:
     # the counts aggregate and the final join must see the same physical
     # layout (re-running the range exchange could re-sample bounds), and

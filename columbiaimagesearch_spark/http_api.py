@@ -51,7 +51,8 @@ NumberImages / ImageSha1s / Distances).
 Scale shape: the service holds ONLY budget-guarded serving state (codes
 dict, id→sha1 array, rerank vectors — the reference's per-worker LMDB/dict
 envelope); the Spark cluster is touched at build/refresh time, one
-distributed extract+encode pass each, with bounded driver collects.
+distributed extraction each, counted against the budget and then
+collected once; the service numbers and encodes the collected rows itself.
 """
 
 from __future__ import annotations
@@ -66,6 +67,7 @@ from typing import Any
 from urllib.parse import parse_qs, urlparse
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -86,9 +88,10 @@ class ImageSearchService:
     """The engine behind the endpoint: a serving replica plus the metadata
     needed to answer byB64/bySHA1 without Spark on the query path.
 
-    Build with :meth:`build` (one distributed extraction + encode over the
-    images relation, bounded-sample LOPQ fit — the same composition as
-    ``api.search_by_image``, but the artifacts are KEPT for serving).
+    Build with :meth:`build` (one distributed extraction over the images
+    relation, then a bounded-sample LOPQ fit and the encode on the
+    collected rows — the same composition as ``api.search_by_image``, but
+    the artifacts are KEPT for serving).
     """
 
     def __init__(self, spark, model, searcher, id_to_sha1, sha1_to_ids,
@@ -154,18 +157,20 @@ class ImageSearchService:
 
     # -- build / refresh -----------------------------------------------------
     @staticmethod
-    def _extract_ided(images: DataFrame, mode: str, model_factory):
-        from .functions.rank import ordered_global_index
+    def _extract_items(images: DataFrame, mode: str, model_factory):
+        """(item_key, sha1, v, item_bbox) rows of the successfully
+        featurized ``images``; ``item_key`` is unique, and the service
+        numbers items in its order (:func:`_collect_items`)."""
         from .multimodal.images import run_extraction
 
         # One row per sha1 BEFORE extraction (review r14): the reference
         # dedups by construction — sha1 is the HBase row key
         # (hbase_indexer_minimal.py write path) — but nothing here did, so
         # a duplicated input row featurized twice AND double-indexed its
-        # sha1 (ordered_global_index requires unique keys; the dup handed
-        # it a tie and the service two ids for one image, returned twice
-        # in top-k). Dedup first also makes the expensive featurization
-        # run once per unique image.
+        # sha1 (the numbering needs unique keys; the dup handed it a tie
+        # and the service two ids for one image, returned twice in
+        # top-k). Dedup first also makes the expensive featurization run
+        # once per unique image.
         images = images.dropDuplicates(["sha1"])
         feats = run_extraction(images, mode=mode, model_factory=model_factory)
         ok = feats.where(F.col("failed") == 0)
@@ -196,9 +201,9 @@ class ImageSearchService:
                 "feature",
                 F.lit(None).cast("array<int>").alias("item_bbox"),
             )
-        return ordered_global_index(ok, "item_key", "id").select(
-            "id", "sha1", F.col("feature").cast("array<double>").alias("v"),
-            "item_bbox",
+        return ok.select(
+            "item_key", "sha1",
+            F.col("feature").cast("array<double>").alias("v"), "item_bbox",
         )
 
     @classmethod
@@ -228,12 +233,14 @@ class ImageSearchService:
         shards alongside the codes — each worker's map covers its range).
 
         One admission pass, whatever ``n_shards`` is: a count() of the
-        extracted items is checked against ``n_shards`` x
+        persisted extraction is checked against ``n_shards`` x
         ``max_rows_per_shard`` before anything is collected; then one Arrow
-        collect of (id, sha1, item_bbox, v) feeds the training sample (the
-        20,000 lowest ids), the rerank vectors and the metadata, and one
-        Arrow collect of the encoded (id, cell, fine) feeds ``load_codes``;
-        ``from_replica`` splits that replica into shards in memory.
+        collect of (item_key, sha1, item_bbox, v), numbered 0, 1, ... in
+        ``item_key`` order on the driver, feeds the training sample (the
+        20,000 lowest ids), the encode (``lopq.encode.encode_batch``, the
+        kernel ``encode_dataframe`` runs per batch), the rerank vectors and
+        the metadata; ``from_replica`` splits that replica into shards in
+        memory.
 
         ``parallel=True`` (needs ``n_shards`` > 1) additionally forks one
         worker process per shard (:class:`~.lopq.serving.ForkedRouterPool`)
@@ -241,7 +248,6 @@ class ImageSearchService:
         whose wall is MAX per-shard work rather than total work; refresh
         rebuilds the pool (forked children share the index copy-on-write
         and cannot see post-fork mutations)."""
-        from .lopq.encode import encode_dataframe
         from .lopq.model import LOPQModel
         from .lopq.serving import (
             MAX_SNAPSHOT_ROWS,
@@ -269,35 +275,27 @@ class ImageSearchService:
                 if r["content"] is not None
             ]
             check_detector_determinism(factory(), sample)
-        ided = cls._extract_ided(images, mode, factory).persist()
-        try:
-            n = ided.count()
-            if n > n_shards * per_shard_cap:
+        cap = n_shards * per_shard_cap
+
+        def check_budget(n: int) -> None:
+            if n > cap:
                 raise ValueError(
                     f"index of {n} items exceeds the serving replica budget "
                     f"of {n_shards} shard(s) x {per_shard_cap} rows; raise "
                     f"n_shards or max_rows_per_shard"
                 )
-            rows = ided.select("id", "sha1", "item_bbox", "v").toArrow()
-            rows = rows.sort_by("id")
-            # bounded ordered training subsample (the reference's nb_train)
-            model = LOPQModel.fit(
-                arrow_vec.vectors(
-                    rows.slice(0, 20000), "v", "ImageSearchService.build"
-                ),
-                **params,
-            )
-            codes = (
-                encode_dataframe(spark, ided, model, id_col="id", vec_col="v")
-                .select("id", "cell", "fine")
-                .toArrow()
-            )
-        finally:
-            ided.unpersist()
-        searcher = ServingSearcher(
-            model, max_rows=n_shards * per_shard_cap
-        ).load_codes(codes)
-        searcher.load_vectors(rows, id_col="id", vec_col="v")
+
+        rows = _collect_items(
+            cls._extract_items(images, mode, factory), check_budget, base=0
+        )
+        ids = np.asarray(rows.column("id"))
+        V = arrow_vec.vectors(rows, "v", "ImageSearchService.build")
+        # bounded ordered training subsample (the reference's nb_train)
+        model = LOPQModel.fit(V[:20000], **params)
+        searcher = ServingSearcher(model, max_rows=cap).load_codes(
+            _encode_rows(model, ids, V)
+        )
+        searcher.put_vectors(ids, V)
         if n_shards > 1:
             searcher = ShardedServingRouter.from_replica(
                 searcher, n_shards, max_rows_per_shard=per_shard_cap
@@ -358,9 +356,11 @@ class ImageSearchService:
     def refresh(self, new_images: DataFrame) -> int:
         """Index new images into the running service (the reference's
         ``refresh``/``check_new_updates`` — searcher.load_codes(full/new),
-        api.py:308-319,340-358): one distributed extract+encode pass over
-        ``new_images``, then J7-deduped ``add_codes`` into the replica.
-        Returns the number of new items admitted.
+        api.py:308-319,340-358): one distributed extraction of the
+        ``new_images`` not yet indexed, checked against the free budget and
+        collected once, numbered after the current max id and encoded on
+        the driver, then J7-deduped ``add_codes`` into the replica. Returns
+        the number of new items admitted.
 
         Concurrency contract: SINGLE WRITER, enforced by an in-process
         lock (two concurrent ``refresh`` calls serialize — without it they
@@ -394,8 +394,6 @@ class ImageSearchService:
         return self.refresh(self.images)
 
     def _refresh_locked(self, new_images: DataFrame) -> int:
-        from .lopq.encode import encode_dataframe
-
         # ST4 sha1 dedup BEFORE extraction: already-indexed images are
         # anti-joined away up front, so a poll that finds nothing new costs
         # one broadcast anti-join scan — not a full featurization pass plus
@@ -408,49 +406,33 @@ class ImageSearchService:
                 )
             )
             new_images = new_images.join(indexed, "sha1", "left_anti")
-        ided = self._extract_ided(new_images, self.mode, self.model_factory)
-        # keep ids globally unique: continue after the current max id
-        base = max(self.id_to_sha1, default=-1) + 1
-        ided = ided.select(
-            (F.col("id") + base).alias("id"), "sha1", "v", "item_bbox"
-        ).persist()
-        try:
-            self.searcher.check_room(ided.count())
-            rows = ided.select("id", "sha1", "item_bbox", "v").toArrow()
-            # refreshed sha1s that are ALREADY indexed dedup away inside
-            # add_codes only by (cell, id); dedup by sha1 here (ST4)
-            fresh = np.array(
-                [s not in self.sha1_to_ids for s in rows.column("sha1").to_pylist()],
-                dtype=bool,
-            )
-            if not fresh.any():
-                # a refresh RAN (the store was checked) — stamp it, or the
-                # check_new_updates throttle would re-scan on every call
-                self.last_refresh = datetime.now()
-                return 0
-            rows = rows.filter(fresh).sort_by("id")
-            codes = (
-                encode_dataframe(
-                    self.spark, ided, self.model, id_col="id", vec_col="v"
-                )
-                .select("id", "cell", "fine")
-                .toArrow()
-            )
-        finally:
-            ided.unpersist()
-        codes = codes.filter(
-            np.isin(np.asarray(codes.column("id")), np.asarray(rows.column("id")))
-        ).sort_by("id")
+        rows = _collect_items(
+            self._extract_items(new_images, self.mode, self.model_factory),
+            self.searcher.check_room,
+            # keep ids globally unique: continue after the current max id
+            base=max(self.id_to_sha1, default=-1) + 1,
+        )
+        # refreshed sha1s that are ALREADY indexed dedup away inside
+        # add_codes only by (cell, id); dedup by sha1 here (ST4)
+        fresh = np.array(
+            [s not in self.sha1_to_ids for s in rows.column("sha1").to_pylist()],
+            dtype=bool,
+        )
+        if not fresh.any():
+            # a refresh RAN (the store was checked) — stamp it, or the
+            # check_new_updates throttle would re-scan on every call
+            self.last_refresh = datetime.now()
+            return 0
+        rows = rows.filter(fresh)
+        ids = np.asarray(rows.column("id"))
+        V = arrow_vec.vectors(rows, "v", "ImageSearchService.refresh")
+        codes = _encode_rows(self.model, ids, V)
         before = self.searcher.n_items
         self.searcher.add_codes(codes)
-        # one code row per fresh item and both sorted by id, so the codes'
+        # one code row per fresh item, in the rows' order, so the codes'
         # cells line up with the vectors they route (a single replica
         # ignores the cells)
-        self.searcher.put_vectors(
-            np.asarray(rows.column("id")),
-            arrow_vec.vectors(rows, "v", "ImageSearchService.refresh"),
-            np.asarray(codes.column("cell")),
-        )
+        self.searcher.put_vectors(ids, V, np.asarray(codes.column("cell")))
         # new ids exceed every indexed id, so each sha1's id list stays in
         # id order (same ADVICE r15 ordering contract as build)
         _index_meta(rows, self.id_to_sha1, self.sha1_to_ids, self.id_to_bbox)
@@ -706,6 +688,41 @@ class ImageSearchService:
         if self.images is not None:
             self.refresh_from_source()
         return self.status()
+
+
+#: rows per driver-side encode call: Spark's Arrow batch size (session.py),
+#: so one call's temporaries stay one executor batch's worth
+ENCODE_BATCH_ROWS = 10_000
+
+
+def _collect_items(items: DataFrame, check_budget, base: int) -> pa.Table:
+    """The (sha1, v, item_bbox, id) rows of the extracted ``items``, on the
+    driver and numbered: ``check_budget`` sees the row count before
+    anything is collected, then one Arrow collect, then ids ``base``,
+    ``base`` + 1, ... in ``item_key`` order. The extraction is persisted
+    across the count and the collect, so each image is featurized once."""
+    items = items.persist()
+    try:
+        check_budget(items.count())
+        rows = items.toArrow()
+    finally:
+        items.unpersist()
+    rows = rows.sort_by("item_key").drop_columns("item_key")
+    return rows.append_column(
+        "id", pa.array(np.arange(base, base + rows.num_rows, dtype=np.int64))
+    )
+
+
+def _encode_rows(model, ids: np.ndarray, V: np.ndarray) -> pa.Table:
+    """(id, cell, fine) codes of the rows of ``V``, encoded on the driver by
+    the executors' kernel, ``ENCODE_BATCH_ROWS`` rows per call."""
+    from .lopq.encode import encode_batch
+
+    step = ENCODE_BATCH_ROWS
+    return pa.Table.from_batches([
+        encode_batch(model, ids[i:i + step], V[i:i + step])
+        for i in range(0, len(ids), step)
+    ]).select(["id", "cell", "fine"])
 
 
 def _index_meta(rows, id_to_sha1: dict, sha1_to_ids: dict,

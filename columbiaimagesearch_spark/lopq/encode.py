@@ -8,6 +8,10 @@ with vectorized numpy, and the output is a columnar codes table
 
     (id BIGINT, c1 INT, c2 INT, cell INT, fine ARRAY<INT>)
 
+The per-batch kernel is :func:`encode_batch`; a caller that already holds
+the vectors on the driver (the serving index's build and refresh) calls it
+directly, so there is one encoder.
+
 Scale notes: this is the LAST stage that touches raw vectors — everything
 downstream (index build, search probe) shuffles only ids + codes (a few
 bytes/row vs KBs for the vector). At 100 TB the codes table is written
@@ -27,6 +31,23 @@ from .model import LOPQModel
 CODES_SCHEMA = "id bigint, c1 int, c2 int, cell int, fine array<int>"
 
 
+def encode_batch(model: LOPQModel, ids, X: np.ndarray) -> pa.RecordBatch:
+    """LOPQ codes (CODES_SCHEMA) of the rows of ``X`` keyed by ``ids`` —
+    the one encode kernel: :func:`encode_dataframe` runs it per Arrow
+    batch on the executors, and a driver that already holds the vectors
+    runs it directly."""
+    coarse, fine = model.encode(X)
+    return pa.record_batch(
+        {
+            "id": pa.array(ids, pa.int64()),
+            "c1": coarse[:, 0].astype(np.int32),
+            "c2": coarse[:, 1].astype(np.int32),
+            "cell": model.cell_id(coarse).astype(np.int32),
+            "fine": arrow_vec.column(fine.astype(np.int32)),
+        }
+    )
+
+
 def encode_dataframe(
     spark: SparkSession,
     df: DataFrame,
@@ -42,16 +63,10 @@ def encode_dataframe(
         for batch in batches:
             if not batch.num_rows:
                 continue
-            X = arrow_vec.vectors(batch, vec_col, "encode_dataframe")
-            coarse, fine = model.encode(X)
-            yield pa.record_batch(
-                {
-                    "id": batch.column(id_col).cast(pa.int64()),
-                    "c1": coarse[:, 0].astype(np.int32),
-                    "c2": coarse[:, 1].astype(np.int32),
-                    "cell": model.cell_id(coarse).astype(np.int32),
-                    "fine": arrow_vec.column(fine.astype(np.int32)),
-                }
+            yield encode_batch(
+                model,
+                batch.column(id_col),
+                arrow_vec.vectors(batch, vec_col, "encode_dataframe"),
             )
 
     return df.select(id_col, vec_col).mapInArrow(encode_batches, CODES_SCHEMA)

@@ -316,22 +316,34 @@ def test_byb64_data_uri_and_lenient_base64(spark, domain_images, server,
     assert "could not decode" in out["images"][1]["error"]
 
 
-def _resident_ids(svc) -> list[tuple[list[int], list[int]]]:
-    """(code ids, vector ids) per shard, each sorted."""
+def _replicas(svc) -> list:
+    """The service's ServingSearcher replicas: its shards, or itself."""
     from columbiaimagesearch_spark.lopq.serving import ShardedServingRouter
 
-    replicas = (
-        [s for _lo, _hi, s in svc.searcher.shards]
-        if isinstance(svc.searcher, ShardedServingRouter)
-        else [svc.searcher]
-    )
+    if isinstance(svc.searcher, ShardedServingRouter):
+        return [s for _lo, _hi, s in svc.searcher.shards]
+    return [svc.searcher]
+
+
+def _resident_ids(svc) -> list[tuple[list[int], list[int]]]:
+    """(code ids, vector ids) per shard, each sorted."""
     return [
         (
             sorted(i for ids, _f in s._cells.values() for i in ids.tolist()),
             sorted(s._vectors),
         )
-        for s in replicas
+        for s in _replicas(svc)
     ]
+
+
+def _resident_codes(svc) -> list[tuple[int, int, list[int]]]:
+    """Every resident (id, cell, fine) row over all shards, sorted."""
+    return sorted(
+        (int(i), int(c), f.tolist())
+        for s in _replicas(svc)
+        for c, (ids, fines) in s._cells.items()
+        for i, f in zip(ids, fines)
+    )
 
 
 def _assert_same_answers(a, b, images, sha1s) -> None:
@@ -447,13 +459,13 @@ def test_refresh_extracts_only_new_images(spark, domain_images):
 
     svc = http_api.ImageSearchService.build(spark, domain_images)
     extracted_counts: list[int] = []
-    real_extract = type(svc)._extract_ided
+    real_extract = type(svc)._extract_items
 
     def spy(images, mode, factory):
         extracted_counts.append(images.count())
         return real_extract(images, mode, factory)
 
-    svc._extract_ided = spy
+    svc._extract_items = spy
     assert svc.refresh(domain_images) == 0  # all known
     assert extracted_counts[-1] == 0
 
@@ -465,6 +477,154 @@ def test_refresh_extracts_only_new_images(spark, domain_images):
     admitted = svc.refresh(new_images)  # mixed: knowns + a few new
     assert admitted == n_new
     assert extracted_counts[-1] == n_new  # ONLY the new rows featurized
+
+
+def _counting_factory(acc):
+    """A ToyExtractionModel factory whose ``featurize_full`` calls add one
+    to the Spark accumulator ``acc`` (on the executors and on the
+    driver)."""
+    from columbiaimagesearch_spark.multimodal.images import ToyExtractionModel
+
+    # local class: cloudpickle ships it, and `acc` with it, by value to the
+    # executors
+    class CountingModel(ToyExtractionModel):
+        def featurize_full(self, data):
+            # an executor keeps one model per worker across tasks, but each
+            # task deserializes (and reports) its own copy of the
+            # accumulator: add to the copy the running task registered
+            from pyspark.accumulators import _accumulatorRegistry
+
+            _accumulatorRegistry[acc.aid].add(1)
+            return super().featurize_full(data)
+
+    return CountingModel
+
+
+def test_each_image_featurized_once(spark, domain_images):
+    """Build, refresh (new images only) and ``api.search_by_image`` call
+    the featurizer once per distinct image: neither the budget count nor
+    the numbering re-runs the extraction. (An uncached extraction under
+    ``ordered_global_index`` ran twice: its range exchange samples the
+    input in a job of its own.)"""
+    from columbiaimagesearch_spark.api import search_by_image
+    from columbiaimagesearch_spark.sources import fixtures
+
+    # one accumulator and one factory for the whole test: executors cache
+    # the model by the factory's name, so a second factory built here would
+    # be served the first one's model
+    acc = spark.sparkContext.accumulator(0)
+    factory = _counting_factory(acc)
+
+    def calls(fn):
+        before = acc.value
+        out = fn()
+        return acc.value - before, out
+
+    n = domain_images.select("sha1").distinct().count()
+    n_build, svc = calls(
+        lambda: http_api.ImageSearchService.build(
+            spark, domain_images, model_factory=factory
+        )
+    )
+    assert n_build == n
+
+    new_images = fixtures.generate(n_images=215).to_spark(spark)["images"]
+    n_new = (
+        new_images.join(domain_images.select("sha1"), "sha1", "left_anti")
+        .select("sha1").distinct().count()
+    )
+    assert n_new > 0
+    n_refresh, admitted = calls(lambda: svc.refresh(new_images))
+    assert admitted == n_new
+    assert n_refresh == n_new
+
+    q = domain_images.orderBy("sha1").first()
+    n_search, out = calls(
+        lambda: search_by_image(
+            spark, domain_images, [(q["sha1"], bytes(q["content"]))],
+            max_returned=3, model_factory=factory,
+        )
+    )
+    assert out[q["sha1"]]["sha1s"][0] == q["sha1"]
+    assert n_search == n + 1  # the corpus once, then the query
+
+
+@pytest.mark.parametrize("mode", ["full_image", "face"])
+def test_driver_numbering_and_encode_match_distributed(
+    spark, domain_images, mode
+):
+    """The service numbers and encodes on the driver the rows it collects;
+    the distributed pair is the reference. After a build and after a
+    refresh, the resident (id, cell, fine) rows equal ``encode_dataframe``
+    over ``ordered_global_index(items, "item_key", "id")`` of the same
+    extraction (refresh: the not-yet-indexed images, ids after the current
+    max), ``id_to_sha1`` equals that numbering's map, and every rerank
+    vector is the extracted one, bit for bit."""
+    import numpy as np
+    import pyspark.sql.functions as F
+
+    from columbiaimagesearch_spark.functions.rank import ordered_global_index
+    from columbiaimagesearch_spark.lopq.encode import encode_dataframe
+    from columbiaimagesearch_spark.sources import fixtures
+
+    service_cls = http_api.ImageSearchService
+    images = (
+        domain_images if mode == "full_image"
+        else domain_images.orderBy("sha1").limit(40)
+    )
+    svc = service_cls.build(spark, images, mode=mode, n_shards=2)
+
+    def reference(new, base):
+        items = service_cls._extract_items(new, mode, svc.model_factory)
+        ided = (
+            ordered_global_index(items, "item_key", "id")
+            .select((F.col("id") + base).alias("id"), "sha1", "v")
+            .persist()
+        )
+        try:
+            codes = (
+                encode_dataframe(spark, ided, svc.model, id_col="id", vec_col="v")
+                .select("id", "cell", "fine")
+                .collect()
+            )
+            rows = ided.collect()
+        finally:
+            ided.unpersist()
+        return (
+            {r["id"]: r["sha1"] for r in rows},
+            [(r["id"], r["cell"], list(r["fine"])) for r in codes],
+            {r["id"]: np.asarray(r["v"], dtype=np.float64) for r in rows},
+        )
+
+    def check(id_to_sha1, codes, vectors):
+        assert svc.id_to_sha1 == id_to_sha1
+        assert _resident_codes(svc) == sorted(codes)
+        ids = sorted(vectors)
+        assert (
+            svc.searcher.resident_vectors(ids).tobytes()
+            == np.stack([vectors[i] for i in ids]).tobytes()
+        )
+
+    id_to_sha1, codes, vectors = reference(images, 0)
+    assert id_to_sha1
+    check(id_to_sha1, codes, vectors)
+
+    new_images = fixtures.generate(n_images=215).to_spark(spark)["images"]
+    if mode == "face":
+        new_images = new_images.orderBy("sha1").limit(80)
+    known = spark.createDataFrame(
+        [(s,) for s in svc.sha1_to_ids], "sha1 string"
+    )
+    unindexed = new_images.join(known, "sha1", "left_anti")
+    new_map, new_codes, new_vectors = reference(
+        unindexed, max(svc.id_to_sha1) + 1
+    )
+    assert new_map
+    assert svc.refresh(new_images) == len(new_map)
+    check(
+        {**id_to_sha1, **new_map}, codes + new_codes,
+        {**vectors, **new_vectors},
+    )
 
 
 def test_concurrent_refresh_serializes(spark, domain_images):
@@ -746,7 +906,7 @@ def test_refresh_after_close_stays_in_process(spark, domain_images):
 def test_duplicate_sha1_rows_index_once(spark, domain_images):
     """Review r14: the reference dedups images by construction (sha1 is
     the HBase row key); a duplicated input row must not double-featurize
-    or double-index — previously it handed ordered_global_index a tied
+    or double-index — previously it handed the numbering a tied
     key and the service two ids for one image (the same sha1 twice in
     top-k). Applies to build AND to a refresh batch with internal dups."""
     import pyspark.sql.functions as F
