@@ -206,10 +206,11 @@ def _pctl(lat: list[float], frac: float) -> float:
 def _throughput_qps(fn, qs, threads: int = 8) -> float:
     """Aggregate queries/sec under concurrent load: ``threads`` threads
     each run the full query list; wall is measured across all of them.
-    This is the serving number a ThreadingHTTPServer deployment lives on —
-    the r9 pool serialized concurrent queries on a pool-wide lock and
-    DEGRADED this number below the sequential router's (VERDICT r9
-    what's-wrong #2); the multiplexed pool must beat it."""
+    This is the serving number the HTTP server's accept threads
+    (``http_api.SERVER_THREADS``, each answering a connection start to
+    finish) live on — the r9 pool serialized concurrent queries on a
+    pool-wide lock and DEGRADED this number below the sequential router's
+    (VERDICT r9 what's-wrong #2); the multiplexed pool must beat it."""
     import threading as _threading
 
     def worker():
@@ -431,7 +432,7 @@ def serving_million_bench(
     # max-of-32 sampling made the committed 6.85 ms p99 come back 48.5 ms
     # in the driver's run. Also measured here: aggregate throughput under
     # 8-thread load, pool (multiplexed pipes, r10) vs sequential router —
-    # the number a threaded HTTP deployment actually serves at.
+    # the number the HTTP server's accept-thread pool actually serves at.
     from columbiaimagesearch_spark.lopq.serving import ForkedRouterPool
 
     thr_router = _throughput_qps(
@@ -596,9 +597,11 @@ def serving_http_bench(spark, model, searcher, n_index: int,
     r10 adds the concurrent pair at this boundary: 8 client threads
     hammering byB64 (ADC path) against (a) an 8-shard sequential-fan-out
     service and (b) the same shards behind ``enable_parallel_pool()`` —
-    the deployment shape VERDICT r9 #2 called out (a ThreadingHTTPServer
+    the deployment shape VERDICT r9 #2 called out (a threaded HTTP server
     over the r9 lock-serialized pool degenerated to one query at a time;
-    the multiplexed pool must win END TO END, not only at the pool API)."""
+    the multiplexed pool must win END TO END, not only at the pool API).
+    ``make_server`` answers with a fixed pool of accept threads, each
+    serving its connection start to finish."""
     import base64 as b64mod
     import hashlib
     import threading as _threading

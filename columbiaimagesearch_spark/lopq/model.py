@@ -107,13 +107,19 @@ def apply_pca(X: np.ndarray, P: np.ndarray, mu: np.ndarray) -> np.ndarray:
     model.py:878-978): y = (x - mu) @ P, then unit norm (zero-guarded).
     THE single definition of the projection — the distributed
     ``pca_project`` pass, ``LOPQModelPCA.project_queries``, and the twin
-    all call it. The result depends only on the values of ``P`` and ``mu``,
-    not on their memory layout, because ``P`` is normalized to C order
-    before the matmul (``eigh`` hands back Fortran-ordered axes, a store
-    reload rebuilds C-ordered rows, and BLAS sums the two layouts in a
-    different order)."""
+    all call it. A row's result depends only on its own values and those
+    of ``P`` and ``mu``: not on their memory layout, because ``P`` is
+    normalized to C order (``eigh`` hands back Fortran-ordered axes, a
+    store reload rebuilds C-ordered rows), and not on how many rows are
+    projected together, because the product is an ``einsum`` — BLAS takes
+    a matrix-vector kernel for one row and a matrix-matrix kernel for a
+    batch, which differ in the last ulp, so a one-row serving query would
+    not project like the same row inside a batch. The einsum costs 4-6x
+    the BLAS product on a batch at 4096 -> 128 dimensions."""
     P = np.ascontiguousarray(P, dtype=np.float64)
-    Y = (np.atleast_2d(np.asarray(X, dtype=np.float64)) - mu) @ P
+    Y = np.einsum(
+        "nd,dk->nk", np.atleast_2d(np.asarray(X, dtype=np.float64)) - mu, P
+    )
     norms = np.linalg.norm(Y, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return Y / norms
@@ -321,7 +327,10 @@ class LOPQModel:
         spl, sd = self.subs_per_half, self.sub_dim
         out = np.empty((len(cells), self.M, self.K))
         for h, c in enumerate((cells // self.V, cells % self.V)):
-            u, inv = np.unique(c, return_inverse=True)
+            # a query visits at most a few dozen cells: a Python set beats
+            # np.unique's sort-based path several times at that size
+            u = np.array(sorted(set(c.tolist())), dtype=np.int64)
+            inv = np.searchsorted(u, c)
             qh = q[h * self.half : (h + 1) * self.half]
             centered = qh - self.Cs[h][u] - self.mus[h][u]
             P = np.einsum("nij,nj->ni", self.Rs[h][u], centered)

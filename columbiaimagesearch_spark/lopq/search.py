@@ -13,8 +13,9 @@ Spark rendering:
 - the probe is a semi-join of the codes table against the visited-cells
   list (broadcast; prunes partitions when codes are cell-partitioned);
 - ADC distance is one ``mapInArrow`` pass: per (query, cell) LUTs are small
-  (M x K floats), computed driver-side (each coarse half once per query),
-  broadcast, gathered vectorized;
+  (M x K floats), computed driver-side (each coarse half once per query)
+  and broadcast as one stack; each probe row carries its table's index, so
+  every Arrow batch is scored by one ``adc_batch_dists`` gather;
 - top-k is a per-query window; exact rerank joins back to the vector table
   for only ``rerank_nb`` rows per query (vectors never shuffle in bulk).
 """
@@ -32,27 +33,36 @@ from ..functions import arrow_vec
 from .model import LOPQModel, LOPQModelPCA
 
 
-def adc_batch_dists(lut: np.ndarray, fine: np.ndarray) -> np.ndarray:
-    """ADC distances for a block of codes sharing one (query, cell) LUT:
-    ``sum_m lut[m, fine[:, m]]`` — (n, M) int codes + (M, K) LUT -> (n,)
-    float64. This is the hot inner kernel of both the distributed search
-    (inside the Arrow pass) and the serving / oracle-twin paths, so all
-    call sites stay bitwise identical to each other (reference per-item
-    LUT loop, lopq/lopq/search.py:166-177, vectorized).
+def adc_batch_dists(
+    luts: np.ndarray, table: np.ndarray, fine: np.ndarray
+) -> np.ndarray:
+    """ADC distances for rows scored against a stack of (query, cell)
+    LUTs: row i sums ``luts[table[i], m, fine[i, m]]`` over m — (T, M, K)
+    tables, (n,) table index per row and (n, M) int codes -> (n,) float64.
+    This is the hot inner kernel of the distributed search (one call per
+    Arrow batch), the serving shards (one call per shard visit) and the
+    oracle twins, so all call sites stay bitwise identical to each other
+    (reference per-item LUT loop, lopq/lopq/search.py:166-177,
+    vectorized).
 
-    Gather shape: one contiguous 1-D ``take`` per subquantizer (each
-    ``lut[m]`` is K doubles — cache-resident), accumulated SEQUENTIALLY
-    over m. ~2x the 2-D fancy-index form at serving-cell sizes (the
-    index-pair broadcast and strided stores dominated it). The explicit
-    left-to-right accumulation makes the per-element reduction order
-    independent of n BY CONSTRUCTION — the batch-shape-independence the
-    twin and the serving/batch identity rely on (an (M, n).sum(axis=0)
-    form is NOT shape-independent: numpy collapses the n=1 case to a
-    contiguous pairwise reduction; pinned in tests)."""
-    M = lut.shape[0]
-    acc = lut[0].take(fine[:, 0])
+    Gather shape: ONE gather of ``table*M*K + m*K + fine`` from the
+    flattened stack for every (row, m) — the tables of a query's visited
+    cells are a few dozen KB, cache-resident — then the M columns are added
+    SEQUENTIALLY, left to right. The explicit accumulation makes each
+    row's reduction order independent of n and of which rows share the
+    call BY CONSTRUCTION — the batch-shape-independence the twin and the
+    serving/batch identity rely on (an (M, n).sum(axis=0) form is NOT
+    shape-independent: numpy collapses the n=1 case to a contiguous
+    pairwise reduction; pinned in tests). At a serving shard visit (6
+    tables, 1100 rows, M=16, K=32) one gather is 2.6x as fast as scoring
+    table by table with 16 one-column ``take``s each."""
+    _, M, K = luts.shape
+    offsets = np.asarray(table, dtype=np.int64)[:, None] * (M * K)
+    idx = fine + (offsets + np.arange(M, dtype=np.int64) * K)
+    g = luts.reshape(-1)[idx.T]  # (M, n)
+    acc = g[0].copy()
     for m in range(1, M):
-        acc += lut[m].take(fine[:, m])
+        acc += g[m]
     return acc
 
 
@@ -234,30 +244,30 @@ def _execute_probe(
             empty += ", exact_dist double"
         return spark.createDataFrame([], empty)
 
-    b_luts = spark.sparkContext.broadcast(luts)
-    probe = spark.createDataFrame(probe_rows, "qid bigint, cell int")
+    # the (query, cell) tables as one stack; each probe row names its
+    # table, so a scored row carries the index of the table it is scored
+    # against through the join
+    b_luts = spark.sparkContext.broadcast(
+        np.stack([luts[key] for key in probe_rows])
+    )
+    probe = spark.createDataFrame(
+        [(qid, cell, t) for t, (qid, cell) in enumerate(probe_rows)],
+        "qid bigint, cell int, lut int",
+    )
     # semi-join probe: only visited cells' codes flow into scoring; with a
     # cell-partitioned codes table this is partition pruning, not a scan.
     cand = codes.join(F.broadcast(probe), "cell")
 
     def adc_score(batches):
-        lut_map = b_luts.value
+        stack = b_luts.value
         for batch in batches:
             if not batch.num_rows:
                 continue
             fine = arrow_vec.vectors(batch, "fine", "search", dtype=np.int64)  # (n, M)
-            qid = np.asarray(batch.column("qid"), dtype=np.int64)
-            cell = np.asarray(batch.column("cell"), dtype=np.int64)
-            dists = np.empty(len(fine))
-            # one vectorized LUT gather per (query, cell) group — there are
-            # O(queries x probed cells) groups per batch, each scoring its
-            # whole code block at once (VERDICT r1 fix #2: no per-row
-            # Python loop; matches reference search.py:137-177 semantics)
-            order = np.lexsort((cell, qid))
-            cuts = np.flatnonzero(np.diff(qid[order]) | np.diff(cell[order])) + 1
-            for idx in np.split(order, cuts):
-                lut = lut_map[(int(qid[idx[0]]), int(cell[idx[0]]))]
-                dists[idx] = adc_batch_dists(lut, fine[idx])
+            # one vectorized gather per Arrow batch over every (query,
+            # cell) group in it (no per-row Python loop; matches reference
+            # search.py:137-177 semantics)
+            dists = adc_batch_dists(stack, np.asarray(batch.column("lut")), fine)
             yield pa.record_batch(
                 {
                     "qid": batch.column("qid"),

@@ -365,17 +365,21 @@ class ServingSearcher:
         router, and the inner loop of :meth:`search`. Cells this replica
         does not hold are skipped (the router sends each shard the global
         traversal; ownership filtering happens here). One ``adc_luts`` call
-        tables every resident visited cell, each coarse half once."""
+        tables every resident visited cell, each coarse half once, and one
+        ``adc_batch_dists`` gather scores all their rows."""
         model = self.model.lopq if isinstance(self.model, LOPQModelPCA) else self.model
         resident = [c for c in cells if c in self._cells]
         if not resident:
             return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-        luts = model.adc_luts(q, resident)
         entries = [self._cells[c] for c in resident]
+        table = np.repeat(
+            np.arange(len(entries)), [len(ids) for ids, _ in entries]
+        )
         return (
             np.concatenate([ids for ids, _ in entries]),
-            np.concatenate(
-                [adc_batch_dists(lut, fines) for lut, (_, fines) in zip(luts, entries)]
+            adc_batch_dists(
+                model.adc_luts(q, resident), table,
+                np.concatenate([fines for _, fines in entries]),
             ),
         )
 
@@ -843,12 +847,13 @@ class ForkedRouterPool:
     a request id; the parent sends tagged requests down the involved
     workers' pipes (per-pipe send lock only) and one reader thread per
     worker routes tagged replies back to the waiting query. Concurrent
-    callers (e.g. a threaded HTTP server) therefore PIPELINE: worker i
-    processes its FIFO queue while worker j runs a different query, and a
-    second query's work is enqueued at every shard before the first
-    finishes — aggregate throughput scales with shards instead of
-    degenerating to one-query-at-a-time (the r9 pool-wide lock did
-    exactly that, VERDICT r9 what's-wrong #2).
+    callers — the HTTP server's accept threads (``http_api.SERVER_THREADS``,
+    each answering its own connection start to finish) — therefore
+    PIPELINE: worker i processes its FIFO queue while worker j runs a
+    different query, and a second query's work is enqueued at every shard
+    before the first finishes — aggregate throughput scales with shards
+    instead of degenerating to one-query-at-a-time (the r9 pool-wide lock
+    did exactly that, VERDICT r9 what's-wrong #2).
 
     Failure model: any protocol error is FATAL to the pool. A worker
     death (EOF on its pipe) or send failure marks the pool broken, fails
@@ -1050,9 +1055,9 @@ class ForkedRouterPool:
             # pipes; everything else is irrelevant to our wait.
             # Cost note: this scan is O(len(_pending) * targets) under the
             # lock, but every _pending entry is a CALLER THREAD blocked in
-            # this method — the dict is bounded by the serving layer's
-            # thread pool (single digits), not by queued work, so the scan
-            # is a few dict probes, not a hot-path hazard.
+            # this method — the dict is bounded by the HTTP server's accept
+            # threads (http_api.SERVER_THREADS), not by queued work, so the
+            # scan is a few dict probes, not a hot-path hazard.
             targets = set(by_shard)
             queue_depth = sum(
                 1

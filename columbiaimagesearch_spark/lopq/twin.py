@@ -132,6 +132,24 @@ def _queries_of(st: dict[str, Any]) -> tuple[np.ndarray, np.ndarray]:
     return st["ids"][qmask], st["X"][qmask]
 
 
+def _score_visited(
+    model: LOPQModel, q: np.ndarray, visited: list[int], ids: np.ndarray,
+    cells: np.ndarray, fine: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, ADC dists) of every corpus row in the ``visited`` cells, in
+    visited order: one ``adc_luts`` call and one shared-kernel gather, the
+    same two calls a serving shard makes per visit."""
+    masks = [cells == cell for cell in visited]
+    table = np.repeat(np.arange(len(visited)), [int(m.sum()) for m in masks])
+    return (
+        np.concatenate([ids[m] for m in masks]),
+        adc_batch_dists(
+            model.adc_luts(q, visited), table,
+            np.concatenate([fine[m] for m in masks]),
+        ),
+    )
+
+
 def _search_rows(
     st: dict[str, Any], rerank_nb: int = 0
 ) -> list[tuple]:
@@ -147,19 +165,12 @@ def _search_rows(
     out: list[tuple] = []
     for qid, q in zip(qids, Q):
         d1, d2 = model.coarse_distances(q)
-        c_ids: list[np.ndarray] = []
-        c_dists: list[np.ndarray] = []
         visited = [
             c
             for c in multisequence_cells(d1, d2, counts, QUOTA)
             if counts.get(c, 0)
         ]
-        for cell, lut in zip(visited, model.adc_luts(q, visited)):
-            mask = cells == cell
-            c_ids.append(ids[mask])
-            c_dists.append(adc_batch_dists(lut, fine[mask]))
-        cand_ids = np.concatenate(c_ids)
-        cand_dists = np.concatenate(c_dists)
+        cand_ids, cand_dists = _score_visited(model, q, visited, ids, cells, fine)
         if rerank_nb:
             keep = np.lexsort((cand_ids, cand_dists))[:rerank_nb]
             short_ids, short_adc = cand_ids[keep], cand_dists[keep]
@@ -361,11 +372,11 @@ def pca_model(st: dict[str, Any]) -> LOPQModelPCA:
 
 
 def lopq_pca_search_topk_sql(sf_dir: str) -> str:
-    """Twin of the PCA-composed search: project the corpus (full-matrix —
-    feeds only integer argmin codes, so batch-shape matmul wobble cannot
-    leak into the hash), project each QUERY through the same single-row
-    ``project_queries`` call shape the distributed search uses (LUT floats
-    must match bitwise), then the shared multisequence + ADC-gather path."""
+    """Twin of the PCA-composed search: project the corpus (full-matrix),
+    project each QUERY through ``project_queries`` as the distributed
+    search does (``apply_pca`` projects a row alike in any batch, so the
+    LUT floats match bitwise), then the shared multisequence + ADC-gather
+    path."""
     st = _state(sf_dir)
     pm = pca_model(st)
     lopq = pm.lopq
@@ -379,21 +390,14 @@ def lopq_pca_search_topk_sql(sf_dir: str) -> str:
     qids, Q_orig = _queries_of(st)
     rows: list[tuple] = []
     for qid, q in zip(qids, Q_orig):
-        qp = pm.project_queries(q)[0]  # (1, D) matmul — same shape as search()
+        qp = pm.project_queries(q)[0]
         d1, d2 = lopq.coarse_distances(qp)
-        c_ids: list[np.ndarray] = []
-        c_dists: list[np.ndarray] = []
         visited = [
             c
             for c in multisequence_cells(d1, d2, counts, PCA_QUOTA)
             if counts.get(c, 0)
         ]
-        for cell, lut in zip(visited, lopq.adc_luts(qp, visited)):
-            mask = cells == cell
-            c_ids.append(ids[mask])
-            c_dists.append(adc_batch_dists(lut, fine[mask]))
-        cand_ids = np.concatenate(c_ids)
-        cand_dists = np.concatenate(c_dists)
+        cand_ids, cand_dists = _score_visited(lopq, qp, visited, ids, cells, fine)
         top = np.lexsort((cand_ids, cand_dists))[:TOP_K]
         rows.extend(
             (int(qid), r + 1, int(cand_ids[i]), float(cand_dists[i]))

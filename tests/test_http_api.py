@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import base64
 import json
+import socket
+import threading
+import time
 import urllib.parse
 import urllib.request
 
@@ -1157,3 +1160,142 @@ def test_face_ids_ordered_and_bbox_constructor_injectable(spark, domain_images):
     )
     out2 = clone.search_sha1_list([multi], {"detect_only": True})
     assert out2["images"][0]["QueryFaces"] == faces
+
+
+# -- the accept-thread pool ---------------------------------------------------
+
+
+class _GatedStatus:
+    """Stands in for the service on the ``status`` route: each call waits
+    for ``release``, so a test decides how long requests stay in flight and
+    sees how many run at once."""
+
+    def __init__(self) -> None:
+        self.release = threading.Event()
+        self.lock = threading.Lock()
+        self.active = self.max_active = self.calls = 0
+
+    def status(self) -> dict:
+        with self.lock:
+            self.calls += 1
+            self.active += 1
+            self.max_active = max(self.max_active, self.active)
+        try:
+            if not self.release.wait(30):
+                raise TimeoutError("test never released the request")
+            return {"status": "OK"}
+        finally:
+            with self.lock:
+                self.active -= 1
+
+
+def _wait_for(cond, timeout: float = 10.0) -> None:
+    end = time.monotonic() + timeout
+    while not cond():
+        assert time.monotonic() < end, "condition not reached in time"
+        time.sleep(0.01)
+
+
+def _start_pool(svc) -> tuple[http_api.PooledHTTPServer, threading.Thread]:
+    srv = http_api.make_server(svc)
+    serving = http_api.serve_in_thread(srv)
+    _wait_for(lambda: len(srv._pool) == http_api.SERVER_THREADS
+              and all(t.is_alive() for t in srv._pool))
+    return srv, serving
+
+
+def _assert_stopped(srv, serving) -> None:
+    serving.join(5)
+    assert not serving.is_alive()
+    for t in srv._pool:
+        t.join(5)
+        assert not t.is_alive(), t.name
+
+
+def test_server_shutdown_wakes_idle_accept_threads():
+    """Every pool thread is blocked in accept(): shutdown() wakes them all,
+    joins them and returns promptly, and serve_forever's thread ends."""
+    srv, serving = _start_pool(_GatedStatus())
+    time.sleep(0.1)  # let every thread reach accept()
+    t0 = time.perf_counter()
+    srv.shutdown()
+    assert time.perf_counter() - t0 < 2.0
+    _assert_stopped(srv, serving)
+    srv.server_close()
+
+
+def test_server_shutdown_lets_in_flight_request_finish():
+    """shutdown() waits for a request already being served: the client gets
+    its full answer, then shutdown returns with no pool thread left."""
+    svc = _GatedStatus()
+    srv, serving = _start_pool(svc)
+    answers: list = []
+    client = threading.Thread(target=lambda: answers.append(_get(srv, "status")))
+    client.start()
+    _wait_for(lambda: svc.calls == 1)
+    stopper = threading.Thread(target=srv.shutdown)
+    stopper.start()
+    time.sleep(0.2)
+    assert stopper.is_alive(), "shutdown returned with a request in flight"
+    svc.release.set()
+    stopper.join(5)
+    client.join(5)
+    assert not stopper.is_alive() and not client.is_alive()
+    assert answers == [{"status": "OK"}]
+    _assert_stopped(srv, serving)
+    srv.server_close()
+
+
+def test_server_answers_more_concurrent_requests_than_threads():
+    """Twice as many concurrent requests as pool threads: exactly
+    SERVER_THREADS run at once, the rest wait in the listen backlog, and
+    every one is answered once the first ones finish."""
+    svc = _GatedStatus()
+    srv, serving = _start_pool(svc)
+    n = 2 * http_api.SERVER_THREADS
+    answers: list = []
+    clients = [
+        threading.Thread(target=lambda: answers.append(_get(srv, "status")))
+        for _ in range(n)
+    ]
+    try:
+        for c in clients:
+            c.start()
+        _wait_for(lambda: svc.calls == http_api.SERVER_THREADS)
+        time.sleep(0.2)
+        assert svc.max_active == http_api.SERVER_THREADS
+        svc.release.set()
+        for c in clients:
+            c.join(30)
+            assert not c.is_alive()
+    finally:
+        svc.release.set()
+        srv.shutdown()
+    assert answers == [{"status": "OK"}] * n
+    assert svc.calls == n
+    _assert_stopped(srv, serving)
+    srv.server_close()
+
+
+def test_server_drops_silent_client_after_handler_timeout(monkeypatch):
+    """A client that connects and sends nothing is dropped after the
+    handler timeout: with every pool thread held by such a client, a real
+    request is still answered, and each silent socket reads end-of-stream."""
+    monkeypatch.setattr(http_api, "REQUEST_TIMEOUT_S", 0.3)
+    svc = _GatedStatus()
+    svc.release.set()
+    srv, serving = _start_pool(svc)
+    silent = [
+        socket.create_connection(srv.server_address, timeout=10)
+        for _ in range(http_api.SERVER_THREADS)
+    ]
+    try:
+        assert _get(srv, "status") == {"status": "OK"}
+        for sock in silent:
+            assert sock.recv(1) == b""
+    finally:
+        for sock in silent:
+            sock.close()
+        srv.shutdown()
+    _assert_stopped(srv, serving)
+    srv.server_close()

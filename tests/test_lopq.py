@@ -95,22 +95,52 @@ def test_spark_encode_matches_numpy(spark, model, emb_np):
         assert f == tuple(fine[i])
 
 
+def _per_table_adc(lut: np.ndarray, fine: np.ndarray) -> np.ndarray:
+    """One table's ADC sums written out: ``lut[m, fine[:, m]]`` added left
+    to right over m."""
+    acc = lut[0][fine[:, 0]]
+    for m in range(1, lut.shape[0]):
+        acc = acc + lut[m][fine[:, m]]
+    return acc
+
+
 def test_adc_batch_dists_batch_shape_independent():
     """The shared ADC kernel must return BITWISE-identical distances for a
     row regardless of the batch it arrives in — the distributed path
     splits cells across Arrow batches while serving scores whole cells,
     and the serving ≡ batch ≡ twin identity rests on this. Singleton
     batches are the regression case: an (M, n).sum(axis=0) formulation
-    collapses n=1 to a contiguous pairwise reduction and breaks it."""
+    collapses n=1 to a contiguous pairwise reduction and breaks it. With a
+    stack of tables, every row equals the per-table loop over its own
+    table, whichever other tables' rows share the call."""
     from columbiaimagesearch_spark.lopq.search import adc_batch_dists
 
     rng = np.random.RandomState(3)
     lut = rng.rand(8, 256)
     fine = rng.randint(0, 256, size=(1000, 8)).astype(np.int64)
-    full = adc_batch_dists(lut, fine)
+    one = np.zeros(len(fine), dtype=np.int64)
+    full = adc_batch_dists(lut[None], one, fine)
+    assert np.array_equal(full, _per_table_adc(lut, fine))
     for sl in [slice(0, 1), slice(5, 6), slice(999, 1000), slice(0, 7),
                slice(100, 613)]:
-        assert np.array_equal(adc_batch_dists(lut, fine[sl]), full[sl]), sl
+        assert np.array_equal(
+            adc_batch_dists(lut[None], one[sl], fine[sl]), full[sl]
+        ), sl
+
+    luts = rng.rand(5, 16, 32)
+    fine = rng.randint(0, 32, size=(700, 16)).astype(np.int64)
+    table = rng.randint(0, 5, size=700)  # interleaved, not grouped
+    full = adc_batch_dists(luts, table, fine)
+    want = np.empty(len(fine))
+    for t in range(len(luts)):
+        rows = table == t
+        want[rows] = _per_table_adc(luts[t], fine[rows])
+    assert np.array_equal(full, want)
+    for sl in [slice(0, 1), slice(3, 4), slice(0, 9), slice(250, 700)]:
+        assert np.array_equal(
+            adc_batch_dists(luts, table[sl], fine[sl]), full[sl]
+        ), sl
+    assert adc_batch_dists(luts, table[:0], fine[:0]).shape == (0,)
 
 
 def _random_lopq(D: int, M: int, V: int, K: int, seed: int) -> LOPQModel:
@@ -208,6 +238,25 @@ def test_apply_pca_independent_of_axes_layout():
         np.testing.assert_array_equal(apply_pca(Q, np.asfortranarray(P), mu), Y)
 
 
+@pytest.mark.parametrize("D,out_dim", [(64, 16), (512, 64), (4096, 128)])
+def test_apply_pca_independent_of_row_count(D, out_dim):
+    """Serving projects one-row queries, the distributed pass and the twin
+    whole batches: each row projected alone, or in chunks of 7, is bitwise
+    equal to its row of the whole-batch projection."""
+    from columbiaimagesearch_spark.lopq.model import apply_pca
+
+    rng = np.random.RandomState(D)
+    X = rng.randn(120, D)
+    X /= np.linalg.norm(X, axis=1, keepdims=True)
+    mu = X.mean(axis=0)
+    P = np.linalg.qr(rng.randn(D, out_dim))[0]
+    Y = apply_pca(X, P, mu)
+    for i in range(len(X)):
+        np.testing.assert_array_equal(apply_pca(X[i], P, mu)[0], Y[i])
+    for i in range(0, len(X), 7):
+        np.testing.assert_array_equal(apply_pca(X[i:i + 7], P, mu), Y[i:i + 7])
+
+
 def test_adc_luts_called_once_per_shard_visit_and_per_query(monkeypatch):
     """One table build per ``score_cells`` that holds a visited cell (the
     forked shard workers' unit of work) and one per query in
@@ -264,6 +313,52 @@ def test_adc_luts_called_once_per_shard_visit_and_per_query(monkeypatch):
     assert len(probe_rows) > len(queries)
     for qid, cell in probe_rows:
         assert np.array_equal(luts[(qid, cell)], _textbook_lut(model, X[qid], cell))
+
+
+def test_score_cells_bitwise_equals_per_cell_formula_on_router_shards():
+    """Each router shard scores all its resident visited cells in one
+    kernel call; every row must still equal the per-cell formula (the
+    cell's textbook table, the per-table loop) BITWISE, in visited-cell
+    order, on range shards and on the slices of split fat cells alike."""
+    import pyarrow as pa
+
+    from columbiaimagesearch_spark.functions.arrow_vec import column
+    from columbiaimagesearch_spark.lopq.search import multisequence_cells
+    from columbiaimagesearch_spark.lopq.serving import (
+        ServingSearcher,
+        ShardedServingRouter,
+    )
+
+    model = _random_lopq(32, 16, 8, 32, seed=4)
+    rng = np.random.RandomState(5)
+    n = 3000
+    # Zipf-skewed cells, so the router splits fat cells across shards
+    cells = np.minimum(rng.zipf(1.6, size=n) - 1, 63)
+    fine = rng.randint(0, 32, size=(n, 16))
+    replica = ServingSearcher(model)
+    replica._cells = ServingSearcher._group_codes(
+        pa.table({"cell": cells, "id": rng.permutation(n), "fine": column(fine)}),
+        16,
+        "test",
+    )
+    router = ShardedServingRouter.from_replica(replica, 3)
+    assert router._splits, "fixture must split a fat cell"
+    for q in rng.randn(8, 32):
+        d1, d2 = model.coarse_distances(q)
+        visited = multisequence_cells(d1, d2, router._global_counts(), 1500)
+        for _lo, _hi, shard in router.shards:
+            got_ids, got_d = shard.score_cells(q, visited)
+            resident = [c for c in visited if c in shard._cells]
+            if not resident:
+                assert len(got_ids) == len(got_d) == 0
+                continue
+            want_ids = np.concatenate([shard._cells[c][0] for c in resident])
+            want_d = np.concatenate([
+                _per_table_adc(_textbook_lut(model, q, c), shard._cells[c][1])
+                for c in resident
+            ])
+            assert np.array_equal(got_ids, want_ids)
+            assert np.array_equal(got_d, want_d)
 
 
 def test_multisequence_visits_in_distance_order(model, emb_np):

@@ -901,12 +901,13 @@ def test_forked_pool_rerank_matches_sequential_router(
 def test_forked_pool_concurrent_queries_serialize_correctly(
     spark, model, codes, queries_np
 ):
-    """The HTTP layer serves from a ThreadingHTTPServer, so concurrent
-    threads WILL call pool.search simultaneously — requests are id-tagged
-    and multiplexed over the worker pipes (r10; the r9 pool-wide lock
-    serialized them), so replies must route back to exactly the query
-    that sent them. Hammer the pool from 8 threads and check every answer
-    against the sequential router."""
+    """The HTTP layer answers from a pool of accept threads
+    (``http_api.SERVER_THREADS``), each serving its connection start to
+    finish, so concurrent threads WILL call pool.search simultaneously —
+    requests are id-tagged and multiplexed over the worker pipes (r10; the
+    r9 pool-wide lock serialized them), so replies must route back to
+    exactly the query that sent them. Hammer the pool from 8 threads and
+    check every answer against the sequential router."""
     import threading
 
     from columbiaimagesearch_spark.lopq.serving import (
