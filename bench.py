@@ -325,7 +325,7 @@ def serving_million_bench(
     only a row-count proxy. r10 makes the tail measurement reproducible
     (full-query-set COW warm-up, 128 skew queries, p90/p95 beside p99 —
     SCALE.md §ForkedRouterPool) and adds the 8-thread concurrent
-    throughput pair (multiplexed pool vs sequential fan-out)."""
+    throughput pair (pool vs sequential fan-out)."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -431,7 +431,7 @@ def serving_million_bench(
     # storms inside timed queries that visited other cells, and that plus
     # max-of-32 sampling made the committed 6.85 ms p99 come back 48.5 ms
     # in the driver's run. Also measured here: aggregate throughput under
-    # 8-thread load, pool (multiplexed pipes, r10) vs sequential router —
+    # 8-thread load, pool (per-caller reply pipes) vs sequential router —
     # the number the HTTP server's accept-thread pool actually serves at.
     from columbiaimagesearch_spark.lopq.serving import ForkedRouterPool
 
@@ -599,7 +599,7 @@ def serving_http_bench(spark, model, searcher, n_index: int,
     service and (b) the same shards behind ``enable_parallel_pool()`` —
     the deployment shape VERDICT r9 #2 called out (a threaded HTTP server
     over the r9 lock-serialized pool degenerated to one query at a time;
-    the multiplexed pool must win END TO END, not only at the pool API).
+    the pool must win END TO END, not only at the pool API).
     ``make_server`` answers with a fixed pool of accept threads, each
     serving its connection start to finish."""
     import base64 as b64mod

@@ -492,9 +492,7 @@ class ImageSearchService:
 
         try:
             rows = _run(engine)
-        except (OSError, EOFError, PoolBrokenError):
-            if engine is self.searcher:
-                raise
+        except PoolBrokenError:  # only the pool raises it
             rows = _run(self.searcher)
             # The failed pool must not serve later queries (ADVICE r9: a
             # dead-worker pool left installed kept answering). If it is

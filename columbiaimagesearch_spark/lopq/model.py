@@ -93,13 +93,15 @@ def pca_axes(cov: np.ndarray, out_dim: int) -> np.ndarray:
     positive). THE single definition of the axis convention — the
     distributed trainer (``train_spark.fit_pca_spark``) and the oracle twin
     (``twin.fit_pca_lopq``) both call it, so the bitwise builder/oracle
-    equivalence of the PCA driver row cannot drift between copies."""
+    equivalence of the PCA driver row cannot drift between copies. The
+    axes come back C-ordered (``eigh`` hands back Fortran-ordered ones),
+    the layout :func:`apply_pca` projects with, so it never copies them."""
     eigvals, eigvecs = np.linalg.eigh(cov)
     order = np.argsort(-eigvals)[:out_dim]
     P = eigvecs[:, order]
     flip = np.sign(P[np.abs(P).argmax(axis=0), np.arange(P.shape[1])])
     flip[flip == 0] = 1.0
-    return P * flip
+    return np.ascontiguousarray(P * flip)
 
 
 def apply_pca(X: np.ndarray, P: np.ndarray, mu: np.ndarray) -> np.ndarray:
@@ -109,8 +111,8 @@ def apply_pca(X: np.ndarray, P: np.ndarray, mu: np.ndarray) -> np.ndarray:
     ``pca_project`` pass, ``LOPQModelPCA.project_queries``, and the twin
     all call it. A row's result depends only on its own values and those
     of ``P`` and ``mu``: not on their memory layout, because ``P`` is
-    normalized to C order (``eigh`` hands back Fortran-ordered axes, a
-    store reload rebuilds C-ordered rows), and not on how many rows are
+    normalized to C order (a no-op for the C-ordered axes a fitted or
+    reloaded :class:`LOPQModelPCA` holds), and not on how many rows are
     projected together, because the product is an ``einsum`` — BLAS takes
     a matrix-vector kernel for one row and a matrix-matrix kernel for a
     batch, which differ in the last ulp, so a one-row serving query would
@@ -375,6 +377,12 @@ class LOPQModelPCA:
     lopq: LOPQModel
     P: np.ndarray  # (D_in, out_dim) principal axes, columns
     mu: np.ndarray  # (D_in,) training mean
+
+    def __post_init__(self) -> None:
+        # stored once in the layout apply_pca projects with, so projecting
+        # a query never copies P (fitted and reloaded models alike)
+        self.P = np.ascontiguousarray(self.P, dtype=np.float64)
+        self.mu = np.ascontiguousarray(self.mu, dtype=np.float64)
 
     def project_queries(self, Q: np.ndarray) -> np.ndarray:
         """(n, D_in) original-space queries -> (n, out_dim) projected+renormed."""

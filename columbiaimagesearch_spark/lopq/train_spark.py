@@ -178,13 +178,7 @@ def multi_cluster_moments(
     if est is not None and est <= MOMENTS_DRIVER_MERGE_MAX_BYTES:
         # bounded driver merge: one map-only job, partials summed in numpy
         # (float64, same dtype as the distributed _merge_stats reduce)
-        for r in partials.collect():
-            key = (int(r["sl"]), int(r["cluster"]))
-            n = int(r["n"])
-            s = np.asarray(r["s"], dtype=np.float64)
-            op = (
-                np.asarray(r["op"], dtype=np.float64) if with_outer else None
-            )
+        for key, n, s, op in _moment_rows(partials.toArrow(), slices, with_outer):
             prev = out.get(key)
             if prev is None:
                 out[key] = (n, s, op)
@@ -194,25 +188,33 @@ def multi_cluster_moments(
                     prev[1] + s,
                     (prev[2] + op) if with_outer else None,
                 )
-        if with_outer:
-            out = {
-                k: (n, s, op.reshape(slices[k[0]][1] - slices[k[0]][0], -1))
-                for k, (n, s, op) in out.items()
-            }
         return out
     merged = partials.groupBy("sl", "cluster").applyInPandas(
         _merge_stats, _STATS_SCHEMA
     )
-    for r in merged.collect():
-        sl = int(r["sl"])
-        dim = slices[sl][1] - slices[sl][0]
-        op = (
-            np.asarray(r["op"], dtype=np.float64).reshape(dim, dim)
-            if with_outer
-            else None
-        )
-        out[(sl, int(r["cluster"]))] = (int(r["n"]), np.asarray(r["s"]), op)
+    for key, n, s, op in _moment_rows(merged.toArrow(), slices, with_outer):
+        out[key] = (n, s, op)
     return out
+
+
+def _moment_rows(tbl: pa.Table, slices: Slices, with_outer: bool):
+    """``((sl, cluster), n, Σx, Σxxᵀ or None)`` per row of a collected
+    moments table, in row order within each slice. Slices differ in width,
+    so each slice's vectors are read through ``arrow_vec`` on their own."""
+    sl_col = np.asarray(tbl.column("sl"))
+    for sl in sorted(set(sl_col.tolist())):
+        part = tbl.filter(pa.array(sl_col == sl))
+        S = arrow_vec.vectors(part, "s", "multi_cluster_moments")
+        if with_outer:
+            dim = slices[sl][1] - slices[sl][0]
+            OP = arrow_vec.vectors(part, "op", "multi_cluster_moments")
+            OP = OP.reshape(len(S), dim, dim)
+        else:
+            OP = [None] * len(S)
+        keys = part.column("cluster").to_pylist()
+        ns = part.column("n").to_pylist()
+        for c, n, s, op in zip(keys, ns, S, OP):
+            yield (sl, c), n, s, op
 
 
 def cluster_moments(

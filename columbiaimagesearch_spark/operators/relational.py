@@ -1098,8 +1098,8 @@ def c10_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ops=("C1", "C2", "C5", "C6", "C9"),
     doc="Key building / codec layer: update_id grammar with zero-padded seq "
     "(hbase_indexer_minimal.py:595-617), md5 content hash (imgio.py:23-39 "
-    "uses sha1; DuckDB lacks sha1 so parity uses md5 — Spark side also "
-    "exposes sha1 in functions.scalar), base64 round-trip (featsio.py:4-11), "
+    "uses sha1; DuckDB lacks sha1 so parity uses md5), base64 round-trip "
+    "(featsio.py:4-11), "
     "bbox pack/parse 'l_t_r_b' (C5, the detector bbox string codec used for "
     "face keying; detection roundtrip detector/utils.py).",
     oracle="""

@@ -19,8 +19,9 @@ cells a caller scores, each coarse half once; a per-cell ``adc_lut``
 Vector columns cross into NumPy through ``functions/arrow_vec.py`` only: a
 hand-written ``np.array(list(...))`` or ``np.array(....to_list())``
 conversion anywhere in the package, a driver-side ``Row``-list conversion
-``np.array([r["v"] for r in rows])`` (``toArrow()`` plus
-``arrow_vec.vectors`` replaces it), or a list-column ``.flatten()`` in any
+``np.array([r["v"] for r in rows])`` or its loop form
+``for r in rows: np.asarray(r["v"])`` (``toArrow()`` plus
+``arrow_vec.vectors`` replaces both), or a list-column ``.flatten()`` in any
 other module, fails the guard (NumPy code flattens with ``.ravel()``)."""
 
 from __future__ import annotations
@@ -128,7 +129,44 @@ def _row_field_listcomp(node: ast.AST) -> bool:
     return keyed and isinstance(elt.value, ast.Name) and elt.value.id == target.id
 
 
+def _loop_row_reads(tree: ast.Module):
+    """``np.asarray(r["field"])`` (or ``np.array``) where ``r`` is the
+    target of an enclosing ``for`` loop or comprehension: a vector
+    converted off each collected ``Row``, one at a time."""
+    seen = set()
+    for loop in ast.walk(tree):
+        if isinstance(loop, ast.For):
+            targets = [loop.target]
+        elif isinstance(loop, (ast.ListComp, ast.SetComp, ast.GeneratorExp, ast.DictComp)):
+            targets = [g.target for g in loop.generators]
+        else:
+            continue
+        names = {n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)}
+        for node in ast.walk(loop):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("array", "asarray")
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id in ("np", "numpy")
+                and node.args
+            ):
+                continue
+            arg = node.args[0]
+            if (
+                isinstance(arg, ast.Subscript)
+                and isinstance(arg.value, ast.Name)
+                and arg.value.id in names
+                and isinstance(arg.slice, ast.Constant)
+                and isinstance(arg.slice.value, str)
+                and node.lineno not in seen
+            ):
+                seen.add(node.lineno)
+                yield node.lineno, f"np.{node.func.attr}(r[...]) per row"
+
+
 def _vector_conversions(tree: ast.Module):
+    yield from _loop_row_reads(tree)
     for node in ast.walk(tree):
         if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
             continue
@@ -242,6 +280,11 @@ def test_guard_catches_a_planted_cache():
         "    E = np.array([r['embedding'] for r in rows], dtype=np.float64)\n"
         "    L = numpy.array([r.label for r in rows])\n"
         "    return E, L, np.array([qm[q] for q in ids]), np.array([q[0] for q in ids])\n"
+        "def moments(partials, keys):\n"
+        "    for r in partials.collect():\n"
+        "        s = np.asarray(r['s'], dtype=np.float64)\n"
+        "        n = np.asarray(r.n)\n"
+        "    return [np.array(r['op']) for r in partials], np.asarray(keys['s'])\n"
     )
     assert [n for _, n in _module_dicts(planted)] == ["_X_CACHE", "_Y"]
     assert [c for _, c in _stat_calls(planted)] == ["_os.stat()"]
@@ -260,4 +303,6 @@ def test_guard_catches_a_planted_cache():
         "np.array([r[...] for r in rows])",
         "np.array([r[...] for r in rows])",
         "np.array(list(...))",
+        "np.array(r[...]) per row",
+        "np.asarray(r[...]) per row",
     ]

@@ -171,9 +171,14 @@ def test_model_store_pca_roundtrip(spark, tmp_path_factory):
     np.testing.assert_array_equal(back.mu, pm.mu)
     np.testing.assert_array_equal(back.lopq.Cs, pm.lopq.Cs)
     np.testing.assert_array_equal(back.lopq.subs, pm.lopq.subs)
-    # identical original-space query projection end-to-end
-    q = X[:3]
-    np.testing.assert_array_equal(back.project_queries(q), pm.project_queries(q))
+    # both hold P in the layout apply_pca projects with: no per-call copy
+    assert pm.P.flags.c_contiguous and back.P.flags.c_contiguous
+    # identical original-space query projection end-to-end, for one row
+    # and for a batch
+    for q in (X[:1], X[:3]):
+        np.testing.assert_array_equal(
+            back.project_queries(q), pm.project_queries(q)
+        )
 
 
 def test_format_roundtrip_kernel_detects_corruption():

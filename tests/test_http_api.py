@@ -840,8 +840,6 @@ def test_broken_pool_is_discarded_and_reforked(spark, domain_images):
     """ADVICE r9: a dead-worker pool must not stay installed. Kill the
     pool's workers; the next query answers in-process (correct result),
     and the service swaps in a FRESH pool — never the desynced one."""
-    import time as _time
-
     pooled = http_api.ImageSearchService.build(
         spark, domain_images, n_shards=2, parallel=True
     )
@@ -855,9 +853,7 @@ def test_broken_pool_is_discarded_and_reforked(spark, domain_images):
         broken = pooled._pool
         for p in broken._procs:
             p.kill()
-        deadline = _time.time() + 10
-        while not broken._broken and _time.time() < deadline:
-            _time.sleep(0.05)
+            p.join()
         got = pooled.search_sha1_list(sha1s, {})
         assert got == want  # fallback answered correctly
         assert pooled._pool is not broken  # broken pool discarded
@@ -879,6 +875,32 @@ def test_service_close_shuts_pool_down(spark, domain_images):
     assert pooled._pool is None
     assert all(not p.is_alive() for p in procs)
     pooled.close()  # idempotent
+
+
+def test_pool_reforks_keep_fds_and_threads_flat(spark, domain_images):
+    """Each refresh closes the old pool and forks a new one: the parent's
+    open descriptors and threads stay at their level with one pool alive,
+    refresh after refresh, and drop back when the service closes."""
+    import os
+
+    from columbiaimagesearch_spark.sources import fixtures
+
+    def level():
+        return len(os.listdir("/proc/self/fd")), threading.active_count()
+
+    before = level()
+    pooled = http_api.ImageSearchService.build(
+        spark, domain_images, n_shards=2, parallel=True
+    )
+    try:
+        with_pool = level()
+        for n in (205, 210, 215):
+            new_images = fixtures.generate(n_images=n).to_spark(spark)["images"]
+            assert pooled.refresh(new_images) > 0
+            assert level() == with_pool
+    finally:
+        pooled.close()
+    assert level() == before
 
 
 def test_refresh_after_close_stays_in_process(spark, domain_images):

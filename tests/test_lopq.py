@@ -218,8 +218,9 @@ def test_adc_luts_pca_inner_model_bitwise():
 
 def test_apply_pca_independent_of_axes_layout():
     """``apply_pca`` is a function of the values of P and mu alone: the
-    Fortran-ordered axes ``pca_axes`` fits, their C-ordered copy (what a
-    store reload rebuilds) and a Fortran copy project bitwise alike. The
+    C-ordered axes ``pca_axes`` fits (and a store reload rebuilds) and a
+    Fortran-ordered copy (the layout ``eigh`` hands back) project bitwise
+    alike. The
     3- and 50-row batches are ones where BLAS sums the two layouts in a
     different order, so they differ in the last ulp without normalization."""
     from columbiaimagesearch_spark.lopq.model import apply_pca, pca_axes
@@ -231,7 +232,7 @@ def test_apply_pca_independent_of_axes_layout():
     mu = X.mean(axis=0)
     Xc = X - mu
     P = pca_axes(Xc.T @ Xc / (len(X) - 1), PCA_DIM)
-    assert P.flags.f_contiguous and not P.flags.c_contiguous
+    assert P.flags.c_contiguous and not P.flags.f_contiguous
     for Q in (X[:3], X[:50]):
         Y = apply_pca(Q, P, mu)
         np.testing.assert_array_equal(apply_pca(Q, np.ascontiguousarray(P), mu), Y)

@@ -904,17 +904,20 @@ def test_forked_pool_concurrent_queries_serialize_correctly(
     """The HTTP layer answers from a pool of accept threads
     (``http_api.SERVER_THREADS``), each serving its connection start to
     finish, so concurrent threads WILL call pool.search simultaneously —
-    requests are id-tagged and multiplexed over the worker pipes (r10; the
-    r9 pool-wide lock serialized them), so replies must route back to
-    exactly the query that sent them. Hammer the pool from 8 threads and
-    check every answer against the sequential router."""
+    each caller holds its own slot and reads its own reply pipes, so
+    replies must reach exactly the query that sent them. One slot per
+    accept thread; callers beyond the slots wait for a free one. Hammer
+    the pool from more threads than slots and check every answer against
+    the sequential router."""
     import threading
 
+    from columbiaimagesearch_spark import http_api
     from columbiaimagesearch_spark.lopq.serving import (
         ForkedRouterPool,
         ShardedServingRouter,
     )
 
+    assert ForkedRouterPool.SLOTS == http_api.SERVER_THREADS
     router = ShardedServingRouter.build(model, codes, n_shards=4)
     want = {qid: router.search(q, quota=QUOTA, k=TOP_K) for qid, q in queries_np}
     errors: list = []
@@ -922,7 +925,7 @@ def test_forked_pool_concurrent_queries_serialize_correctly(
 
         def worker():
             try:
-                for _ in range(5):
+                for _ in range(2):
                     for qid, q in queries_np:
                         got = pool.search(q, quota=QUOTA, k=TOP_K)
                         if got != want[qid]:
@@ -930,21 +933,31 @@ def test_forked_pool_concurrent_queries_serialize_correctly(
             except Exception as e:  # noqa: BLE001 - surface to main thread
                 errors.append(repr(e))
 
-        threads = [threading.Thread(target=worker) for _ in range(8)]
+        threads = [
+            threading.Thread(target=worker) for _ in range(2 * pool.SLOTS + 3)
+        ]
         for t in threads:
             t.start()
         for t in threads:
-            t.join()
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads), "a caller never finished"
+        assert not pool._broken
     assert not errors, errors[:3]
 
 
-def test_forked_pool_worker_death_is_fatal(spark, model, codes, queries_np):
-    """ADVICE r9: a mid-protocol failure must be FATAL to the pool — a
-    desynced pipe can never serve another query. Kill one worker; the
-    pool must raise PoolBrokenError (never a silently partial answer) on
-    the next query touching it, and keep refusing afterwards."""
-    import time as _time
+def _touching(router, queries_np, shard: int):
+    """The first fixture query whose plan sends cells to ``shard``."""
+    return next(
+        q for _qid, q in queries_np
+        if shard in router.plan_fanout(q, QUOTA)[1]
+    )
 
+
+def test_forked_pool_worker_death_is_fatal(spark, model, codes, queries_np):
+    """A mid-protocol failure must be FATAL to the pool — a
+    desynced pipe can never serve another query. Kill one worker; the
+    next query touching it raises PoolBrokenError (never a silently
+    partial answer), and the pool keeps refusing afterwards."""
     from columbiaimagesearch_spark.lopq.serving import (
         ForkedRouterPool,
         PoolBrokenError,
@@ -954,20 +967,18 @@ def test_forked_pool_worker_death_is_fatal(spark, model, codes, queries_np):
     router = ShardedServingRouter.build(model, codes, n_shards=4)
     pool = ForkedRouterPool(router)
     try:
-        _qid, q = queries_np[0]
+        q = _touching(router, queries_np, 0)
         assert pool.search(q, quota=QUOTA, k=TOP_K) == router.search(
             q, quota=QUOTA, k=TOP_K
         )
         pool._procs[0].kill()
-        # the reader thread marks the pool broken on the worker's EOF;
-        # give it a beat, then every query must refuse loudly
-        deadline = _time.time() + 10
-        while not pool._broken and _time.time() < deadline:
-            _time.sleep(0.05)
+        pool._procs[0].join()
+        with pytest.raises(PoolBrokenError):
+            pool.search(q, quota=QUOTA, k=TOP_K)
         assert pool._broken, "worker death never marked the pool broken"
         for _ in range(3):
             with pytest.raises(PoolBrokenError):
-                pool.search(q, quota=QUOTA, k=TOP_K)
+                pool.search(queries_np[0][1], quota=QUOTA, k=TOP_K)
     finally:
         pool.close()
     with pytest.raises(PoolBrokenError):
@@ -975,7 +986,7 @@ def test_forked_pool_worker_death_is_fatal(spark, model, codes, queries_np):
 
 
 def test_forked_pool_close_terminates_stragglers(spark, model, codes):
-    """ADVICE r9: close() must not leave a stuck worker COW-holding the
+    """close() must not leave a stuck worker COW-holding the
     index. SIGSTOP one worker (it can neither drain the sentinel nor
     exit); close() must escalate to terminate/kill and return with every
     worker dead."""
@@ -998,12 +1009,11 @@ def test_forked_pool_close_terminates_stragglers(spark, model, codes):
 
 
 def test_forked_pool_close_race_raises_pool_broken(spark, model, codes, queries_np):
-    """ADVICE r10: close() empties _conns/_send_locks while _broken was
-    only set at the very end — a search() racing close() could index the
-    emptied lists and leak an IndexError outside the documented
-    PoolBrokenError contract. Pin the contract: once _closing is set (and
-    even if _broken were somehow still False with the lists gone), search
-    raises PoolBrokenError, never IndexError."""
+    """close() empties the pool's descriptor lists — a search()
+    racing close() must not index them and leak an IndexError (or write to
+    a closed descriptor) outside the documented PoolBrokenError contract.
+    Pin the contract: once close() ran (even if _broken were somehow still
+    False with the descriptors gone), search raises PoolBrokenError."""
     from columbiaimagesearch_spark.lopq.serving import (
         ForkedRouterPool,
         PoolBrokenError,
@@ -1013,9 +1023,9 @@ def test_forked_pool_close_race_raises_pool_broken(spark, model, codes, queries_
     router = ShardedServingRouter.build(model, codes, n_shards=2)
     pool = ForkedRouterPool(router)
     pool.close()
-    assert not pool._conns and not pool._send_locks
-    # simulate the mid-close interleaving the ADVICE describes: lists
-    # already cleared but the broken flag not yet observed by the caller
+    assert not pool._req_fds and not pool._reply_fds
+    # simulate the mid-close interleaving: descriptors already closed but
+    # the broken flag not yet observed by the caller
     pool._broken = False
     q = queries_np[0][1]
     with pytest.raises(PoolBrokenError):
@@ -1023,14 +1033,12 @@ def test_forked_pool_close_race_raises_pool_broken(spark, model, codes, queries_
 
 
 def test_forked_pool_close_survives_full_pipe_buffer(spark, model, codes):
-    """ADVICE r10: close() used to send the shutdown sentinel with a
-    blocking Connection.send() — a wedged (SIGSTOPped) worker whose pipe
-    buffer is FULL would block close() forever, never reaching the
-    terminate/kill escalation built for exactly that worker. Fill the
-    victim's pipe to the brim, then close(): it must return promptly with
-    every worker dead."""
+    """A blocking shutdown send to a wedged (SIGSTOPped) worker
+    whose request pipe is FULL would block close() forever, never reaching
+    the terminate/kill escalation built for exactly that worker. Fill the
+    victim's request pipe to the brim, then close(): it must return
+    promptly with every worker dead."""
     import os
-    import select as _select
     import signal
     import time as _time
 
@@ -1044,13 +1052,13 @@ def test_forked_pool_close_survives_full_pipe_buffer(spark, model, codes):
     pool.JOIN_GRACE_S = 0.2
     victim = pool._procs[0]
     os.kill(victim.pid, signal.SIGSTOP)
-    conn = pool._conns[0]
+    fd = pool._req_fds[0]  # non-blocking: a full pipe raises, never waits
     junk = b"x" * 65536
     for _ in range(1024):  # O/S pipe buffer is ~64KiB-1MiB; stop when full
-        _, writable, _ = _select.select([], [conn], [], 0)
-        if not writable:
+        try:
+            os.write(fd, junk)
+        except BlockingIOError:
             break
-        conn.send_bytes(junk)
     else:
         pytest.skip("could not fill the pipe buffer")
     t0 = _time.time()
@@ -1060,122 +1068,216 @@ def test_forked_pool_close_survives_full_pipe_buffer(spark, model, codes):
     assert elapsed < 10, f"close() blocked {elapsed:.1f}s on a full pipe"
 
 
+def _resume_after(pid: int, delay_s: float):
+    import os
+    import signal
+    import threading
+
+    t = threading.Timer(delay_s, os.kill, (pid, signal.SIGCONT))
+    t.start()
+    return t
+
+
 def test_forked_pool_late_complete_answer_not_marked_broken(
-    spark, model, codes, queries_np, monkeypatch
+    spark, model, codes, queries_np
 ):
-    """ADVICE r10: a wait() that times out AFTER the final part landed
-    (FIFO queue time, or the land-between-timeout-and-mark window) must
-    NOT tear down a healthy pool. Simulate it deterministically: patch
-    the pending event's wait() to let the real answer arrive, then report
-    timeout anyway — the completeness re-check must keep the pool alive
-    and the query must return the correct (router-equal) answer."""
-    import threading
+    """A slow worker whose reply lands before the deadline
+    must NOT tear down a healthy pool. Hold one worker stopped for most of
+    a short deadline, then let it answer: the query returns the complete
+    router-equal answer, the pool is not broken, and it keeps serving."""
+    import os
+    import signal
 
     from columbiaimagesearch_spark.lopq import serving as srv
 
     router = srv.ShardedServingRouter.build(model, codes, n_shards=2)
     pool = srv.ForkedRouterPool(router)
-
-    class _TimeoutButComplete(threading.Event):
-        def wait(self, timeout=None):
-            super().wait(timeout=30)  # the answer genuinely arrives...
-            return False  # ...but the caller sees a timeout
-
-    class _PatchedPending(srv._PendingQuery):
-        def __init__(self, expected):
-            super().__init__(expected)
-            self.event = _TimeoutButComplete()
-
-    orig_pending = srv._PendingQuery
-    monkeypatch.setattr(srv, "_PendingQuery", _PatchedPending)
+    pool.REPLY_TIMEOUT_S = 20.0
     try:
-        q = queries_np[0][1]
-        want = [
-            (i, round(d, 9)) for i, d in router.search(q, quota=QUOTA, k=TOP_K)
-        ]
-        got = [
-            (i, round(d, 9)) for i, d in pool.search(q, quota=QUOTA, k=TOP_K)
-        ]
-        assert got == want  # the complete late answer is returned
-        assert not pool._broken  # ...and the healthy pool survives
-        # restore the ORIGINAL class (ADVICE r11: re-reading the attr here
-        # returned the already-patched _PatchedPending, so this leg was a
-        # no-op and re-ran the patched path) — the follow-up query below
-        # must exercise the normal wait path
-        monkeypatch.setattr(srv, "_PendingQuery", orig_pending)
-        # and it keeps serving afterwards
-        got2 = [
-            (i, round(d, 9)) for i, d in pool.search(q, quota=QUOTA, k=TOP_K)
-        ]
-        assert got2 == want
-    finally:
-        pool.close()
-
-
-def test_forked_pool_deadline_per_target_depth_and_capped(
-    spark, model, codes, queries_np, monkeypatch
-):
-    """ADVICE r11: the reply deadline must scale with the queue depth of
-    THIS query's target workers, capped — not the pool-wide in-flight
-    count. Otherwise a genuinely wedged worker under concurrent load is
-    detected only after 60*(1+N) s. Pin all three legs deterministically
-    by planting fake pending entries and recording the wait() timeout:
-    (a) an idle pool waits exactly REPLY_TIMEOUT_S;
-    (b) in-flight queries that owe nothing (parts complete) or owe only
-        NON-target shards do not scale the deadline;
-    (c) a deep backlog on the target shards scales it but never past
-        REPLY_TIMEOUT_S * (1 + DEADLINE_DEPTH_CAP)."""
-    import threading
-
-    from columbiaimagesearch_spark.lopq import serving as srv
-
-    router = srv.ShardedServingRouter.build(model, codes, n_shards=2)
-    pool = srv.ForkedRouterPool(router)
-    recorded = []
-
-    class _RecordingEvent(threading.Event):
-        def wait(self, timeout=None):
-            recorded.append(timeout)
-            return super().wait(timeout=timeout)
-
-    class _PatchedPending(srv._PendingQuery):
-        def __init__(self, expected):
-            super().__init__(expected)
-            self.event = _RecordingEvent()
-
-    monkeypatch.setattr(srv, "_PendingQuery", _PatchedPending)
-    base = srv.ForkedRouterPool.REPLY_TIMEOUT_S
-    cap = srv.ForkedRouterPool.DEADLINE_DEPTH_CAP
-    all_shards = set(range(len(router.shards)))
-    try:
-        q = queries_np[0][1]
-        # (a) idle pool
-        pool.search(q, quota=QUOTA, k=TOP_K)
-        assert recorded[-1] == base
-
-        # (b) noise that must NOT scale the deadline: a completed-but-not-
-        # yet-popped query, and one owing a reply only from a shard no
-        # real query targets
-        done = srv._PendingQuery(set(all_shards))
-        for i in all_shards:
-            done.parts[i] = ((), ())
-        foreign = srv._PendingQuery({99})
-        with pool._pending_lock:
-            pool._pending[-1] = done
-            pool._pending[-2] = foreign
-        pool.search(q, quota=QUOTA, k=TOP_K)
-        assert recorded[-1] == base
-
-        # (c) a deep backlog owing replies from EVERY shard scales the
-        # deadline, capped
-        with pool._pending_lock:
-            for j in range(cap + 10):
-                pool._pending[-10 - j] = srv._PendingQuery(set(all_shards))
-        pool.search(q, quota=QUOTA, k=TOP_K)
-        assert recorded[-1] == base * (1 + cap)
+        q = _touching(router, queries_np, 0)
+        want = router.search(q, quota=QUOTA, k=TOP_K)
+        os.kill(pool._procs[0].pid, signal.SIGSTOP)
+        resume = _resume_after(pool._procs[0].pid, 0.5)
+        assert pool.search(q, quota=QUOTA, k=TOP_K) == want
+        resume.join()
         assert not pool._broken
+        assert pool.search(q, quota=QUOTA, k=TOP_K) == want
     finally:
-        with pool._pending_lock:
-            for key in [k for k in pool._pending if k < 0]:
-                pool._pending.pop(key)
         pool.close()
+
+
+def test_forked_pool_deadline_fixed_under_slot_backlog(
+    spark, model, codes, queries_np, monkeypatch
+):
+    """A wedged worker must be detected within a bounded time
+    however deep the backlog. The deadline is REPLY_TIMEOUT_S from each
+    query's start, never scaled by queue depth (a query queues behind at
+    most SLOTS - 1 others). And a healthy pool survives a slot-full
+    backlog: with one worker held stopped, more callers than slots pile
+    up, and once it resumes every caller gets the router's answer."""
+    import os
+    import signal
+    import threading
+
+    from columbiaimagesearch_spark.lopq import serving as srv
+
+    router = srv.ShardedServingRouter.build(model, codes, n_shards=2)
+    pool = srv.ForkedRouterPool(router)
+    pool.REPLY_TIMEOUT_S = 30.0
+    budgets = []
+    real_wait = srv._wait_fd
+
+    def recording_wait(fd, events, deadline):
+        budgets.append(deadline - srv.time.monotonic())
+        return real_wait(fd, events, deadline)
+
+    monkeypatch.setattr(srv, "_wait_fd", recording_wait)
+    q = _touching(router, queries_np, 0)
+    want = router.search(q, quota=QUOTA, k=TOP_K)
+    results, errors = [], []
+
+    def caller():
+        try:
+            results.append(pool.search(q, quota=QUOTA, k=TOP_K))
+        except Exception as e:  # noqa: BLE001 - surface to main thread
+            errors.append(repr(e))
+
+    try:
+        os.kill(pool._procs[0].pid, signal.SIGSTOP)
+        threads = [threading.Thread(target=caller) for _ in range(pool.SLOTS + 4)]
+        for t in threads:
+            t.start()
+        resume = _resume_after(pool._procs[0].pid, 1.0)
+        for t in threads:
+            t.join(timeout=60)
+        resume.join()
+        assert not any(t.is_alive() for t in threads), "a caller never finished"
+        assert not errors, errors[:3]
+        assert results == [want] * len(threads)
+        assert not pool._broken
+        assert budgets and max(budgets) <= pool.REPLY_TIMEOUT_S
+    finally:
+        pool.close()
+
+
+def test_forked_pool_stopped_worker_fails_within_deadline(
+    spark, model, codes, queries_np, monkeypatch
+):
+    """A wedged (SIGSTOPped) worker fails the query touching it with
+    PoolBrokenError once REPLY_TIMEOUT_S has passed — not later — and the
+    pool refuses every later query."""
+    import os
+    import signal
+    import time as _time
+
+    from columbiaimagesearch_spark.lopq import serving as srv
+
+    monkeypatch.setattr(srv.ForkedRouterPool, "REPLY_TIMEOUT_S", 0.5)
+    router = srv.ShardedServingRouter.build(model, codes, n_shards=2)
+    pool = srv.ForkedRouterPool(router)
+    pool.JOIN_GRACE_S = 0.2
+    try:
+        q = _touching(router, queries_np, 0)
+        os.kill(pool._procs[0].pid, signal.SIGSTOP)
+        t0 = _time.monotonic()
+        with pytest.raises(srv.PoolBrokenError):
+            pool.search(q, quota=QUOTA, k=TOP_K)
+        assert 0.5 <= _time.monotonic() - t0 < 5
+        with pytest.raises(srv.PoolBrokenError):
+            pool.search(queries_np[0][1], quota=QUOTA, k=TOP_K)
+    finally:
+        pool.close()
+
+
+def test_forked_pool_replies_larger_than_pipe_buffer(monkeypatch):
+    """Requests and replies both bigger than what a pipe buffers: a query
+    visiting every one of 4096 cells sends each shard ~10 KB of cells, so
+    callers in all SLOTS fill the request pipes, and a 6000-candidate
+    local shortlist (rerank_nb > 4096, 16 bytes each) blocks its worker
+    until the caller reads it. Every caller must finish — the ascending
+    send / descending read order leaves no wait cycle — and equal the
+    router."""
+    import threading
+
+    import pyarrow as pa
+
+    from columbiaimagesearch_spark.functions.arrow_vec import column
+    from columbiaimagesearch_spark.lopq import serving as srv
+    from test_lopq import _random_lopq
+
+    monkeypatch.setattr(srv.ForkedRouterPool, "REPLY_TIMEOUT_S", 20.0)
+    n, D, V = 24_000, 32, 64
+    rng = np.random.RandomState(11)
+    replica = ServingSearcher(_random_lopq(D, 16, V, 32, seed=3)).load_codes(
+        pa.table({
+            "cell": rng.randint(0, V * V, n),
+            "id": np.arange(n),
+            "fine": column(rng.randint(0, 32, (n, 16))),
+        })
+    )
+    replica.put_vectors(np.arange(n), rng.randn(n, D))
+    router = srv.ShardedServingRouter.from_replica(replica, 3)
+    kw = dict(quota=n, k=TOP_K, rerank_nb=6000,
+              fetch_vectors=router.resident_vectors)
+    qs = rng.randn(4, D)
+    want = [router.search(q, **kw) for q in qs]
+    errors: list = []
+    with srv.ForkedRouterPool(router) as pool:
+
+        def worker(j):
+            try:
+                for i in range(len(qs)):
+                    got = pool.search(qs[(i + j) % len(qs)], **kw)
+                    if got != want[(i + j) % len(qs)]:
+                        errors.append(j)
+            except Exception as e:  # noqa: BLE001 - surface to main thread
+                errors.append(repr(e))
+
+        threads = [
+            threading.Thread(target=worker, args=(j,)) for j in range(pool.SLOTS)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads), "pool deadlocked"
+        assert not pool._broken
+    assert not errors, errors[:3]
+
+
+def _open_fds() -> int:
+    import os
+
+    return len(os.listdir("/proc/self/fd"))
+
+
+def test_forked_pool_close_restores_fds_and_threads(spark, model, codes, queries_np):
+    """The pool keeps no threads of its own, and close() returns every
+    descriptor it opened: the parent's open files and threads are back at
+    their baseline afterwards, also after a broken pool."""
+    import threading
+
+    from columbiaimagesearch_spark.lopq.serving import (
+        ForkedRouterPool,
+        PoolBrokenError,
+        ShardedServingRouter,
+    )
+
+    router = ShardedServingRouter.build(model, codes, n_shards=4)
+    fds, threads = _open_fds(), threading.active_count()
+    pool = ForkedRouterPool(router)
+    assert threading.active_count() == threads
+    assert _open_fds() > fds
+    for _qid, q in queries_np:
+        pool.search(q, quota=QUOTA, k=TOP_K)
+    pool.close()
+    assert (_open_fds(), threading.active_count()) == (fds, threads)
+
+    pool = ForkedRouterPool(router)
+    q = _touching(router, queries_np, 0)
+    pool._procs[0].kill()
+    pool._procs[0].join()
+    with pytest.raises(PoolBrokenError):
+        pool.search(q, quota=QUOTA, k=TOP_K)
+    pool.close()
+    assert (_open_fds(), threading.active_count()) == (fds, threads)

@@ -54,22 +54,31 @@ def test_fit_spark_matches_driver_fit(spark, vec_data):
     assert np.array_equal(f_d, f_s)
 
 
-def test_cluster_moments_match_numpy(spark, vec_data):
+def test_cluster_moments_match_numpy(spark, vec_data, monkeypatch):
+    """Per-(slice, cluster) moments of two slices of different widths,
+    through the driver merge of the partials and through the distributed
+    groupBy merge (forced by a zero driver-merge budget)."""
     df, X = vec_data
     rng = np.random.RandomState(0)
-    centers = X[rng.choice(len(X), 4, replace=False), :32].copy()
-    stats = train_spark.cluster_moments(
-        df, centers, 0, 32, with_outer=True, subtract_center=True
-    )
-    Xh = X[:, :32]
-    d = (Xh**2).sum(1)[:, None] - 2 * Xh @ centers.T + (centers**2).sum(1)[None, :]
-    assign = d.argmin(axis=1)
-    for c in range(4):
-        R = Xh[assign == c] - centers[c]
-        n, s, op = stats[c]
-        assert n == R.shape[0]
-        np.testing.assert_allclose(s, R.sum(axis=0), atol=1e-9)
-        np.testing.assert_allclose(op, R.T @ R, atol=1e-8)
+    slices = {
+        0: (0, 32, X[rng.choice(len(X), 4, replace=False), :32].copy()),
+        1: (32, 48, X[rng.choice(len(X), 3, replace=False), 32:48].copy()),
+    }
+    for budget in (train_spark.MOMENTS_DRIVER_MERGE_MAX_BYTES, -1):
+        monkeypatch.setattr(train_spark, "MOMENTS_DRIVER_MERGE_MAX_BYTES", budget)
+        stats = train_spark.multi_cluster_moments(
+            df, slices, with_outer=True, subtract_center=True
+        )
+        for sl, (lo, hi, centers) in slices.items():
+            Xh = X[:, lo:hi]
+            d = (Xh**2).sum(1)[:, None] - 2 * Xh @ centers.T + (centers**2).sum(1)[None, :]
+            assign = d.argmin(axis=1)
+            for c in range(len(centers)):
+                R = Xh[assign == c] - centers[c]
+                n, s, op = stats[(sl, c)]
+                assert n == R.shape[0]
+                np.testing.assert_allclose(s, R.sum(axis=0), atol=1e-9)
+                np.testing.assert_allclose(op, R.T @ R, atol=1e-8)
 
 
 def test_pca_spark_matches_numpy(spark, vec_data):
