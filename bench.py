@@ -410,7 +410,7 @@ def serving_million_bench(
     def max_shard_rows(router, q: np.ndarray) -> int:
         """Worst single-shard scanned-row count for one query — the
         parallel-deployment wall the fat-cell slicing bounds."""
-        _qp, by_shard = router.plan_fanout(q, 10_000)
+        _qp, by_shard, _rows = router.plan_fanout(q, 10_000)
         return max(
             (
                 sum(router.shards[i][2].cell_counts.get(c, 0) for c in cells)

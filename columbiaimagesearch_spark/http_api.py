@@ -52,7 +52,8 @@ Transport: :func:`make_server` returns a :class:`PooledHTTPServer`, a
 fixed pool of :data:`SERVER_THREADS` accept threads. Each thread takes a
 connection and answers it start to finish, as each of the reference's
 gunicorn workers, holding the loaded searcher, serves a request; no thread
-is started and no other thread is woken per request.
+is started and no other thread is woken per request. The thread reads the
+request straight off the socket and sends the response with one write.
 
 Scale shape: the service holds ONLY budget-guarded serving state (codes
 dict, id→sha1 array, rerank vectors — the reference's per-worker LMDB/dict
@@ -66,10 +67,12 @@ from __future__ import annotations
 import base64
 import json
 import socket
+import socketserver
 import threading
 import time
 from datetime import datetime
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from email.utils import formatdate
+from http import HTTPStatus
 from typing import Any
 from urllib.parse import parse_qs, urlparse
 
@@ -157,6 +160,13 @@ class ImageSearchService:
         # optional ForkedRouterPool over a sharded searcher (see
         # enable_parallel_pool); None = answer in-process
         self._pool = None
+        # one query scores in-process at a time: without the pool, handler
+        # threads that score concurrently hand the GIL back and forth
+        # between numpy calls (19-22 voluntary context switches per request
+        # without the lock, 4.5-5.7 with it, at 100 req/s on a 4-core VM).
+        # The pool's local route takes it only if it is free; the
+        # in-process paths wait for it
+        self._search_lock = threading.Lock()
         # remembered across pool discards: a broken pool is dropped by the
         # fallback path, and refresh re-forks whenever parallel was asked
         # for — even if the pool was None at refresh time
@@ -339,7 +349,7 @@ class ImageSearchService:
         old, self._pool = self._pool, None
         if old is not None:
             old.close()
-        self._pool = ForkedRouterPool(self.searcher)
+        self._pool = ForkedRouterPool(self.searcher, lock=self._search_lock)
         self._parallel = True
 
     def close(self) -> None:
@@ -435,14 +445,16 @@ class ImageSearchService:
         V = arrow_vec.vectors(rows, "v", "ImageSearchService.refresh")
         codes = _encode_rows(self.model, ids, V)
         before = self.searcher.n_items
-        self.searcher.add_codes(codes)
-        # one code row per fresh item, in the rows' order, so the codes'
-        # cells line up with the vectors they route (a single replica
-        # ignores the cells)
+        # publish before admitting: a concurrent in-process search can
+        # return an id as soon as its codes are in a cell, so its rerank
+        # vector and metadata go in first and the codes last. One code row
+        # per fresh item, in the rows' order, so the codes' cells line up
+        # with the vectors they route (a single replica ignores the
+        # cells); new ids exceed every indexed id, so each sha1's id list
+        # stays in id order (same ADVICE r15 ordering contract as build)
         self.searcher.put_vectors(ids, V, np.asarray(codes.column("cell")))
-        # new ids exceed every indexed id, so each sha1's id list stays in
-        # id order (same ADVICE r15 ordering contract as build)
         _index_meta(rows, self.id_to_sha1, self.sha1_to_ids, self.id_to_bbox)
+        self.searcher.add_codes(codes)
         if self._parallel:
             # forked children hold the PRE-refresh index copy-on-write;
             # re-fork so queries see the admitted rows (refresh is
@@ -474,7 +486,7 @@ class ImageSearchService:
         # query that grabbed the pool just as a refresh swapped it meets
         # closed pipes — answer that one in-process (same result by the
         # pool==router equality) instead of surfacing a 500.
-        engine = self._pool if self._pool is not None else self.searcher
+        engine = self._pool
 
         def _run(eng):
             if rerank_nb <= 0:
@@ -488,12 +500,16 @@ class ImageSearchService:
             )
             return [(int(i), float(ex)) for i, _adc, ex in hits]
 
+        def _in_process():
+            with self._search_lock:
+                return _run(self.searcher)
+
         from .lopq.serving import PoolBrokenError
 
         try:
-            rows = _run(engine)
+            rows = _in_process() if engine is None else _run(engine)
         except PoolBrokenError:  # only the pool raises it
-            rows = _run(self.searcher)
+            rows = _in_process()
             # The failed pool must not serve later queries (ADVICE r9: a
             # dead-worker pool left installed kept answering). If it is
             # still the installed one — a refresh-swap already replaced it
@@ -1028,25 +1044,167 @@ SERVER_THREADS = 16
 #: connection, so a client that connects and never sends cannot hold an
 #: accept thread for good
 REQUEST_TIMEOUT_S = 30.0
+#: a request head (request line and headers) longer than this, or with more
+#: header lines than MAX_HEADERS, is refused with 431
+MAX_HEAD_BYTES = 64 * 1024
+MAX_HEADERS = 100
+#: a request body longer than this is refused with 413 before it is read
+MAX_BODY_BYTES = 16 * 1024 * 1024
+#: seconds a refused client's remaining input is read and dropped before
+#: the connection closes
+LINGER_S = 1.0
 
 
-class PooledHTTPServer(ThreadingHTTPServer):
-    """A ThreadingHTTPServer answered by a fixed pool of accept threads.
+class _Headers:
+    """A request's header fields; :meth:`get` ignores the name's case."""
+
+    def __init__(self, fields: dict[str, str]) -> None:
+        self._fields = fields  # lower-cased name -> value
+
+    def get(self, name: str, default=None):
+        return self._fields.get(name.lower(), default)
+
+
+class _Refused(Exception):
+    """A request the reader answers itself with ``code``."""
+
+    def __init__(self, code: int, message: str) -> None:
+        super().__init__(message)
+        self.code = code
+
+
+def _http_response(code: int, content_type: str, body: bytes) -> bytes:
+    """One whole HTTP/1.0 response: status line, headers and ``body``."""
+    head = (
+        f"HTTP/1.0 {code} {HTTPStatus(code).phrase}\r\n"
+        f"Date: {formatdate(usegmt=True)}\r\n"
+        f"Content-Type: {content_type}\r\n"
+        f"Content-Length: {len(body)}\r\n"
+        "Connection: close\r\n\r\n"
+    )
+    return head.encode("latin-1") + body
+
+
+def _recv_head(sock: socket.socket) -> tuple[bytes, bytearray] | None:
+    """(head, bytes after it) off ``sock``; None if the client closed
+    before the blank line ending the head."""
+    buf = bytearray()
+    while True:
+        chunk = sock.recv(1 << 16)
+        if not chunk:
+            return None
+        start = max(0, len(buf) - 3)  # the blank line may straddle chunks
+        buf += chunk
+        end = buf.find(b"\r\n\r\n", start)
+        if end >= 0 and end <= MAX_HEAD_BYTES:
+            return bytes(buf[:end]), buf[end + 4:]
+        if end >= 0 or len(buf) > MAX_HEAD_BYTES:
+            raise _Refused(431, f"request head over {MAX_HEAD_BYTES} bytes")
+
+
+def _read_request(sock: socket.socket, handler_class):
+    """Read one request off ``sock``: ``(method, target, headers, body)``,
+    or None when the client went away before sending all of it. Raises
+    :class:`_Refused` for a request the handler must not see."""
+    got = _recv_head(sock)
+    if got is None:
+        return None
+    head, body = got
+    lines = head.decode("latin-1").split("\r\n")
+    words = lines[0].split()
+    if len(words) != 3 or not words[2].startswith("HTTP/"):
+        raise _Refused(400, f"bad request line {lines[0][:200]!r}")
+    method, target, _version = words
+    if len(lines) - 1 > MAX_HEADERS:
+        raise _Refused(431, f"more than {MAX_HEADERS} header lines")
+    fields: dict[str, str] = {}
+    for line in lines[1:]:
+        name, sep, value = line.partition(":")
+        if not sep or not name or name != name.strip():
+            raise _Refused(400, f"bad header line {line[:200]!r}")
+        fields.setdefault(name.lower(), value.strip())
+    headers = _Headers(fields)
+    if not hasattr(handler_class, "do_" + method):
+        raise _Refused(501, f"unsupported method {method[:50]!r}")
+    length = headers.get("Content-Length", "0")
+    if not (length.isascii() and length.isdigit()):
+        raise _Refused(400, f"bad Content-Length {length[:50]!r}")
+    length = int(length)
+    if length > MAX_BODY_BYTES:
+        raise _Refused(413, f"body over {MAX_BODY_BYTES} bytes")
+    while len(body) < length:
+        chunk = sock.recv(min(1 << 16, length - len(body)))
+        if not chunk:
+            return None
+        body += chunk
+    return method, target, headers, bytes(body[:length])
+
+
+def _linger(sock: socket.socket) -> None:
+    """After a refusal, discard what the client still sends, for at most
+    :data:`LINGER_S`: closing a socket with unread input resets the
+    connection, and the client could lose the refusal it has not read."""
+    sock.shutdown(socket.SHUT_WR)
+    deadline = time.monotonic() + LINGER_S
+    while (left := deadline - time.monotonic()) > 0:
+        sock.settimeout(left)
+        if not sock.recv(1 << 16):
+            return
+
+
+class RequestHandler:
+    """One request as :class:`PooledHTTPServer` hands it to its handler
+    class: ``command``, ``path``, ``headers`` (``headers.get`` ignores
+    case) and the whole ``body``. The server calls the ``do_<command>``
+    method it finds on the class at request time; that method answers
+    through :meth:`send`, and the server writes the response once the
+    method returns (no response: the connection just closes)."""
+
+    def __init__(self, command: str, path: str, headers: _Headers,
+                 body: bytes) -> None:
+        self.command = command
+        self.path = path
+        self.headers = headers
+        self.body = body
+        self.response: bytes | None = None
+
+    def send(self, code: int, content_type: str, body: bytes) -> None:
+        """Answer with ``code`` and ``body``; a later call replaces it."""
+        self.response = _http_response(code, content_type, body)
+
+
+class PooledHTTPServer(socketserver.TCPServer):
+    """An HTTP/1.0 server answered by a fixed pool of accept threads.
 
     Each of the :data:`SERVER_THREADS` threads blocks in ``accept()`` on
     the listening socket and serves the connection it gets from start to
-    finish (parse, route, featurize, fan out, merge, reply, close), then
+    finish (read, route, featurize, fan out, merge, reply, close), then
     accepts again — the reference's gunicorn shape, where a worker holding
-    the loaded searcher serves a request start to finish. The stock server
-    wakes a selector thread per connection and starts a new thread to
-    serve it; at the load generator's one connection per request that cost
-    about half a millisecond of server CPU per request at 100 req/s on a
-    4-core VM, more than the HTTP parse and JSON work themselves.
+    the loaded searcher serves a request start to finish. One request per
+    connection.
+
+    The request reader: the thread reads the request head straight off the
+    socket into one buffer, parses the request line and the header lines,
+    reads exactly ``Content-Length`` body bytes, builds an instance of
+    ``RequestHandlerClass`` (a :class:`RequestHandler`; no ``socketserver``
+    handler, no file objects over the socket) and calls its ``do_<method>``
+    looked up at call time, so a wrapper installed on the class later still
+    sees every request. The response is built in memory and sent with one
+    ``sendall``. A socket silent for :data:`REQUEST_TIMEOUT_S` is dropped.
+    Refused without calling the handler: a bad request line or header line
+    (400), an unknown method (501), a head over :data:`MAX_HEAD_BYTES` or
+    with more than :data:`MAX_HEADERS` header lines (431), a bad
+    ``Content-Length`` (400) and a body over :data:`MAX_BODY_BYTES` (413).
+    Against ``http.server``'s handler (file objects over the socket, the
+    email header parser, one write per response part) this cut the server
+    CPU per request from 1.68-1.71 to 1.03-1.21 ms in the ``serve``
+    workload (100 req/s, 4-core VM).
 
     Same surface as the stock server: ``server_address``,
-    ``serve_forever`` (runs the pool until :meth:`shutdown`),
-    ``shutdown`` and ``server_close``."""
+    ``RequestHandlerClass``, ``serve_forever`` (runs the pool until
+    :meth:`shutdown`), ``shutdown`` and ``server_close``."""
 
+    allow_reuse_address = True
     # while every pool thread is busy, a burst of connections waits in the
     # listen backlog (the stock server's is 5)
     request_queue_size = 4 * SERVER_THREADS
@@ -1087,7 +1245,31 @@ class PooledHTTPServer(ThreadingHTTPServer):
                     return
                 continue
             # a connection taken just as shutdown() began is still answered
-            self.process_request_thread(request, client_address)
+            try:
+                request.settimeout(REQUEST_TIMEOUT_S)
+                self._answer(request)
+            except OSError:
+                pass  # the client timed out or went away; nothing to answer
+            except Exception:  # noqa: BLE001 — keep the accept thread alive
+                self.handle_error(request, client_address)
+            finally:
+                self.shutdown_request(request)
+
+    def _answer(self, sock: socket.socket) -> None:
+        handler_class = self.RequestHandlerClass
+        try:
+            req = _read_request(sock, handler_class)
+        except _Refused as refused:
+            body = json.dumps({"error": str(refused)}).encode()
+            sock.sendall(_http_response(refused.code, "application/json", body))
+            _linger(sock)
+            return
+        if req is None:
+            return
+        handler = handler_class(*req)
+        getattr(handler, "do_" + handler.command)()
+        if handler.response is not None:
+            sock.sendall(handler.response)
 
     def shutdown(self) -> None:
         """Stop accepting, let the requests in flight finish, join every
@@ -1113,24 +1295,14 @@ def make_server(
     (port 0 = ephemeral; read ``server.server_address``). Routes
     GET/POST ``/<endpoint>/<mode>`` exactly like the reference registration
     (``run_search_api.py:61``); POST accepts urlencoded forms or a JSON
-    body with {data, options} (``put_post``, api.py:92-118). A handler
+    body with {data, options} (``put_post``, api.py:92-118). The server
     drops a client whose socket stays silent for
     :data:`REQUEST_TIMEOUT_S`."""
     prefix = f"/{endpoint}/"
 
-    class Handler(BaseHTTPRequestHandler):
-        timeout = REQUEST_TIMEOUT_S
-
-        def log_message(self, *args):  # quiet test output
-            pass
-
+    class Handler(RequestHandler):
         def _respond(self, obj: dict, code: int = 200) -> None:
-            body = json.dumps(obj).encode()
-            self.send_response(code)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+            self.send(code, "application/json", json.dumps(obj).encode())
 
         def _route(self, data: str | None, options_raw: str | None) -> None:
             parsed = urlparse(self.path)
@@ -1158,11 +1330,7 @@ def make_server(
                 body = _render_similar_html(
                     resp, srcs, endpoint, view_opts
                 ).encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "text/html; charset=utf-8")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                self.send(200, "text/html; charset=utf-8", body)
                 return
             if mode == "view_image_sha1":
                 # binary response (the reference renders HTML around the
@@ -1174,41 +1342,31 @@ def make_server(
                 from .multimodal.images import sniff_image_header
 
                 fmt, _w, _h = sniff_image_header(content)
-                body = content
-                self.send_response(200)
-                self.send_header(
-                    "Content-Type",
+                self.send(
+                    200,
                     f"image/{fmt.lower()}" if fmt else "application/octet-stream",
+                    content,
                 )
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
                 return
             self._respond(_process(service, mode, data, options_raw))
 
         def _safely(self, fn) -> None:
             """Error envelope for the whole request path: any uncaught
             exception (malformed JSON body, invalid base64, handler bug)
-            answers a JSON error object with 400 instead of killing the
-            handler thread with a closed socket (the reference reports
-            these through its errors fields, api.py:192-215)."""
+            answers a JSON error object with 400 instead of a dropped
+            connection (the reference reports these through its errors
+            fields, api.py:192-215)."""
             try:
                 fn()
-            except BrokenPipeError:
-                pass  # client went away mid-response; nothing to answer
             except Exception as inst:  # noqa: BLE001 — transport error envelope
-                try:
-                    self._respond({"error": f"{type(inst).__name__}: {inst}"}, 400)
-                except Exception:  # noqa: BLE001 — socket already unusable
-                    pass
+                self._respond({"error": f"{type(inst).__name__}: {inst}"}, 400)
 
         def do_GET(self):
             self._safely(lambda: self._route(None, None))
 
         def do_POST(self):
             def handle():
-                length = int(self.headers.get("Content-Length", 0))
-                raw = self.rfile.read(length).decode() if length else ""
+                raw = self.body.decode()
                 ctype = self.headers.get("Content-Type", "")
                 if "json" in ctype:
                     form = json.loads(raw) if raw else {}

@@ -12,8 +12,9 @@ table that batch search probes is loaded once into an in-memory dict
 numpy: multisequence cell ordering, ADC LUT gather, argpartition top-k.
 Batch (Spark) and serving answers are identical by construction — the tests
 assert result equality query-for-query. At scale each serving replica loads
-only its model + the codes table (codes are ~M bytes/vector, so 100 M
-vectors x M=8 ≈ 1.6 GB — the reference's LMDB sizing envelope)."""
+only its model + the codes table. A resident row is its int64 id plus M
+int64 fine codes, 8 + 8·M bytes: 136 B at M=16, so 10 M rows take about
+1.4 GB."""
 
 from __future__ import annotations
 
@@ -34,9 +35,10 @@ from .model import LOPQModel, LOPQModelPCA
 from .search import adc_batch_dists, multisequence_cells
 
 
-# Snapshot row cap: (id + M fine codes) ≈ 30-80 B/row in the dict layout, so
-# 50M rows ≈ a few GB — the reference's LMDB sizing envelope ("millions of
-# images" per serving replica). Beyond it, one replica must NOT hold the
+# Snapshot row cap: a resident row is its int64 id plus M int64 fine codes,
+# 8 + 8·M bytes (72 B at M=8, 136 B at M=16), so 50M rows take 3.6-6.8 GB —
+# the reference's LMDB sizing envelope ("millions of images" per serving
+# replica). Beyond it, one replica must NOT hold the
 # whole index: shard it with ShardedServingRouter, which collects the codes
 # once and hands each shard the (cell, id) rows it owns in memory (a
 # cumulative-mass cell range plus its slices of split fat cells), each
@@ -308,7 +310,7 @@ class ServingSearcher:
             self._M,
             "ServingSearcher.load_codes",
         )
-        self._counts_cache = None
+        self._recount()
         return self
 
     def add_codes(self, codes) -> "ServingSearcher":
@@ -343,26 +345,31 @@ class ServingSearcher:
                 np.concatenate([ids, new_ids[keep]]),
                 np.concatenate([fines, new_fines[keep]]),
             )
-            self._counts_cache = None
+        self._recount()
         return self
 
     @property
     def n_items(self) -> int:
         return sum(len(ids) for ids, _ in self._cells.values())
 
+    def _recount(self) -> None:
+        """Rebuild :attr:`cell_counts` and publish it in one assignment.
+        Writers call it once their cells are in place, so a concurrent
+        reader sees the old map or the new one, never a half-built map."""
+        self._counts_cache = {c: len(ids) for c, (ids, _) in self._cells.items()}
+
     @property
     def cell_counts(self) -> dict[int, int]:
         """Per-cell populations of this replica — the router's planning
         input (merged across shards, it reconstructs the global histogram
-        the single-replica multisequence traversal uses). Cached: the map
-        only changes on load_codes/add_codes (which invalidate), and at
+        the single-replica multisequence traversal uses). Built by the
+        writers (load_codes, add_codes, the router's re-shard), because at
         production cell counts (V=4096 -> millions of occupied cells) a
-        per-query rebuild would dwarf the ms-scale search itself. Callers
-        treat the returned dict as read-only."""
+        per-query rebuild would dwarf the ms-scale search itself; a replica
+        whose cells were assigned directly counts them on first read.
+        Callers treat the returned dict as read-only."""
         if self._counts_cache is None:
-            self._counts_cache = {
-                c: len(ids) for c, (ids, _) in self._cells.items()
-            }
+            self._recount()
         return self._counts_cache
 
     def score_cells(self, q: np.ndarray, cells) -> tuple[np.ndarray, np.ndarray]:
@@ -518,7 +525,7 @@ class ShardedServingRouter:
         self.shards = shards  # (cell_lo, cell_hi_inclusive, replica)
         # cell -> [owner shard index per id-mod slice]; overrides ranges
         self._splits = splits or {}
-        self._global_counts_cache: dict[int, int] | None = None
+        self._hist = self._merged_counts()
 
     def _owners(self, cells, ids) -> np.ndarray:
         return _shard_owners(
@@ -590,6 +597,7 @@ class ShardedServingRouter:
                     shards[i]._cells[c] = (ids[mask].copy(), fines[mask].copy())
         for s in shards:
             s._check_budget(s.n_items)
+            s._recount()
         vectors = getattr(replica, "_vectors", None) or {}
         if vectors:
             vec_ids = np.fromiter(vectors, dtype=np.int64, count=len(vectors))
@@ -672,7 +680,7 @@ class ShardedServingRouter:
         for (_lo, _hi, s), part in zip(self.shards, parts):
             if part.num_rows:
                 s.add_codes(part)
-        self._global_counts_cache = None
+        self._hist = self._merged_counts()
         return self
 
     def put_vectors(self, ids, V, cells) -> None:
@@ -703,21 +711,26 @@ class ShardedServingRouter:
                 raise KeyError(f"id {int(i)} has no resident vector")
         return np.stack(out)
 
+    def _merged_counts(self) -> dict[int, int]:
+        """Merged per-cell histogram across shards. Only the writers call
+        it (construction, add_codes), and each publishes the result in one
+        assignment: a reader never fills or clears the histogram, so a
+        plan that raced an add cannot leave a half-updated map behind for
+        every later plan."""
+        merged: dict[int, int] = {}
+        for _, _, s in self.shards:
+            # ranges are disjoint but SPLIT cells live on several shards —
+            # sum, never overwrite, or the traversal would plan against one
+            # slice's population
+            for c, n in s.cell_counts.items():
+                merged[c] = merged.get(c, 0) + n
+        return merged
+
     def _global_counts(self) -> dict[int, int]:
-        """Merged per-cell histogram across shards — cached like the
-        single replica's ``cell_counts`` (it only changes on add_codes,
-        which invalidates; a per-query rebuild would dominate the ms-scale
-        search at production cell counts)."""
-        if self._global_counts_cache is None:
-            merged: dict[int, int] = {}
-            for _, _, s in self.shards:
-                # ranges are disjoint but SPLIT cells live on several
-                # shards — sum, never overwrite, or the traversal would
-                # plan against one slice's population
-                for c, n in s.cell_counts.items():
-                    merged[c] = merged.get(c, 0) + n
-            self._global_counts_cache = merged
-        return self._global_counts_cache
+        """The merged per-cell histogram plans are made against (read
+        only; a per-query rebuild would dominate the ms-scale search at
+        production cell counts)."""
+        return self._hist
 
     def plan_fanout(
         self, q: np.ndarray, quota: int
@@ -727,7 +740,9 @@ class ShardedServingRouter:
         multisequence grid ONCE against the global histogram, and group the
         visited cells by owning shard — split cells go to EVERY owning
         shard, the rest bisect over the sorted range starts (O(visited log
-        shards)). Returns the projected query and ``{shard: cells}``."""
+        shards)). Returns the projected query, ``{shard: cells}`` and the
+        rows the plan scans (the global histogram summed over the visited
+        cells)."""
         q = np.asarray(q, dtype=np.float64)
         model = self.model
         if isinstance(model, LOPQModelPCA):
@@ -736,7 +751,10 @@ class ShardedServingRouter:
         d1, d2 = model.coarse_distances(q)
         lows = [lo for lo, _hi, _s in self.shards]
         by_shard: dict[int, list[int]] = {}
-        for cell in multisequence_cells(d1, d2, self._global_counts(), quota):
+        counts = self._hist
+        rows = 0
+        for cell in multisequence_cells(d1, d2, counts, quota):
+            rows += counts.get(cell, 0)
             owners = self._splits.get(cell)
             if owners is not None:
                 for i in set(owners):
@@ -745,7 +763,7 @@ class ShardedServingRouter:
             i = bisect.bisect_right(lows, cell) - 1
             if i >= 0 and cell <= self.shards[i][1]:
                 by_shard.setdefault(i, []).append(cell)
-        return q, by_shard
+        return q, by_shard, rows
 
     def search(
         self,
@@ -757,7 +775,7 @@ class ShardedServingRouter:
     ) -> list[tuple]:
         """Same contract (and answers) as ``ServingSearcher.search`` over
         the union of all shards."""
-        q, by_shard = self.plan_fanout(q, quota)
+        q, by_shard, _rows = self.plan_fanout(q, quota)
         # each shard scores only the visited (cell-)slices it owns. The
         # fan-out is SEQUENTIAL in-process — threading it was measured
         # 1.6-10x SLOWER at a 1M-row index (GIL contention between the many
@@ -870,6 +888,20 @@ class ForkedRouterPool:
     union of per-shard top-k's, so the merge is exact and answers are
     IDENTICAL to ``router.search`` (pinned by tests).
 
+    Route rule: every query is planned; then a plan that scans at most
+    :attr:`LOCAL_MAX_ROWS` rows (the global histogram summed over its
+    visited cells) is scored in the calling thread, with the shards' own
+    ``score_cells`` and the shared merge, when no other query is in the
+    pool and the in-process scoring lock is free. Every other query fans
+    out to the workers. One busy count covers both routes, so at most one
+    query scores locally and concurrent queries use the workers. The bound
+    is the measured crossover: below it one warm thread scores a plan in
+    less time and far less CPU than the round trip costs (two cold
+    workers woken, a request and a reply per shard); above it the
+    parallel fan-out wins the latency (SCALE.md, "Local route and the
+    request reader"). Either
+    route answers bitwise equal to ``router.search``.
+
     Protocol: raw bytes over OS pipes, nothing pickled. Each worker reads
     one request pipe; a request is a fixed ``struct`` header (slot, nb,
     query length, cell count) and the raw float64 query and int64 cells.
@@ -891,7 +923,8 @@ class ForkedRouterPool:
     query) and makes every later query raise too. A query queues behind at
     most ``SLOTS - 1`` others per worker, so the fixed deadline bounds how
     long a wedged worker goes unnoticed. Callers catch
-    :class:`PoolBrokenError`, fall back, and re-fork.
+    :class:`PoolBrokenError`, fall back, and re-fork. A broken or closed
+    pool refuses local-route queries too.
 
     This is a measurement/deployment harness, not a distributed system:
     real shards live on separate machines behind RPC with the same
@@ -912,13 +945,22 @@ class ForkedRouterPool:
     # close(): how long to wait for a worker to exit on its own before
     # escalating to terminate/kill
     JOIN_GRACE_S = 5.0
+    # plans scanning at most this many rows are scored in the calling
+    # thread while the pool is idle: the crossover of one warm thread
+    # against the fan-out round trip, measured on the serve workload's
+    # index (SCALE.md, "Local route and the request reader")
+    LOCAL_MAX_ROWS = 4096
 
-    def __init__(self, router: "ShardedServingRouter") -> None:
+    def __init__(self, router: "ShardedServingRouter",
+                 lock: threading.Lock | None = None) -> None:
+        """``lock`` is the caller's in-process scoring lock (a service
+        shares one with its in-process fallback); the local route runs
+        only while it is free."""
         import multiprocessing as mp
 
         ctx = mp.get_context("fork")
         self.router = router
-        router._global_counts()  # build the merged histogram pre-fork
+        self._local_lock = lock or threading.Lock()
         n = len(router.shards)
         self._broken = False
         self._closing = False
@@ -1014,17 +1056,33 @@ class ForkedRouterPool:
             self._busy += 1
             return self._free.pop()
 
-    def _release(self, slot: int, clean: bool) -> None:
-        """Return ``slot`` once all its replies were read; otherwise a reply
-        may still land in its pipes, so the slot is retired and the pool
-        marked broken."""
+    def _enter_local(self) -> bool:
+        """Claim the local route: only while no other query is in the pool
+        (slot holders and a local query share the busy count) and the
+        in-process scoring lock is free."""
+        with self._slots:
+            if self._busy or self._broken or self._closing:
+                return False
+            if not self._local_lock.acquire(blocking=False):
+                return False
+            self._busy += 1
+            return True
+
+    def _release(self, slot: int | None, clean: bool = True) -> None:
+        """Leave the pool: a local-route query (``slot`` None) gives the
+        scoring lock back; a slot returns to the free list once all its
+        replies were read, otherwise a reply may still land in its pipes,
+        so the slot is retired and the pool marked broken."""
         with self._slots:
             self._busy -= 1
-            if clean:
-                self._free.append(slot)
+            if slot is None:
+                self._local_lock.release()
             else:
-                self._broken = True
-            self._slots.notify_all()
+                if clean:
+                    self._free.append(slot)
+                else:
+                    self._broken = True
+                self._slots.notify_all()
             if self._closing and not self._busy:
                 self._close_fds()
 
@@ -1065,20 +1123,31 @@ class ForkedRouterPool:
         rerank_nb: int = 0,
         fetch_vectors=None,
     ) -> list[tuple]:
-        """Same contract (and answers) as ``router.search`` — the fan-out
-        is the parallel part; plan, merge, and the exact rerank over the
-        k-ish shortlist stay in the parent (sub-ms at serving scale).
-        Workers reply their local top-``max(k, rerank_nb)``: the global
-        shortlist under (dist, id) order is a subset of that union, so
-        rerank inputs are identical to the sequential router's. Safe for
-        concurrent callers (one slot each, see the class docstring).
-        Raises :class:`PoolBrokenError` if the pool broke (worker death,
-        timeout) before or during the query."""
+        """Same contract (and answers) as ``router.search``. A light plan
+        on an idle pool is scored in this thread (the route rule in the
+        class docstring); otherwise the fan-out is the parallel part, and
+        plan, merge, and the exact rerank over the k-ish shortlist stay in
+        the parent (sub-ms at serving scale). Workers reply their local
+        top-``max(k, rerank_nb)``: the global shortlist under (dist, id)
+        order is a subset of that union, so rerank inputs are identical to
+        the sequential router's. Safe for concurrent callers (one slot
+        each, see the class docstring). Raises :class:`PoolBrokenError` if
+        the pool broke (worker death, timeout) before or during the
+        query."""
         if self._broken or self._closing:
             raise PoolBrokenError(
                 "pool is broken or closed; fork a fresh ForkedRouterPool"
             )
-        q, by_shard = self.router.plan_fanout(q, quota)
+        q, by_shard, rows = self.router.plan_fanout(q, quota)
+        if by_shard and rows <= self.LOCAL_MAX_ROWS and self._enter_local():
+            try:
+                parts = [
+                    self.router.shards[i][2].score_cells(q, by_shard[i])
+                    for i in sorted(by_shard)
+                ]
+                return _merge_topk(q, parts, k, rerank_nb, fetch_vectors)
+            finally:
+                self._release(None)
         nb = max(int(k), int(rerank_nb)) if rerank_nb else int(k)
         parts = {}
         if by_shard:

@@ -780,13 +780,18 @@ def test_view_image_sha1_returns_bytes(spark, domain_images, server, service):
         assert e.code == 404
 
 
-def test_parallel_pool_service_same_answers_and_refresh(spark, domain_images):
+def test_parallel_pool_service_same_answers_and_refresh(
+    spark, domain_images, monkeypatch
+):
     """build(parallel=True, n_shards=2) answers byB64/bySHA1 through the
     forked per-shard pool — identical to the sequential sharded service,
     including the exact-rerank path — and refresh re-forks the pool so
     queries see the admitted rows (COW children hold the pre-refresh
-    index)."""
+    index). Every query goes to the workers (no local route)."""
+    from columbiaimagesearch_spark.lopq.serving import ForkedRouterPool
     from columbiaimagesearch_spark.sources import fixtures
+
+    monkeypatch.setattr(ForkedRouterPool, "LOCAL_MAX_ROWS", 0)
 
     sharded = http_api.ImageSearchService.build(
         spark, domain_images, n_shards=2
@@ -828,6 +833,65 @@ def test_parallel_pool_service_same_answers_and_refresh(spark, domain_images):
         pooled._pool.close()
 
 
+def test_refresh_publishes_vectors_and_metadata_before_codes(
+    spark, domain_images, monkeypatch
+):
+    """An in-process reader may return an id as soon as its codes sit in a
+    cell, so refresh registers the rerank vectors and the sha1s first and
+    admits the codes last. Pause the admit after its first shard and query
+    fresh images by their own bytes over HTTP: every answer is a 200 that
+    names known sha1s, and a fresh image already admitted finds itself."""
+    from columbiaimagesearch_spark.lopq.serving import ServingSearcher
+    from columbiaimagesearch_spark.sources import fixtures
+
+    svc = http_api.ImageSearchService.build(spark, domain_images, n_shards=2)
+    new_images = fixtures.generate(n_images=215).to_spark(spark)["images"]
+    fresh = [
+        r for r in new_images.orderBy("sha1").collect()
+        if r["sha1"] not in svc.sha1_to_ids
+    ]
+    assert fresh
+    admitted, go = threading.Event(), threading.Event()
+    real_add = ServingSearcher.add_codes
+
+    def paused_add(self, codes):
+        out = real_add(self, codes)
+        if not admitted.is_set():
+            admitted.set()
+            go.wait(60)
+        return out
+
+    monkeypatch.setattr(ServingSearcher, "add_codes", paused_add)
+    srv = http_api.make_server(svc)
+    http_api.serve_in_thread(srv)
+    refresher = threading.Thread(target=svc.refresh, args=(new_images,))
+    refresher.start()
+    try:
+        assert admitted.wait(300), "refresh never admitted a shard"
+        known = set(svc.sha1_to_ids)
+        self_hits = 0
+        for r in fresh:
+            req = urllib.request.Request(
+                _url(srv, "byB64"),
+                data=json.dumps({
+                    "data": base64.b64encode(bytes(r["content"])).decode()
+                }).encode(),
+                headers={"Content-Type": "application/json"},
+            )
+            with urllib.request.urlopen(req, timeout=30) as resp:
+                assert resp.status == 200
+                sims = json.loads(resp.read())["images"][0]["SimilarImages"]
+            assert set(sims["ImageSha1s"]) <= known
+            self_hits += sims["ImageSha1s"][:1] == [r["sha1"]]
+        assert self_hits, "no fresh image was admitted before the pause"
+    finally:
+        go.set()
+        refresher.join(60)
+        srv.shutdown()
+        srv.server_close()
+    assert svc.searcher.n_items == len(svc.id_to_sha1)
+
+
 def test_parallel_pool_requires_sharded_service(spark, domain_images):
     import pytest
 
@@ -836,10 +900,16 @@ def test_parallel_pool_requires_sharded_service(spark, domain_images):
         single.enable_parallel_pool()
 
 
-def test_broken_pool_is_discarded_and_reforked(spark, domain_images):
+def test_broken_pool_is_discarded_and_reforked(
+    spark, domain_images, monkeypatch
+):
     """ADVICE r9: a dead-worker pool must not stay installed. Kill the
     pool's workers; the next query answers in-process (correct result),
-    and the service swaps in a FRESH pool — never the desynced one."""
+    and the service swaps in a FRESH pool — never the desynced one. Every
+    pool query goes to the workers (no local route), so the death shows."""
+    from columbiaimagesearch_spark.lopq.serving import ForkedRouterPool
+
+    monkeypatch.setattr(ForkedRouterPool, "LOCAL_MAX_ROWS", 0)
     pooled = http_api.ImageSearchService.build(
         spark, domain_images, n_shards=2, parallel=True
     )
@@ -1321,3 +1391,152 @@ def test_server_drops_silent_client_after_handler_timeout(monkeypatch):
         srv.shutdown()
     _assert_stopped(srv, serving)
     srv.server_close()
+
+
+# -- the request reader ---------------------------------------------------------
+
+
+class _EchoService:
+    """Stands in for the service: ``status`` answers OK and ``bySHA1``
+    echoes the items it was sent, so a response shows the whole body
+    arrived; ``calls`` counts the searches."""
+
+    def __init__(self) -> None:
+        self.calls = 0
+
+    def status(self) -> dict:
+        return {"status": "OK"}
+
+    def search_sha1_list(self, sha1s: list[str], opts: dict) -> dict:
+        self.calls += 1
+        return {"images": sha1s}
+
+
+def _raw_request(srv, *chunks: bytes, pause: float = 0.0) -> tuple[int, dict]:
+    """Send ``chunks`` on one connection (``pause`` seconds apart, so each
+    arrives as its own TCP segment), then read the whole response: its
+    status code and JSON body."""
+    with socket.create_connection(srv.server_address, timeout=10) as sock:
+        for chunk in chunks:
+            sock.sendall(chunk)
+            time.sleep(pause)
+        data = b""
+        while True:
+            got = sock.recv(1 << 16)
+            if not got:
+                break
+            data += got
+    head, _, body = data.partition(b"\r\n\r\n")
+    return int(head.split(b" ", 2)[1]), json.loads(body)
+
+
+def _post_head(path: str, length: int, *extra: str) -> bytes:
+    lines = [f"POST /cuimgsearch/{path} HTTP/1.1", "Host: x",
+             "Content-Type: application/json", f"Content-Length: {length}",
+             *extra]
+    return ("\r\n".join(lines) + "\r\n\r\n").encode()
+
+
+@pytest.fixture
+def echo_server():
+    svc = _EchoService()
+    srv, serving = _start_pool(svc)
+    yield srv, svc
+    srv.shutdown()
+    _assert_stopped(srv, serving)
+    srv.server_close()
+
+
+@pytest.mark.parametrize("request_bytes, code", [
+    (b"GARBAGE\r\n\r\n", 400),
+    (b"GET /cuimgsearch/status FTP/1.0\r\n\r\n", 400),
+    (b"GET /cuimgsearch/status HTTP/1.0\r\nno colon here\r\n\r\n", 400),
+    (b"BREW /cuimgsearch/status HTTP/1.0\r\n\r\n", 501),
+    (b"GET /cuimgsearch/status HTTP/1.0\r\nX: " + b"a" * (64 * 1024)
+     + b"\r\n\r\n", 431),
+    (b"GET /cuimgsearch/status HTTP/1.0\r\n"
+     + b"".join(b"X-%d: 1\r\n" % i for i in range(101)) + b"\r\n", 431),
+    (_post_head("bySHA1", 0).replace(b"Length: 0", b"Length: -1"), 400),
+    (_post_head("bySHA1", 0).replace(b"Length: 0", b"Length: 1e3"), 400),
+    (_post_head("bySHA1", http_api.MAX_BODY_BYTES + 1) + b"{}", 413),
+])
+def test_request_reader_refusals(echo_server, request_bytes, code):
+    """Each malformed or oversized request is answered by the reader with
+    its status and a JSON error, and never reaches the handler."""
+    srv, svc = echo_server
+    status, body = _raw_request(srv, request_bytes)
+    assert status == code and "error" in body
+    assert svc.calls == 0
+    # the accept thread that refused it serves the next request
+    assert _raw_request(srv, b"GET /cuimgsearch/status HTTP/1.0\r\n\r\n") == (
+        200, {"status": "OK"}
+    )
+
+
+def test_request_reader_head_split_across_segments(echo_server):
+    """The head may arrive in pieces, even with the blank line that ends
+    it split between two segments."""
+    srv, _svc = echo_server
+    status, body = _raw_request(
+        srv, b"GET /cuimgsearch/sta", b"tus HTTP/1.0\r\nHost: x\r", b"\n\r",
+        b"\n", pause=0.05,
+    )
+    assert (status, body) == (200, {"status": "OK"})
+
+
+def test_request_reader_body_in_pieces(echo_server):
+    """A body sent in several segments, after its head, is read up to
+    Content-Length, and the handler sees all of it."""
+    srv, svc = echo_server
+    items = [f"{i:040x}" for i in range(300)]
+    payload = json.dumps({"data": ",".join(items)}).encode()
+    third = len(payload) // 3
+    status, body = _raw_request(
+        srv, _post_head("bySHA1", len(payload)), payload[:third],
+        payload[third:2 * third], payload[2 * third:], pause=0.05,
+    )
+    assert status == 200 and body["images"] == items
+    assert svc.calls == 1
+
+
+def test_request_reader_client_gone_mid_body(echo_server):
+    """A client that disconnects before its whole body arrived is dropped
+    without calling the handler, and its accept thread serves on."""
+    srv, svc = echo_server
+    with socket.create_connection(srv.server_address, timeout=10) as sock:
+        sock.sendall(_post_head("bySHA1", 1000) + b'{"data": "ab')
+        time.sleep(0.1)
+    time.sleep(0.2)
+    assert svc.calls == 0
+    assert all(t.is_alive() for t in srv._pool)
+    payload = json.dumps({"data": "ab"}).encode()
+    assert _raw_request(srv, _post_head("bySHA1", len(payload)) + payload)[1][
+        "images"] == ["ab"]
+
+
+def test_class_level_do_post_wrapper_sees_every_post(echo_server):
+    """A wrapper installed on ``RequestHandlerClass.do_POST`` after the
+    server started (the way a tracer instruments it) sees every POST, and
+    reads its request header whatever case the client sent it in."""
+    srv, svc = echo_server
+    handler = srv.RequestHandlerClass
+    raw = handler.do_POST
+    seen: list = []
+
+    def do_post(self):
+        seen.append(self.headers.get("X-Perfbench-Req"))
+        raw(self)
+
+    handler.do_POST = do_post
+    try:
+        payload = json.dumps({"data": "ab"}).encode()
+        for i in range(6):
+            name = "X-Perfbench-Req" if i % 2 else "x-perfbench-req"
+            status, body = _raw_request(
+                srv, _post_head("bySHA1", len(payload), f"{name}: {i}") + payload
+            )
+            assert status == 200 and body["images"] == ["ab"]
+    finally:
+        handler.do_POST = raw
+    assert seen == [str(i) for i in range(6)]
+    assert svc.calls == 6

@@ -43,7 +43,7 @@ N_SHARDS = 8
 QUOTA = 10_000
 
 
-def test_router_equals_replica_at_1m_skewed(spark):
+def test_router_equals_replica_at_1m_skewed(spark, monkeypatch):
     from bench import _tiled_embeddings
     from columbiaimagesearch_spark.lopq.encode import encode_dataframe
     from columbiaimagesearch_spark.lopq.queries import fixture_model
@@ -106,16 +106,20 @@ def test_router_equals_replica_at_1m_skewed(spark):
     # its k-sized-reply merge actually matters — the hot cell's ~42k-row
     # slices each reply only 10 candidates here, and any defect in the
     # local-topk-contains-global-topk argument would surface as a changed
-    # answer on some query
+    # answer on some query. Both routes: every plan to the workers, then
+    # every plan scored in the calling thread (the local route)
     from columbiaimagesearch_spark.lopq.serving import ForkedRouterPool
 
     pool_mismatches = 0
     with ForkedRouterPool(router) as pool:
-        for q in qs:
-            if pool.search(q, quota=QUOTA, k=10) != skew_single.search(
-                q, quota=QUOTA, k=10
-            ):
-                pool_mismatches += 1
+        for local_max_rows in (0, N_INDEX):
+            monkeypatch.setattr(ForkedRouterPool, "LOCAL_MAX_ROWS",
+                                local_max_rows)
+            for q in qs:
+                if pool.search(q, quota=QUOTA, k=10) != skew_single.search(
+                    q, quota=QUOTA, k=10
+                ):
+                    pool_mismatches += 1
     assert pool_mismatches == 0, pool_mismatches
     print(
         f"\n[scale-serving] router==replica @{N_INDEX} skewed rows: "

@@ -41,6 +41,16 @@ def queries_np(spark):
     return [(int(r["vec_id"]), np.array(r["embedding"])) for r in rows]
 
 
+@pytest.fixture
+def workers_only(monkeypatch):
+    """Send every pool query to the forked workers: tests of the worker
+    protocol (replies, deaths, stops, deadlines) must not be answered by
+    the local route."""
+    from columbiaimagesearch_spark.lopq.serving import ForkedRouterPool
+
+    monkeypatch.setattr(ForkedRouterPool, "LOCAL_MAX_ROWS", 0)
+
+
 def test_serving_matches_distributed_search(spark, model, codes, queries_np):
     serving = ServingSearcher(model).load_codes(codes)
     assert serving.n_items == codes.count()
@@ -831,7 +841,9 @@ def test_split_slice_stats_telemetry(spark, model, codes):
     assert stats["max_slice_rows"] <= 2 * (n // 4 + 1)
 
 
-def test_forked_pool_matches_sequential_router(spark, model, codes, queries_np):
+def test_forked_pool_matches_sequential_router(
+    spark, model, codes, queries_np, workers_only
+):
     """ForkedRouterPool (process-parallel fan-out, COW-shared arrays,
     k-sized replies) must answer EXACTLY like the sequential router —
     including through split cells (the skew path it exists to serve)."""
@@ -860,7 +872,7 @@ def test_forked_pool_matches_sequential_router(spark, model, codes, queries_np):
 
 
 def test_forked_pool_rerank_matches_sequential_router(
-    spark, model, codes, queries_np
+    spark, model, codes, queries_np, workers_only
 ):
     """Pool rerank (workers reply local top-max(k, rerank_nb); parent
     merges, fetches resident vectors, exact-sorts) must equal the
@@ -953,7 +965,9 @@ def _touching(router, queries_np, shard: int):
     )
 
 
-def test_forked_pool_worker_death_is_fatal(spark, model, codes, queries_np):
+def test_forked_pool_worker_death_is_fatal(
+    spark, model, codes, queries_np, workers_only
+):
     """A mid-protocol failure must be FATAL to the pool — a
     desynced pipe can never serve another query. Kill one worker; the
     next query touching it raises PoolBrokenError (never a silently
@@ -1079,7 +1093,7 @@ def _resume_after(pid: int, delay_s: float):
 
 
 def test_forked_pool_late_complete_answer_not_marked_broken(
-    spark, model, codes, queries_np
+    spark, model, codes, queries_np, workers_only
 ):
     """A slow worker whose reply lands before the deadline
     must NOT tear down a healthy pool. Hold one worker stopped for most of
@@ -1107,7 +1121,7 @@ def test_forked_pool_late_complete_answer_not_marked_broken(
 
 
 def test_forked_pool_deadline_fixed_under_slot_backlog(
-    spark, model, codes, queries_np, monkeypatch
+    spark, model, codes, queries_np, monkeypatch, workers_only
 ):
     """A wedged worker must be detected within a bounded time
     however deep the backlog. The deadline is REPLY_TIMEOUT_S from each
@@ -1161,7 +1175,7 @@ def test_forked_pool_deadline_fixed_under_slot_backlog(
 
 
 def test_forked_pool_stopped_worker_fails_within_deadline(
-    spark, model, codes, queries_np, monkeypatch
+    spark, model, codes, queries_np, monkeypatch, workers_only
 ):
     """A wedged (SIGSTOPped) worker fails the query touching it with
     PoolBrokenError once REPLY_TIMEOUT_S has passed — not later — and the
@@ -1189,7 +1203,9 @@ def test_forked_pool_stopped_worker_fails_within_deadline(
         pool.close()
 
 
-def test_forked_pool_replies_larger_than_pipe_buffer(monkeypatch):
+def test_forked_pool_replies_larger_than_pipe_buffer(
+    monkeypatch, workers_only
+):
     """Requests and replies both bigger than what a pipe buffers: a query
     visiting every one of 4096 cells sends each shard ~10 KB of cells, so
     callers in all SLOTS fill the request pipes, and a 6000-candidate
@@ -1251,7 +1267,9 @@ def _open_fds() -> int:
     return len(os.listdir("/proc/self/fd"))
 
 
-def test_forked_pool_close_restores_fds_and_threads(spark, model, codes, queries_np):
+def test_forked_pool_close_restores_fds_and_threads(
+    spark, model, codes, queries_np, workers_only
+):
     """The pool keeps no threads of its own, and close() returns every
     descriptor it opened: the parent's open files and threads are back at
     their baseline afterwards, also after a broken pool."""
@@ -1281,3 +1299,214 @@ def test_forked_pool_close_restores_fds_and_threads(spark, model, codes, queries
         pool.search(q, quota=QUOTA, k=TOP_K)
     pool.close()
     assert (_open_fds(), threading.active_count()) == (fds, threads)
+
+
+# -- the pool's local route ---------------------------------------------------
+
+
+def _rerank_router(spark, model, codes, n_shards: int = 4):
+    """A router over the fixture codes, skewed so fat cells split, with
+    every item's rerank vector resident."""
+    from columbiaimagesearch_spark.lopq.serving import ShardedServingRouter
+    from columbiaimagesearch_spark.sources import load_table
+
+    single = ServingSearcher(model).load_codes(codes)
+    hot = int(max(single.cell_counts, key=single.cell_counts.get))
+    skewed = codes.withColumn(
+        "cell",
+        F.when(F.col("id") % 3 == 1, F.lit(hot)).otherwise(F.col("cell")),
+    )
+    router = ShardedServingRouter.build(model, skewed, n_shards=n_shards)
+    id_cells = {
+        int(r["id"]): int(r["cell"])
+        for r in skewed.select("id", "cell").collect()
+    }
+    rows = [
+        r for r in load_table(spark, SF_SMOKE, "embeddings")
+        .select("vec_id", "embedding").collect()
+        if int(r["vec_id"]) in id_cells
+    ]
+    router.put_vectors(
+        [int(r["vec_id"]) for r in rows],
+        [r["embedding"] for r in rows],
+        [id_cells[int(r["vec_id"])] for r in rows],
+    )
+    return router
+
+
+def _count_fanouts(monkeypatch) -> list[str]:
+    """Names of the threads whose pool queries took a caller slot, i.e.
+    went to the workers."""
+    import threading
+
+    from columbiaimagesearch_spark.lopq.serving import ForkedRouterPool
+
+    taken: list[str] = []
+    real = ForkedRouterPool._take_slot
+
+    def take(self):
+        taken.append(threading.current_thread().name)
+        return real(self)
+
+    monkeypatch.setattr(ForkedRouterPool, "_take_slot", take)
+    return taken
+
+
+def test_forked_pool_local_route_matches_router(
+    spark, model, codes, queries_np, monkeypatch
+):
+    """A plan within LOCAL_MAX_ROWS on an idle pool is scored in the
+    calling thread — no slot taken, no worker asked — and answers bitwise
+    equal to the router, ADC and rerank alike, through split cells."""
+    from columbiaimagesearch_spark.lopq.serving import ForkedRouterPool
+
+    router = _rerank_router(spark, model, codes)
+    assert router._splits, "fixture must exercise the split path"
+    rows = [router.plan_fanout(q, QUOTA)[2] for _qid, q in queries_np]
+    monkeypatch.setattr(ForkedRouterPool, "LOCAL_MAX_ROWS", max(rows))
+    taken = _count_fanouts(monkeypatch)
+    rr = dict(rerank_nb=4 * TOP_K, fetch_vectors=router.resident_vectors)
+    with ForkedRouterPool(router) as pool:
+        for qid, q in queries_np:
+            assert pool.search(q, quota=QUOTA, k=TOP_K) == router.search(
+                q, quota=QUOTA, k=TOP_K
+            ), f"local ADC route diverged for qid={qid}"
+            assert pool.search(q, quota=QUOTA, k=TOP_K, **rr) == router.search(
+                q, quota=QUOTA, k=TOP_K, **rr
+            ), f"local rerank route diverged for qid={qid}"
+        assert pool._busy == 0 and not pool._local_lock.locked()
+    assert taken == []
+
+
+def test_forked_pool_plan_over_bound_fans_out(
+    spark, model, codes, queries_np, monkeypatch
+):
+    """The bound is on the plan's rows, inclusive: a plan of exactly
+    LOCAL_MAX_ROWS rows is scored locally, one row more fans out to the
+    workers; both answer like the router."""
+    from columbiaimagesearch_spark.lopq.serving import ForkedRouterPool
+
+    router = _rerank_router(spark, model, codes)
+    q = queries_np[0][1]
+    rows = router.plan_fanout(q, QUOTA)[2]
+    want = router.search(q, quota=QUOTA, k=TOP_K)
+    taken = _count_fanouts(monkeypatch)
+    with ForkedRouterPool(router) as pool:
+        monkeypatch.setattr(ForkedRouterPool, "LOCAL_MAX_ROWS", rows)
+        assert pool.search(q, quota=QUOTA, k=TOP_K) == want
+        assert taken == []
+        monkeypatch.setattr(ForkedRouterPool, "LOCAL_MAX_ROWS", rows - 1)
+        assert pool.search(q, quota=QUOTA, k=TOP_K) == want
+        assert len(taken) == 1
+
+
+def test_forked_pool_second_concurrent_caller_fans_out(
+    spark, model, codes, queries_np, monkeypatch
+):
+    """While one query scores locally the pool is busy: a second caller
+    fans out to the workers instead of scoring beside it, and so does a
+    caller that finds the in-process scoring lock held (the service's
+    in-process fallback holds it). Both answer like the router."""
+    import threading
+
+    from columbiaimagesearch_spark.lopq.serving import ForkedRouterPool
+
+    router = _rerank_router(spark, model, codes)
+    monkeypatch.setattr(ForkedRouterPool, "LOCAL_MAX_ROWS", 10**9)
+    (_qa, qa), (_qb, qb) = queries_np[:2]
+    want_a = router.search(qa, quota=QUOTA, k=TOP_K)
+    want_b = router.search(qb, quota=QUOTA, k=TOP_K)
+    lock = threading.Lock()
+    with ForkedRouterPool(router, lock=lock) as pool:
+        taken = _count_fanouts(monkeypatch)
+        inside, release = threading.Event(), threading.Event()
+        real_score = ServingSearcher.score_cells
+
+        def score(self, q, cells):
+            if threading.current_thread().name == "first":
+                inside.set()
+                release.wait(30)
+            return real_score(self, q, cells)
+
+        monkeypatch.setattr(ServingSearcher, "score_cells", score)
+        got_a: list = []
+        first = threading.Thread(
+            name="first",
+            target=lambda: got_a.append(pool.search(qa, quota=QUOTA, k=TOP_K)),
+        )
+        first.start()
+        try:
+            assert inside.wait(30), "first query never scored locally"
+            assert pool.search(qb, quota=QUOTA, k=TOP_K) == want_b
+            assert taken == [threading.current_thread().name]
+        finally:
+            release.set()
+            first.join(30)
+        assert got_a == [want_a] and taken == [threading.current_thread().name]
+        with lock:
+            assert pool.search(qb, quota=QUOTA, k=TOP_K) == want_b
+        assert len(taken) == 2
+        assert pool.search(qb, quota=QUOTA, k=TOP_K) == want_b
+        assert len(taken) == 2  # idle again: local
+        assert pool._busy == 0 and not lock.locked()
+
+
+def test_router_histogram_swapped_whole_under_concurrent_add(monkeypatch):
+    """A plan that reads the merged histogram while add_codes runs must not
+    leave a half-updated histogram behind. Interleave deterministically: a
+    reader that would merge shard 0's counts before an add and shard 1's
+    after it stores nothing — writers publish the whole histogram and
+    every later plan sees the true merge."""
+    import threading
+    import time as _time
+
+    import pyarrow as pa
+
+    from columbiaimagesearch_spark.functions.arrow_vec import column
+    from columbiaimagesearch_spark.lopq import serving as srv
+    from test_lopq import _random_lopq
+
+    rng = np.random.RandomState(7)
+
+    def batch(ids):
+        return pa.table({
+            "cell": rng.randint(0, 64, len(ids)),
+            "id": np.asarray(ids, dtype=np.int64),
+            "fine": column(rng.randint(0, 32, (len(ids), 16))),
+        })
+
+    replica = ServingSearcher(_random_lopq(32, 16, 8, 32, seed=3))
+    replica.load_codes(batch(range(2000)))
+    router = srv.ShardedServingRouter.from_replica(replica, 2)
+    shard1 = router.shards[1][2]
+    real = ServingSearcher.cell_counts
+    reached, release = threading.Event(), threading.Event()
+
+    def counts(self):
+        if self is shard1 and threading.current_thread().name == "reader":
+            reached.set()
+            release.wait(30)
+        return real.fget(self)
+
+    monkeypatch.setattr(ServingSearcher, "cell_counts", property(counts))
+    reader = threading.Thread(name="reader", target=router._global_counts)
+    reader.start()
+    end = _time.monotonic() + 30
+    while not reached.is_set() and reader.is_alive():
+        assert _time.monotonic() < end
+        _time.sleep(0.01)
+    incoming = batch(range(2000, 2600))
+    assert all(
+        (router._owners(np.asarray(incoming.column("cell")),
+                        np.asarray(incoming.column("id"))) == i).any()
+        for i in (0, 1)
+    ), "the add must touch both shards"
+    router.add_codes(incoming)
+    release.set()
+    reader.join(30)
+    truth: dict[int, int] = {}
+    for _lo, _hi, s in router.shards:
+        for c, (ids, _f) in s._cells.items():
+            truth[c] = truth.get(c, 0) + len(ids)
+    assert router._global_counts() == truth
+    assert sum(truth.values()) == 2600
